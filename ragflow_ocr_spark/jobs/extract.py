@@ -9,8 +9,8 @@ Usage:
         [--buckets 256] [--synthesize N]
 
 Idempotent + resumable: rerunning after a failure skips completed
-buckets (left-anti join against the checkpoint table) and rewrites
-only pending ones.
+buckets (the driver subtracts the checkpoint table's done buckets
+from all bucket ids) and rewrites only pending ones.
 """
 
 from __future__ import annotations

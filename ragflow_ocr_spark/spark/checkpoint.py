@@ -9,8 +9,9 @@ same idempotent semantics are implemented over parquet):
 - a completed bucket writes one status row per bucket + its output
   files under ``out/bucket=<b>/`` (dynamic partition overwrite —
   rewriting a bucket is idempotent, exactly like MERGE on the key);
-- resume = LEFT ANTI JOIN of pending buckets against ``done`` rows
-  (J3 in SURVEY.md §2.3) — broadcast, the checkpoint side is tiny.
+- resume = all bucket ids minus the ``done`` ones, a set difference
+  on the driver; the table is a handful of rows, read and appended
+  with pyarrow, so neither side starts a Spark job.
 
 The exact production DDL / MERGE INTO / resume SQL this stands in for
 is emitted by ``spark/iceberg_sql.py`` (golden-pinned in
@@ -20,81 +21,85 @@ is emitted by ``spark/iceberg_sql.py`` (golden-pinned in
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 CHECKPOINT_SCHEMA = (
     "run_id string, bucket int, n_buckets int, status string, n_docs long, "
     "n_ok long, n_empty long, n_error long, wall_ms long"
 )
+_ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
+_ARROW_SCHEMA = pa.schema(
+    [(name, _ARROW_TYPES[t]) for name, t in (c.split() for c in CHECKPOINT_SCHEMA.split(", "))]
+)
 
 
 class CheckpointStore:
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
+    def __init__(self, root: str):
         self.root = root
         self.table_dir = os.path.join(root, "checkpoint")
 
-    def _table(self) -> DataFrame | None:
-        if not os.path.isdir(self.table_dir) or not any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(self.table_dir)
-            for f in fs
-        ):
-            return None
-        return self.spark.read.parquet(self.table_dir)
-
-    def done_buckets(self, n_buckets: int) -> DataFrame:
+    def done_buckets(self, n_buckets: int) -> set[int]:
         """Buckets already completed (any run) under the SAME bucket
         numbering. Bucket ids are only meaningful relative to
         ``n_buckets``: resuming a root written with a different count
-        would anti-join the WRONG url sets out (silently losing rows)
-        and mix incompatibly-numbered ``extracted/bucket=`` partitions
-        — so a mismatch is refused outright."""
-        t = self._table()
-        if t is None:
-            return self.spark.createDataFrame([], "bucket int")
-        if "n_buckets" not in t.columns:
+        would skip the WRONG url sets (silently losing rows) and mix
+        incompatibly-numbered ``extracted/bucket=`` partitions — so a
+        mismatch is refused outright."""
+        if not os.path.isdir(self.table_dir):
+            return set()
+        # pyarrow skips '.'- and '_'-prefixed files, like Spark: an
+        # in-flight mark_done is invisible until its rename
+        t = pq.read_table(self.table_dir)
+        if t.num_rows == 0:
+            return set()
+        if "n_buckets" not in t.column_names:
             raise ValueError(
                 f"checkpoint at {self.table_dir} predates the n_buckets "
                 "schema (written by an older build); resume must use a "
                 "fresh output root"
             )
-        seen = [r["n_buckets"] for r in t.select("n_buckets").distinct().collect()]
-        wrong = [n for n in seen if n != n_buckets]
+        wrong = set(t.column("n_buckets").to_pylist()) - {n_buckets}
         if wrong:
             raise ValueError(
                 f"checkpoint at {self.table_dir} was written with "
-                f"n_buckets={sorted(set(wrong))}; resume must use the same "
+                f"n_buckets={sorted(wrong)}; resume must use the same "
                 f"value (got {n_buckets}) or a fresh output root"
             )
-        return (
-            t.where(F.col("status") == "done")
-            .select("bucket")
-            .distinct()
-        )
+        return {
+            b
+            for b, s in zip(t.column("bucket").to_pylist(), t.column("status").to_pylist())
+            if s == "done"
+        }
 
     def mark_done(self, rows: list[dict], n_buckets: int) -> None:
-        """Append completion rows (one per bucket). Parquet append of a
-        handful of rows ⇔ the MERGE INTO of the production path."""
+        """Append completion rows (one per bucket) as one parquet file ⇔
+        the MERGE INTO of the production path. Written under a hidden
+        name and renamed into place, so a crash mid-write leaves nothing
+        a reader sees."""
         if not rows:
             return
-        df = self.spark.createDataFrame(
+        table = pa.Table.from_pylist(
             [
-                (
-                    r["run_id"],
-                    int(r["bucket"]),
-                    int(n_buckets),
-                    "done",
-                    int(r.get("n_docs", 0)),
-                    int(r.get("n_ok", 0)),
-                    int(r.get("n_empty", 0)),
-                    int(r.get("n_error", 0)),
-                    int(r.get("wall_ms", 0)),
-                )
+                {
+                    "run_id": r["run_id"],
+                    "bucket": int(r["bucket"]),
+                    "n_buckets": int(n_buckets),
+                    "status": "done",
+                    "n_docs": int(r.get("n_docs", 0)),
+                    "n_ok": int(r.get("n_ok", 0)),
+                    "n_empty": int(r.get("n_empty", 0)),
+                    "n_error": int(r.get("n_error", 0)),
+                    "wall_ms": int(r.get("wall_ms", 0)),
+                }
                 for r in rows
             ],
-            CHECKPOINT_SCHEMA,
+            schema=_ARROW_SCHEMA,
         )
-        df.coalesce(1).write.mode("append").parquet(self.table_dir)
-
+        os.makedirs(self.table_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.table_dir, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.table_dir, name))

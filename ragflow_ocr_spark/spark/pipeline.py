@@ -1,8 +1,9 @@
 """End-to-end extraction pipeline (the flagship job — P1 in SURVEY.md
 §2.9, Spark lifecycle in §3.1).
 
-    pages ──(anti-join done buckets)──> size-aware spread ──>
-    mapInPandas(extract) ──> extracted rows + per-partition metrics
+    pages ──(bucket IN pending group)──> size-aware spread ──>
+    mapInPandas(extract) ──> extracted/bucket=<b> ──> per-bucket
+    counts of what landed ──> checkpoint rows (driver, pyarrow)
 
 Scale design (SURVEY.md §4):
 - **Size-aware skew spread**: per-document cost is unknown pre-detect
@@ -16,24 +17,22 @@ Scale design (SURVEY.md §4):
   so every downstream projection prunes payload bytes at the stage
   boundary.
 - **Resume**: work is bucketed by pmod(xxhash64(url), n_buckets);
-  completed buckets are anti-joined out (broadcast — checkpoint side
-  is tiny) and each bucket's output is idempotently overwritten.
+  pending buckets are range(n_buckets) minus the checkpoint's done
+  set, computed on the driver, and each bucket's output is
+  idempotently overwritten.
 """
 
 from __future__ import annotations
 
+import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ragflow_ocr_spark.config import DEFAULT, PipelineConfig
 from ragflow_ocr_spark.spark.checkpoint import CheckpointStore
-from ragflow_ocr_spark.spark.stages import (
-    EXTRACT_METRICS_BUCKET_SCHEMA,
-    EXTRACT_SCHEMA,
-    extract_stage,
-    extract_stage_with_metrics,
-)
+from ragflow_ocr_spark.spark.stages import EXTRACT_SCHEMA, extract_stage
 
 
 def spread_for_extract(
@@ -112,12 +111,12 @@ def run_extract_job(
     """Resumable extraction job with bucket-granular checkpointing.
 
     Buckets are processed in GROUPS of ``bucket_group_size`` — one
-    Spark job per group. Each job filters on ``bucket IN (group)``, so
-    the number of group jobs is n_buckets/group_size, not n_buckets
+    extract write per group. Each write filters on ``bucket IN (group)``,
+    so the number of group writes is n_buckets/group_size, not n_buckets
     (at 100 TB the input is an Iceberg table partitioned by
     ``bucket(url, n_buckets)``, so each scan additionally prunes to
     the group's files — see spark/checkpoint.py). With ``spread=True``
-    each group is scanned twice (the heavy/light where-split below);
+    each group is scanned twice (spread_for_extract's where-split);
     at Iceberg scale the heavy predicate runs against a stored
     ``content_length`` column whose row-group stats prune the heavy
     scan to the handful of files containing heavy rows, so the second
@@ -128,24 +127,24 @@ def run_extract_job(
     via dynamic partition overwrite under ``extracted/bucket=<b>`` —
     rewriting a group is idempotent (MERGE-on-key semantics).
 
+    Spark jobs per group: the write and one aggregate counting what
+    landed. Pending-bucket discovery and the checkpoint run on the
+    driver.
+
     ``fail_buckets`` injects a simulated failure after any group
     containing one of the listed buckets commits — the resume tests'
     kill-after-k. Returns run summary counters.
     """
-    ckpt = CheckpointStore(spark, out_root)
+    ckpt = CheckpointStore(out_root)
     run_id = uuid.uuid4().hex[:12]
     bucket_of_url = F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
 
-    work = pages.withColumn("bucket", bucket_of_url)
     done = ckpt.done_buckets(n_buckets)  # raises on a numbering mismatch
-    n_done_prior = done.count()
-    pending = work.join(F.broadcast(done), on="bucket", how="left_anti")
-
-    pending_buckets = sorted(
-        r["bucket"] for r in pending.select("bucket").distinct().collect()
-    )
+    pending = sorted(set(range(n_buckets)) - done)
     gs = max(1, bucket_group_size)
-    groups = [pending_buckets[i : i + gs] for i in range(0, len(pending_buckets), gs)]
+    groups = [pending[i : i + gs] for i in range(0, len(pending), gs)]
+    n_partitions = spark.sparkContext.defaultParallelism if spread else None
+    extracted = f"{out_root}/extracted"
 
     # only the touched bucket= partitions are replaced on (re)write;
     # session conf restored on exit — leaving dynamic mode on would
@@ -154,14 +153,32 @@ def run_extract_job(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    n_processed = 0
     try:
-        _run_groups(
-            spark, ckpt, groups, pending, run_id, n_buckets,
-            cfg, fail_buckets, spread, out_root,
-        )
-        n_processed = sum(len(g) for g in groups)
+        for group in groups:
+            t0 = time.monotonic()
+            gdf = pages.where(bucket_of_url.isin(group))
+            (
+                extract(gdf, cfg, n_partitions=n_partitions)
+                .withColumn("bucket", bucket_of_url)
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(extracted)
+            )
+            counts = _count_landed(spark, extracted, group)
+            # group-granular wall: the driver's write-and-count time,
+            # recorded on every bucket row of the group
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            ckpt.mark_done(
+                [
+                    {"run_id": run_id, "bucket": b, "wall_ms": wall_ms, **counts.get(b, {})}
+                    for b in group
+                ],
+                n_buckets,
+            )
+            if fail_buckets and set(group) & set(fail_buckets):
+                raise RuntimeError(
+                    f"injected failure after group containing {sorted(set(group) & set(fail_buckets))}"
+                )
     finally:
         spark.conf.set(
             "spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode
@@ -169,85 +186,43 @@ def run_extract_job(
 
     return {
         "run_id": run_id,
-        "buckets_processed": n_processed,
-        # buckets with a prior 'done' checkpoint row — NOT n_buckets −
-        # pending (that would count never-populated buckets as skipped)
-        "buckets_skipped": n_done_prior,
+        "buckets_processed": len(pending),
+        # buckets with a prior 'done' checkpoint row, populated or not
+        "buckets_skipped": len(done),
     }
 
 
-def _run_groups(
-    spark, ckpt, groups, pending, run_id, n_buckets,
-    cfg, fail_buckets, spread, out_root,
-) -> None:
-    import json
-
-    for group in groups:
-        gdf = pending.where(F.col("bucket").isin([int(b) for b in group]))
-        if spread:
-            gdf = spread_for_extract(
-                gdf, spark.sparkContext.defaultParallelism, cfg
-            )
-        out = gdf.select("url", "warc_ts", "lang", "html", "bucket").mapInPandas(
-            extract_stage_with_metrics(cfg, run_id, with_buckets=True),
-            schema=EXTRACT_METRICS_BUCKET_SCHEMA,
+def _count_landed(spark: SparkSession, extracted: str, group: list[int]) -> dict:
+    """Per-bucket status counters of the group's written partitions —
+    counted from what landed, so a rewritten group or a retried task
+    is never counted twice. Buckets without rows are absent."""
+    paths = [f"{extracted}/bucket={b}" for b in group]
+    paths = [p for p in paths if os.path.isdir(p)]
+    if not paths:
+        return {}
+    status = F.col("status")
+    rows = (
+        spark.read.schema("status string, bucket int")
+        .option("basePath", extracted)
+        .parquet(*paths)
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count(F.when(status == "ok", 1)).alias("n_ok"),
+            F.count(F.when(status.startswith("empty"), 1)).alias("n_empty"),
         )
-        # ONE action on the expensive Python-stage lineage: data rows
-        # AND the per-partition metrics rows (bucket=-1 sentinel) land
-        # in the same partitioned write. The per-bucket counters are
-        # computed inside the stage, so there is no cache and no
-        # second pass over executor-memory-sized text (the old shape
-        # cached the full extract output to serve a groupBy).
-        (
-            out.drop("part_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{out_root}/extracted")
-        )
-        # metrics read-back is a disk read of one tiny partition (the
-        # next group's dynamic overwrite replaces it; read_extracted
-        # filters bucket >= 0)
-        metric_rows = (
-            spark.read.parquet(f"{out_root}/extracted")
-            .where(F.col("bucket") == -1)
-            .select("extracted_text")
-            .collect()
-        )
-        stats = [json.loads(r["extracted_text"]) for r in metric_rows]
-        stats = [s for s in stats if s.get("run_id") == run_id]
-        # group-granular wall: metrics are per task partition and a
-        # partition mixes buckets under spread/grouping, so the
-        # finest honest attribution is the GROUP's critical-path
-        # wall, recorded on every bucket row of the group
-        wall_ms = max((s["wall_ms"] for s in stats), default=0)
-        agg: dict[int, list[int]] = {}
-        for s in stats:
-            for b, c in s.get("buckets", {}).items():
-                acc = agg.setdefault(int(b), [0, 0, 0, 0])
-                for i in range(4):
-                    acc[i] += int(c[i])
-        ckpt.mark_done(
-            [
-                {
-                    "run_id": run_id,
-                    "bucket": b,
-                    "n_docs": c[0],
-                    "n_ok": c[1],
-                    "n_empty": c[2],
-                    "n_error": c[3],
-                    "wall_ms": wall_ms,
-                }
-                for b, c in sorted(agg.items())
-            ],
-            n_buckets,
-        )
-        if fail_buckets and set(group) & set(fail_buckets):
-            raise RuntimeError(
-                f"injected failure after group containing {sorted(set(group) & set(fail_buckets))}"
-            )
+        .collect()
+    )
+    return {
+        r["bucket"]: {
+            "n_docs": r["n_docs"],
+            "n_ok": r["n_ok"],
+            "n_empty": r["n_empty"],
+            "n_error": r["n_docs"] - r["n_ok"] - r["n_empty"],
+        }
+        for r in rows
+    }
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:
-    # bucket=-1 is the metrics sentinel partition (last group's lineage
-    # rows) — partition-pruned out here, never data
-    return spark.read.parquet(f"{out_root}/extracted").where(F.col("bucket") >= 0)
+    return spark.read.parquet(f"{out_root}/extracted")

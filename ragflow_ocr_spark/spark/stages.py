@@ -27,16 +27,6 @@ EXTRACT_SCHEMA = (
     "n_blocks int, status string, engine string"
 )
 
-# Extraction + per-partition lineage metrics in one pass (the metrics
-# row pattern from SURVEY.md §4.2 — one extra row per partition, tagged
-# by engine='_metrics', instead of a second job or foreachPartition).
-EXTRACT_METRICS_SCHEMA = EXTRACT_SCHEMA + ", part_id int"
-# + bucket passthrough (with_buckets=True): the job writes data AND
-# metrics in ONE action partitioned by bucket (metrics land in the
-# bucket=-1 sentinel partition and are read back from disk), so the
-# Python-stage output never needs a cache + second action.
-EXTRACT_METRICS_BUCKET_SCHEMA = EXTRACT_METRICS_SCHEMA + ", bucket int"
-
 
 def classify_kind(data: bytes | None) -> str:
     return sniff_payload(data)
@@ -208,97 +198,3 @@ def recognize_stage(cfg: PipelineConfig | None = None):
 
     return fn
 
-
-def extract_stage_with_metrics(
-    cfg: PipelineConfig | None = None,
-    run_id: str = "",
-    with_buckets: bool = False,
-):
-    """Extract stage variant that appends one lineage/metrics row per
-    task partition (engine='_metrics', extracted_text=JSON counters).
-    With ``with_buckets`` the input carries a ``bucket`` column that is
-    passed through on data rows (metrics rows get the ``-1`` sentinel)
-    and the JSON additionally carries per-bucket counters — so the
-    driver can checkpoint per-bucket stats without a second action
-    over the Python-stage output. One pass, no second job."""
-    cfg = cfg or DEFAULT
-    import json
-    import time
-
-    from pyspark import TaskContext
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.monotonic()
-        n_docs = n_ok = n_empty = n_err = 0
-        per_bucket: dict[int, list[int]] = {}
-        part_id = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in batches:
-            texts: list[str | None] = []
-            blocks: list[int] = []
-            statuses: list[str] = []
-            engines: list[str] = []
-            buckets = pdf["bucket"] if with_buckets else [-1] * len(pdf)
-            for data, bkt in zip(pdf["html"], buckets):
-                payload = bytes(data) if data is not None else None
-                t, n, s, e = _extract_one(payload, cfg)
-                texts.append(t)
-                blocks.append(n)
-                statuses.append(s)
-                engines.append(e)
-                n_docs += 1
-                c = per_bucket.setdefault(int(bkt), [0, 0, 0, 0])
-                c[0] += 1
-                if s == "ok":
-                    n_ok += 1
-                    c[1] += 1
-                elif s.startswith("empty"):
-                    n_empty += 1
-                    c[2] += 1
-                else:
-                    n_err += 1
-                    c[3] += 1
-            out = pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "extracted_text": texts,
-                    "n_blocks": blocks,
-                    "status": statuses,
-                    "engine": engines,
-                }
-            )
-            out["part_id"] = part_id
-            if with_buckets:
-                out["bucket"] = pdf["bucket"].to_numpy()
-            yield out
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        payload = {
-            "run_id": run_id,
-            "part_id": part_id,
-            "n_docs": n_docs,
-            "n_ok": n_ok,
-            "n_empty": n_empty,
-            "n_error": n_err,
-            "wall_ms": wall_ms,
-        }
-        if with_buckets:
-            payload["buckets"] = {str(b): c for b, c in per_bucket.items()}
-        metrics = json.dumps(payload)
-        tail = pd.DataFrame(
-            {
-                "url": [f"_metrics:{part_id}"],
-                "warc_ts": [pd.NaT],
-                "lang": [None],
-                "extracted_text": [metrics],
-                "n_blocks": [n_docs],
-                "status": ["done"],
-                "engine": ["_metrics"],
-                "part_id": [part_id],
-            }
-        )
-        if with_buckets:
-            tail["bucket"] = -1
-        yield tail
-
-    return fn

@@ -1,5 +1,5 @@
 """Spark-level pipeline tests: semantic truth, byte-golden regression,
-repartition invariance, metrics rows."""
+repartition invariance."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from ragflow_ocr_spark.spark import synth
 from ragflow_ocr_spark.spark.pipeline import extract
-from ragflow_ocr_spark.spark.stages import EXTRACT_METRICS_SCHEMA, extract_stage_with_metrics
 
 N_ROWS = 150
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "goldens", "extract_150.json.gz")
@@ -96,21 +95,6 @@ def test_golden_regression(extracted):
     assert set(got) == set(golden)
     mismatches = [u for u in golden if got[u] != golden[u]]
     assert not mismatches, f"{len(mismatches)} golden mismatches, e.g. {mismatches[:3]}"
-
-
-def test_metrics_rows_emitted(spark, truth):
-    pages = truth.select("url", "warc_ts", "html", "text", "lang").repartition(4)
-    out = pages.mapInPandas(
-        extract_stage_with_metrics(run_id="t"), schema=EXTRACT_METRICS_SCHEMA
-    )
-    rows = out.collect()
-    data = [r for r in rows if r["engine"] != "_metrics"]
-    metrics = [r for r in rows if r["engine"] == "_metrics"]
-    assert len(data) == N_ROWS
-    assert 1 <= len(metrics) <= 4
-    parsed = [json.loads(m["extracted_text"]) for m in metrics]
-    assert sum(p["n_docs"] for p in parsed) == N_ROWS
-    assert all(p["wall_ms"] >= 0 for p in parsed)
 
 
 def test_synth_determinism_across_partitionings(spark):
