@@ -78,15 +78,22 @@ def boxes_from_prob_map(
         quad2, sside2 = min_area_rect(expanded)
         if sside2 < cfg.min_size + 2:
             continue
-        box = quad2.copy()
-        box[:, 0] = np.clip(np.round(box[:, 0] / net_w * src_w), 0, src_w)
-        box[:, 1] = np.clip(np.round(box[:, 1] / net_h * src_h), 0, src_h)
-        boxes.append(box)
+        boxes.append(quad2)
         scores.append(score)
 
     if not boxes:
         return np.zeros((0, 4, 2), dtype=np.float64), []
-    return np.stack(boxes), scores
+    # rescale every box at once: the same per-element divide, multiply,
+    # round and clip as one box at a time
+    return _to_source(np.stack(boxes), net_h, net_w, src_h, src_w), scores
+
+
+def _to_source(pts: np.ndarray, net_h: int, net_w: int, src_h: int, src_w: int) -> np.ndarray:
+    """Net-resolution (..., 2) points → source pixels: round(x / net_w ·
+    src_w) clipped to [0, src_w] (hi is dest_width, not dest_width−1 —
+    ``postprocess.py:154-158``)."""
+    src = np.array([src_w, src_h], dtype=np.float64)
+    return np.clip(np.round(pts / np.array([net_w, net_h], dtype=np.float64) * src), 0, src)
 
 
 def polygons_from_prob_map(
@@ -134,10 +141,7 @@ def polygons_from_prob_map(
         _, sside = min_area_rect(expanded)
         if sside < cfg.min_size + 2:
             continue
-        box = expanded.copy()
-        box[:, 0] = np.clip(np.round(box[:, 0] / net_w * src_w), 0, src_w)
-        box[:, 1] = np.clip(np.round(box[:, 1] / net_h * src_h), 0, src_h)
-        polys.append(box)
+        polys.append(_to_source(expanded, net_h, net_w, src_h, src_w))
         scores.append(score)
     return polys, scores
 

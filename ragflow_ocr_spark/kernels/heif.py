@@ -72,30 +72,33 @@ def sniff_heif_brand(data: bytes) -> str | None:
     return None
 
 
+def _need(p: int, n: int, end: int, what: str) -> None:
+    """Raise unless ``n`` bytes at ``p`` lie inside the box (``end``)."""
+    if p + n > end:
+        raise ValueError(f"truncated heif {what}")
+
+
 def _parse_iloc(data: bytes, body: int, end: int) -> dict[int, list]:
     v, _flags, p = _fullbox(data, body)
     if v > 2:
         raise ValueError("heif iloc version not supported")
+    _need(p, 2, end, "iloc")
     sizes = data[p]
     offset_size, length_size = sizes >> 4, sizes & 15
     base_size = data[p + 1] >> 4
     index_size = (data[p + 1] & 15) if v in (1, 2) else 0
     p += 2
-    if v < 2:
-        (count,) = struct.unpack_from(">H", data, p)
-        p += 2
-    else:
-        (count,) = struct.unpack_from(">I", data, p)
-        p += 4
 
     def take(n):
         nonlocal p
         if n == 0:
             return 0
+        _need(p, n, end, "iloc")
         val = int.from_bytes(data[p:p + n], "big")
         p += n
         return val
 
+    count = take(2 if v < 2 else 4)
     items: dict[int, list] = {}
     for _ in range(count):
         item_id = take(2 if v < 2 else 4)
@@ -120,13 +123,12 @@ def _parse_iloc(data: bytes, body: int, end: int) -> dict[int, list]:
         # method 0: file offsets; method 1: offsets into meta/idat
         # (libheif inlines small payloads this way)
         items[item_id] = (method, extents)
-    if p > end:
-        raise ValueError("truncated heif iloc")
     return items
 
 
 def _parse_iinf(data: bytes, body: int, end: int) -> dict[int, bytes]:
     v, _flags, p = _fullbox(data, body)
+    _need(p, 2 if v == 0 else 4, end, "iinf")
     if v == 0:
         (count,) = struct.unpack_from(">H", data, p)
         p += 2
@@ -141,6 +143,7 @@ def _parse_iinf(data: bytes, body: int, end: int) -> dict[int, bytes]:
         iv, _f, q = _fullbox(data, b)
         if iv < 2:
             raise ValueError("heif infe version < 2 not supported")
+        _need(q, 4 if iv == 2 else 6, e, "infe")
         item_id = (struct.unpack_from(">H", data, q)[0] if iv == 2
                    else struct.unpack_from(">I", data, q)[0])
         q += 2 if iv == 2 else 4
@@ -152,29 +155,28 @@ def _parse_iinf(data: bytes, body: int, end: int) -> dict[int, bytes]:
     return types
 
 
-def _parse_ipma(data: bytes, body: int) -> dict[int, list[int]]:
+def _parse_ipma(data: bytes, body: int, end: int) -> dict[int, list[int]]:
     v, flags, p = _fullbox(data, body)
+    id_size = 2 if v < 1 else 4
+    idx_size = 2 if flags & 1 else 1
+    _need(p, 4, end, "ipma")
     (count,) = struct.unpack_from(">I", data, p)
     p += 4
     assoc: dict[int, list[int]] = {}
     for _ in range(count):
-        if v < 1:
-            (item_id,) = struct.unpack_from(">H", data, p)
-            p += 2
-        else:
-            (item_id,) = struct.unpack_from(">I", data, p)
-            p += 4
-        n = data[p]
-        p += 1
+        _need(p, id_size + 1, end, "ipma")
+        item_id = int.from_bytes(data[p:p + id_size], "big")
+        n = data[p + id_size]
+        p += id_size + 1
+        _need(p, n * idx_size, end, "ipma")
         idxs = []
         for _ in range(n):
-            if flags & 1:
+            if idx_size == 2:
                 (w,) = struct.unpack_from(">H", data, p)
-                p += 2
                 idxs.append(w & 0x7FFF)
             else:
                 idxs.append(data[p] & 0x7F)
-                p += 1
+            p += idx_size
         assoc[item_id] = idxs
     return assoc
 
@@ -187,17 +189,17 @@ def _parse_iref(data: bytes, body: int, end: int) -> dict[tuple[bytes, int], lis
     refs: dict[tuple[bytes, int], list[int]] = {}
     for tag, b, e in _boxes(data, p, end):
         q = b
+        _need(q, wid + 2, e, "iref")
         (from_id,) = struct.unpack_from(fmt, data, q)
         q += wid
         (n,) = struct.unpack_from(">H", data, q)
         q += 2
+        _need(q, n * wid, e, "iref")
         to = []
         for _ in range(n):
             (tid,) = struct.unpack_from(fmt, data, q)
             q += wid
             to.append(tid)
-        if q > e:
-            raise ValueError("truncated heif iref")
         refs[(tag, from_id)] = to
     return refs
 
@@ -237,6 +239,7 @@ def parse_heif(data: bytes) -> dict:
                 raise ValueError("heif meta handler is not 'pict'")
         elif tag == b"pitm":
             pv, _pf, q = _fullbox(data, body)
+            _need(q, 2 if pv == 0 else 4, end, "pitm")
             primary = (struct.unpack_from(">H", data, q)[0] if pv == 0
                        else struct.unpack_from(">I", data, q)[0])
         elif tag == b"iloc":
@@ -251,7 +254,7 @@ def parse_heif(data: bytes) -> dict:
                     for t3, b3, e3 in _boxes(data, b2, e2):
                         props.append((t3, data[b3:e3]))
                 elif t2 == b"ipma":
-                    ipma = _parse_ipma(data, b2)
+                    ipma = _parse_ipma(data, b2, e2)
     if primary is None or iloc is None or primary not in iloc:
         raise ValueError("heif primary item unresolvable")
 
@@ -261,9 +264,14 @@ def parse_heif(data: bytes) -> dict:
         method, extents = iloc[item_id]
         src = idat if method == 1 else data
         chunks = []
+        total = 0
         for off, ln in extents:
             if off + ln > len(src):
                 raise ValueError("heif item extent beyond file")
+            # extents may repeat the whole file: cap what they add up to
+            total += ln
+            if total > MAX_HEIF_BYTES:
+                raise ValueError("heif item exceeds the per-row budget")
             chunks.append(src[off:off + ln])
         return b"".join(chunks)
 

@@ -18,12 +18,22 @@ All functions are deterministic pure numpy.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 
 # ---------------------------------------------------------------- resize
 def resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Bilinear resample, align-corners=False convention (like cv2)."""
+    """Bilinear resample, align-corners=False convention (like cv2).
+
+    Separable: each source row that is sampled is blended horizontally
+    once, then the blended rows are blended vertically. Every output
+    element sees the same float32 products and sums, in the same
+    order, as the four-corner form ``top·(1−wy) + bot·wy`` with
+    ``top = g00·(1−wx) + g01·wx`` — the output is bit-identical, while
+    the horizontal blend runs on at most ``h`` rows instead of
+    ``2·out_h``."""
     h, w = img.shape[:2]
     if h == out_h and w == out_w:
         return img.astype(np.float32) if img.dtype != np.float32 else img.copy()
@@ -40,17 +50,24 @@ def resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     if img.ndim == 3:
         wy = wy[..., None]
         wx = wx[..., None]
-    # gather the four corner grids directly at output resolution
-    # (np.ix_ open mesh), cast AFTER the gather — avoids materializing
-    # full-resolution float intermediates (memory faults dominate on
-    # this host)
-    g00 = img[np.ix_(y0, x0)].astype(np.float32)
-    g01 = img[np.ix_(y0, x1)].astype(np.float32)
-    g10 = img[np.ix_(y1, x0)].astype(np.float32)
-    g11 = img[np.ix_(y1, x1)].astype(np.float32)
-    top = g00 * (1 - wx) + g01 * wx
-    bot = g10 * (1 - wx) + g11 * wx
-    return top * (1 - wy) + bot * wy
+    # y0 and y1 are sorted, so the sampled rows and each output row's
+    # index into them come from one merge and two searchsorted calls.
+    # Corner grids are gathered at output width and cast AFTER the
+    # gather (no full-resolution float intermediates); the blends run
+    # in place on those fresh arrays.
+    rows = np.union1d(y0, y1)
+    src = img if len(rows) == h else img[rows]
+    hz = src.take(x0, axis=1).astype(np.float32, copy=False)
+    hz *= 1 - wx
+    t = src.take(x1, axis=1).astype(np.float32, copy=False)
+    t *= wx
+    hz += t
+    out = hz[np.searchsorted(rows, y0)]
+    out *= 1 - wy
+    t = hz[np.searchsorted(rows, y1)]
+    t *= wy
+    out += t
+    return out
 
 
 # ------------------------------------------------------------ perspective
@@ -82,13 +99,14 @@ def warp_perspective(
         # semantics (uint8 skips it: promotion inside the blend is
         # exact and saves four full-size casts)
         img = img.astype(np.float32)
-    # This host pays ~25 µs of fixed cost per numpy op, so the body is
-    # written for MINIMUM op count: 1-D row/column factors broadcast
-    # instead of meshgrid, in-place adds/divides, floor-by-truncation
-    # (valid: coords are clipped non-negative), and uint8 corner grids
-    # fed straight into the float32 blend (uint8→float32 promotion is
-    # exact). Every element sees the same IEEE ops in the same order
-    # as the naive form — output is bit-identical.
+    # Every numpy op has a fixed cost and a pass over the output grid,
+    # so the body is written for MINIMUM op count: 1-D row/column
+    # factors broadcast instead of meshgrid, in-place adds/divides,
+    # floor-by-truncation (valid: coords are clipped non-negative), and
+    # uint8 corner grids fed straight into the float32 blend
+    # (uint8→float32 promotion is exact). Every element sees the same
+    # IEEE ops in the same order as the naive form — output is
+    # bit-identical.
     xs = np.arange(out_w, dtype=np.float64)  # (W,)  row factor
     ys = np.arange(out_h, dtype=np.float64)[:, None]  # (H,1) col factor
     denom = minv[2, 0] * xs + minv[2, 1] * ys  # (H,W)
@@ -131,43 +149,55 @@ def warp_perspective(
 
 # ------------------------------------------------------- hull + min rect
 def convex_hull(points: np.ndarray) -> np.ndarray:
-    """Andrew's monotone chain. points (N,2) float → hull CCW (M,2).
+    """Andrew's monotone chain. points (N,2) float → hull CCW (M,2)."""
+    return np.array(_hull(points), dtype=np.float64).reshape(-1, 2)
+
+
+def _hull(points: np.ndarray) -> list[tuple[float, float]]:
+    """:func:`convex_hull` as a list of (x, y) float tuples.
 
     Dense region-pixel inputs are first reduced to per-row x-extremes —
     an EXACT reduction (a point strictly inside its row's x-range can
-    never be a hull vertex), so the hull is identical while the Python
-    chain loop sees ~2·rows points instead of every pixel. The chain
-    itself runs on native floats (tuple stack) — same float64
-    arithmetic, ~10× less per-point overhead than numpy scalar
-    indexing."""
-    pts = points.astype(np.float64)
+    never be a hull vertex), so the hull is identical while the chain
+    loop sees ~2·rows points instead of every pixel. The extremes are
+    deduplicated and sorted (x, then y) as tuples, and the chain runs
+    on native floats — the same float64 arithmetic as numpy, at a
+    fraction of the per-point overhead of numpy scalar indexing."""
+    pts = np.asarray(points, dtype=np.float64).tolist()
     if len(pts) > 8:
-        order = np.lexsort((pts[:, 0], pts[:, 1]))
-        sy = pts[order, 1]
-        starts = np.flatnonzero(
-            np.concatenate(([True], sy[1:] != sy[:-1]))
-        )
-        ends = np.append(starts[1:], len(sy)) - 1
-        pts = pts[order[np.concatenate([starts, ends])]]
-    pts = np.unique(pts, axis=0)
-    if len(pts) <= 2:
-        return pts
-    P = [(float(x), float(y)) for x, y in pts]
-
-    def cross(o, a, b):
-        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
-
+        ext: dict[float, list[float]] = {}
+        for x, y in pts:
+            e = ext.get(y)
+            if e is None:
+                ext[y] = [x, x]
+            elif x < e[0]:
+                e[0] = x
+            elif x > e[1]:
+                e[1] = x
+        pts = [(x, y) for y, e in ext.items() for x in e]
+    P = sorted(set(map(tuple, pts)))
+    if len(P) <= 2:
+        return P
+    # pop while cross(o=chain[-2], a=chain[-1], p) <= 0
     lower: list[tuple[float, float]] = []
     for p in P:
-        while len(lower) >= 2 and cross(lower[-2], lower[-1], p) <= 0:
+        px, py = p
+        while len(lower) >= 2:
+            (ox, oy), (ax, ay) = lower[-2], lower[-1]
+            if (ax - ox) * (py - oy) - (ay - oy) * (px - ox) > 0:
+                break
             lower.pop()
         lower.append(p)
     upper: list[tuple[float, float]] = []
     for p in reversed(P):
-        while len(upper) >= 2 and cross(upper[-2], upper[-1], p) <= 0:
+        px, py = p
+        while len(upper) >= 2:
+            (ox, oy), (ax, ay) = upper[-2], upper[-1]
+            if (ax - ox) * (py - oy) - (ay - oy) * (px - ox) > 0:
+                break
             upper.pop()
         upper.append(p)
-    return np.array(lower[:-1] + upper[:-1])
+    return lower[:-1] + upper[:-1]
 
 
 def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float]:
@@ -189,41 +219,32 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float]:
         # without rounding). Region/contour rectangles from binarized
         # text masks hit this constantly; anything else falls through
         # to the identical slow path.
-        (x0, y0), (x1, y1) = pts.min(axis=0), pts.max(axis=0)
+        (x0, y0), (x1, y1) = pts.min(axis=0).tolist(), pts.max(axis=0).tolist()
         if x1 > x0 and y1 > y0:
-            on_x0, on_x1 = pts[:, 0] == x0, pts[:, 0] == x1
-            on_y0, on_y1 = pts[:, 1] == y0, pts[:, 1] == y1
-            if (
-                (on_x0 & on_y0).any()
-                and (on_x1 & on_y0).any()
-                and (on_x1 & on_y1).any()
-                and (on_x0 & on_y1).any()
-            ):
+            corners = {(x0, y0), (x1, y0), (x1, y1), (x0, y1)}
+            if corners <= set(map(tuple, pts.tolist())):
                 box = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]])
                 return _order_rect_points(box), float(min(x1 - x0, y1 - y0))
-    hull = convex_hull(points)
-    if len(hull) == 1:
-        p = hull[0]
-        box = np.array([p, p, p, p])
+    H = _hull(points)
+    if len(H) == 1:
+        box = np.array(H * 4)
         return _order_rect_points(box), 0.0
-    if len(hull) == 2:
-        a, b = hull
+    if len(H) == 2:
+        a, b = H
         box = np.array([a, b, b, a])
         return _order_rect_points(box), 0.0
-    n = len(hull)
     # scalar-Python calipers: hulls here are tiny (≤ ~16 vertices), so
-    # numpy's fixed per-op cost (~25 µs on this VM) dwarfs the n·M
-    # float work — native floats run the same IEEE-double products in
-    # the same order (np.hypot kept for the norm so the edge direction
-    # is bit-identical to the vectorized form), so results are exact.
-    H = [(float(x), float(y)) for x, y in hull]
+    # numpy's fixed cost per op dwarfs the n·M float work — native
+    # floats run the same IEEE-double products in the same order, and
+    # one np.hypot call gives every edge norm (the same libm hypot per
+    # element as the vectorized form), so results are exact.
+    n = len(H)
+    ex = [H[(i + 1) % n][0] - H[i][0] for i in range(n)]
+    ey = [H[(i + 1) % n][1] - H[i][1] for i in range(n)]
+    norms = np.hypot(ex, ey).tolist()
     best_area = np.inf
     best = None
-    for i in range(n):
-        hx, hy = H[i]
-        qx, qy = H[(i + 1) % n]
-        ex_, ey_ = qx - hx, qy - hy
-        norm = float(np.hypot(ex_, ey_))
+    for ex_, ey_, norm in zip(ex, ey, norms):
         if norm == 0:
             continue
         ux, uy = ex_ / norm, ey_ / norm
@@ -273,80 +294,82 @@ def _order_rect_points(box: np.ndarray) -> np.ndarray:
 
 # --------------------------------------------------- connected components
 def connected_components(mask: np.ndarray, max_regions: int = 1000) -> list[np.ndarray]:
-    """Label 8-connected regions of a boolean mask via run-length
-    union-find. Returns per-region point arrays (N,2) as (x, y) —
-    document order (top-to-bottom scan) capped at ``max_regions``,
+    """Label 8-connected regions of a boolean mask from its horizontal
+    runs. Each region lists, run by run in scan order, the run's left
+    end and (if different) its right end — every convex-hull vertex of
+    a raster region is a row extreme, so hulls over these endpoints
+    equal hulls over all pixels; ``pts[0]`` is the region's
+    topmost-leftmost pixel. Returns per-region point arrays (N,2) as
+    (x, y) — document order (top-to-bottom scan) capped at ``max_regions``,
     mirroring the reference's ``max_candidates`` slice
     (``/root/reference/ocr/postprocess.py:132``)."""
     h, w = mask.shape
-    # run extraction over the WHOLE mask in one shot (one pad + one
-    # diff + two nonzero), instead of h per-row numpy calls — the
-    # per-row loop was ~15% of extraction CPU. np.nonzero is row-major,
-    # so runs come out sorted by (row, x0), the original scan order.
-    pad = np.zeros((h, w + 2), dtype=np.int8)
-    pad[:, 1:-1] = mask
-    d = np.diff(pad, axis=1)
-    sy, sx = np.nonzero(d == 1)  # run r: row sy[r], ink [sx[r], ex[r])
-    _, ex = np.nonzero(d == -1)
-    n_runs = len(sy)
-    if n_runs == 0:
+    if mask.size == 0:
         return []
-    parent = list(range(n_runs))
+    # run extraction over the WHOLE mask in one shot: a transition map
+    # with one column of padding each side, one flatnonzero. Transitions
+    # alternate start/end within each row and come out row-major, so
+    # runs are sorted by (row, x0), the scan order.
+    edge = np.empty((h, w + 1), dtype=bool)
+    edge[:, 0] = mask[:, 0]
+    edge[:, w] = mask[:, w - 1]
+    np.not_equal(mask[:, 1:], mask[:, :-1], out=edge[:, 1:w])
+    flat = np.flatnonzero(edge)
+    if len(flat) == 0:
+        return []
+    # run r: row sy[r], ink [sx[r], ex[r])
+    sy, sx = np.divmod(flat[0::2], w + 1)
+    ex = flat[1::2] - sy * (w + 1)
+    n_runs = len(sy)
 
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
+    # 8-connectivity: run [x0, x1) meets prev-row run [px0, px1) iff
+    # px0 < x1+1 and px1 > x0-1. Keyed by row·(w+3) + x, both run ends
+    # are sorted over ALL runs and a key x ∈ [-1, w+1] of row y-1 stays
+    # inside that row's band, so one searchsorted per side finds every
+    # run's contiguous range of overlapping prev-row runs.
+    band = w + 3
+    key_s = sy * band + sx
+    key_e = sy * band + ex
+    lo = np.searchsorted(key_e, key_s - band - 1, side="right")
+    hi = np.searchsorted(key_s, key_e - band + 1, side="left")
+    cnt = hi - lo
+    n_edges = int(cnt.sum())
+    a = np.repeat(np.arange(n_runs), cnt)
+    b = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(n_edges)
 
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
+    # union: hook every root onto the smallest root it touches, then
+    # pointer-jump until every run points at its root. A root that
+    # survives two rounds has absorbed another root, so the roots of a
+    # component at least halve every two rounds: O(log n) rounds even
+    # on spirals and combs. Roots only ever hook onto smaller roots, so
+    # each root is its component's first run in scan order.
+    label = np.arange(n_runs)
+    while len(a):
+        ra, rb = label[a], label[b]
+        live = ra != rb
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(label, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            up = label[label]
+            if np.array_equal(up, label):
+                break
+            label = up
 
-    # 8-connectivity: cur run [x0, x1) meets prev-row run [px0, px1)
-    # iff px0 < x1+1 and px1 > x0-1. Runs are disjoint and sorted per
-    # row, so the overlap set is a contiguous searchsorted range.
-    row_first = np.searchsorted(sy, np.arange(h + 1))
-    sx_l, ex_l = sx.tolist(), ex.tolist()
-    sy_l = sy.tolist()
-    for y in np.unique(sy).tolist():
-        if y == 0:
-            continue
-        a0, a1 = int(row_first[y]), int(row_first[y + 1])
-        p0, p1 = int(row_first[y - 1]), int(row_first[y])
-        if p0 == p1:
-            continue
-        lo = np.searchsorted(ex[p0:p1], sx[a0:a1] - 1, side="right")
-        hi = np.searchsorted(sx[p0:p1], ex[a0:a1] + 1, side="left")
-        for i, (jl, jh) in enumerate(zip(lo.tolist(), hi.tolist())):
-            for j in range(jl, jh):
-                union(a0 + i, p0 + j)
-
-    groups: dict[int, list[int]] = {}
-    region_order: list[int] = []
-    for r in range(n_runs):
-        root = find(r)
-        if root not in groups:
-            groups[root] = []
-            region_order.append(root)
-        groups[root].append(r)
-
-    regions: list[np.ndarray] = []
-    for root in region_order[:max_regions]:
-        # per-row run ENDPOINTS only — every convex-hull vertex of a
-        # raster region is a row extreme, so min_area_rect over
-        # endpoints equals min_area_rect over all pixels at a fraction
-        # of the cost (downstream consumes regions solely through the
-        # hull)
-        pts = []
-        for r in groups[root]:
-            y, x0, x1 = sy_l[r], sx_l[r], ex_l[r]
-            pts.append((x0, y))
-            if x1 - 1 != x0:
-                pts.append((x1 - 1, y))
-        regions.append(np.array(pts, dtype=np.int64))
-    return regions
+    # group runs by a stable sort on their root: regions in order of
+    # their first run, runs of a region in scan order
+    order = np.argsort(label, kind="stable")
+    root = label[order]
+    first = np.flatnonzero(np.concatenate(([True], root[1:] != root[:-1])))
+    x0, x1, y = sx[order], ex[order] - 1, sy[order]
+    pts = np.empty((n_runs, 2, 2), dtype=np.int64)
+    pts[:, 0, 0] = x0
+    pts[:, 1, 0] = x1
+    pts[:, :, 1] = y[:, None]
+    wide = x1 != x0
+    pts = pts.reshape(-1, 2)[np.stack((np.ones_like(wide), wide), axis=1).ravel()]
+    n_pts = wide + 1
+    bounds = np.append((np.cumsum(n_pts) - n_pts)[first], len(pts)).tolist()
+    return [pts[s:e] for s, e in zip(bounds, bounds[1:])][:max_regions]
 
 
 # ------------------------------------------------------------ quad masks
@@ -378,15 +401,31 @@ def quad_mask_mean(prob: np.ndarray, quad: np.ndarray) -> float:
     the quad's clipped bbox — semantics of ``box_score_fast``
     (``/root/reference/ocr/postprocess.py:194-209``)."""
     h, w = prob.shape
-    xmin = int(np.clip(np.floor(quad[:, 0].min()), 0, w - 1))
-    xmax = int(np.clip(np.ceil(quad[:, 0].max()), 0, w - 1))
-    ymin = int(np.clip(np.floor(quad[:, 1].min()), 0, h - 1))
-    ymax = int(np.clip(np.ceil(quad[:, 1].max()), 0, h - 1))
-    hh, ww = ymax - ymin + 1, xmax - xmin + 1
-    m = quad_mask(quad, xmin, ymin, hh, ww)
+    # clip-then-floor equals floor-then-clip for integer bounds
+    (xlo, ylo), (xhi, yhi) = quad.min(axis=0).tolist(), quad.max(axis=0).tolist()
+    xmin = math.floor(min(max(xlo, 0), w - 1))
+    xmax = math.ceil(min(max(xhi, 0), w - 1))
+    ymin = math.floor(min(max(ylo, 0), h - 1))
+    ymax = math.ceil(min(max(yhi, 0), h - 1))
+    window = prob[ymin : ymax + 1, xmin : xmax + 1]
+    q = quad.tolist()
+    if (
+        xmin < xmax
+        and ymin < ymax
+        and len(q) == 4
+        and {tuple(p) for p in q}
+        == {(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax)}
+        and all(q[i][0] == q[i - 1][0] or q[i][1] == q[i - 1][1] for i in range(4))
+    ):
+        # an axis-aligned rectangle, corners in cyclic order, whose
+        # integer corners fill the clipped window: the half-plane mask
+        # is all True, and the raveled window holds the same elements
+        # in the same C order as window[mask] — same pairwise sum
+        return float(window.ravel().mean())
+    m = quad_mask(quad, xmin, ymin, ymax - ymin + 1, xmax - xmin + 1)
     if not m.any():
         return 0.0
-    return float(prob[ymin : ymax + 1, xmin : xmax + 1][m].mean())
+    return float(window[m].mean())
 
 
 def unclip_poly(poly: np.ndarray, ratio: float) -> np.ndarray:
@@ -405,12 +444,20 @@ def unclip_poly(poly: np.ndarray, ratio: float) -> np.ndarray:
     """
     q = poly.astype(np.float64)
     n_pts = len(q)
+    # native floats run the same IEEE-double ops in the same order as
+    # numpy scalars; the edge norms come from one np.hypot call and the
+    # corner solves from one stacked np.linalg.solve (the same LAPACK
+    # call per vertex)
+    Q = q.tolist()
+    E = [(Q[(i + 1) % n_pts][0] - x, Q[(i + 1) % n_pts][1] - y)
+         for i, (x, y) in enumerate(Q)]
+    norms = np.hypot(*np.array(E, dtype=np.float64).reshape(-1, 2).T).tolist()
     area = 0.0
     perim = 0.0
     for i in range(n_pts):
         j = (i + 1) % n_pts
-        area += q[i, 0] * q[j, 1] - q[j, 0] * q[i, 1]
-        perim += np.hypot(q[j, 0] - q[i, 0], q[j, 1] - q[i, 1])
+        area += Q[i][0] * Q[j][1] - Q[j][0] * Q[i][1]
+        perim += norms[i]
     orient = area
     area = abs(area) / 2.0
     if perim == 0:
@@ -418,34 +465,39 @@ def unclip_poly(poly: np.ndarray, ratio: float) -> np.ndarray:
     delta = area * ratio / perim
     sgn = 1.0 if orient >= 0 else -1.0
     # outward normal per edge, then intersect consecutive offset lines
-    lines = []
-    for i in range(n_pts):
-        j = (i + 1) % n_pts
-        e = q[j] - q[i]
-        n = np.hypot(e[0], e[1])
+    P = []
+    for (x, y), (ex, ey), n in zip(Q, E, norms):
         if n == 0:
-            nrm = np.zeros(2)
+            nx = ny = 0.0
         else:
             # CCW polygon → outward normal is (ey, -ex)/|e| ... sign-fixed
-            nrm = sgn * np.array([e[1], -e[0]]) / n
-        p0 = q[i] + delta * nrm
-        lines.append((p0, e))
-    out = np.zeros_like(q)
-    for i in range(n_pts):
-        (p1, d1) = lines[(i - 1) % n_pts]
-        (p2, d2) = lines[i]
-        a = np.array([[d1[0], -d2[0]], [d1[1], -d2[1]]])
-        b = p2 - p1
-        try:
-            t = np.linalg.solve(a, b)
-            out[i] = p1 + t[0] * d1
-        except np.linalg.LinAlgError:
-            # collinear consecutive edges (parallel offset lines, e.g.
-            # at a DP anchor vertex): offset the vertex along its own
-            # edge's line rather than leaving it un-offset — the
-            # original point would dent the expanded polygon inward
-            out[i] = p2
-    return out
+            nx, ny = sgn * ey / n, sgn * -ex / n
+        P.append((x + delta * nx, y + delta * ny))
+    # vertex i joins offset line i-1 (P[i-1] + t·E[i-1]) and line i
+    a = np.array([((E[i - 1][0], -E[i][0]), (E[i - 1][1], -E[i][1]))
+                  for i in range(n_pts)])
+    b = np.array([(P[i][0] - P[i - 1][0], P[i][1] - P[i - 1][1])
+                  for i in range(n_pts)])
+    try:
+        T = np.linalg.solve(a, b).tolist()
+    except np.linalg.LinAlgError:
+        # collinear consecutive edges (parallel offset lines, e.g. at a
+        # DP anchor vertex): solve vertex by vertex, and offset such a
+        # vertex along its own edge's line rather than leaving it
+        # un-offset — the original point would dent the expanded
+        # polygon inward
+        T = []
+        for i in range(n_pts):
+            try:
+                T.append(np.linalg.solve(a[i], b[i]).tolist())
+            except np.linalg.LinAlgError:
+                T.append(None)
+    out = [
+        P[i] if t is None
+        else (P[i - 1][0] + t[0] * E[i - 1][0], P[i - 1][1] + t[0] * E[i - 1][1])
+        for i, t in enumerate(T)
+    ]
+    return np.array(out, dtype=np.float64)
 
 
 def unclip_quad(quad: np.ndarray, ratio: float) -> np.ndarray:

@@ -75,35 +75,31 @@ def detect(img: np.ndarray, cfg: OCRConfig) -> np.ndarray:
     return np.stack(sorted_boxes(boxes))
 
 
-def resize_norm_img(
-    img: np.ndarray, max_wh_ratio: float, rec_h: int = 48
-) -> np.ndarray:
-    """Rec crop → (3, rec_h, W) float32 in [-1,1], zero-padded right.
+def resize_norm_img(img: np.ndarray, out: np.ndarray) -> None:
+    """Rec crop → its (3, rec_h, W) float32 input in [-1,1], written
+    into ``out``, which arrives zeroed.
 
     Semantics of ``TextRecognizer.resize_norm_img``
     (``/root/reference/ocr/ocr.py:161-185``): W = int(rec_h ·
     max_wh_ratio) — TRUNCATED, not ceil (``ocr.py:166``); resize to
     h=rec_h, w=min(ceil(rec_h·ar), W); normalize /255 → −0.5 → /0.5;
-    pad right with zeros.
+    the right pad stays zero. W and rec_h come from ``out``'s shape:
+    the caller sizes the batch from its micro-batch's max ratio.
     """
-    img_w = int(rec_h * max_wh_ratio)
+    rec_h, img_w = out.shape[1:]
     h, w = img.shape[:2]
     ratio = w / float(h)
     resized_w = img_w if math.ceil(rec_h * ratio) > img_w else int(
         math.ceil(rec_h * ratio)
     )
     resized_w = max(resized_w, 1)
-    resized = resize_bilinear(img, rec_h, resized_w)
-    out = np.zeros((3, rec_h, img_w), dtype=np.float32)
-    if resized.ndim == 2:
-        # gray crop: normalize the single plane and broadcast-assign —
-        # same values as repeat→transpose at a third of the arithmetic
-        norm = (resized.astype(np.float32) / 255.0 - 0.5) / 0.5
-        out[:, :, :resized_w] = norm[None, :, :]
-    else:
-        norm = (resized.astype(np.float32) / 255.0 - 0.5) / 0.5
-        out[:, :, :resized_w] = norm.transpose(2, 0, 1)
-    return out
+    norm = resize_bilinear(img, rec_h, resized_w)  # a fresh float32 array
+    norm /= 255.0
+    norm -= 0.5
+    norm /= 0.5
+    # a gray crop broadcasts its one plane to all three channels — the
+    # same values as repeat→transpose at a third of the arithmetic
+    out[:, :, :resized_w] = norm if norm.ndim == 2 else norm.transpose(2, 0, 1)
 
 
 def recognize_crops(
@@ -130,12 +126,11 @@ def recognize_crops(
         max_wh_ratio = cfg.rec_image_width * 1.0 / rec_h
         for k in range(beg, end):
             max_wh_ratio = max(max_wh_ratio, ratios[indices[k]])
-        batch = np.stack(
-            [
-                resize_norm_img(crops[indices[k]], max_wh_ratio, rec_h)
-                for k in range(beg, end)
-            ]
+        batch = np.zeros(
+            (end - beg, 3, rec_h, int(rec_h * max_wh_ratio)), dtype=np.float32
         )
+        for k in range(beg, end):
+            resize_norm_img(crops[indices[k]], batch[k - beg])
         logits = run_with_retry(net, batch)
         decoded = ctc_greedy_decode(logits, REC_CHARSET)
         for k in range(beg, end):

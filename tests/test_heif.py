@@ -151,6 +151,77 @@ def test_bitflip_fuzz_contract():
         base[pos] = old
 
 
+def _fixture(name):
+    import pathlib
+
+    return (pathlib.Path(__file__).parent / "fixtures" / name).read_bytes()
+
+
+def test_avif_mutants_stay_per_row_results():
+    """300 seeded byte-flip and truncation mutants of a real AVIF:
+    ``extract_payload`` returns a per-row status for every one and
+    raises for none (an exception would fail the Spark task)."""
+    from ragflow_ocr_spark.kernels.ocr_pipeline import extract_payload
+
+    data = _fixture("avif_a.avif")
+    rng = _rng(0)
+    for k in range(300):
+        m = bytearray(data)
+        if k % 2:
+            m = m[: int(rng.integers(0, len(m)))]
+        else:
+            for _ in range(int(rng.integers(1, 5))):
+                m[int(rng.integers(0, len(m)))] ^= int(rng.integers(1, 256))
+        r = extract_payload(bytes(m))
+        assert r.status.startswith(("error:", "empty", "ok")), (k, r.status)
+
+
+@pytest.mark.parametrize("box", ["iloc", "ipma", "iref"])
+def test_item_box_counts_past_the_box_raise_value_error(box):
+    """An entry count larger than its box holds makes the parser read
+    past the box: it reports a truncated box (ValueError), never an
+    IndexError or struct.error."""
+    data = bytearray(heif.encode_heic_grid(np.zeros((32, 32), np.uint8), 2, 2))
+    body = data.find(box.encode()) + 4
+    if box == "iloc":  # v0: version/flags u32, sizes u16, item count u16
+        struct.pack_into(">H", data, body + 6, 0xFFFF)
+    elif box == "ipma":  # version/flags u32, entry count u32
+        struct.pack_into(">I", data, body + 4, 0xFFFFFFFF)
+    else:  # v0 iref: first child box header, from_item u16, ref count u16
+        struct.pack_into(">H", data, body + 4 + 8 + 2, 0xFFFF)
+    with pytest.raises(ValueError, match=f"truncated heif {box}"):
+        heif.parse_heif(bytes(data))
+
+
+def _with_repeated_extent(data: bytes, copies: int) -> bytes:
+    """encode_heic output whose primary item lists its one extent
+    ``copies`` times (iloc is the last box in meta; mdat follows)."""
+    i = data.find(b"iloc") - 4
+    (size,) = struct.unpack_from(">I", data, i)
+    off, ln = struct.unpack_from(">II", data, i + size - 8)
+    grow = 8 * (copies - 1)
+    head = bytearray(data[i:i + size - 10])  # up to the extent count
+    struct.pack_into(">I", head, 0, size + grow)
+    ext = struct.pack(">H", copies) + struct.pack(">II", off + grow, ln) * copies
+    out = bytearray(data[:i]) + head + ext + data[i + size:]
+    meta = out.find(b"meta") - 4
+    struct.pack_into(">I", out, meta, struct.unpack_from(">I", out, meta)[0] + grow)
+    return bytes(out)
+
+
+def test_item_extents_are_capped_at_the_byte_budget(monkeypatch):
+    data = _with_repeated_extent(heif.encode_heic(np.zeros((32, 32), np.uint8)), 3)
+    info = heif.parse_heif(data)
+    one = len(info["item"]) // 3
+    assert info["item"] == info["item"][:one] * 3
+    # extents that add up past the budget are refused, even though the
+    # file itself fits in it
+    monkeypatch.setattr(heif, "MAX_HEIF_BYTES", len(data))
+    assert 3 * one > len(data)
+    with pytest.raises(ValueError, match="item exceeds the per-row budget"):
+        heif.parse_heif(data)
+
+
 def test_ispe_mismatch_is_loud():
     data = bytearray(heif.encode_heic(np.zeros((32, 32), np.uint8)))
     i = bytes(data).find(b"ispe")
