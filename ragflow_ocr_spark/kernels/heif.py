@@ -356,6 +356,10 @@ def _decode_grid(info: dict) -> np.ndarray:
             th, tw = tile.shape[:2]
             if tw * cols < out_w or th * rows < out_h:
                 raise ValueError("heif grid tiles do not cover output")
+            # the tile lattice can exceed a small declared output:
+            # check its canvas before allocating or decoding further
+            if th * rows * tw * cols > MAX_HEIF_PIXELS:
+                raise ValueError("heif grid canvas exceeds the pixel budget")
             canvas = np.zeros((th * rows, tw * cols, 3), np.uint8)
         elif tile.shape[:2] != (th, tw):
             raise ValueError("heif grid tiles disagree in size")
@@ -408,7 +412,7 @@ def encode_heic(img: np.ndarray) -> bytes:
     """uint8 image -> minimal conformant HEIC with one PCM-coded hvc1
     item (fixture writer; even dims per the HEVC 4:2:0 contract; the
     RGB->YUV conversion is the only lossy step)."""
-    from ragflow_ocr_spark.kernels.h264 import _rgb_to_yuv
+    from ragflow_ocr_spark.kernels.hevc import _rgb_to_yuv
 
     return encode_heic_yuv(*_rgb_to_yuv(np.asarray(img)))
 
@@ -491,7 +495,7 @@ def encode_heic_grid(img: np.ndarray, rows: int, cols: int) -> bytes:
     camera HEICs use; fixture writer for the grid decode path). Tile
     dims must be even; the image is edge-padded to the tile lattice
     and cropped back via the grid's output size."""
-    from ragflow_ocr_spark.kernels.h264 import _rgb_to_yuv
+    from ragflow_ocr_spark.kernels.hevc import _rgb_to_yuv
 
     img = np.asarray(img)
     h, w = img.shape[:2]
@@ -603,7 +607,7 @@ def _leb128(data: bytes, p: int) -> tuple[int, int]:
 def parse_av1_sequence_header(obus: bytes) -> dict:
     """OBU stream (an av01 item payload) -> sequence-header facts:
     width/height, bit_depth, monochrome, profile, still_picture."""
-    from ragflow_ocr_spark.kernels.h264 import _BitReader
+    from ragflow_ocr_spark.kernels.hevc import _BitReader
 
     p = 0
     while p < len(obus):

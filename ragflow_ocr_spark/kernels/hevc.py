@@ -4,7 +4,7 @@ Reference parity target: the reference hands any payload to
 cv2/ffmpeg (``/root/reference/ocr/operators.py:41-46``); hvc1 (HEVC)
 is the second-most-common crawl mp4 video codec after avc1. This
 module implements the structurally-safe slice of the format from
-scratch, the same contract as the H.264 sibling (kernels/h264.py):
+scratch:
 
 - NAL unit layer: Annex-B start-code streams AND HVCC length-prefixed
   samples (hvcC decoder-configuration parsing), with the 2-byte HEVC
@@ -44,13 +44,14 @@ profile INTRA decoder in kernels/hevc_intra.py — CABAC coding
 quadtree, all 35 intra modes, residual coding, DST/DCT inverse
 transforms, deblocking, SAO, WPP substreams — validated sample-exact
 against the system libde265 on real x265 encodes
-(tests/test_hevc_intra.py), for 8-bit AND Main10 streams; low-delay
-P pictures (merge/skip, AMVP motion vectors, quarter-pel 8-tap /
-eighth-pel 4-tap motion compensation, inter residual, MV-derived
-deblocking strengths) decode via kernels/hevc_inter with the same
-libde265 falsification (tests/test_hevc_inter.py). Remaining named
-seams: B slices, multi-reference/TMVP, non-2Nx2N inter partitions,
-tiles, scaling lists, >10-bit / non-4:2:0.
+(tests/test_hevc_intra.py), for 8-bit AND Main10 streams. Only IDR
+pictures decode: every access unit is a keyframe. Remaining named
+seams: non-IRAP (P/B) and CRA/BLA pictures, dependent slice
+segments, tiles, scaling lists, >10-bit / non-4:2:0.
+
+This module also holds the bit-level helpers the HEVC, HEVC-intra
+and HEIF layers share: the RBSP bit reader/writer with Exp-Golomb
+codes, emulation-prevention escaping, and the BT.601 YUV<->RGB maps.
 
 Error contract: ValueError on malformed input, NotImplementedError on
 the named seam — the Spark media stages map both to per-row error
@@ -63,17 +64,170 @@ import struct
 
 import numpy as np
 
-from ragflow_ocr_spark.kernels.h264 import (
-    MAX_H264_PIXELS,
-    _add_epb,
-    _BitReader,
-    _BitWriter,
-    _rgb_to_yuv,
-    _strip_epb,
-    _yuv_to_rgb,
-)
+MAX_HEVC_PIXELS = 1 << 23  # same still-frame budget as the other codecs
 
-MAX_HEVC_PIXELS = MAX_H264_PIXELS  # same still-frame budget
+
+# ---------------------------------------------------------------- bits
+class _BitReader:
+    __slots__ = ("data", "pos", "n")
+
+    def __init__(self, data: bytes) -> None:
+        self.data = data
+        self.pos = 0
+        self.n = len(data) * 8
+
+    def u(self, k: int) -> int:
+        if self.pos + k > self.n:
+            raise ValueError("truncated H.264 RBSP")
+        v = 0
+        p = self.pos
+        d = self.data
+        for _ in range(k):
+            v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
+            p += 1
+        self.pos = p
+        return v
+
+    def ue(self) -> int:
+        zeros = 0
+        while True:
+            if self.pos >= self.n:
+                raise ValueError("truncated exp-Golomb code")
+            bit = (self.data[self.pos >> 3] >> (7 - (self.pos & 7))) & 1
+            self.pos += 1
+            if bit:
+                break
+            zeros += 1
+            if zeros > 31:
+                raise ValueError("exp-Golomb code too long")
+        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
+
+    def se(self) -> int:
+        k = self.ue()
+        return (k + 1) >> 1 if k & 1 else -(k >> 1)
+
+    def byte_align(self) -> None:
+        self.pos = (self.pos + 7) & ~7
+
+    def bytes_raw(self, k: int) -> bytes:
+        if self.pos & 7:
+            raise ValueError("unaligned raw byte read")
+        b0 = self.pos >> 3
+        if b0 + k > len(self.data):
+            raise ValueError("truncated H.264 PCM samples")
+        self.pos += k * 8
+        return self.data[b0:b0 + k]
+
+
+class _BitWriter:
+    __slots__ = ("out", "acc", "bits")
+
+    def __init__(self) -> None:
+        self.out = bytearray()
+        self.acc = 0
+        self.bits = 0
+
+    def u(self, v: int, k: int) -> None:
+        for i in range(k - 1, -1, -1):
+            self.acc = (self.acc << 1) | ((v >> i) & 1)
+            self.bits += 1
+            if self.bits == 8:
+                self.out.append(self.acc)
+                self.acc = 0
+                self.bits = 0
+
+    def ue(self, v: int) -> None:
+        v += 1
+        k = v.bit_length()
+        self.u(0, k - 1)
+        self.u(v, k)
+
+    def se(self, v: int) -> None:
+        self.ue(2 * v - 1 if v > 0 else -2 * v)
+
+    def byte_align_zero(self) -> None:
+        while self.bits:
+            self.u(0, 1)
+
+    def bytes_raw(self, data: bytes) -> None:
+        if self.bits:
+            raise ValueError("unaligned raw byte write")
+        self.out += data
+
+    def rbsp_trailing(self) -> bytes:
+        self.u(1, 1)
+        self.byte_align_zero()
+        return bytes(self.out)
+
+
+# ----------------------------------------------------------------- NAL
+def _strip_epb(data: bytes) -> bytes:
+    """EBSP -> RBSP: drop emulation_prevention_three_byte."""
+    if b"\x00\x00\x03" not in data:
+        return data
+    out = bytearray()
+    i, n = 0, len(data)
+    while i < n:
+        if i + 2 < n and data[i] == 0 and data[i + 1] == 0 \
+                and data[i + 2] == 3:
+            out += b"\x00\x00"
+            i += 3
+        else:
+            out.append(data[i])
+            i += 1
+    return bytes(out)
+
+
+def _add_epb(rbsp: bytes) -> bytes:
+    """RBSP -> EBSP: insert 0x03 after any 00 00 before 00/01/02/03."""
+    out = bytearray()
+    zeros = 0
+    for b in rbsp:
+        if zeros >= 2 and b <= 3:
+            out.append(3)
+            zeros = 0
+        out.append(b)
+        zeros = zeros + 1 if b == 0 else 0
+    return bytes(out)
+
+
+def _yuv_to_rgb(y: np.ndarray, u: np.ndarray, v: np.ndarray):
+    """BT.601 studio-swing integer conversion (same constants as the
+    VP8 route, kernels/vp8.py::_yuv_to_rgb) with nearest upsample."""
+    h, w = y.shape
+    yy = y.astype(np.int32)
+    uu = np.repeat(np.repeat(u.astype(np.int32), 2, 0), 2, 1)[:h, :w]
+    vv = np.repeat(np.repeat(v.astype(np.int32), 2, 0), 2, 1)[:h, :w]
+    c = 298 * (yy - 16)
+    d = uu - 128
+    e = vv - 128
+    r = np.clip((c + 409 * e + 128) >> 8, 0, 255).astype(np.uint8)
+    g = np.clip((c - 100 * d - 208 * e + 128) >> 8, 0, 255).astype(
+        np.uint8)
+    b = np.clip((c + 516 * d + 128) >> 8, 0, 255).astype(np.uint8)
+    if (r == g).all() and (g == b).all():
+        return np.ascontiguousarray(r)
+    return np.ascontiguousarray(np.stack([r, g, b], axis=-1))
+
+
+def _rgb_to_yuv(img: np.ndarray):
+    """BT.601 studio-swing RGB -> YUV420 (box-filtered chroma)."""
+    if img.ndim == 2:
+        img = np.stack([img] * 3, axis=2)
+    r = img[:, :, 0].astype(np.float64)
+    g = img[:, :, 1].astype(np.float64)
+    b = img[:, :, 2].astype(np.float64)
+    y = 16 + (65.738 * r + 129.057 * g + 25.064 * b) / 256.0
+    u = 128 + (-37.945 * r - 74.494 * g + 112.439 * b) / 256.0
+    v = 128 + (112.439 * r - 94.154 * g - 18.285 * b) / 256.0
+    h, w = y.shape
+    if h % 2 or w % 2:
+        raise ValueError("H.264 4:2:0 needs even dimensions")
+    u = u.reshape(h // 2, 2, w // 2, 2).mean(axis=(1, 3))
+    v = v.reshape(h // 2, 2, w // 2, 2).mean(axis=(1, 3))
+    to8 = lambda a: np.clip(np.rint(a), 0, 255).astype(np.uint8)  # noqa: E731
+    return to8(y), to8(u), to8(v)
+
 
 # NAL unit types (spec Table 7-1)
 NAL_IDR_W_RADL = 19
@@ -722,58 +876,19 @@ def _parse_slice_header(r: _BitReader, nal_type: int, sps: dict,
     slice_type = r.ue()
     if pps["output_flag_present"]:
         r.u(1)
-    poc_lsb = 0
-    n_neg_refs = 0
     if nal_type not in (NAL_IDR_W_RADL, NAL_IDR_N_LP):
-        if nal_type in _IRAP_TYPES:
-            raise NotImplementedError(
-                "HEVC CRA/BLA pictures not bundled (IDR + trailing)")
-        # trailing picture: POC lsb + slice-header short-term RPS
-        poc_lsb = r.u(sps["log2_max_poc"])
-        if not r.u(1):  # short_term_ref_pic_set_sps_flag
-            # st_ref_pic_set(idx == num_short_term_ref_pic_sets):
-            # sps carries zero sets, so no prediction flag
-            n_neg = r.ue()  # num_negative_pics
-            n_pos = r.ue()
-            if n_pos:
-                raise NotImplementedError(
-                    "HEVC positive (future) references not bundled "
-                    "(low-delay P layer)")
-            for _ in range(n_neg):
-                r.ue()      # delta_poc_s0_minus1
-                if r.u(1):  # used_by_curr_pic_s0_flag
-                    n_neg_refs += 1
-        else:
-            raise ValueError("HEVC slice references an SPS RPS but "
-                             "the SPS carries none")
-        # (sps long-term refs are parse-gated off in parse_sps)
-        if sps["tmvp"]:
-            if r.u(1):  # slice_temporal_mvp_enabled_flag
-                raise NotImplementedError(
-                    "HEVC temporal MV prediction not bundled")
+        raise NotImplementedError(
+            "HEVC CRA/BLA pictures not bundled (IDR only)")
     if slice_type == 0:
         raise NotImplementedError("HEVC B slices not bundled")
     if slice_type not in (1, 2):
         raise ValueError("HEVC invalid slice_type")
-    if slice_type != 2 and nal_type in (NAL_IDR_W_RADL, NAL_IDR_N_LP):
+    if slice_type != 2:
         raise ValueError("HEVC IDR with non-I slice")
     sao_luma = sao_chroma = 0
     if sps["sao"]:
         sao_luma = r.u(1)
         sao_chroma = r.u(1)
-    n_ref_l0 = 1
-    max_merge = 5
-    if slice_type == 1:  # P
-        if r.u(1):  # num_ref_idx_active_override_flag
-            n_ref_l0 = r.ue() + 1
-        # pps lists_modification/weighted-pred/cabac_init gated off in
-        # the shapes we parse (flags checked below for foreign PPS)
-        if pps["cabac_init_present"]:
-            raise NotImplementedError(
-                "HEVC cabac_init_flag not bundled")
-        max_merge = 5 - r.ue()
-        if not 1 <= max_merge <= 5:
-            raise ValueError("HEVC five_minus_max_num_merge_cand")
     qp = pps["init_qp"] + r.se()
     cb_qp_off = pps["cb_qp_offset"]
     cr_qp_off = pps["cr_qp_offset"]
@@ -808,9 +923,7 @@ def _parse_slice_header(r: _BitReader, nal_type: int, sps: dict,
         raise ValueError("bad HEVC slice header byte alignment")
     r.byte_align()
     return {"first": first, "addr": addr, "qp": qp,
-            "slice_type": slice_type, "poc_lsb": poc_lsb,
-            "n_neg_refs": n_neg_refs, "n_ref_l0": n_ref_l0,
-            "max_merge": max_merge,
+            "slice_type": slice_type,
             "sao_luma": sao_luma, "sao_chroma": sao_chroma,
             "cb_qp_off": cb_qp_off, "cr_qp_off": cr_qp_off,
             "deblock_disabled": deblock_disabled,

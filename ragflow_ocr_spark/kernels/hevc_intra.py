@@ -46,8 +46,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ragflow_ocr_spark.kernels.h264 import _BitReader
-from ragflow_ocr_spark.kernels.hevc import _CabacDecoder, _ctx_init
+from ragflow_ocr_spark.kernels.hevc import _BitReader, _CabacDecoder, _ctx_init
 
 # ---------------------------------------------------------------------
 # Context initValues, I-slice initType (spec Tables 9-19..9-32; byte-
@@ -180,9 +179,9 @@ class _Ctx:
 
     __slots__ = ("t",)
 
-    def __init__(self, qp: int, table: dict = None) -> None:
+    def __init__(self, qp: int) -> None:
         self.t = {name: [_ctx_init(v, qp) for v in vals]
-                  for name, vals in (table or _INIT_I).items()}
+                  for name, vals in _INIT_I.items()}
 
     def snapshot(self) -> dict:
         return {k: [c[:] for c in v] for k, v in self.t.items()}
@@ -196,8 +195,6 @@ class IntraDecoder:
     + _parse_slice_header in kernels/hevc.py. Returns full-size (un-
     cropped) Y/Cb/Cr planes; the caller applies the conformance crop.
     """
-
-    CTX_TABLE = _INIT_I  # P subclass swaps in initType-1 values
 
     def __init__(self, sps: dict, pps: dict) -> None:
         if sps["chroma"] != 1 \
@@ -233,8 +230,6 @@ class IntraDecoder:
         # parse-time z-order availability (MPM neighbours may be
         # earlier PUs of the same CU, parsed but not yet recon'd)
         self.parsed4 = np.zeros(g, bool)
-        self.intra4 = np.zeros(g, bool)   # MODE_INTRA per 4x4
-        self.cbf4 = np.zeros(g, bool)     # nonzero luma TU coeffs
         self.mode4 = np.ones(g, np.uint8)      # DC until written
         self.depth4 = np.zeros(g, np.uint8)
         self.qp4 = np.zeros(g, np.int16)
@@ -253,7 +248,7 @@ class IntraDecoder:
         self.slice_qp = hdr["qp"]
         if not -26 <= self.slice_qp <= 51:
             raise ValueError("HEVC slice QP out of range")
-        ctx = _Ctx(self.slice_qp, self.CTX_TABLE)
+        ctx = _Ctx(self.slice_qp)
         self.ctx = ctx.t
         byte0 = (data_bit_pos + 7) // 8
         entry = hdr["entry_points"]
@@ -306,7 +301,7 @@ class IntraDecoder:
                     ctx.restore(snap)
                     self.ctx = ctx.t
                 else:
-                    ctx = _Ctx(self.slice_qp, self.CTX_TABLE)
+                    ctx = _Ctx(self.slice_qp)
                     self.ctx = ctx.t
                 self.qpy_last = self.slice_qp
             self._decode_ctu(cx, cy)
@@ -449,13 +444,6 @@ class IntraDecoder:
         self.tqb = 0
         if self.pps["transquant_bypass"]:
             self.tqb = dec.decode_decision(ctx["tqb"][0])
-        self._coding_unit_intra(x0, y0, log2, depth)
-
-    def _coding_unit_intra(self, x0: int, y0: int, log2: int,
-                           depth: int) -> None:
-        """Intra CU body after cu_transquant_bypass (and, in P
-        slices, after cu_skip/pred_mode) — spec 7.3.8.5."""
-        dec, ctx = self.dec, self.ctx
         n = 1 << log2
         part_nxn = False
         if log2 == self.min_cb_log2:
@@ -501,8 +489,6 @@ class IntraDecoder:
                        px >> 2:(px + pu_n) >> 2] = mode
             self.parsed4[py >> 2:(py + pu_n) >> 2,
                          px >> 2:(px + pu_n) >> 2] = True
-            self.intra4[py >> 2:(py + pu_n) >> 2,
-                        px >> 2:(px + pu_n) >> 2] = True
         # chroma mode (4:2:0: one per CU)
         if dec.decode_decision(ctx["intra_chroma"][0]):
             idx = dec.decode_bypass_bits(2)
@@ -529,7 +515,6 @@ class IntraDecoder:
             self.mode4[ys, xs] = 1  # DC candidate per 8.4.2
             self.done4[ys, xs] = True
         self.parsed4[ys, xs] = True
-        self.intra4[ys, xs] = True
         self.qpy_last = qp
         # deblocking: CU boundary edges (TU marking covers them too,
         # but PCM CUs have no TU tree)
@@ -545,11 +530,9 @@ class IntraDecoder:
         """8.4.2 three most-probable-mode candidates."""
         cand_a = cand_b = 1  # DC
         if px > 0 and self.parsed4[py >> 2, (px - 1) >> 2] \
-                and self.intra4[py >> 2, (px - 1) >> 2] \
                 and not self.pcm4[py >> 2, (px - 1) >> 2]:
             cand_a = int(self.mode4[py >> 2, (px - 1) >> 2])
         if py > 0 and self.parsed4[(py - 1) >> 2, px >> 2] \
-                and self.intra4[(py - 1) >> 2, px >> 2] \
                 and not self.pcm4[(py - 1) >> 2, px >> 2] \
                 and (py - 1) >> self.ctb_log2 == py >> self.ctb_log2:
             cand_b = int(self.mode4[(py - 1) >> 2, px >> 2])
@@ -651,9 +634,6 @@ class IntraDecoder:
             if cbf_luma else None
         self._recon(self.y, x0, y0, log2, 0, mode, coeff)
         n4 = 1 << (log2 - 2)
-        if cbf_luma:
-            self.cbf4[y0 >> 2:(y0 >> 2) + n4,
-                      x0 >> 2:(x0 >> 2) + n4] = True
         self.done4[y0 >> 2:(y0 >> 2) + n4,
                    x0 >> 2:(x0 >> 2) + n4] = True
         self._mark_edges(x0, y0, 1 << log2)
@@ -694,8 +674,7 @@ class IntraDecoder:
         if self.pps["transform_skip"] and log2 == 2 and not self.tqb:
             tskip = bool(dec.decode_decision(
                 ctx["tskip"][0 if c_idx == 0 else 1]))
-        scan_idx = 0 if mode is None \
-            else _scan_idx_for(mode, log2, c_idx)
+        scan_idx = _scan_idx_for(mode, log2, c_idx)
         # last significant position
         cmax = (log2 << 1) - 1
         if c_idx == 0:
@@ -833,8 +812,7 @@ class IntraDecoder:
                 if signs.get(np_, 0):
                     v = -v
                 coeff[(ys << 2) + yp, (xs << 2) + xp] = v
-        return self._dequant_itransform(coeff, log2, c_idx, tskip,
-                                        mode)
+        return self._dequant_itransform(coeff, log2, c_idx, tskip)
 
     def _sig_ctx(self, log2, c_idx, scan_idx, xc, yc, xp, yp, xs, ys,
                  csbf):
@@ -881,7 +859,7 @@ class IntraDecoder:
             + (((1 << (prefix - 3)) + 2) << k)
 
     # ----------------------------------------- dequant + inverse trafo
-    def _dequant_itransform(self, coeff, log2, c_idx, tskip, mode):
+    def _dequant_itransform(self, coeff, log2, c_idx, tskip):
         qp_y = self._cu_qp()
         if c_idx == 0:
             qp = qp_y + self.qp_bd  # Qp'Y
@@ -908,9 +886,8 @@ class IntraDecoder:
             r = (d << 7)
             r = (r + (1 << (sh2 - 1))) >> sh2
             return np.clip(r, -32768, 32767).astype(np.int32)
-        # 8.6.4: DST-VII for 4x4 INTRA luma (mode None = inter: DCT)
-        t = _DST4 if (log2 == 2 and c_idx == 0 and mode is not None) \
-            else _DCT[1 << log2]
+        # 8.6.4: DST-VII for 4x4 luma (every CU is intra)
+        t = _DST4 if (log2 == 2 and c_idx == 0) else _DCT[1 << log2]
         e = t.T @ d
         e = np.clip((e + 64) >> 7, -32768, 32767)
         r = e @ t
@@ -1136,12 +1113,6 @@ class IntraDecoder:
     def _qp_at(self, x, y):
         return int(self.qp4[y >> 2, x >> 2])
 
-    def _edge_bs(self, vertical, pos, seg) -> int:
-        """Boundary strength for the 4-line segment at a filtered
-        edge; every edge in a pure-intra picture is bS 2 (8.7.2.4).
-        The P-slice subclass derives 2/1/0 from intra/cbf/MV state."""
-        return 2
-
     def _deblock_luma_seg(self, vertical, pos, seg, beta_off, tc_off):
         """Filter one 4-line luma segment across an 8x8-grid edge
         (spec 8.7.2.5.3/8.7.2.5.7); bS = 2 everywhere (intra)."""
@@ -1159,9 +1130,6 @@ class IntraDecoder:
             else:
                 y[pos + side, seg + line] = v
 
-        bs = self._edge_bs(vertical, pos, seg)
-        if bs == 0:
-            return
         if vertical:
             qp_p = self._qp_at(pos - 1, seg)
             qp_q = self._qp_at(pos, seg)
@@ -1171,7 +1139,8 @@ class IntraDecoder:
         qp_l = (qp_p + qp_q + 1) >> 1
         sh = self.bd - 8
         beta = _BETA_TAB[min(max(qp_l + beta_off, 0), 51)] << sh
-        tc = _TC_TAB[min(max(qp_l + 2 * (bs - 1) + tc_off, 0),
+        # tC index qp + 2*(bS-1) + tc_offset, with bS = 2 (intra)
+        tc = _TC_TAB[min(max(qp_l + 2 + tc_off, 0),
                          53)] << sh
         if beta == 0:
             return
@@ -1243,8 +1212,6 @@ class IntraDecoder:
     def _deblock_chroma_seg(self, vertical, pos, seg, tc_off):
         """8.7.2.5.5: chroma filtered only for bS==2 (always, intra);
         `pos`/`seg` are LUMA coordinates on the 16/4 grids."""
-        if self._edge_bs(vertical, pos, seg) != 2:
-            return  # chroma is filtered only across intra (bS 2) edges
         cpos = pos >> 1
         for plane, qp_off in ((self.cb, self.pps["cb_qp_offset"]),
                               (self.cr, self.pps["cr_qp_offset"])):
@@ -1389,8 +1356,7 @@ def decode_intra_au(sps: dict, pps: dict, slices, parse_header):
 # =====================================================================
 
 def _sps_lossless_rbsp(pic_w, pic_h, crop_r, crop_b, bit_depth=8):
-    from ragflow_ocr_spark.kernels.h264 import _BitWriter
-    from ragflow_ocr_spark.kernels.hevc import _write_ptl
+    from ragflow_ocr_spark.kernels.hevc import _BitWriter, _write_ptl
 
     bw = _BitWriter()
     bw.u(0, 4)  # sps_video_parameter_set_id
@@ -1431,7 +1397,7 @@ def _sps_lossless_rbsp(pic_w, pic_h, crop_r, crop_b, bit_depth=8):
 
 
 def _pps_lossless_rbsp():
-    from ragflow_ocr_spark.kernels.h264 import _BitWriter
+    from ragflow_ocr_spark.kernels.hevc import _BitWriter
 
     bw = _BitWriter()
     bw.ue(0)    # pps_pic_parameter_set_id
@@ -1634,8 +1600,6 @@ def _encode_intra_cu16(state, enc, ctx, x0, y0, yp, up, vp):
                 x0 >> 2:(x0 + ctb) >> 2] = mode
     state.parsed4[y0 >> 2:(y0 + ctb) >> 2,
                   x0 >> 2:(x0 + ctb) >> 2] = True
-    state.intra4[y0 >> 2:(y0 + ctb) >> 2,
-                 x0 >> 2:(x0 + ctb) >> 2] = True
     enc.encode_decision(ctx["intra_chroma"][0], 0)  # DM
     # transform tree: TU == CU == 16, no split flag signalled
     src_y = yp[y0:y0 + ctb, x0:x0 + ctb].astype(np.int32)
@@ -1683,7 +1647,7 @@ def encode_hevc_intra_lossless_yuv(y, u, v, bit_depth: int = 8
     tests). Luma dims must be even. bit_depth 8 (uint8 planes) or
     10 (uint16 planes, values < 1024) — Main10."""
     from ragflow_ocr_spark.kernels import hevc as H
-    from ragflow_ocr_spark.kernels.h264 import _BitWriter
+    from ragflow_ocr_spark.kernels.hevc import _BitWriter
 
     if bit_depth not in (8, 10):
         raise ValueError("bit_depth must be 8 or 10")

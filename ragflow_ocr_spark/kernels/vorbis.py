@@ -9,8 +9,8 @@ Floor type 0 (LSP) parses but raises a NAMED NotImplementedError —
 no mainstream encoder has emitted it since 2002, and a loud rejection
 beats a silently-wrong curve.
 
-Pinning strategy (same as kernels/mp3.py — no reference Vorbis
-decoder exists in this sandbox and the network is unreachable):
+Pinning strategy (no reference Vorbis decoder is available to
+test against):
 - every integer/structural algorithm (codeword assignment, neighbor
   prediction, render_line, residue partitioning) is tested against
   independent direct-from-spec-pseudocode models in tests/test_vorbis.py,
@@ -22,7 +22,7 @@ decoder exists in this sandbox and the network is unreachable):
   synthesis model, so the bitstream layer is round-trip-pinned;
 - digital silence is a fixed point of the whole linear chain, so
   silence streams have EXACT expected output regardless of float
-  detail (the multimodal oracle uses this).
+  detail.
 
 The one literal table the spec carries (floor1's inverse-dB lookup)
 is geometric: 256 steps spanning 140 dB, table[i] =
@@ -30,9 +30,7 @@ is geometric: 256 steps spanning 140 dB, table[i] =
 1.1341951e-07, ...) were generated with truncated decimal constants
 and float arithmetic, so the clean formula lands within a few float32
 ULP of them (≤1e-6 relative, pinned in tests) rather than bit-exact;
-the table is generated here rather than transcribed from memory, and
-the multimodal oracle derives from this same kernel, so parity is
-unaffected.
+the table is generated here rather than transcribed from memory.
 
 Reference behavior: /root/reference/ocr/operators.py:41-46 (any
 binary payload its decoders accept); SURVEY.md §2.3 S3.
@@ -903,7 +901,7 @@ def decode_vorbis(data: bytes) -> tuple[np.ndarray, int]:
 # ------------------------------------------------------------- encoder
 #
 # Minimal-but-legal encoder used for round-trip pinning and the
-# multimodal oracle fixtures. Base setup: blocksizes 256/256, one
+# audio-stage tests. Base setup: blocksizes 256/256, one
 # mode, mono, floor1 with X = {0,16,48,64} at multiplier 4 (range 64),
 # residue type 2 over [0,1024) with partition size 8, two classes
 # (silent / book-coded) and a 2-dim 16-entry VQ book over
@@ -1198,8 +1196,7 @@ def enc_expected_spectra_ex(frame, channels: int, n: int) -> np.ndarray:
 
 def enc_expected_spectrum(frame) -> np.ndarray:
     """Independent model of the spectrum the decoder must produce for
-    one encoder frame (floor curve × residue), used by tests and the
-    multimodal oracle derivation."""
+    one encoder frame (floor curve × residue), used by tests."""
     if frame is None:
         return np.zeros(ENC_N2)
     floor_ys, partitions = frame

@@ -1566,17 +1566,16 @@ def _decode_residuals(parts, hdr, mb_rows, mb_cols, ymodes, skips,
 def decode_vp8(data: bytes) -> np.ndarray:
     """Raw ``VP8 `` chunk payload (RFC 6386 keyframe) → HxW gray /
     HxWx3 RGB, same return convention as decode_vp8l. Interframes need
-    reference state — decode them through
-    ``vp8_inter.Vp8SequenceDecoder``."""
+    reference state that this keyframe decoder does not keep: they
+    raise ValueError."""
     _hdr, Y, U, V, w, h, _r, _c2 = _decode_keyframe(data)
     return _yuv_to_rgb(Y, U, V, w, h)
 
 
 def _decode_keyframe(data: bytes):
     """Keyframe decode core: returns (hdr, Y, U, V, w, h, mb_rows,
-    mb_cols) with the loop-filtered padded planes — the state an
-    interframe sequence decoder (kernels/vp8_inter.py) carries
-    forward as LAST/GOLDEN/ALTREF."""
+    mb_cols) with the loop-filtered padded planes, before the RGB map
+    (the libwebp cross-check compares these planes directly)."""
     if len(data) < 10:
         raise ValueError("truncated VP8 frame")
     tag = data[0] | (data[1] << 8) | (data[2] << 16)

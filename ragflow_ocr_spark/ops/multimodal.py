@@ -13,29 +13,23 @@ Container/codec reality in this sandbox (no PIL/cv2/ffmpeg):
   kernels/jpeg2000) all decode for real (kernels/pngcodec +
   kernels/imgcodecs + kernels/jpeg2000).
 - **audio**: raw PCM s16le payloads, real RIFF/WAV PCM16 containers
-  (kernels/wavcodec), real MPEG-1/2 Layer III MP3 (kernels/mp3 — the
-  dominant real-crawl audio payload), real Ogg Vorbis (kernels/ogg +
-  kernels/vorbis), AND real FLAC (kernels/flac) — RMS / zero-crossing
-  / peak features are real; MP3/Vorbis oracle rows use silence (exact
-  closed form through the whole lossy chain) while FLAC rows carry
-  CONTENT (lossless ⇒ the raw family's closed form survives the
-  codec).
+  (kernels/wavcodec) and real Ogg Vorbis (kernels/ogg +
+  kernels/vorbis) — RMS / zero-crossing / peak features are real.
+  FLAC and MP3 payloads are recognised by their magic bytes and
+  become ``error:unsupported_codec`` rows; no decoder for them is
+  bundled.
 - **video**: MOCKV1 (deterministic synth container), real RIFF
   AVI/MJPEG, real ISO-BMFF mp4 (general stsd/stsz/stsc/stco
-  sample-table demux), real webm/Matroska (EBML walk,
-  SimpleBlock/BlockGroup frames) with MJPEG-coded AND V_VP8-coded
-  tracks (keyframes via kernels/vp8 AND inter frames via the stateful
-  kernels/vp8_inter sequence decoder — motion compensation, near-MV
-  prediction, SPLITMV, golden/altref), and ANIMATED WebP
-  (VP8X/ANIM/ANMF compositing incl. ALPH alpha via kernels/webp) —
-  frame sampling, frame decode, and per-frame features are real for
-  all of these. H.264 (mp4 avc1 / Matroska V_MPEG4/ISO/AVC) demuxes
-  and decodes its structurally-safe slice via kernels/h264 (NAL/SPS/
-  PPS/slice parsing + byte-exact I_PCM macroblocks); entropy-coded
-  H.264 frames and VP9/AV1 are the remaining per-row seam (no
-  validator for their entropy tables exists on this host — see
-  kernels/h264's module doc for why we refuse to ship
-  memory-reconstructed tables).
+  sample-table demux) with MJPEG or HEVC (hvc1/hev1) tracks, real
+  webm/Matroska (EBML walk, SimpleBlock/BlockGroup frames) with
+  V_MJPEG, V_VP8 or V_MPEGH/ISO/HEVC tracks, animated GIF, and
+  ANIMATED WebP (VP8X/ANIM/ANMF compositing incl. ALPH alpha via
+  kernels/webp) — frame sampling, frame decode, and per-frame
+  features are real for all of these. Video decode is keyframe-only:
+  VP8 keyframes via kernels/vp8 and HEVC IRAP pictures via
+  kernels/hevc (+ hevc_intra for entropy-coded ones). VP8 inter
+  frames, non-IRAP HEVC pictures, H.264 (mp4 avc1 / Matroska
+  V_MPEG4/ISO/AVC) and VP9/AV1 tracks are per-row errors.
 
 Every stage is init-once-per-worker, Arrow-batched, and returns typed
 columns — the schema/partitioning/batch-shape plumbing the 100 TB
@@ -153,15 +147,11 @@ def decode_image(payload: bytes, codec: str) -> np.ndarray:
 
 
 def _decode_frame(frame: bytes) -> "np.ndarray":
-    """Frame bytes → image; frames are PNG (MOCKV1/GIF/animated-WebP
-    re-encodes), JPEG (AVI/mp4/webm MJPEG), still-WebP-wrapped VP8
-    (webm V_VP8), Annex-B H.264 access units (mp4 avc1 / webm
-    V_MPEG4/ISO/AVC — I_PCM decodes, entropy-coded frames are the
-    named per-row seam, kernels/h264), or Annex-B HEVC access units
-    (mp4 hvc1 / webm V_MPEGH/ISO/HEVC tracks are converted to PNG by
-    the stateful kernels/hevc_inter sequence decoder upstream — IDR
-    and trailing-P pictures; B slices/fractional MC are the named
-    seams)."""
+    """Frame bytes → image; frames are PNG (MOCKV1 frames and the
+    GIF / animated-WebP / webm V_VP8 re-encodes), JPEG (AVI/mp4/webm
+    MJPEG), a still WebP, or an Annex-B HEVC access unit (mp4 hvc1 /
+    webm V_MPEGH/ISO/HEVC). HEVC decodes keyframes only: a non-IRAP
+    picture raises NotImplementedError, a per-row error."""
     if frame.startswith(b"\xff\xd8"):
         from ragflow_ocr_spark.kernels import imgcodecs
 
@@ -170,13 +160,10 @@ def _decode_frame(frame: bytes) -> "np.ndarray":
         from ragflow_ocr_spark.kernels import webp as webpmod
 
         return webpmod.decode_webp(frame)
-    from ragflow_ocr_spark.kernels import h264 as h264mod
     from ragflow_ocr_spark.kernels import hevc as hevcmod
 
     if hevcmod.sniff_annexb_hevc(frame):
         return hevcmod.decode_hevc_keyframe(frame)
-    if h264mod.sniff_annexb_h264(frame):
-        return h264mod.decode_h264_keyframe(frame)
     return pngcodec.decode_png(frame)
 
 
@@ -273,66 +260,6 @@ def encode_mp4_mjpeg(frames_jpeg: list[bytes], w: int, h: int) -> bytes:
     return ftyp + mdat + moov
 
 
-def encode_mp4_avc1(aus_annexb: list[bytes], w: int, h: int) -> bytes:
-    """Minimal ISO-BMFF with one H.264 track: parameter sets from the
-    first access unit move into the avcC record (stsd 'avc1'), slice
-    NALs become 4-byte-length-prefixed AVCC samples — the layout real
-    crawl mp4s use (kernels/h264 encodes/decodes the I_PCM AUs)."""
-    from ragflow_ocr_spark.kernels import h264 as h264mod
-
-    samples = []
-    sps = pps = None
-    for au in aus_annexb:
-        body, s, p = h264mod.annexb_au_to_avcc(au)
-        samples.append(body)
-        sps, pps = sps or s, pps or p
-    avcc = h264mod.build_avcc(sps, pps)
-    ftyp = _box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2avc1")
-    mdat = _box(b"mdat", b"".join(samples))
-    base = len(ftyp) + 8
-    offsets = []
-    off = base
-    for s in samples:
-        offsets.append(off)
-        off += len(s)
-    n = len(samples)
-    entry = (
-        b"\x00" * 6 + struct.pack(">H", 1)
-        + b"\x00" * 16
-        + struct.pack(">HH", w, h)
-        + struct.pack(">II", 0x00480000, 0x00480000)
-        + b"\x00" * 4
-        + struct.pack(">H", 1)
-        + b"\x00" * 32
-        + struct.pack(">H", 24)
-        + struct.pack(">h", -1)
-        + _box(b"avcC", avcc)
-    )
-    stsd = _box(b"stsd", b"\x00" * 4 + struct.pack(">I", 1) + _box(b"avc1", entry))
-    stts = _box(b"stts", b"\x00" * 4 + struct.pack(">III", 1, n, 1))
-    stsc = _box(b"stsc", b"\x00" * 4 + struct.pack(">IIII", 1, 1, 1, 1))
-    stsz = _box(
-        b"stsz",
-        b"\x00" * 4
-        + struct.pack(">II", 0, n)
-        + b"".join(struct.pack(">I", len(s)) for s in samples),
-    )
-    stco = _box(
-        b"stco",
-        b"\x00" * 4
-        + struct.pack(">I", n)
-        + b"".join(struct.pack(">I", o) for o in offsets),
-    )
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    hdlr = _box(
-        b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12 + b"VideoHandler\x00"
-    )
-    mdia = _box(b"mdia", hdlr + _box(b"minf", stbl))
-    mvhd = _box(b"mvhd", b"\x00" * 4 + struct.pack(">IIII", 0, 0, 1, n) + b"\x00" * 80)
-    moov = _box(b"moov", mvhd + _box(b"trak", mdia))
-    return ftyp + mdat + moov
-
-
 def encode_mp4_hvc1(aus_annexb: list[bytes], w: int, h: int) -> bytes:
     """Minimal ISO-BMFF with one HEVC track: VPS/SPS/PPS from the
     first access unit move into the hvcC record (stsd 'hvc1'), slice
@@ -412,9 +339,9 @@ def _iter_mp4_frames(payload: bytes) -> Iterator[bytes]:
     """Walk moov→trak→mdia→minf→stbl sample tables and yield each
     sample's bytes (stsc chunk runs + stco offsets + stsz sizes — the
     general sample-to-chunk math, not just this muxer's layout).
-    JPEG-family tracks yield raw JPEG bytes; avc1/avc3 tracks yield
-    Annex-B H.264 access units (kernels/h264); other codecs (vp09,
-    av01, …) raise the unbundled-codec seam."""
+    JPEG-family tracks yield raw JPEG bytes; hvc1/hev1 tracks yield
+    self-contained Annex-B HEVC access units; other codecs (avc1,
+    vp09, av01, …) raise the unbundled-codec seam."""
     CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
     tables: list[dict] = []
 
@@ -429,19 +356,16 @@ def _iter_mp4_frames(payload: bytes) -> Iterator[bytes]:
                 count = struct.unpack_from(">I", payload, body + 4)[0]
                 if count >= 1:
                     ctx["codec"] = payload[body + 12 : body + 16]
-                    if ctx["codec"] in (b"avc1", b"avc3", b"hvc1", b"hev1"):
-                        # avcC/hvcC lives in the boxes after the
-                        # 78-byte VisualSampleEntry fields of the
-                        # first entry
-                        want = (b"avcC" if ctx["codec"][0:1] == b"a"
-                                else b"hvcC")
+                    if ctx["codec"] in (b"hvc1", b"hev1"):
+                        # hvcC lives in the boxes after the 78-byte
+                        # VisualSampleEntry fields of the first entry
                         esz = struct.unpack_from(">I", payload, body + 8)[0]
                         for t2, b2, _e2 in _mp4_boxes(
                             payload, body + 8 + 86,
                             min(body + 8 + esz, end),
                         ):
-                            if t2 == want:
-                                ctx[want.decode()] = payload[b2:_e2]
+                            if t2 == b"hvcC":
+                                ctx["hvcC"] = payload[b2:_e2]
                                 break
             elif ctx is not None and tag == b"stsz":
                 fixed, n = struct.unpack_from(">II", payload, body + 4)
@@ -470,43 +394,23 @@ def _iter_mp4_frames(payload: bytes) -> Iterator[bytes]:
         if not all(k in t for k in ("sizes", "chunks", "runs")):
             continue
         to_annexb = None
-        if t["codec"] in (b"avc1", b"avc3"):
-            # H.264: re-emit each AVCC sample as a self-contained
-            # Annex-B access unit (parameter sets prepended) so the
-            # frame contract (independently decodable bytes) holds;
-            # kernels/h264 decodes I_PCM and names the CAVLC seam
-            from ragflow_ocr_spark.kernels import h264 as h264mod
-
-            if "avcC" not in t:
-                raise ValueError("avc1 track without avcC record")
-            nls, spss, ppss = h264mod.parse_avcc(t["avcC"])
-            prefix = list(spss) + list(ppss)
-
-            def to_annexb(s, _n=nls, _p=prefix):
-                return h264mod.avcc_sample_to_annexb(s, _n, _p)
-
-        elif t["codec"] in (b"hvc1", b"hev1"):
-            # HEVC: same out-of-band parameter-set shape. Samples
-            # decode STATEFULLY (kernels/hevc_inter sequence decoder:
-            # IDR + trailing P pictures — real GOPs, not just
-            # keyframes) and re-emit as lossless PNG, the V_VP8
-            # convention
+        if t["codec"] in (b"hvc1", b"hev1"):
+            # HEVC: parameter sets live out of band in hvcC; prepend
+            # them so each sample is a self-contained Annex-B access
+            # unit that _decode_frame decodes as a keyframe
             from ragflow_ocr_spark.kernels import hevc as hevcmod
-            from ragflow_ocr_spark.kernels import hevc_inter
 
             if "hvcC" not in t:
                 raise ValueError("hvc1 track without hvcC record")
             nls, param_nals = hevcmod.parse_hvcc(t["hvcC"])
-            _hevc_dec = hevc_inter.HevcSequenceDecoder()
 
-            def to_annexb(s, _n=nls, _p=param_nals, _d=_hevc_dec):
-                au = hevcmod.hvcc_sample_to_annexb(s, _n, _p)
-                return pngcodec.encode_png(_d.decode_au(au))
+            def to_annexb(s, _n=nls, _p=param_nals):
+                return hevcmod.hvcc_sample_to_annexb(s, _n, _p)
 
         elif t["codec"] not in (b"jpeg", b"mjpa", b"mjpb", b"MJPG"):
             raise NotImplementedError(
                 f"mp4 codec {t['codec']!r} not bundled offline "
-                "(MJPEG, H.264/avc1 and HEVC/hvc1 route)"
+                "(MJPEG and HEVC/hvc1 route)"
             )
         found = True
         sizes = t["sizes"]
@@ -613,14 +517,14 @@ def _iter_webm_frames(payload: bytes) -> Iterator[bytes]:
     """Walk Segment → Tracks (codec check) and Clusters → SimpleBlock/
     BlockGroup frames. Laced blocks and unknown-size elements are
     rejected (per-row error). V_MJPEG frames yield raw (JPEG bytes are
-    self-describing); V_VP8 tracks decode STATEFULLY through
-    kernels/vp8_inter.Vp8SequenceDecoder (keyframes AND inter frames —
-    the round-4 keyframe-only seam is closed) and re-emit as lossless
-    PNG so the downstream frame contract (sniffable, independently
-    decodable bytes) holds — the same convention the GIF video path
-    uses. V_MPEG4/ISO/AVC tracks re-emit as Annex-B H.264 access
-    units (kernels/h264). Other codecs (V_VP9/V_AV1/…) raise the
-    unbundled-codec seam."""
+    self-describing). V_VP8 frames decode one by one as keyframes
+    (kernels/vp8; an inter frame raises ValueError) and re-emit as
+    lossless PNG so the downstream frame contract (sniffable,
+    independently decodable bytes) holds — the same convention the
+    GIF video path uses. V_MPEGH/ISO/HEVC blocks re-emit as Annex-B
+    HEVC access units, like the mp4 hvc1 route. Other codecs
+    (V_MPEG4/ISO/AVC, V_VP9, V_AV1, …) raise the unbundled-codec
+    seam."""
     codec: bytes | None = None
     codec_private: bytes | None = None
     frames: list[bytes] = []
@@ -661,54 +565,33 @@ def _iter_webm_frames(payload: bytes) -> Iterator[bytes]:
         raise ValueError("matroska file has no CodecID")
     cid = codec.rstrip(b"\x00")
     if cid == b"V_VP8":
-        from ragflow_ocr_spark.kernels import vp8_inter
+        from ragflow_ocr_spark.kernels import vp8
 
-        dec = vp8_inter.Vp8SequenceDecoder()
-        yield from (pngcodec.encode_png(dec.decode_frame(fr))
-                    for fr in frames)
-        return
-    if cid == b"V_MPEG4/ISO/AVC":
-        # H.264 in Matroska: CodecPrivate is the avcC record and
-        # blocks are AVCC samples — re-emit as Annex-B access units
-        # (same contract as the mp4 avc1 route; kernels/h264 decodes
-        # I_PCM, entropy-coded frames are the named per-row seam)
-        from ragflow_ocr_spark.kernels import h264 as h264mod
-
-        if codec_private is None:
-            raise ValueError("V_MPEG4/ISO/AVC track without CodecPrivate")
-        nls, spss, ppss = h264mod.parse_avcc(codec_private)
-        prefix = list(spss) + list(ppss)
-        yield from (h264mod.avcc_sample_to_annexb(fr, nls, prefix)
-                    for fr in frames)
+        yield from (pngcodec.encode_png(vp8.decode_vp8(fr)) for fr in frames)
         return
     if cid == b"V_MPEGH/ISO/HEVC":
         # HEVC in Matroska: CodecPrivate is the hvcC record and
-        # blocks are HVCC samples. Decoded STATEFULLY (kernels/
-        # hevc_inter sequence decoder: IDR + trailing P pictures)
-        # and re-emitted as lossless PNG, the V_VP8 convention
+        # blocks are HVCC samples
         from ragflow_ocr_spark.kernels import hevc as hevcmod
-        from ragflow_ocr_spark.kernels import hevc_inter
 
         if codec_private is None:
             raise ValueError("V_MPEGH/ISO/HEVC track without CodecPrivate")
         nls, param_nals = hevcmod.parse_hvcc(codec_private)
-        dec = hevc_inter.HevcSequenceDecoder()
-        yield from (pngcodec.encode_png(dec.decode_au(
-            hevcmod.hvcc_sample_to_annexb(fr, nls, param_nals)))
-            for fr in frames)
+        yield from (hevcmod.hvcc_sample_to_annexb(fr, nls, param_nals)
+                    for fr in frames)
         return
     if cid != b"V_MJPEG":
         raise NotImplementedError(
             f"matroska codec {codec!r} not bundled offline "
-            "(V_MJPEG, V_VP8, V_MPEG4/ISO/AVC and V_MPEGH/ISO/HEVC route)"
+            "(V_MJPEG, V_VP8 and V_MPEGH/ISO/HEVC route)"
         )
     yield from frames
 
 
 def iter_video_frames(payload: bytes) -> Iterator[bytes]:
-    """MOCKV1 (deterministic synth), RIFF AVI/MJPEG, ISO-BMFF mp4, or
-    webm/Matroska (real EBML demux; MJPEG frames decode, other codecs
-    are the per-row unsupported-codec seam)."""
+    """MOCKV1 (deterministic synth), RIFF AVI/MJPEG, ISO-BMFF mp4,
+    webm/Matroska, animated GIF or animated WebP. Codecs outside the
+    routed set raise NotImplementedError, a per-row error."""
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
         yield from _iter_avi_frames(payload)
         return
@@ -825,22 +708,19 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
+def _is_unsupported_audio(raw: bytes) -> bool:
+    """FLAC or MP3 (ID3 tag or a Layer III frame sync). No decoder for
+    them is bundled; without this check they would be misread as raw
+    PCM."""
+    if pngcodec.sniff_payload(raw) in ("flac", "mp3"):
+        return True
+    return (len(raw) >= 4 and raw[0] == 0xFF
+            and (raw[1] & 0xE0) == 0xE0 and ((raw[1] >> 1) & 3) == 1)
+
+
 def audio_features_stage():
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_ocr_spark.kernels import (
-            flac as flaccodec,
-            mp3 as mp3codec,
-            vorbis as vorbiscodec,
-            wavcodec,
-        )
-
-        def _is_mp3(raw: bytes) -> bool:
-            if raw[:3] == b"ID3":
-                return True
-            # frame sync + Layer III; a raw little-endian PCM payload
-            # can never match (it would need sample ≥ 0xE0FF)
-            return (len(raw) >= 4 and raw[0] == 0xFF
-                    and (raw[1] & 0xE0) == 0xE0 and ((raw[1] >> 1) & 3) == 1)
+        from ragflow_ocr_spark.kernels import vorbis as vorbiscodec, wavcodec
 
         for b in batches:
             rows = []
@@ -859,18 +739,8 @@ def audio_features_stage():
                         # (kernels/ogg framing + kernels/vorbis decode,
                         # mono mixdown, already in [-1, 1])
                         pcm, _sr = vorbiscodec.decode_vorbis(raw)
-                    elif raw[:4] == flaccodec.FLAC_MAGIC:
-                        # real LOSSLESS route (kernels/flac): decoded
-                        # ints are bit-exact, so content payloads keep
-                        # closed-form features through the codec
-                        samples, _sr = flaccodec.decode_flac(raw)
-                        if samples.ndim == 2:
-                            samples = samples.mean(axis=1)
-                        pcm = samples.astype(np.float64) / 32768.0
-                    elif _is_mp3(raw):
-                        # real lossy route: MPEG-1/2 Layer III
-                        # (kernels/mp3, mono mixdown, already in [-1, 1])
-                        pcm, _sr = mp3codec.decode_mp3(raw)
+                    elif _is_unsupported_audio(raw):
+                        raise NotImplementedError("compressed audio")
                     else:
                         pcm = (np.frombuffer(raw, dtype="<i2")
                                .astype(np.float64) / 32768.0)
@@ -885,6 +755,8 @@ def audio_features_stage():
                             "ok",
                         )
                     )
+                except NotImplementedError:
+                    rows.append((int(mid), 0, 0.0, 0.0, 0, "error:unsupported_codec"))
                 except Exception:
                     rows.append((int(mid), 0, 0.0, 0.0, 0, "error"))
             yield pd.DataFrame(
@@ -1184,71 +1056,36 @@ FROM g
 
 
 def q_media_audio_features(spark, sf_dir: str):
+    """Odd ids: WAV digital silence, at the sample counts the oracle
+    names (1152·k for id % 8 == 3, 576·k for id % 8 == 7, 128·k for
+    id % 4 == 1). Even ids: a square wave with odd amplitude (exact
+    RMS/peak/zero-crossings, no rounding tie at 6 decimals), as raw
+    PCM or, for id % 8 == 6, in a WAV container."""
+
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ragflow_ocr_spark.kernels import mp3 as mp3codec
-        from ragflow_ocr_spark.kernels import vorbis as vorbiscodec
+        from ragflow_ocr_spark.kernels import wavcodec
 
         for b in batches:
             rows = []
             for did in b["doc_id"]:
                 did = int(did)
-                if did % 4 == 1:
-                    # real Ogg Vorbis route: digital silence is a fixed
-                    # point of the whole linear decode chain, so the
-                    # oracle stays a closed form while real Ogg framing
-                    # + header/codebook parse + floor/residue decode +
-                    # IMDCT/lap run. did%8==1 → unused-floor packets;
-                    # did%8==5 → coded floor with all-silent residue
-                    # classes (exercises the full floor1 path: books,
-                    # step2 prediction, render_line, dB lookup).
-                    n_pkts = 2 + did % 3
-                    if did % 8 == 1:
-                        payload = vorbiscodec.encode_vorbis_silence(
-                            n_pkts, sample_rate=16000)
+                if did % 2 == 1:
+                    if did % 8 == 3:
+                        n = 1152 * (2 + did % 3)
+                    elif did % 4 == 3:
+                        n = 576 * (2 + did % 3)
                     else:
-                        payload = vorbiscodec.encode_vorbis(
-                            [((60, 1, 33, 2), [None] * 16)] * n_pkts,
-                            sample_rate=16000)
-                    rows.append((did, "audio", payload, "vorbis",
-                                 0, 0, 16000))
-                    continue
-                if did % 4 == 3:
-                    # real MP3 route: Layer III silence frames (exact
-                    # closed form: every conformant decoder reconstructs
-                    # digital zero, so rms = peak = zc = 0 while the
-                    # full header/side-info/reservoir/IMDCT/synthesis
-                    # chain runs). did%8==3 → MPEG-1 (1152 spf),
-                    # did%8==7 → MPEG-2 LSF (576 spf, the real-golden
-                    # shape).
-                    n_frames = 2 + did % 3
-                    payload = mp3codec.encode_mp3_silence(
-                        n_frames, mpeg1=did % 8 == 3)
-                    rows.append((did, "audio", payload, "mp3", 0, 0,
-                                 44100 if did % 8 == 3 else 22050))
+                        n = 128 * (1 + did % 3)
+                    payload = wavcodec.encode_wav(np.zeros(n, np.int16))
+                    rows.append((did, "audio", payload, "wav", 0, 0, 16000))
                     continue
                 amp = 2 * (did % 8191) + 1  # odd ⇒ no round-half tie
                 pcm = np.empty(8000, dtype="<i2")
                 pcm[0::2] = amp
                 pcm[1::2] = -amp
                 if did % 8 == 6:
-                    # real LOSSLESS route: the SAME closed-form square
-                    # wave through a FLAC container — unlike the lossy
-                    # families the oracle checks CONTENT through the
-                    # codec (features identical to the raw family).
-                    # did%16==6 → mono FIXED-predictor frames;
-                    # did%16==14 → stereo mid/side decorrelation of
-                    # duplicated channels (mixdown restores the wave).
-                    from ragflow_ocr_spark.kernels import flac as fc
-
-                    s = pcm.astype(np.int64)
-                    if did % 16 == 14:
-                        payload = fc.encode_flac(
-                            np.stack([s, s], axis=1), 16000,
-                            stereo_mode="mid_side")
-                    else:
-                        payload = fc.encode_flac(s, 16000)
-                    rows.append((did, "audio", payload, "flac",
-                                 0, 0, 16000))
+                    rows.append((did, "audio", wavcodec.encode_wav(pcm),
+                                 "wav", 0, 0, 16000))
                     continue
                 rows.append((did, "audio", pcm.tobytes(), "pcm_s16le", 0, 0, 16000))
             yield pd.DataFrame(
@@ -1290,12 +1127,10 @@ def _synth_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     VP8 decode + compositing run — or a V_VP8-coded webm
     (id % 16 == 11): the same flat VP8 keyframes as Matroska
     SimpleBlocks through the real EBML demux + kernels/vp8 — or an
-    H.264 avc1 mp4 (id % 16 == 13): byte-exact I_PCM flat-luma
-    keyframes through the real avcC/AVCC demux + kernels/h264, same
-    BT.601 closed form — or an HEVC hvc1 mp4 (id % 16 == 9):
-    byte-exact PCM flat-luma keyframes through the real hvcC/HVCC
-    demux + the libde265-cross-validated kernels/hevc CABAC/PCM
-    decode, same BT.601 closed form."""
+    HEVC hvc1 mp4 (id % 16 == 9 or 13): byte-exact PCM flat-luma
+    keyframes through the real hvcC/HVCC demux + the
+    libde265-cross-validated kernels/hevc CABAC/PCM decode, same
+    BT.601 closed form."""
     from ragflow_ocr_spark.kernels import imgcodecs, vp8 as vp8mod, webp as webpmod
 
     for b in batches:
@@ -1344,77 +1179,29 @@ def _synth_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     )
                     for idx in range(n_frames)
                 ]
-                if did % 16 == 13:
-                    # H.264 avc1 mp4: I_PCM flat-luma keyframes
-                    # (kernels/h264, byte-exact), so the decoded gray
-                    # is the same BT.601 closed form as the VP8
-                    # families and the oracle stays exact while the
-                    # real avcC/AVCC demux + NAL/slice/PCM decode run
-                    from ragflow_ocr_spark.kernels import h264 as h264mod
+                if did % 16 in (9, 13):
+                    # HEVC hvc1 mp4: PCM flat-luma keyframes, byte-exact,
+                    # so the decoded gray is the BT.601 closed form
+                    from ragflow_ocr_spark.kernels import hevc as hevcmod
 
                     cp = np.full((12, 16), 128, np.uint8)
                     aus = [
-                        h264mod.encode_h264_ipcm_yuv(
+                        hevcmod.encode_hevc_ipcm_yuv(
                             np.full((24, 32),
                                     64 + (did * 31 + idx * 7) % 128,
                                     np.uint8), cp, cp)
                         for idx in range(n_frames)
                     ]
-                    payload, codec = encode_mp4_avc1(aus, 32, 24), "avc1_mp4"
-                elif did % 16 == 9:
-                    # HEVC hvc1 mp4, flat-luma frames, BT.601 closed
-                    # form. Alternating shapes (one SPS per track —
-                    # hvcC carries the first AU's parameter sets):
-                    # PCM keyframe tracks, and REAL GOPs from the
-                    # lossless low-delay P encoder (IDR + TRAIL_R
-                    # pictures with skip/merge/AMVP/residual CUs and
-                    # forced intra refresh) decoded statefully by
-                    # kernels/hevc_inter — all byte-exact, so the
-                    # oracle is unchanged
-                    from ragflow_ocr_spark.kernels import hevc as hevcmod
-                    from ragflow_ocr_spark.kernels import hevc_inter
-
-                    cp = np.full((12, 16), 128, np.uint8)
-                    frames_yuv = [
-                        (np.full((24, 32),
-                                 64 + (did * 31 + idx * 7) % 128,
-                                 np.uint8), cp, cp)
-                        for idx in range(n_frames)
-                    ]
-                    if did % 32 == 25:
-                        aus = hevc_inter.encode_hevc_lossless_gop_aus(
-                            frames_yuv, intra_every=2,
-                            frac_mv_every=3)
-                    else:
-                        aus = [hevcmod.encode_hevc_ipcm_yuv(*f)
-                               for f in frames_yuv]
                     payload, codec = encode_mp4_hvc1(aus, 32, 24), "hvc1_mp4"
                 elif did % 4 == 1:
                     payload, codec = encode_mp4_mjpeg(frames, 32, 24), "mjpeg_mp4"
                 elif did % 16 == 11:
-                    # V_VP8 webm with a REAL GOP: flat keyframes at the
-                    # SAMPLED (even) indices keep the exact BT.601
-                    # closed form, while every odd index is a genuine
-                    # inter frame (alternating fractional-MV NEWMV and
-                    # ZEROMV over the flat reference — both reproduce
-                    # the previous frame exactly on flat content), so
-                    # the stateful keyframe→P→keyframe decode chain
-                    # runs inside this driver-oracle-checked query
-                    # without touching the oracle's closed form
-                    from ragflow_ocr_spark.kernels import vp8_inter
-
-                    vp8_frames = []
-                    for idx in range(n_frames):
-                        if idx % 2 == 0:
-                            vp8_frames.append(vp8mod.encode_vp8_flat_payload(
-                                32, 24,
-                                (64 + (did * 31 + idx * 7) % 128, 128, 128)))
-                        else:
-                            spec = ({"mode": "new", "mv": (2, 6)}
-                                    if idx % 4 == 1 else {"mode": "zero"})
-                            vp8_frames.append(
-                                vp8_inter.encode_vp8_inter_frame(
-                                    32, 24, [dict(spec) for _ in range(4)]))
+                    # V_VP8 webm: flat keyframes, BT.601 closed form
+                    vp8_frames = [
+                        vp8mod.encode_vp8_flat_payload(
+                            32, 24, (64 + (did * 31 + idx * 7) % 128, 128, 128))
+                        for idx in range(n_frames)
+                    ]
                     payload, codec = encode_webm(vp8_frames, b"V_VP8"), "vp8_webm"
                 else:
                     payload, codec = encode_webm_mjpeg(frames), "mjpeg_webm"

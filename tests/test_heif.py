@@ -83,7 +83,7 @@ def test_avif_item_raises_named_seam():
 def test_entropy_coded_camera_heic_is_named_seam():
     """A HEIC whose hvc1 item is entropy-coded (what every real camera
     writes) must raise the HEVC entropy seam, not decode garbage."""
-    from ragflow_ocr_spark.kernels.h264 import _BitWriter
+    from ragflow_ocr_spark.kernels.hevc import _BitWriter
 
     good = heif.encode_heic(np.zeros((32, 32), np.uint8))
     info = heif.parse_heif(good)
@@ -276,6 +276,26 @@ def test_grid_reference_count_mismatch_is_loud():
     struct.pack_into(">H", data, i + 4 + 2, 3)
     with pytest.raises(ValueError, match="dimg"):
         heif.decode_heif(bytes(data))
+
+
+def test_grid_canvas_beyond_pixel_budget_is_refused(monkeypatch):
+    """The tile lattice (3x2 tiles of 18x36 = 54x72) can exceed a
+    declared output (50x70) that fits the budget: the canvas is
+    checked after the first tile, before any allocation or further
+    tile decode."""
+    data = heif.encode_heic_grid(np.full((50, 70), 200, np.uint8), 3, 2)
+    monkeypatch.setattr(heif, "MAX_HEIF_PIXELS", 50 * 70)
+    decoded = []
+    real = heif._decode_hvc1_item
+
+    def counting(info, tid):
+        decoded.append(tid)
+        return real(info, tid)
+
+    monkeypatch.setattr(heif, "_decode_hvc1_item", counting)
+    with pytest.raises(ValueError, match="canvas"):
+        heif.decode_heif(data)
+    assert len(decoded) == 1
 
 
 def test_grid_through_payload_router():

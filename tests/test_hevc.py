@@ -71,23 +71,21 @@ def test_hvcc_record_round_trips():
 
 
 def test_sniff_disjoint_from_h264():
-    from ragflow_ocr_spark.kernels import h264
-
     rng = np.random.default_rng(9)
     hevc_au = hevc.encode_hevc_ipcm_yuv(*_planes(rng, 32, 32))
-    y, u, v = _planes(rng, 32, 32)
-    h264_au = h264.encode_h264_ipcm_yuv(y, u, v)
+    # H.264 access unit head: SPS (0x67), PPS (0x68), IDR slice (0x65)
+    h264_au = (b"\x00\x00\x00\x01\x67\x42\xc0\x1e"
+               b"\x00\x00\x00\x01\x68\xce\x3c\x80"
+               b"\x00\x00\x00\x01\x65\x88\x84\x00")
     assert hevc.sniff_annexb_hevc(hevc_au)
     assert not hevc.sniff_annexb_hevc(h264_au)
-    assert h264.sniff_annexb_h264(h264_au)
-    assert not h264.sniff_annexb_h264(hevc_au)
     assert not hevc.sniff_annexb_hevc(b"\x89PNG\r\n\x1a\n")
 
 
 def test_cabac_engine_round_trips_bin_patterns():
     """The engine alone: arbitrary context-bin sequences encode and
     decode back exactly (MPS runs, LPS flips, state saturation)."""
-    from ragflow_ocr_spark.kernels.h264 import _BitReader, _BitWriter
+    from ragflow_ocr_spark.kernels.hevc import _BitReader, _BitWriter
 
     rng = np.random.default_rng(17)
     for trial in range(8):
@@ -125,7 +123,7 @@ def test_entropy_coded_stub_raises_loudly():
     and must fail LOUDLY on the truncated syntax, not return
     garbage. (Well-formed entropy-coded streams decode for real —
     tests/test_hevc_intra.py.)"""
-    from ragflow_ocr_spark.kernels.h264 import _BitWriter
+    from ragflow_ocr_spark.kernels.hevc import _BitWriter
 
     rng = np.random.default_rng(21)
     au = hevc.encode_hevc_ipcm_yuv(*_planes(rng, 32, 32))
@@ -204,12 +202,9 @@ def test_mp4_hvc1_route():
     mp4 = mm.encode_mp4_hvc1(aus, 48, 32)
     frames = list(mm.iter_video_frames(mp4))
     assert len(frames) == 4
-    # the hvc1 route now decodes statefully (kernels/hevc_inter) and
-    # re-emits lossless PNG, the V_VP8 convention
-    from ragflow_ocr_spark.kernels.pngcodec import decode_png
+    # the hvc1 route yields self-contained Annex-B access units
     for k, fr in enumerate(frames):
-        img = decode_png(fr)
-        assert img.shape[:2] == (32, 48)
+        assert hevc.sniff_annexb_hevc(fr)
         img = mm._decode_frame(fr)
         assert img.shape[:2] == (32, 48)
 
@@ -227,7 +222,7 @@ def test_webm_hevc_route():
         vps, sps, pps = vps or vv, sps or sp, pps or pp
     hvcc = hevc.build_hvcc(vps, sps, pps)
     # encode_webm writes no CodecPrivate, so assemble the TrackEntry
-    # by hand with the hvcC record in 0x63A2 (same as the AVC test)
+    # by hand with the hvcC record in 0x63A2
     track = mm._mkv_el(0xD7, b"\x01") + mm._mkv_el(0x83, b"\x01") \
         + mm._mkv_el(0x86, b"V_MPEGH/ISO/HEVC") + mm._mkv_el(0x63A2, hvcc)
     tracks = mm._mkv_el(0x1654AE6B, mm._mkv_el(0xAE, track))
@@ -240,16 +235,15 @@ def test_webm_hevc_route():
     webm = ebml + mm._mkv_el(0x18538067, tracks + cluster)
     frames = list(mm.iter_video_frames(webm))
     assert len(frames) == 3
-    from ragflow_ocr_spark.kernels.pngcodec import decode_png
     for k, fr in enumerate(frames):
-        img = decode_png(fr)
+        img = mm._decode_frame(fr)
         assert img.shape[:2] == (32, 48)
 
 
 def test_mp4_entropy_coded_hvc1_is_per_row_error(spark):
     """An entropy-coded (non-PCM) hvc1 mp4 must become an error row in
     the Spark frame stage, never a task failure."""
-    from ragflow_ocr_spark.kernels.h264 import _BitWriter
+    from ragflow_ocr_spark.kernels.hevc import _BitWriter
 
     from ragflow_ocr_spark.ops import multimodal as mm
 

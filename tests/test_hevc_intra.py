@@ -60,7 +60,7 @@ def test_fixture_heif_route():
     w, h = info["ispe"]
     assert img.shape[:2] == (h, w)
     truth = np.load(f"{FIX}/heic_cabac_a_truth.npz")
-    from ragflow_ocr_spark.kernels.h264 import _yuv_to_rgb
+    from ragflow_ocr_spark.kernels.hevc import _yuv_to_rgb
     exp = _yuv_to_rgb(truth["y"][:h, :w], truth["cb"][: (h + 1) // 2,
                                                       : (w + 1) // 2],
                       truth["cr"][: (h + 1) // 2, : (w + 1) // 2])
@@ -270,7 +270,7 @@ def test_cabac_heic_container_roundtrip():
     cb = np.full((24, 32), 100, np.uint8)
     cr = np.full((24, 32), 160, np.uint8)
     data = heif.encode_heic_yuv(y, cb, cr, coder="cabac")
-    from ragflow_ocr_spark.kernels.h264 import _yuv_to_rgb
+    from ragflow_ocr_spark.kernels.hevc import _yuv_to_rgb
     assert np.array_equal(heif.decode_heif(data),
                           _yuv_to_rgb(y, cb, cr))
 
@@ -280,7 +280,7 @@ def test_cabac_heic_page_ocr_byte_identical():
     to byte-identical text through the full extraction route — the
     per-url invariant, now on the path real camera HEICs take."""
     from ragflow_ocr_spark.kernels import font5x7, heif
-    from ragflow_ocr_spark.kernels.h264 import _rgb_to_yuv
+    from ragflow_ocr_spark.kernels.hevc import _rgb_to_yuv
     from ragflow_ocr_spark.kernels.ocr_pipeline import extract_payload
 
     img, drawn = font5x7.render_page(["CABAC HEIC EXTRACT 7"],

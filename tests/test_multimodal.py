@@ -159,12 +159,12 @@ def test_contract_queries_match_analytic_truth(spark):
 
     rows = {r["media_id"]: r for r in mm.q_media_audio_features(spark, sf).collect()}
     for did, r in rows.items():
-        if did % 4 == 3:  # MP3 silence family (real Layer III decode)
+        if did % 4 == 3:  # WAV silence, MP3 frame-sized sample counts
             spf = 1152 if did % 8 == 3 else 576
             assert r["n_samples"] == spf * (2 + did % 3)
             assert r["rms"] == 0.0 == r["peak"]
             assert r["zero_crossings"] == 0
-        elif did % 4 == 1:  # Ogg Vorbis silence family (real decode)
+        elif did % 4 == 1:  # WAV silence, 128-sample multiples
             assert r["n_samples"] == 128 * (1 + did % 3)
             assert r["rms"] == 0.0 == r["peak"]
             assert r["zero_crossings"] == 0
@@ -180,7 +180,7 @@ def test_contract_queries_match_analytic_truth(spark):
         assert r["frame_idx"] % 2 == 0
         if (r["media_id"] % 8 == 7 or r["media_id"] % 16 == 11
                 or r["media_id"] % 16 == 13 or r["media_id"] % 16 == 9):
-            # animated lossy WebP / V_VP8 webm / avc1 mp4 / hvc1 mp4
+            # animated lossy WebP / V_VP8 webm / hvc1 mp4
             # → BT.601 map
             y = 64 + (r["media_id"] * 31 + r["frame_idx"] * 7) % 128
             assert r["mean_luma"] == float((298 * (y - 16) + 128) >> 8)
@@ -266,6 +266,31 @@ def test_audio_stage_decodes_vorbis_content(spark):
     assert out[1]["status"] == "error"  # truncated Ogg -> error row
 
 
+def test_audio_stage_names_compressed_audio_unsupported(spark):
+    """FLAC and MP3 payloads have no bundled decoder: each becomes an
+    error:unsupported_codec row instead of being misread as raw PCM,
+    while a raw PCM row in the same batch stays ok."""
+    pcm = mm.make_audio_payload(np.random.default_rng(12))
+    rows = [
+        (0, "audio", bytearray(b"fLaC\x00\x00\x00\x22" + b"\x00" * 40), "flac", 0, 0, 16000),
+        (1, "audio", bytearray(b"ID3\x04\x00" + b"\x00" * 40), "mp3", 0, 0, 44100),
+        # bare MPEG-1 Layer III frame header, no ID3 tag
+        (2, "audio", bytearray(b"\xff\xfb\x90\x00" + b"\x00" * 40), "mp3", 0, 0, 44100),
+        (3, "audio", bytearray(pcm), "pcm_s16le", 0, 0, 16000),
+    ]
+    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
+    out = {
+        r["media_id"]: r
+        for r in df.mapInPandas(
+            mm.audio_features_stage(), schema=mm.AUDIO_FEATURES_SCHEMA
+        ).collect()
+    }
+    for mid in range(3):
+        assert out[mid]["status"] == "error:unsupported_codec", mid
+        assert out[mid]["n_samples"] == 0
+    assert out[3]["status"] == "ok" and out[3]["n_samples"] == len(pcm) // 2
+
+
 def test_frame_stage_decodes_avi_mjpeg(spark):
     """An MJPEG AVI payload goes through the SAME frame-sampling stage
     as the MOCKV1 container — the video demux seam is real for the
@@ -333,9 +358,8 @@ def test_mp4_mjpeg_mux_demux_roundtrip():
     assert out == frames
     with pytest.raises(NotImplementedError, match="codec"):
         list(mm.iter_video_frames(payload.replace(b"jpeg", b"vp09", 1)))
-    # avc1 is routed now (kernels/h264) — a relabeled track without an
-    # avcC record is malformed, not unbundled
-    with pytest.raises(ValueError, match="avcC"):
+    # avc1 (H.264) is not bundled either: the same unbundled-codec seam
+    with pytest.raises(NotImplementedError, match="codec"):
         list(mm.iter_video_frames(payload.replace(b"jpeg", b"avc1", 1)))
     with pytest.raises(ValueError):
         list(mm.iter_video_frames(b"\x00\x00\x00\x08ftypxxxxxx"))
@@ -382,7 +406,7 @@ def test_mp4_multi_chunk_sample_table():
 
 def test_webm_mjpeg_mux_demux_roundtrip():
     """EBML/Matroska demux is real: V_MJPEG SimpleBlocks round trip
-    exactly; VP8-coded tracks are the unbundled-codec seam; malformed
+    exactly; VP9-coded tracks are the unbundled-codec seam; malformed
     EBML is a per-row ValueError."""
     import numpy as np
 
@@ -400,33 +424,57 @@ def test_webm_mjpeg_mux_demux_roundtrip():
         list(mm.iter_video_frames(mm._EBML_MAGIC + b"\x00\xff\x13"))
 
 
-def test_webm_vp8_sequence_decodes_keyframes_and_inter_frames():
-    """V_VP8 Matroska tracks route through the STATEFUL
-    kernels/vp8_inter sequence decoder: flat keyframes reconstruct
-    their exact BT.601 values through demux + decode, and genuine
-    inter frames (fractional-MV NEWMV / ZEROMV over the flat
-    reference) reproduce the prior frame exactly (round-4 seam
-    closed). An inter frame FIRST in the stream still fails loudly."""
-    from ragflow_ocr_spark.kernels import vp8, vp8_inter
+def test_webm_vp8_keyframes_decode_to_exact_values():
+    """V_VP8 Matroska tracks decode frame by frame as keyframes
+    (kernels/vp8): flat keyframes reconstruct their exact BT.601
+    values through demux + decode."""
+    from ragflow_ocr_spark.kernels import vp8
 
     vals = [70, 140, 200]
-    frames = []
-    for v in vals:
-        frames.append(vp8.encode_vp8_flat_payload(32, 24, (v, 128, 128)))
-        frames.append(vp8_inter.encode_vp8_inter_frame(
-            32, 24, [{"mode": "new", "mv": (2, 6)} for _ in range(4)]))
-    mkv = mm.encode_webm(frames, b"V_VP8")
-    out = list(mm.iter_video_frames(mkv))
-    assert len(out) == 6
-    for i, fr in enumerate(out):
+    frames = [vp8.encode_vp8_flat_payload(32, 24, (v, 128, 128)) for v in vals]
+    out = list(mm.iter_video_frames(mm.encode_webm(frames, b"V_VP8")))
+    assert len(out) == 3
+    for fr, v in zip(out, vals):
         img = mm._decode_frame(fr)
-        exp = (298 * (vals[i // 2] - 16) + 128) >> 8
-        assert (img == exp).all(), (i, np.unique(img), exp)
-    # an inter frame with no prior keyframe fails loudly at demux-decode
-    p_only = vp8_inter.encode_vp8_inter_frame(
-        32, 24, [{"mode": "zero"} for _ in range(4)])
-    with pytest.raises(ValueError, match="keyframe"):
-        list(mm.iter_video_frames(mm.encode_webm([p_only], b"V_VP8")))
+        exp = (298 * (v - 16) + 128) >> 8
+        assert (img == exp).all(), (np.unique(img), exp)
+
+
+def test_unbundled_video_codecs_are_row_errors(spark):
+    """H.264 tracks (mp4 avc1, Matroska V_MPEG4/ISO/AVC), VP8 inter
+    frames and non-IRAP HEVC pictures have no bundled decoder: the
+    frame stage turns each into an error row and never raises."""
+    from ragflow_ocr_spark.kernels import hevc, imgcodecs as ic, vp8
+
+    jpegs = [ic.encode_jpeg(np.full((24, 32), 90, np.uint8), quality=95)] * 2
+    avc1_mp4 = mm.encode_mp4_mjpeg(jpegs, 32, 24).replace(b"jpeg", b"avc1", 1)
+    avc_webm = mm.encode_webm(jpegs, b"V_MPEG4/ISO/AVC")
+    key = vp8.encode_vp8_flat_payload(32, 24, (100, 128, 128))
+    inter = bytes([key[0] | 1]) + key[1:]  # frame-type bit: inter frame
+    vp8_webm = mm.encode_webm([key, inter], b"V_VP8")
+    # an HEVC access unit whose slice is a TRAIL_R (non-IRAP) picture
+    c = np.full((12, 16), 128, np.uint8)
+    nals = hevc.split_annexb(
+        hevc.encode_hevc_ipcm_yuv(np.full((24, 32), 90, np.uint8), c, c))
+    nals[-1] = hevc._nal_hdr(1) + nals[-1][2:]
+    trail = b"".join(b"\x00\x00\x00\x01" + n for n in nals)
+    hvc1_mp4 = mm.encode_mp4_hvc1([trail], 32, 24)
+    rows = [
+        (0, "video", bytearray(avc1_mp4), "avc1_mp4", 32, 24, 0),
+        (1, "video", bytearray(avc_webm), "avc_webm", 32, 24, 0),
+        (2, "video", bytearray(vp8_webm), "vp8_webm", 32, 24, 0),
+        (3, "video", bytearray(hvc1_mp4), "hvc1_mp4", 32, 24, 0),
+    ]
+    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
+    out = df.mapInPandas(
+        mm.frame_sample_stage(every_k=1), schema=mm.FRAME_SAMPLE_SCHEMA
+    ).collect()
+    status = {}
+    for r in sorted(out, key=lambda r: (r["media_id"], r["frame_idx"])):
+        status.setdefault(r["media_id"], []).append(r["status"])
+    assert status[0] == status[1] == status[3] == ["error"]
+    # the keyframe before the inter frame still decodes
+    assert status[2] == ["error", "ok"]  # sorted by frame_idx: -1, 0
 
 
 def test_webm_through_frame_sample_stage(spark):

@@ -1,7 +1,7 @@
 """Ogg Vorbis decode — kernels/ogg + kernels/vorbis.
 
-Pinning strategy (module docstring of kernels/vorbis.py; same shape
-as test_mp3.py): no reference Vorbis decoder exists in this sandbox,
+Pinning strategy (module docstring of kernels/vorbis.py): no
+reference Vorbis decoder is available to test against,
 so every integer/structural algorithm is asserted against an
 INDEPENDENT direct-from-spec-pseudocode model written here, the
 spec's worked huffman example is a literal, the fast IMDCT must match
