@@ -170,10 +170,6 @@ def _scan_idx_for(mode: int, log2: int, c_idx: int) -> int:
     return 0
 
 
-def _clip8(a):
-    return np.clip(a, 0, 255)
-
-
 class _Ctx:
     """All CABAC context states for one slice (or WPP snapshot)."""
 

@@ -956,10 +956,6 @@ def _dct2(block: np.ndarray) -> np.ndarray:
     return _C @ block @ _C.T
 
 
-def _idct2(coef: np.ndarray) -> np.ndarray:
-    return _C.T @ coef @ _C
-
-
 def _build_huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """JPEG canonical code assignment: val → (code, length)."""
     codes: dict[int, tuple[int, int]] = {}

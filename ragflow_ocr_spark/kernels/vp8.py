@@ -774,22 +774,6 @@ class BoolEncoder:
         return bytes(self.out)
 
 
-def _tree_paths(tree) -> dict:
-    """symbol -> ((node, bit), ...) for every leaf of `tree`, per start."""
-    paths = {}
-
-    def walk(i, acc):
-        for bit in (0, 1):
-            t = tree[i + bit]
-            if t > 0:
-                walk(t, acc + ((i, bit),))
-            else:
-                paths.setdefault(-t, acc + ((i, bit),))
-
-    walk(0, ())
-    return paths
-
-
 _TREE_PATH_CACHE: dict = {}
 
 
@@ -1276,15 +1260,6 @@ def _reconstruct(hdr, mb_rows, mb_cols, ymodes, uvmodes, bmodes,
 
 def _c(v):
     return np.clip(v, -128, 127)
-
-
-def _filter_common(p1, p0, q0, q1, use_outer):
-    """common_adjust on signed (−128..127) arrays; returns (F, dp0, dq0)."""
-    a = _c((_c(p1 - q1) if use_outer is True else
-            np.where(use_outer, _c(p1 - q1), 0)) + 3 * (q0 - p0))
-    F = _c(a + 4) >> 3
-    E = _c(a + 3) >> 3
-    return F, E
 
 
 def _filter_mask(limit, interior, p3, p2, p1, p0, q0, q1, q2, q3):

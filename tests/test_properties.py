@@ -20,6 +20,31 @@ def test_extract_html_never_raises(data):
     assert (text is None) == status.startswith("error")
 
 
+# st.binary almost never spells a tag, so the test above barely reaches
+# the tokenizer; this alphabet spells markup, entities and the
+# whitespace classes a tag name does and does not end at
+_HTMLISH = st.one_of(
+    st.sampled_from(
+        "<>/!?&;=\"' abdilprstyAPS#x0-[]\t\n\r\f\x0b\x00\x1c\x1d\x1e\x1f\x85\xa0\u2028"
+    ),
+    st.sampled_from(
+        ["<p>", "</p>", "<div>", "<nav>", "</nav>", "<a href=", "</a>", "<br/>",
+         "<script>", "</SCRIPT >", "<style>", "<!--", "-->", "<!DOCTYPE", "<![",
+         "=\"v\"", "&amp", "&amp;", "&#", "text"]
+    ),
+)
+
+
+@given(st.lists(_HTMLISH, max_size=120).map("".join))
+@settings(max_examples=400, deadline=None)
+def test_extract_html_matches_htmlparser_oracle(text):
+    from test_html_extract import CONFIGS, _oracle_extract_html
+
+    data = text.encode("utf-8")
+    for cfg in CONFIGS:
+        assert extract_html(data, cfg) == _oracle_extract_html(data, cfg)
+
+
 @given(st.binary(max_size=2048))
 @settings(max_examples=100, deadline=None)
 def test_extract_payload_never_raises(data):
