@@ -45,6 +45,7 @@ import numpy as np
 import pandas as pd
 
 from ragflow_ocr_spark.kernels import pngcodec
+from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -81,6 +82,7 @@ def media_df(spark, n_rows: int = 60, partitions: int = 4):
     """Deterministic media table: round-robin image/audio/video."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for b in batches:
             rows = []
             for i in b["id"]:
@@ -638,6 +640,7 @@ IMAGE_FEATURES_SCHEMA = (
 
 def image_features_stage():
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for b in batches:
             rows = []
             for mid, payload, codec in zip(
@@ -674,6 +677,7 @@ def thumbnail_stage(max_side: int = 16):
     from ragflow_ocr_spark.kernels.imgeom import resize_bilinear
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for b in batches:
             rows = []
             for mid, payload, codec in zip(
@@ -720,6 +724,7 @@ def _is_unsupported_audio(raw: bytes) -> bool:
 
 def audio_features_stage():
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         from ragflow_ocr_spark.kernels import vorbis as vorbiscodec, wavcodec
 
         for b in batches:
@@ -778,6 +783,7 @@ def thumbnail_luma_stage():
     columns crossing the seam."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for b in batches:
             rows = []
             for mid, thumb, tw, th, status in zip(
@@ -818,6 +824,7 @@ def frame_sample_stage(every_k: int = 2):
     frame pipeline has."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for b in batches:
             rows = []
             for mid, payload in zip(b["media_id"], b["payload"]):
@@ -900,6 +907,7 @@ def q_media_image_stats(spark, sf_dir: str):
       g = (298*(y-16)+128) >> 8 — closed form in SQL."""
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         from ragflow_ocr_spark.kernels import imgcodecs
 
         for b in batches:
@@ -1063,6 +1071,7 @@ def q_media_audio_features(spark, sf_dir: str):
     PCM or, for id % 8 == 6, in a WAV container."""
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         from ragflow_ocr_spark.kernels import wavcodec
 
         for b in batches:
@@ -1131,6 +1140,7 @@ def _synth_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     keyframes through the real hvcC/HVCC demux + the
     libde265-cross-validated kernels/hevc CABAC/PCM decode, same
     BT.601 closed form."""
+    keep_runtime_zip_caches()
     from ragflow_ocr_spark.kernels import imgcodecs, vp8 as vp8mod, webp as webpmod
 
     for b in batches:
@@ -1243,6 +1253,7 @@ FROM f
 
 def q_media_thumbnail(spark, sf_dir: str):
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for b in batches:
             rows = []
             for did in b["doc_id"]:

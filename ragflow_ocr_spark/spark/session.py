@@ -44,6 +44,10 @@ def get_spark(
         # Parquet scans: pushdown + pruning stay on (defaults, pinned
         # so a misconfigured cluster can't silently disable them).
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Python worker reuse: Spark's default, pinned the same way.
+        # keep_runtime_zip_caches (spark/worker.py) saves only in a
+        # reused worker; one forked per task re-reads fresh zip finders.
+        .config("spark.python.worker.reuse", "true")
         # Pin the session clock: TIMESTAMP_NTZ→LTZ casts (unix_micros
         # paths) otherwise inherit the host JVM zone, where DST gaps
         # would shift gap/window arithmetic vs the naive-clock oracles.

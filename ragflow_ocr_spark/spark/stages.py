@@ -1,11 +1,17 @@
 """mapInPandas stages — the engine's entire Python surface.
 
-Three iterator-style kernels (init-once per Python worker, Arrow batch
-in/out; SURVEY.md §2.10): payload classification, HTML extraction, and
-the OCR detect→recognize stage. No row-at-a-time Spark UDFs anywhere —
-per-document Python happens inside batch loops on the worker, which is
-the reference's own execution shape (row = document, ndarray inside;
-SURVEY.md §1.2).
+Iterator-style kernels (init-once per Python worker, Arrow batch in/out;
+SURVEY.md §2.10): the unified extract stage, which sniffs each payload
+and routes it to HTML extraction or the OCR pipeline (the batch job,
+the resumable job and the streaming job all run it), and the staged
+detect → recognize pair for callers that want the blocks between the
+two. No row-at-a-time Spark UDFs anywhere — per-document Python happens
+inside batch loops on the worker, which is the reference's own
+execution shape (row = document, ndarray inside; SURVEY.md §1.2).
+
+Each stage function first calls ``keep_runtime_zip_caches``
+(spark/worker.py), so a reused worker does not re-read Spark's own zip
+archives on every task.
 """
 
 from __future__ import annotations
@@ -18,6 +24,7 @@ from ragflow_ocr_spark.config import DEFAULT, PipelineConfig
 from ragflow_ocr_spark.kernels.html_extract import extract_html
 from ragflow_ocr_spark.kernels.ocr_pipeline import extract_payload
 from ragflow_ocr_spark.kernels.pngcodec import sniff_payload
+from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
 
 # Output schema of the extraction stage. `html` is intentionally NOT
 # carried through — post-extract projections must not deserialize
@@ -51,6 +58,7 @@ def extract_stage(cfg: PipelineConfig | None = None):
     cfg = cfg or DEFAULT
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for pdf in batches:
             texts: list[str | None] = []
             blocks: list[int] = []
@@ -103,6 +111,7 @@ def detect_stage(cfg: PipelineConfig | None = None):
     cfg = cfg or DEFAULT
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         from ragflow_ocr_spark.kernels.ocr_pipeline import (
             IMAGE_KINDS,
             decode_payload_image,
@@ -149,6 +158,7 @@ def recognize_stage(cfg: PipelineConfig | None = None):
     cfg = cfg or DEFAULT
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         import numpy as np
 
         from ragflow_ocr_spark.kernels.crop import get_rotate_crop_image, rotation_probe

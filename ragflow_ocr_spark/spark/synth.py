@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 
 from ragflow_ocr_spark.kernels import font5x7, pngcodec
+from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
 
 GLOBAL_SEED = 42
 EPOCH = datetime(2025, 10, 17, tzinfo=timezone.utc)
@@ -254,6 +255,7 @@ def pages_df(spark, n_rows: int, with_truth: bool = False, partitions: int | Non
     cols = None if with_truth else ["url", "warc_ts", "html", "text", "lang"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        keep_runtime_zip_caches()
         for b in batches:
             out = truth_batch(b["id"].tolist())
             yield out if cols is None else out[cols]
