@@ -2,8 +2,8 @@
 still-image seam from VERDICT r04 §"What's missing" #5. The reference
 accepts any cv2-decodable payload (``/root/reference/ocr/
 operators.py:41-46``) and cv2 links OpenJPEG; this sandbox has no
-OpenJPEG/Jasper, so the codec is from scratch like the VP8/Vorbis/MP3
-stack, and validation is in-repo (spec-worked vectors, layer-by-layer
+OpenJPEG/Jasper, so the codec is from scratch like the VP8 and HEVC
+decoders, and validation is in-repo (spec-worked vectors, layer-by-layer
 round-trips, fuzz) — the same tier the arithmetic JPEG coder started
 at before its system cross-check.
 

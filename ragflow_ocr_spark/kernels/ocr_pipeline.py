@@ -2,14 +2,27 @@
 
 This is the kernel-level equivalent of ``OCR.__call__``
 (``/root/reference/ocr/ocr.py:535-578``) — one document in, its
-extracted lines out — plus the payload router and the PDF stub route.
-It is pure Python/numpy; the Spark layer feeds it Arrow batches.
+extracted lines out. It is pure Python/numpy; the Spark layer feeds it
+Arrow batches.
+
+``decode_payload_pages`` maps a payload to its page images (raster
+kinds through ``pngcodec.decode_image``, PDFs through one
+``pdf.pdf_to_images`` parse). Each page then runs the phase functions
+``detect`` → ``crop_boxes`` → ``recognize_crops`` → ``assemble``;
+``ocr_image`` chains them, and the staged detect/recognize API
+(spark/stages.py) calls the same phases.
 
 Stage order (reference lifecycle, SURVEY.md §3.1):
   decode → det preprocess → det net → DB postprocess → filter boxes →
   reading-order sort → per-box perspective crop (+ rotation probe) →
   rec (ratio-sort, micro-batch 16, dynamic pad width) → CTC decode →
   scatter back → drop_score filter → join lines.
+
+The callees (``detect``, ``det_preprocess``, ``db_postprocess``,
+``get_rotate_crop_image``, ``rotation_probe``, ``recognize_crops``,
+``ctc_greedy_decode``, ``run_with_retry``) are called through this
+module's globals, so a wrapper set on the module attribute sees every
+call.
 """
 
 from __future__ import annotations
@@ -138,32 +151,27 @@ def recognize_crops(
     return [r if r is not None else ("", 0.0) for r in results]
 
 
-def _rec_one(crop: np.ndarray, cfg: OCRConfig) -> tuple[str, float]:
-    return recognize_crops([crop], cfg)[0]
+def crop_boxes(img: np.ndarray, boxes, cfg: OCRConfig) -> list[np.ndarray]:
+    """Quads (N,4,2) → rec crops in box order: perspective crop plus the
+    tall-crop rotation probe (reference ``ocr/ocr.py:411-464``).
 
-
-def ocr_image(img: np.ndarray, cfg: OCRConfig | None = None) -> OcrResult:
-    """Full per-image pipeline — ``OCR.__call__`` semantics
-    (``/root/reference/ocr/ocr.py:535-578``)."""
-    cfg = cfg or OCRConfig()
-    if img is None or img.size == 0:
-        return OcrResult(None, 0, "error:null", [], [])
-    boxes = detect(img, cfg)
-    if boxes.shape[0] == 0:
-        return OcrResult("", 0, "empty", [], [])
-    # crop from the original gray plane when the page is gray — a third
-    # of the warp's gather traffic; resize_norm_img restores the
-    # 3-channel rec contract at crop (small) resolution
-    crop_src = img
+    A gray page is cropped from its gray plane — a third of the warp's
+    gather traffic; ``resize_norm_img`` restores the 3-channel rec
+    contract at crop (small) resolution."""
     crops = []
     for box in boxes:
-        crop = get_rotate_crop_image(crop_src, box)
-        crop = rotation_probe(crop, lambda c: _rec_one(c, cfg))
-        crops.append(crop)
-    rec_res = recognize_crops(crops, cfg)
-    # drop-score filter, full-pipeline semantics: the line is DROPPED
-    # (not emptied) below threshold (``ocr/ocr.py:566-571``; contrast
-    # the batch-rec API which emits "" — ``ocr/ocr.py:529-532``).
+        crop = get_rotate_crop_image(img, box)
+        crops.append(rotation_probe(crop, lambda c: recognize_crops([c], cfg)[0]))
+    return crops
+
+
+def assemble(
+    boxes: np.ndarray, rec_res: list[tuple[str, float]], cfg: OCRConfig
+) -> OcrResult:
+    """Drop-score filter and line join, full-pipeline semantics: a line
+    below ``drop_score`` is DROPPED, not emptied (``ocr/ocr.py:566-571``;
+    contrast the batch-rec API, which emits "" — ``ocr/ocr.py:529-532``
+    and ``spark/stages.recognize_stage``)."""
     kept_lines: list[str] = []
     kept_boxes: list[list[list[float]]] = []
     kept_scores: list[float] = []
@@ -180,128 +188,94 @@ def ocr_image(img: np.ndarray, cfg: OCRConfig | None = None) -> OcrResult:
     return OcrResult("\n".join(kept_lines), len(kept_lines), "ok", kept_boxes, kept_scores)
 
 
-def extract_pdf_payload(data: bytes) -> np.ndarray | None:
-    """PDF route: real (minimal) PDF parse — object scan, FlateDecode/
-    DCTDecode, /Type /Page discovery, image-XObject pages returned
-    directly, Tj text rasterized (``kernels/pdf.py``). Legacy fallback:
-    early fixture PDFs embedded a bare PNG in a stream object; if the
-    structured parse fails we still locate and decode that."""
-    try:
-        from ragflow_ocr_spark.kernels import pdf
-
-        return pdf.pdf_to_image(data)
-    except Exception:
-        # router contract: a malformed PDF is a per-row error (None →
-        # status error:decode), never a task failure — the parser's
-        # tokenizer can surface Index/Key/ValueError on crafted input
-        pass
-    i = data.find(pngcodec.PNG_MAGIC)
-    if i < 0:
-        return None
-    try:
-        return pngcodec.decode_png(data[i:])
-    except ValueError:
-        return None
+def ocr_image(img: np.ndarray, cfg: OCRConfig | None = None) -> OcrResult:
+    """Full per-image pipeline — ``OCR.__call__`` semantics
+    (reference ``ocr/ocr.py:535-578``): detect → crop_boxes →
+    recognize_crops → assemble."""
+    cfg = cfg or OCRConfig()
+    if img is None or img.size == 0:
+        return OcrResult(None, 0, "error:null", [], [])
+    boxes = detect(img, cfg)
+    if boxes.shape[0] == 0:
+        return OcrResult("", 0, "empty", [], [])
+    return assemble(boxes, recognize_crops(crop_boxes(img, boxes, cfg), cfg), cfg)
 
 
-IMAGE_KINDS = ("png", "jpeg", "gif", "webp", "bmp", "tiff", "jp2",
-               "avif", "heic", "pdf")
+IMAGE_KINDS = pngcodec.RASTER_KINDS + ("pdf",)
 
 
-def decode_payload_image(data: bytes | None) -> tuple[str, np.ndarray | None]:
-    """(kind, image-or-None): the ONE decoder router for binary image
-    payloads — png/jpeg/bmp/tiff (cv2.imdecode's format set,
-    ``/root/reference/ocr/operators.py:37-46``) plus the pdf stub
-    route. None image = decode failure or a non-image kind; never
-    raises (per-row error contract)."""
+def decode_payload_pages(
+    data: bytes | None, max_pages: int = 16
+) -> tuple[str, list[np.ndarray] | None]:
+    """(kind, page images or None): the one payload → pages route of
+    both OCR surfaces. A raster kind decodes to one page through
+    ``pngcodec.decode_image``. A PDF is parsed once by
+    ``pdf.pdf_to_images`` (up to ``max_pages``); if that parse fails,
+    the first bare PNG embedded in the bytes is the page (early fixture
+    PDFs stored one in a stream object). None = decode failure or a
+    non-image kind; never raises (per-row error contract)."""
     kind = pngcodec.sniff_payload(data)
     if kind == "pdf":
-        return kind, extract_pdf_payload(data)
-    if kind == "png":
-        dec = pngcodec.decode_png
-    elif kind == "webp":
-        from ragflow_ocr_spark.kernels import webp
+        from ragflow_ocr_spark.kernels import pdf
 
-        dec = webp.decode_webp
-    elif kind == "jp2":
-        from ragflow_ocr_spark.kernels import jpeg2000
-
-        dec = jpeg2000.decode_jpeg2000
-    elif kind in ("jpeg", "gif", "bmp", "tiff"):
-        from ragflow_ocr_spark.kernels import imgcodecs
-
-        dec = {
-            "jpeg": imgcodecs.decode_jpeg,
-            "gif": imgcodecs.decode_gif,
-            "bmp": imgcodecs.decode_bmp,
-            "tiff": imgcodecs.decode_tiff,
-        }[kind]
-    elif kind in ("heic", "avif"):
-        # HEIF item layer is real (kernels/heif); PCM hvc1 items
-        # decode, entropy-coded camera HEICs and AVIF hit the named
-        # codec seams below
-        from ragflow_ocr_spark.kernels import heif
-
-        dec = heif.decode_heif
-    else:
-        return kind, None
+        try:
+            return kind, pdf.pdf_to_images(data, max_pages)
+        except Exception:
+            # a malformed PDF is a per-row error, never a task failure:
+            # the parser can surface Index/Key/ValueError on crafted input
+            pass
+        i = data.find(pngcodec.PNG_MAGIC)
+        if i < 0:
+            return kind, None
+        try:
+            return kind, [pngcodec.decode_png(data[i:])]
+        except ValueError:
+            return kind, None
     try:
-        return kind, dec(data)
-    except ValueError:
-        return kind, None
-    except NotImplementedError:
-        # lossy-WebP / HEVC-entropy / AV1 seams: decodable container,
-        # unbundled codec — same per-row error surface as any decode
-        # failure here
+        return kind, [pngcodec.decode_image(data)[1]]
+    except (ValueError, NotImplementedError):
+        # NotImplementedError: a non-image kind, or a decodable container
+        # around an unbundled codec (AVIF, unsupported HEVC) — the same
+        # per-row error surface as any decode failure
         return kind, None
 
 
 def extract_payload(data: bytes | None, cfg: OCRConfig | None = None) -> OcrResult:
-    """Route one payload by magic bytes (F10) and extract.
+    """Route one payload by magic bytes (F10) and extract; a PDF's pages
+    are OCRed in turn and their texts joined.
 
     HTML routing is handled a level up (the Spark stage splits HTML
     rows to the html_extract kernel); this function owns the binary
-    routes: png/jpeg/bmp/tiff/pdf/null.
+    routes: the raster kinds, pdf and null.
     """
     cfg = cfg or OCRConfig()
-    kind = pngcodec.sniff_payload(data)
-    if kind == "pdf":
-        # multi-page route: OCR every page (bounded), join page texts
-        try:
-            from ragflow_ocr_spark.kernels import pdf
-
-            pages = pdf.pdf_to_images(data)
-        except Exception:
-            img = extract_pdf_payload(data)  # legacy embedded-PNG fallback
-            if img is None:
-                return OcrResult(None, 0, "error:decode", [], [])
-            pages = [img]
-        texts: list[str] = []
-        boxes: list[list[list[float]]] = []
-        scores: list[float] = []
-        n_blocks = 0
-        any_ok = False
-        any_dropped = False
-        for page_img in pages:
-            r = ocr_image(page_img, cfg)
-            if r.status == "ok":
-                any_ok = True
-                texts.append(r.text)
-                boxes.extend(r.boxes)
-                scores.extend(r.scores)
-                n_blocks += r.n_blocks
-            elif r.status == "empty:dropped":
-                any_dropped = True
-        if not any_ok:
-            # keep the blank-vs-low-confidence distinction of the
-            # single-image path: if any page had detections that all
-            # fell below drop_score, the doc is dropped, not blank
-            return OcrResult("", 0, "empty:dropped" if any_dropped else "empty", [], [])
-        return OcrResult("\n".join(texts), n_blocks, "ok", boxes, scores)
-    kind, img = decode_payload_image(data)
+    kind, pages = decode_payload_pages(data)
     if kind == "null":
         return OcrResult(None, 0, "error:null", [], [])
-    if img is None:
+    if pages is None:
         status = "error:decode" if kind in IMAGE_KINDS else "error:route"
         return OcrResult(None, 0, status, [], [])
-    return ocr_image(img, cfg)
+    if kind != "pdf":
+        return ocr_image(pages[0], cfg)
+    texts: list[str] = []
+    boxes: list[list[list[float]]] = []
+    scores: list[float] = []
+    n_blocks = 0
+    any_ok = False
+    any_dropped = False
+    for page_img in pages:
+        r = ocr_image(page_img, cfg)
+        if r.status == "ok":
+            any_ok = True
+            texts.append(r.text)
+            boxes.extend(r.boxes)
+            scores.extend(r.scores)
+            n_blocks += r.n_blocks
+        elif r.status == "empty:dropped":
+            any_dropped = True
+    if not any_ok:
+        # keep the blank-vs-low-confidence distinction of the
+        # single-image path: if any page had detections that all
+        # fell below drop_score, the doc is dropped, not blank
+        return OcrResult("", 0, "empty:dropped" if any_dropped else "empty", [], [])
+    return OcrResult("\n".join(texts), n_blocks, "ok", boxes, scores)

@@ -499,9 +499,8 @@ def _render_text_spans(spans, media_w: int, media_h: int) -> np.ndarray:
 
 
 def pdf_to_image(data: bytes) -> np.ndarray:
-    """%PDF bytes → FIRST page as uint8 gray/RGB image (the staged
-    detect API's single-image contract; the extraction pipeline uses
-    ``pdf_to_images`` for full multi-page text)."""
+    """%PDF bytes → FIRST page as uint8 gray/RGB image. The OCR paths
+    call ``pdf_to_images`` (the staged API with ``max_pages=1``)."""
     return pdf_to_images(data, max_pages=1)[0]
 
 
@@ -563,33 +562,13 @@ def pdf_to_images(data: bytes, max_pages: int = 16) -> list[np.ndarray]:
 
 def _decode_bare_image(body: bytes) -> np.ndarray | None:
     """Stream bytes that ARE a standalone image file → decoded image
-    (or None). Routed by magic bytes like the payload router."""
+    (or None), through the raster router ``pngcodec.decode_image``."""
     from ragflow_ocr_spark.kernels import pngcodec
 
-    kind = pngcodec.sniff_payload(body)
     try:
-        if kind == "png":
-            return pngcodec.decode_png(body)
-        if kind in ("jpeg", "gif", "bmp", "tiff"):
-            from ragflow_ocr_spark.kernels import imgcodecs
-
-            return {
-                "jpeg": imgcodecs.decode_jpeg,
-                "gif": imgcodecs.decode_gif,
-                "bmp": imgcodecs.decode_bmp,
-                "tiff": imgcodecs.decode_tiff,
-            }[kind](body)
-        if kind == "webp":
-            from ragflow_ocr_spark.kernels import webp
-
-            return webp.decode_webp(body)
-        if kind == "jp2":
-            from ragflow_ocr_spark.kernels import jpeg2000
-
-            return jpeg2000.decode_jpeg2000(body)
+        return pngcodec.decode_image(body)[1]
     except (ValueError, NotImplementedError):
         return None
-    return None
 
 
 def _page_image(objs, page: dict) -> np.ndarray:

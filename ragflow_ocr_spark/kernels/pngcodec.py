@@ -269,16 +269,17 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 def sniff_payload(data: bytes | None) -> str:
-    """Magic-byte payload router (SURVEY.md §2.2 F10).
+    """Magic-byte payload sniffer (SURVEY.md §2.2 F10).
 
-    Returns one of: 'null', 'png', 'jpeg', 'gif', 'webp', 'bmp',
-    'tiff', 'jp2', 'pdf', 'html', or a named non-page binary kind
-    ('avif', 'heic', 'isobmff', 'avi', 'wav', 'webm', 'ogg', 'flac',
-    'mp3' — routed to per-row skip/unsupported statuses rather than
-    garbage html extraction). The reference routes by file extension at the CLI
-    (``/root/reference/examples/batch_processing.py:28``, globbing
-    ``*.jpg/.png/.bmp/.tiff``); content sniffing is the scale-safe
-    equivalent.
+    Returns one of: 'null', 'html', 'pdf', a raster kind
+    (``RASTER_KINDS``: 'png', 'jpeg', 'gif', 'bmp', 'tiff', 'webp',
+    'jp2', 'heic', 'avif' — ``decode_image`` decodes them), or a named
+    non-page binary kind ('isobmff', 'avi', 'wav', 'webm', 'ogg',
+    'flac', 'mp3' — routed to per-row skip/unsupported statuses rather
+    than garbage html extraction). The reference routes by file
+    extension at the CLI (its ``examples/batch_processing.py:28``,
+    globbing ``*.jpg/.png/.bmp/.tiff``); content sniffing is the
+    scale-safe equivalent.
     """
     if data is None or len(data) == 0:
         return "null"
@@ -325,3 +326,47 @@ def sniff_payload(data: bytes | None) -> str:
     if data.startswith(b"ID3"):
         return "mp3"
     return "html"
+
+
+RASTER_KINDS = ("png", "jpeg", "gif", "bmp", "tiff", "webp", "jp2", "heic", "avif")
+
+
+def decode_image(data: bytes | None) -> tuple[str, np.ndarray]:
+    """The one raster decoder router: sniff once, decode with the kind's
+    bundled codec → (kind, uint8 gray/RGB image). Every image path (OCR
+    payloads, images embedded in PDFs, media rows and video frames)
+    decodes through here.
+
+    Raises ValueError on malformed bytes and NotImplementedError on a
+    kind with no bundled decoder: any non-raster kind, and the named
+    codec seams inside a decodable container (AVIF, unsupported HEVC
+    profiles). Callers turn both into per-row error statuses.
+    """
+    # Decoders are looked up at call time through their home modules,
+    # never bound into a table at import: the benchmark's traced run
+    # replaces module attributes such as ``decode_png`` with timed
+    # wrappers, and a name bound early would bypass them (the traced
+    # ``pngcodec.decode.mpixels`` would read zero).
+    kind = sniff_payload(data)
+    if kind == "png":
+        return kind, decode_png(data)
+    if kind in ("jpeg", "gif", "bmp", "tiff"):
+        from ragflow_ocr_spark.kernels import imgcodecs
+
+        return kind, getattr(imgcodecs, "decode_" + kind)(data)
+    if kind == "webp":
+        from ragflow_ocr_spark.kernels import webp
+
+        return kind, webp.decode_webp(data)
+    if kind == "jp2":
+        from ragflow_ocr_spark.kernels import jpeg2000
+
+        return kind, jpeg2000.decode_jpeg2000(data)
+    if kind in ("heic", "avif"):
+        # HEIF item layer (kernels/heif): hvc1 items — PCM and
+        # entropy-coded (camera/x265, 8-bit + Main10) — decode via
+        # kernels/hevc + hevc_intra; AVIF raises its named seam
+        from ragflow_ocr_spark.kernels import heif
+
+        return kind, heif.decode_heif(data)
+    raise NotImplementedError(f"no bundled image decoder for {kind!r} payloads")

@@ -10,14 +10,15 @@ Container/codec reality in this sandbox (no PIL/cv2/ffmpeg):
   AND lossy WebP (VP8 keyframes, kernels/vp8 — exact RFC 6386
   tables), lossless JPEG (SOF3, kernels/jpeg_lossless), and JPEG 2000
   (T.800 raw codestream + JP2 container, 5/3 lossless and 9/7 lossy,
-  kernels/jpeg2000) all decode for real (kernels/pngcodec +
-  kernels/imgcodecs + kernels/jpeg2000).
-- **audio**: raw PCM s16le payloads, real RIFF/WAV PCM16 containers
-  (kernels/wavcodec) and real Ogg Vorbis (kernels/ogg +
-  kernels/vorbis) — RMS / zero-crossing / peak features are real.
-  FLAC and MP3 payloads are recognised by their magic bytes and
-  become ``error:unsupported_codec`` rows; no decoder for them is
-  bundled.
+  kernels/jpeg2000) and HEIC (kernels/heif) all decode for real
+  through the one raster router, ``pngcodec.decode_image``. A payload
+  whose bytes are no decodable image kind is ``error:unsupported_codec``
+  whatever its ``meta_codec`` label says.
+- **audio**: raw PCM s16le payloads and real RIFF/WAV PCM16
+  containers (kernels/wavcodec) — RMS / zero-crossing / peak features
+  are real. Ogg, FLAC and MP3 payloads are recognised by their magic
+  bytes and become ``error:unsupported_codec`` rows; no decoder for
+  them is bundled.
 - **video**: MOCKV1 (deterministic synth container), real RIFF
   AVI/MJPEG, real ISO-BMFF mp4 (general stsd/stsz/stsc/stco
   sample-table demux) with MJPEG or HEVC (hvc1/hev1) tracks, real
@@ -111,62 +112,18 @@ def media_df(spark, n_rows: int = 60, partitions: int = 4):
 
 
 # ---------------------------------------------------------------- decode
-def decode_image(payload: bytes, codec: str) -> np.ndarray:
-    """The codec router. PNG/JPEG/GIF/BMP/TIFF/WebP (VP8L lossless AND
-    VP8 lossy keyframes, kernels/vp8) and JPEG 2000 (kernels/jpeg2000)
-    decode for real; genuinely unbundled codecs raise
-    NotImplementedError and malformed payloads ValueError — callers
-    convert both to per-row error statuses (never a task failure)."""
-    kind = pngcodec.sniff_payload(payload)
-    if codec == "png" or kind == "png":
-        return pngcodec.decode_png(payload)
-    if kind == "webp":
-        from ragflow_ocr_spark.kernels import webp as webpmod
-
-        return webpmod.decode_webp(payload)
-    if kind == "jp2":
-        from ragflow_ocr_spark.kernels import jpeg2000
-
-        return jpeg2000.decode_jpeg2000(payload)
-    if kind in ("jpeg", "gif", "bmp", "tiff"):
-        from ragflow_ocr_spark.kernels import imgcodecs
-
-        return {
-            "jpeg": imgcodecs.decode_jpeg,
-            "gif": imgcodecs.decode_gif,
-            "bmp": imgcodecs.decode_bmp,
-            "tiff": imgcodecs.decode_tiff,
-        }[kind](payload)
-    if kind in ("heic", "avif"):
-        # HEIF item layer (kernels/heif): hvc1 items — PCM and
-        # entropy-coded (camera/x265, 8-bit + Main10) — decode via
-        # the libde265-validated kernels/hevc + hevc_intra; AVIF
-        # raises its named seam carrying real sequence-header facts
-        from ragflow_ocr_spark.kernels import heif
-
-        return heif.decode_heif(payload)
-    raise NotImplementedError(f"decoder for {codec!r} not bundled in this sandbox")
-
-
 def _decode_frame(frame: bytes) -> "np.ndarray":
     """Frame bytes → image; frames are PNG (MOCKV1 frames and the
     GIF / animated-WebP / webm V_VP8 re-encodes), JPEG (AVI/mp4/webm
     MJPEG), a still WebP, or an Annex-B HEVC access unit (mp4 hvc1 /
-    webm V_MPEGH/ISO/HEVC). HEVC decodes keyframes only: a non-IRAP
-    picture raises NotImplementedError, a per-row error."""
-    if frame.startswith(b"\xff\xd8"):
-        from ragflow_ocr_spark.kernels import imgcodecs
-
-        return imgcodecs.decode_jpeg(frame)
-    if frame[:4] == b"RIFF" and frame[8:12] == b"WEBP":
-        from ragflow_ocr_spark.kernels import webp as webpmod
-
-        return webpmod.decode_webp(frame)
+    webm V_MPEGH/ISO/HEVC). Image frames go through the raster router
+    (``pngcodec.decode_image``). HEVC decodes keyframes only: a
+    non-IRAP picture raises NotImplementedError, a per-row error."""
     from ragflow_ocr_spark.kernels import hevc as hevcmod
 
     if hevcmod.sniff_annexb_hevc(frame):
         return hevcmod.decode_hevc_keyframe(frame)
-    return pngcodec.decode_png(frame)
+    return pngcodec.decode_image(frame)[1]
 
 
 def encode_avi_mjpeg(frames_jpeg: list[bytes]) -> bytes:
@@ -643,11 +600,9 @@ def image_features_stage():
         keep_runtime_zip_caches()
         for b in batches:
             rows = []
-            for mid, payload, codec in zip(
-                b["media_id"], b["payload"], b["meta_codec"]
-            ):
+            for mid, payload in zip(b["media_id"], b["payload"]):
                 try:
-                    img = decode_image(bytes(payload), codec)
+                    _kind, img = pngcodec.decode_image(bytes(payload))
                     rows.append(
                         (
                             int(mid),
@@ -680,11 +635,9 @@ def thumbnail_stage(max_side: int = 16):
         keep_runtime_zip_caches()
         for b in batches:
             rows = []
-            for mid, payload, codec in zip(
-                b["media_id"], b["payload"], b["meta_codec"]
-            ):
+            for mid, payload in zip(b["media_id"], b["payload"]):
                 try:
-                    img = decode_image(bytes(payload), codec)
+                    _kind, img = pngcodec.decode_image(bytes(payload))
                     h, w = img.shape[:2]
                     r = max_side / max(h, w)
                     th, tw = max(1, int(h * r)), max(1, int(w * r))
@@ -713,10 +666,10 @@ AUDIO_FEATURES_SCHEMA = (
 
 
 def _is_unsupported_audio(raw: bytes) -> bool:
-    """FLAC or MP3 (ID3 tag or a Layer III frame sync). No decoder for
-    them is bundled; without this check they would be misread as raw
-    PCM."""
-    if pngcodec.sniff_payload(raw) in ("flac", "mp3"):
+    """Ogg, FLAC or MP3 (ID3 tag or a Layer III frame sync). No decoder
+    for them is bundled; without this check they would be misread as
+    raw PCM."""
+    if pngcodec.sniff_payload(raw) in ("ogg", "flac", "mp3"):
         return True
     return (len(raw) >= 4 and raw[0] == 0xFF
             and (raw[1] & 0xE0) == 0xE0 and ((raw[1] >> 1) & 3) == 1)
@@ -725,7 +678,7 @@ def _is_unsupported_audio(raw: bytes) -> bool:
 def audio_features_stage():
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         keep_runtime_zip_caches()
-        from ragflow_ocr_spark.kernels import vorbis as vorbiscodec, wavcodec
+        from ragflow_ocr_spark.kernels import wavcodec
 
         for b in batches:
             rows = []
@@ -739,11 +692,6 @@ def audio_features_stage():
                         if samples.ndim == 2:
                             samples = samples.mean(axis=1)
                         pcm = samples.astype(np.float64) / 32768.0
-                    elif raw[:4] == b"OggS":
-                        # real container+codec route: Ogg Vorbis
-                        # (kernels/ogg framing + kernels/vorbis decode,
-                        # mono mixdown, already in [-1, 1])
-                        pcm, _sr = vorbiscodec.decode_vorbis(raw)
                     elif _is_unsupported_audio(raw):
                         raise NotImplementedError("compressed audio")
                     else:

@@ -5,9 +5,11 @@ SURVEY.md §2.10): the unified extract stage, which sniffs each payload
 and routes it to HTML extraction or the OCR pipeline (the batch job,
 the resumable job and the streaming job all run it), and the staged
 detect → recognize pair for callers that want the blocks between the
-two. No row-at-a-time Spark UDFs anywhere — per-document Python happens
-inside batch loops on the worker, which is the reference's own
-execution shape (row = document, ndarray inside; SURVEY.md §1.2).
+two; that pair calls the same payload route and phase functions as
+the fused pipeline (kernels/ocr_pipeline.py). No row-at-a-time Spark
+UDFs anywhere — per-document Python happens inside batch loops on the
+worker, which is the reference's own execution shape (row = document,
+ndarray inside; SURVEY.md §1.2).
 
 Each stage function first calls ``keep_runtime_zip_caches``
 (spark/worker.py), so a reused worker does not re-read Spark's own zip
@@ -33,10 +35,6 @@ EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, lang string, extracted_text string, "
     "n_blocks int, status string, engine string"
 )
-
-
-def classify_kind(data: bytes | None) -> str:
-    return sniff_payload(data)
 
 
 def _extract_one(
@@ -112,27 +110,26 @@ def detect_stage(cfg: PipelineConfig | None = None):
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         keep_runtime_zip_caches()
-        from ragflow_ocr_spark.kernels.ocr_pipeline import (
-            IMAGE_KINDS,
-            decode_payload_image,
-            detect,
-        )
+        from ragflow_ocr_spark.kernels import ocr_pipeline
 
         for pdf in batches:
             all_blocks = []
             statuses = []
             for data in pdf["html"]:
                 payload = bytes(data) if data is not None else None
-                # same router as the unified extract stage — the two
-                # public surfaces must agree on supported formats
-                kind, img = decode_payload_image(payload)
-                if img is None:
+                # same route as the unified extract stage — the two
+                # public surfaces must agree on supported formats; a
+                # PDF contributes its first page
+                kind, pages = ocr_pipeline.decode_payload_pages(payload, max_pages=1)
+                if pages is None:
                     all_blocks.append([])
                     statuses.append(
-                        "error:decode" if kind in IMAGE_KINDS else f"skip:{kind}"
+                        "error:decode"
+                        if kind in ocr_pipeline.IMAGE_KINDS
+                        else f"skip:{kind}"
                     )
                     continue
-                boxes = detect(img, cfg.ocr)
+                boxes = ocr_pipeline.detect(pages[0], cfg.ocr)
                 all_blocks.append(
                     [
                         {"block_id": i, "bbox": b.tolist()}
@@ -153,7 +150,8 @@ def recognize_stage(cfg: PipelineConfig | None = None):
 
     Batch-rec semantics (``OCR.recognize_batch``, ocr/ocr.py:523-533):
     a line below drop_score emits "" rather than being dropped — the
-    reference's second F2 semantics, distinct from the full pipeline.
+    reference's second F2 semantics, distinct from the full pipeline's
+    ``ocr_pipeline.assemble``.
     """
     cfg = cfg or DEFAULT
 
@@ -161,12 +159,7 @@ def recognize_stage(cfg: PipelineConfig | None = None):
         keep_runtime_zip_caches()
         import numpy as np
 
-        from ragflow_ocr_spark.kernels.crop import get_rotate_crop_image, rotation_probe
-        from ragflow_ocr_spark.kernels.ocr_pipeline import (
-            _rec_one,
-            decode_payload_image,
-            recognize_crops,
-        )
+        from ragflow_ocr_spark.kernels import ocr_pipeline
 
         for pdf in batches:
             rows = {
@@ -182,19 +175,17 @@ def recognize_stage(cfg: PipelineConfig | None = None):
                 # blocks is an ndarray via Arrow — no truthiness
                 if payload is None or blocks is None or len(blocks) == 0:
                     continue
-                _kind, img = decode_payload_image(payload)
-                if img is None:
+                _kind, pages = ocr_pipeline.decode_payload_pages(payload, max_pages=1)
+                if pages is None:
                     continue  # per-row error contract: skip, never raise
-                crops = []
-                for b in blocks:
-                    # Arrow hands nested lists back as object arrays of
-                    # per-point arrays — normalize before stacking
-                    quad = np.array(
-                        [np.asarray(p, dtype=np.float64) for p in b["bbox"]]
-                    )
-                    crop = get_rotate_crop_image(img, quad)
-                    crops.append(rotation_probe(crop, lambda c: _rec_one(c, cfg.ocr)))
-                rec = recognize_crops(crops, cfg.ocr)
+                # Arrow hands nested lists back as object arrays of
+                # per-point arrays — normalize before stacking
+                quads = [
+                    np.array([np.asarray(p, dtype=np.float64) for p in b["bbox"]])
+                    for b in blocks
+                ]
+                crops = ocr_pipeline.crop_boxes(pages[0], quads, cfg.ocr)
+                rec = ocr_pipeline.recognize_crops(crops, cfg.ocr)
                 for b, (text, score) in zip(blocks, rec):
                     rows["url"].append(url)
                     rows["warc_ts"].append(warc_ts)
@@ -207,4 +198,3 @@ def recognize_stage(cfg: PipelineConfig | None = None):
             yield pd.DataFrame(rows)
 
     return fn
-

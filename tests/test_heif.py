@@ -49,22 +49,32 @@ def test_decode_heif_rgb_entry_point():
 
 def test_payload_sniffer_routes_heic():
     from ragflow_ocr_spark.kernels import pngcodec
-    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_image
+    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_pages
 
     img = np.full((32, 32), 90, np.uint8)
     data = heif.encode_heic(img)
     assert pngcodec.sniff_payload(data) == "heic"
-    kind, decoded = decode_payload_image(data)
-    assert kind == "heic" and decoded is not None
-    assert decoded.shape[:2] == (32, 32)
+    kind, pages = decode_payload_pages(data)
+    assert kind == "heic" and pages is not None
+    assert pages[0].shape[:2] == (32, 32)
 
 
 def test_ops_decode_image_routes_heic():
-    from ragflow_ocr_spark.ops.multimodal import decode_image
+    # the media ops decode through the one raster router
+    import pandas as pd
+
+    from ragflow_ocr_spark.kernels import pngcodec
+    from ragflow_ocr_spark.ops import multimodal as mm
 
     img = np.full((32, 32), 90, np.uint8)
-    out = decode_image(heif.encode_heic(img), "heic")
+    data = heif.encode_heic(img)
+    kind, out = pngcodec.decode_image(data)
+    assert kind == "heic"
     assert out.shape[:2] == (32, 32)
+    batch = pd.DataFrame({"media_id": [7], "payload": [data]})
+    (row,) = next(mm.image_features_stage()(iter([batch]))).itertuples()
+    assert row.status == "ok"
+    assert (row.width, row.height) == (32, 32)
 
 
 def test_avif_item_raises_named_seam():
@@ -74,10 +84,10 @@ def test_avif_item_raises_named_seam():
     with pytest.raises(NotImplementedError, match="AVIF"):
         heif.decode_heif(bytes(data))
     # and through the router it stays a per-row None with a named kind
-    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_image
+    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_pages
 
-    kind, decoded = decode_payload_image(bytes(data))
-    assert decoded is None
+    kind, pages = decode_payload_pages(bytes(data))
+    assert pages is None
 
 
 def test_entropy_coded_camera_heic_is_named_seam():
@@ -300,13 +310,13 @@ def test_grid_canvas_beyond_pixel_budget_is_refused(monkeypatch):
 
 def test_grid_through_payload_router():
     from ragflow_ocr_spark.kernels import pngcodec
-    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_image
+    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_pages
 
     img = np.full((48, 64), 90, np.uint8)
     data = heif.encode_heic_grid(img, 2, 2)
     assert pngcodec.sniff_payload(data) == "heic"
-    kind, decoded = decode_payload_image(data)
-    assert kind == "heic" and decoded is not None and decoded.shape == (48, 64)
+    kind, pages = decode_payload_pages(data)
+    assert kind == "heic" and pages is not None and pages[0].shape == (48, 64)
 
 
 # ----------------------------------------------------------- orientation

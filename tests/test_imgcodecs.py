@@ -477,13 +477,39 @@ def test_decode_pixel_ceiling():
 
 def test_staged_detect_agrees_with_extract_on_codecs():
     """detect_stage and the unified extract stage must support the
-    same formats — a JPEG/BMP/TIFF page gets blocks, not skip."""
-    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_image
+    same formats — a JPEG/BMP/TIFF page gets blocks, not skip — and
+    every image path (the raster router, the OCR payload route and an
+    image stream inside a PDF) decodes every raster kind to the same
+    array."""
+    from ragflow_ocr_spark.kernels import heif, pdf, vp8, webp
+    from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_pages
 
     img, _ = font5x7.render_page(["AGREEMENT ROW"], 480, 96, 2)
     for enc in (ic.encode_bmp, ic.encode_tiff, lambda i: ic.encode_jpeg(i, 90)):
-        kind, decoded = decode_payload_image(enc(img))
-        assert decoded is not None, kind
+        kind, pages = decode_payload_pages(enc(img))
+        assert pages is not None, kind
+
+    small = img[:32, :64]
+    payloads = {
+        "png": pngcodec.encode_png(small),
+        "jpeg": ic.encode_jpeg(small, 90),
+        "gif": ic.encode_gif(small),
+        "bmp": ic.encode_bmp(small),
+        "tiff": ic.encode_tiff(small),
+        "webp": webp.encode_webp(small),
+        "webp-lossy": vp8.encode_webp_lossy_flat(32, 16, (100, 128, 128)),
+        "jp2": jpeg2000.encode_jp2(small),
+        "heic": heif.encode_heic(small),
+    }
+    for name, data in payloads.items():
+        kind, routed = pngcodec.decode_image(data)
+        assert kind == name.split("-")[0], name
+        route_kind, pages = decode_payload_pages(data)
+        assert route_kind == kind and pages is not None and len(pages) == 1, name
+        assert np.array_equal(pages[0], routed), name
+        embedded = pdf._decode_bare_image(data)
+        assert embedded is not None, name
+        assert np.array_equal(embedded, routed), name
 
 
 def test_animated_gif_frames_roundtrip_and_compositing():

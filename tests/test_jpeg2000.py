@@ -315,13 +315,13 @@ def test_encoder_input_contract():
 # ------------------------------------------------------------- dispatch
 def test_sniff_and_decode_image_route():
     from ragflow_ocr_spark.kernels import pngcodec
-    from ragflow_ocr_spark.ops.multimodal import decode_image
 
     img = _rng(18).integers(0, 256, size=(20, 30, 3), dtype=np.uint8)
     for payload in (j2k.encode_jpeg2000(img, reversible=True),
                     j2k.encode_jp2(img, reversible=True)):
         assert pngcodec.sniff_payload(payload) == "jp2"
-        out = decode_image(payload, "jp2")
+        kind, out = pngcodec.decode_image(payload)
+        assert kind == "jp2"
         assert (out == img).all()
 
 

@@ -227,48 +227,9 @@ def test_audio_stage_decodes_wav_container(spark):
     assert out[2]["status"] == "error"  # malformed WAV -> error row
 
 
-def test_audio_stage_decodes_vorbis_content(spark):
-    """A content (non-silence) stereo mixed-block Ogg Vorbis payload
-    routes through the SAME feature stage as PCM/WAV/MP3 and matches
-    the kernel-direct decode (value correctness of the decode itself
-    is pinned against independent models in tests/test_vorbis.py)."""
-    import numpy as np
-
-    from ragflow_ocr_spark.kernels import vorbis as V
-    from ragflow_ocr_spark.ops import multimodal as mm
-
-    n_parts = V.enc_coded_len(2, 256) // V.ENC_PSIZE
-    frames = [
-        (0, ((30, 40, 20, 50), (10, 15, 60, 5)),
-         [[i % 16, (3 * i) % 16, 7, 12] for i in range(n_parts)]),
-        (1, ((25, 25, 25, 25), None),
-         [[5, 9, 2, 14]] * (V.enc_coded_len(2, 1024) // V.ENC_PSIZE)),
-        None,
-        (0, (None, (8, 16, 24, 32)), [[1, 2, 3, 4]] * n_parts),
-    ]
-    payload = V.encode_vorbis_ex(frames, channels=2, mixed=True)
-    pcm, _sr = V.decode_vorbis(payload)
-    rows = [
-        (0, "audio", bytearray(payload), "vorbis", 0, 0, 16000),
-        (1, "audio", bytearray(payload[:100]), "vorbis", 0, 0, 16000),
-    ]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
-    out = {
-        r["media_id"]: r
-        for r in df.mapInPandas(
-            mm.audio_features_stage(), schema=mm.AUDIO_FEATURES_SCHEMA
-        ).collect()
-    }
-    assert out[0]["status"] == "ok"
-    assert out[0]["n_samples"] == len(pcm)
-    assert out[0]["rms"] == round(float(np.sqrt((pcm**2).mean())), 6) > 0
-    assert out[0]["peak"] == round(float(np.abs(pcm).max()), 6) > 0
-    assert out[1]["status"] == "error"  # truncated Ogg -> error row
-
-
 def test_audio_stage_names_compressed_audio_unsupported(spark):
-    """FLAC and MP3 payloads have no bundled decoder: each becomes an
-    error:unsupported_codec row instead of being misread as raw PCM,
+    """Ogg, FLAC and MP3 payloads have no bundled decoder: each becomes
+    an error:unsupported_codec row instead of being misread as raw PCM,
     while a raw PCM row in the same batch stays ok."""
     pcm = mm.make_audio_payload(np.random.default_rng(12))
     rows = [
@@ -276,7 +237,8 @@ def test_audio_stage_names_compressed_audio_unsupported(spark):
         (1, "audio", bytearray(b"ID3\x04\x00" + b"\x00" * 40), "mp3", 0, 0, 44100),
         # bare MPEG-1 Layer III frame header, no ID3 tag
         (2, "audio", bytearray(b"\xff\xfb\x90\x00" + b"\x00" * 40), "mp3", 0, 0, 44100),
-        (3, "audio", bytearray(pcm), "pcm_s16le", 0, 0, 16000),
+        (3, "audio", bytearray(b"OggS\x00\x02" + b"\x00" * 40), "vorbis", 0, 0, 16000),
+        (4, "audio", bytearray(pcm), "pcm_s16le", 0, 0, 16000),
     ]
     df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
     out = {
@@ -285,10 +247,10 @@ def test_audio_stage_names_compressed_audio_unsupported(spark):
             mm.audio_features_stage(), schema=mm.AUDIO_FEATURES_SCHEMA
         ).collect()
     }
-    for mid in range(3):
+    for mid in range(4):
         assert out[mid]["status"] == "error:unsupported_codec", mid
         assert out[mid]["n_samples"] == 0
-    assert out[3]["status"] == "ok" and out[3]["n_samples"] == len(pcm) // 2
+    assert out[4]["status"] == "ok" and out[4]["n_samples"] == len(pcm) // 2
 
 
 def test_frame_stage_decodes_avi_mjpeg(spark):

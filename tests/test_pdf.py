@@ -54,6 +54,31 @@ def test_legacy_embedded_png_fixture_still_decodes():
     assert (r.status, r.text) == ("ok", "\n".join(drawn))
 
 
+def test_failed_pdf_parse_is_not_repeated(monkeypatch):
+    """A PDF whose structured parse fails is parsed once: the route
+    goes straight to the embedded-PNG scan, and without a PNG the row
+    stays error:decode."""
+    from ragflow_ocr_spark.kernels import pngcodec
+
+    calls = []
+    parse = pdf.pdf_to_images
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return parse(*a, **kw)
+
+    monkeypatch.setattr(pdf, "pdf_to_images", counting)
+    img, drawn = font5x7.render_page(["PARSED ONCE"], 480, 96, 2)
+    legacy = b"%PDF-1.4\nstream\n" + pngcodec.encode_png(img) + b"\nendstream\n%%EOF"
+    r = extract_payload(legacy)
+    assert (r.status, r.text) == ("ok", "\n".join(drawn))
+    assert len(calls) == 1
+    calls.clear()
+    r = extract_payload(b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog >>\nendobj\n%%EOF")
+    assert r.status == "error:decode"
+    assert len(calls) == 1
+
+
 # ---------------------------------------------------------------- syntax
 def test_string_escapes_and_tj_array():
     content = rb"BT /F1 24 Tf 40 700 Td [(A\(B\)C) (\134D)] TJ ET"

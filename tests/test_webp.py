@@ -118,22 +118,23 @@ def test_mutation_fuzz_exception_contract():
 
 
 def test_multimodal_decode_image_webp_routes():
-    """Multimodal decode_image: lossless webp round-trips exactly; a
+    """The raster router: lossless webp round-trips exactly; a
     malformed lossy-VP8 chunk raises (→ per-row error upstream)."""
     from ragflow_ocr_spark.kernels import vp8
-    from ragflow_ocr_spark.ops.multimodal import decode_image
+    from ragflow_ocr_spark.kernels.pngcodec import decode_image
 
     rng = np.random.default_rng(44)
     img = rng.integers(0, 256, (12, 18)).astype(np.uint8)
-    out = decode_image(webp.encode_webp(img), "webp")
+    kind, out = decode_image(webp.encode_webp(img))
+    assert kind == "webp"
     assert np.array_equal(out, img)
     # real lossy VP8 decodes through the same route
     lossy = vp8.encode_webp_lossy_flat(32, 16, (100, 128, 128))
-    dec = decode_image(lossy, "webp")
+    _kind, dec = decode_image(lossy)
     assert dec.shape == (16, 32)
     fake_vp8 = b"RIFF" + struct.pack("<I", 16) + b"WEBP" + b"VP8 " + struct.pack("<I", 4) + b"\x00" * 4
     with pytest.raises(ValueError):
-        decode_image(fake_vp8, "webp")
+        decode_image(fake_vp8)
 
 
 def test_predictor_fast_path_matches_general_loop():
