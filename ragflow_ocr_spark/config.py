@@ -4,25 +4,14 @@ Mirrors the semantics of the reference's flat config dict
 (``/root/reference/ocr/config.py:20-41``) as a frozen dataclass; the
 ``eval``-able scale string of the reference's NormalizeImage
 (``/root/reference/ocr/operators.py:118``) is deliberately replaced by a
-plain float. Values are env-overridable like the reference's
-``OCR_*`` env handling (``config.py:22``).
+plain float. Values are set in code; the reference's ``OCR_*`` env
+overrides (``config.py:22``) are not mirrored.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from typing import Any
-
-
-def _env_float(name: str, default: float) -> float:
-    v = os.environ.get(name)
-    return float(v) if v is not None else default
-
-
-def _env_int(name: str, default: int) -> int:
-    v = os.environ.get(name)
-    return int(v) if v is not None else default
 
 
 @dataclass(frozen=True)
@@ -30,12 +19,12 @@ class OCRConfig:
     """Thresholds/shapes of the detect→recognize path.
 
     Field-by-field parity with reference ``DEFAULT_CONFIG``
-    (``ocr/config.py:20-41``).
+    (``ocr/config.py:20-41``), except ``det_limit_type``: detection
+    always limits the longer side (``resize_for_det``'s ``'max'``).
     """
 
     # detection preprocess (ocr/config.py:32-33, operators.py:208-255)
     det_limit_side_len: int = 960
-    det_limit_type: str = "max"
     # DB postprocess (ocr/config.py:34-36, postprocess.py:55-67)
     det_db_thresh: float = 0.3
     det_db_box_thresh: float = 0.5
@@ -61,17 +50,6 @@ class OCRConfig:
     det_model: Any = None
     rec_model: Any = None
 
-    @staticmethod
-    def from_env() -> "OCRConfig":
-        return OCRConfig(
-            det_limit_side_len=_env_int("OCR_DET_LIMIT_SIDE_LEN", 960),
-            det_db_thresh=_env_float("OCR_DET_DB_THRESH", 0.3),
-            det_db_box_thresh=_env_float("OCR_DET_DB_BOX_THRESH", 0.5),
-            det_db_unclip_ratio=_env_float("OCR_DET_DB_UNCLIP_RATIO", 1.5),
-            drop_score=_env_float("OCR_DROP_SCORE", 0.5),
-            rec_batch_num=_env_int("OCR_REC_BATCH_NUM", 16),
-        )
-
 
 @dataclass(frozen=True)
 class HtmlConfig:
@@ -87,12 +65,11 @@ class HtmlConfig:
 class PipelineConfig:
     ocr: OCRConfig = field(default_factory=OCRConfig)
     html: HtmlConfig = field(default_factory=HtmlConfig)
-    # scale plumbing (SURVEY.md §4)
-    target_partitions: int = 0        # 0 → leave to AQE / input splits
-    # payloads above this are range-spread one-per-partition and
-    # scheduled first (spread_for_extract). 16 KB ≈ 4× the corpus
-    # median page: catches the ~100× skew rows while leaving ordinary
-    # pages on the cheap hash path. Tune per corpus at deploy time.
+    # scale plumbing (SURVEY.md §4): payloads above this are
+    # range-spread one-per-partition and scheduled first
+    # (spread_for_extract). 16 KB ≈ 4× the corpus median page: catches
+    # the ~100× skew rows while leaving ordinary pages on the cheap
+    # hash path. Tune per corpus at deploy time.
     salt_heavy_bytes: int = 1 << 14
 
 

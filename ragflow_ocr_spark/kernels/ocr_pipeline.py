@@ -56,13 +56,6 @@ class OcrResult:
     scores: list[float]
 
 
-def _to_rgb(img: np.ndarray) -> np.ndarray:
-    if img.ndim == 2:
-        # broadcast view, no copy — downstream only reads
-        return np.broadcast_to(img[:, :, None], (*img.shape, 3))
-    return img
-
-
 def detect(img: np.ndarray, cfg: OCRConfig) -> np.ndarray:
     """Gray or RGB uint8 → reading-ordered quads (N,4,2) in source
     coords. Kernel equivalent of ``OCR.detect``

@@ -2,8 +2,8 @@
 §2.9, Spark lifecycle in §3.1).
 
     pages ──(bucket IN pending group)──> size-aware spread ──>
-    mapInPandas(extract) ──> extracted/bucket=<b> ──> per-bucket
-    counts of what landed ──> checkpoint rows (driver, pyarrow)
+    mapInPandas(extract) ──> observed per-bucket status counts ──>
+    extracted/bucket=<b> ──> checkpoint rows (driver, pyarrow)
 
 Scale design (SURVEY.md §4):
 - **Size-aware skew spread**: per-document cost is unknown pre-detect
@@ -24,11 +24,10 @@ Scale design (SURVEY.md §4):
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ragflow_ocr_spark.config import DEFAULT, PipelineConfig
 from ragflow_ocr_spark.spark.checkpoint import CheckpointStore
@@ -127,9 +126,9 @@ def run_extract_job(
     via dynamic partition overwrite under ``extracted/bucket=<b>`` —
     rewriting a group is idempotent (MERGE-on-key semantics).
 
-    Spark jobs per group: the write and one aggregate counting what
-    landed. Pending-bucket discovery and the checkpoint run on the
-    driver.
+    Spark jobs per group: one, the write. Its per-bucket status
+    counters are observed on the write itself. Pending-bucket discovery
+    and the checkpoint run on the driver.
 
     ``fail_buckets`` injects a simulated failure after any group
     containing one of the listed buckets commits — the resume tests'
@@ -145,82 +144,61 @@ def run_extract_job(
     groups = [pending[i : i + gs] for i in range(0, len(pending), gs)]
     n_partitions = spark.sparkContext.defaultParallelism if spread else None
     extracted = f"{out_root}/extracted"
+    status = F.col("status")
+    counters = {
+        "n_docs": F.lit(True),
+        "n_ok": status == "ok",
+        "n_empty": status.startswith("empty"),
+    }
 
-    # only the touched bucket= partitions are replaced on (re)write;
-    # session conf restored on exit — leaving dynamic mode on would
-    # change unrelated writers' overwrite semantics
-    prev_overwrite_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for group in groups:
-            t0 = time.monotonic()
-            gdf = pages.where(bucket_of_url.isin(group))
-            (
-                extract(gdf, cfg, n_partitions=n_partitions)
-                .withColumn("bucket", bucket_of_url)
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(extracted)
-            )
-            counts = _count_landed(spark, extracted, group)
-            # group-granular wall: the driver's write-and-count time,
-            # recorded on every bucket row of the group
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            ckpt.mark_done(
-                [
-                    {"run_id": run_id, "bucket": b, "wall_ms": wall_ms, **counts.get(b, {})}
-                    for b in group
-                ],
-                n_buckets,
-            )
-            if fail_buckets and set(group) & set(fail_buckets):
-                raise RuntimeError(
-                    f"injected failure after group containing {sorted(set(group) & set(fail_buckets))}"
-                )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode
+    for i, group in enumerate(groups):
+        t0 = time.monotonic()
+        gdf = pages.where(bucket_of_url.isin(group))
+        # Exact counts: observed metrics come only from the write's
+        # result tasks, and Spark merges one successful attempt per
+        # result partition and drops failed attempts, so these are the
+        # rows that committed. A group rewritten after a crash is
+        # counted from its rewrite.
+        obs = Observation(f"extract-{run_id}-{i}")
+        aggs = [
+            F.count_if((F.col("bucket") == b) & cond).alias(f"{name}_{b}")
+            for b in group
+            for name, cond in counters.items()
+        ]
+        (
+            extract(gdf, cfg, n_partitions=n_partitions)
+            .withColumn("bucket", bucket_of_url)
+            .observe(obs, *aggs)
+            # only the touched bucket= partitions are replaced on
+            # (re)write; the per-write option leaves the session conf,
+            # and so unrelated writers, alone
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(extracted)
         )
+        counts = obs.get
+        # group-granular wall: the driver's write time, recorded on
+        # every bucket row of the group
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        rows = [
+            {"run_id": run_id, "bucket": b, "wall_ms": wall_ms}
+            | {name: counts[f"{name}_{b}"] for name in counters}
+            for b in group
+        ]
+        for r in rows:
+            r["n_error"] = r["n_docs"] - r["n_ok"] - r["n_empty"]
+        ckpt.mark_done(rows, n_buckets)
+        if fail_buckets and set(group) & set(fail_buckets):
+            raise RuntimeError(
+                f"injected failure after group containing {sorted(set(group) & set(fail_buckets))}"
+            )
 
     return {
         "run_id": run_id,
         "buckets_processed": len(pending),
         # buckets with a prior 'done' checkpoint row, populated or not
         "buckets_skipped": len(done),
-    }
-
-
-def _count_landed(spark: SparkSession, extracted: str, group: list[int]) -> dict:
-    """Per-bucket status counters of the group's written partitions —
-    counted from what landed, so a rewritten group or a retried task
-    is never counted twice. Buckets without rows are absent."""
-    paths = [f"{extracted}/bucket={b}" for b in group]
-    paths = [p for p in paths if os.path.isdir(p)]
-    if not paths:
-        return {}
-    status = F.col("status")
-    rows = (
-        spark.read.schema("status string, bucket int")
-        .option("basePath", extracted)
-        .parquet(*paths)
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count(F.when(status == "ok", 1)).alias("n_ok"),
-            F.count(F.when(status.startswith("empty"), 1)).alias("n_empty"),
-        )
-        .collect()
-    )
-    return {
-        r["bucket"]: {
-            "n_docs": r["n_docs"],
-            "n_ok": r["n_ok"],
-            "n_empty": r["n_empty"],
-            "n_error": r["n_docs"] - r["n_ok"] - r["n_empty"],
-        }
-        for r in rows
     }
 
 

@@ -26,7 +26,7 @@ from pyspark.sql.types import (
 )
 
 from ragflow_ocr_spark.config import DEFAULT, PipelineConfig
-from ragflow_ocr_spark.spark.stages import EXTRACT_SCHEMA, extract_stage
+from ragflow_ocr_spark.spark import pipeline
 
 PAGES_STRUCT = StructType(
     [
@@ -49,11 +49,9 @@ def read_pages_stream(
 
 
 def extract_stream(pages: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """The same stage as the batch pipeline — shared kernel, shared
-    schema; stateless so it is legal in a streaming plan."""
-    return pages.select("url", "warc_ts", "lang", "html").mapInPandas(
-        extract_stage(cfg), schema=EXTRACT_SCHEMA
-    )
+    """The batch pipeline's extract plan, unspread: stateless, so it is
+    legal in a streaming plan."""
+    return pipeline.extract(pages, cfg)
 
 
 def stream_extract_availablenow(

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ragflow_ocr_spark.spark import synth
 from ragflow_ocr_spark.spark.checkpoint import CheckpointStore
-from ragflow_ocr_spark.spark.pipeline import read_extracted, run_extract_job
+from ragflow_ocr_spark.spark.pipeline import extract, read_extracted, run_extract_job
 
 N_ROWS = 80
 N_BUCKETS = 6
@@ -57,31 +57,53 @@ def test_resume_after_injected_failure(spark, pages, tmp_path):
     assert summary3["buckets_processed"] == 0
 
 
+def _status_counts(spark, root: str) -> dict:
+    """Per-bucket (n_docs, n_ok, n_empty, n_error) of the rows that landed."""
+    status = F.col("status")
+    ok, empty = status == "ok", status.startswith("empty")
+    return {
+        r["bucket"]: (r["n_docs"], r["n_ok"], r["n_empty"], r["n_docs"] - r["n_ok"] - r["n_empty"])
+        for r in read_extracted(spark, root)
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count_if(ok).alias("n_ok"),
+            F.count_if(empty).alias("n_empty"),
+        )
+        .collect()
+    }
+
+
 def test_checkpoint_rows_carry_lineage(spark, pages, tmp_path):
-    root = str(tmp_path / "job2")
-    run_extract_job(spark, pages, root, n_buckets=3)
-    ck = spark.read.parquet(f"{root}/checkpoint")
-    rows = ck.collect()
-    assert {r["status"] for r in rows} == {"done"}
-    assert sum(r["n_docs"] for r in rows) == N_ROWS
-    assert all(r["wall_ms"] >= 0 for r in rows)
-    assert all(r["run_id"] for r in rows)
-    assert all(r["n_ok"] + r["n_empty"] + r["n_error"] == r["n_docs"] for r in rows)
-    landed = {
-        r["bucket"]: r["count"]
-        for r in read_extracted(spark, root).groupBy("bucket").count().collect()
-    }
-    assert {r["bucket"]: r["n_docs"] for r in rows} == {
-        b: landed.get(b, 0) for b in range(3)
-    }
+    """Each bucket's checkpoint counters equal the status counts of its
+    landed rows; a bucket the input lacks reads 0 on every counter."""
+    n_buckets = 3
+    bucket = F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+    omitted = pages.select(bucket.alias("b")).first()["b"]
+    lacking = pages.where(bucket != omitted)
+    for name, inp in [("all", pages), ("lacking", lacking)]:
+        root = str(tmp_path / name)
+        run_extract_job(spark, inp, root, n_buckets=n_buckets)
+        rows = spark.read.parquet(f"{root}/checkpoint").collect()
+        assert {r["status"] for r in rows} == {"done"}
+        assert sum(r["n_docs"] for r in rows) == inp.count()
+        assert all(r["wall_ms"] >= 0 for r in rows)
+        assert all(r["run_id"] for r in rows)
+        counters = {
+            r["bucket"]: (r["n_docs"], r["n_ok"], r["n_empty"], r["n_error"]) for r in rows
+        }
+        landed = _status_counts(spark, root)
+        assert counters == {b: landed.get(b, (0, 0, 0, 0)) for b in range(n_buckets)}
+    assert counters[omitted] == (0, 0, 0, 0)
 
 
 def test_crash_between_write_and_checkpoint_counts_once(
     spark, pages, tmp_path, monkeypatch
 ):
     """A group whose output landed but whose checkpoint row did not is
-    rewritten on resume; its counters come from what landed, so the
-    rewrite is counted once and every url appears once."""
+    rewritten on resume; its counters come from the rewrite's own
+    observed counts, so the rewrite is counted once and every url
+    appears once."""
     root = str(tmp_path / "job")
     real_mark_done = CheckpointStore.mark_done
     calls = []
@@ -108,6 +130,46 @@ def test_crash_between_write_and_checkpoint_counts_once(
     ck = spark.read.parquet(f"{root}/checkpoint").collect()
     assert sum(r["n_docs"] for r in ck) == N_ROWS
     assert sorted(r["bucket"] for r in ck) == list(range(N_BUCKETS))
+
+
+def _jobs_in_group(spark, group: str, action) -> int:
+    """Spark jobs ``action()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bucket_group_is_one_write_action(spark, pages, tmp_path):
+    """A bucket group runs the Spark jobs of its extract write and no
+    other: its checkpoint counters come from that write, not from a
+    second action."""
+    bucket = F.pmod(F.xxhash64("url"), F.lit(N_BUCKETS)).cast("int")
+    gdf = pages.where(bucket.isin(list(range(N_BUCKETS))))
+    n_partitions = spark.sparkContext.defaultParallelism
+    job = _jobs_in_group(
+        spark,
+        "resume-one-group",
+        lambda: run_extract_job(
+            spark, pages, str(tmp_path / "job"), n_buckets=N_BUCKETS,
+            bucket_group_size=N_BUCKETS,
+        ),
+    )
+    write = _jobs_in_group(
+        spark,
+        "resume-bare-write",
+        lambda: extract(gdf, n_partitions=n_partitions)
+        .withColumn("bucket", bucket)
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(str(tmp_path / "bare")),
+    )
+    assert write > 0
+    assert job == write
 
 
 def test_hidden_partial_checkpoint_file_is_ignored(spark, pages, tmp_path):
