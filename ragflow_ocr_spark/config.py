@@ -19,8 +19,10 @@ class OCRConfig:
     """Thresholds/shapes of the detect→recognize path.
 
     Field-by-field parity with reference ``DEFAULT_CONFIG``
-    (``ocr/config.py:20-41``), except ``det_limit_type``: detection
-    always limits the longer side (``resize_for_det``'s ``'max'``).
+    (``ocr/config.py:20-41``), less its mode switches: detection runs
+    the one mode per step the reference's OCR wires (``ocr/ocr.py:268-273``).
+    It limits the longer side, and its boxes are quads scored by the
+    fast box score.
     """
 
     # detection preprocess (ocr/config.py:32-33, operators.py:208-255)
@@ -31,9 +33,6 @@ class OCRConfig:
     det_db_unclip_ratio: float = 1.5
     max_candidates: int = 1000
     min_size: int = 3
-    # DBPostProcess mode switches (ocr/ocr.py:272-273, postprocess.py:52-64)
-    det_box_type: str = "quad"        # 'quad' | 'poly'
-    det_score_mode: str = "fast"      # 'fast' | 'slow'
     # recognition (ocr/config.py:39-40, ocr/ocr.py:150-151) —
     # rec_image_shape is [3, 48, 320]; the width seeds each
     # micro-batch's max_wh_ratio at 320/48 (ocr/ocr.py:211)

@@ -12,34 +12,7 @@
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
-
-# the reference's LTR-run character class (``postprocess.py:295``)
-_LTR_CHAR = re.compile(r"[a-zA-Z0-9 :*./%+-]")
-
-
-def pred_reverse(pred: str) -> str:
-    """Segment-wise RTL reorder — exact semantics of the reference's
-    ``pred_reverse`` (``/root/reference/ocr/postprocess.py:292-306``),
-    applied when the charset is Arabic (dict path contains 'arabic',
-    ``postprocess.py:283-284``): maximal runs of LTR characters
-    ([a-zA-Z0-9 :*./%+-]) stay in order internally; every other
-    character is its own segment; the segment list is reversed."""
-    segments: list[str] = []
-    current = ""
-    for c in pred:
-        if not _LTR_CHAR.search(c):
-            if current:
-                segments.append(current)
-            segments.append(c)
-            current = ""
-        else:
-            current += c
-    if current:
-        segments.append(current)
-    return "".join(segments[::-1])
 
 
 def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
@@ -49,15 +22,15 @@ def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
 
 
 def ctc_greedy_decode(
-    logits: np.ndarray, charset: list[str], reverse: bool = False
+    logits: np.ndarray, charset: list[str]
 ) -> list[tuple[str, float]]:
     """(B, T, C) logits → [(text, score)] per batch element.
 
     ``charset`` is the class list WITHOUT the blank; class index i>0
     maps to charset[i-1] (blank prepended like the reference's
-    ``add_special_char``, ``postprocess.py:368-370``). ``reverse``
-    applies :func:`pred_reverse` to each text (the reference sets it
-    when the dict path contains 'arabic', ``postprocess.py:283-284``).
+    ``add_special_char``, ``postprocess.py:368-370``). No Arabic
+    segment reverse (``postprocess.py:283-306``): the charset is
+    ``stubnet.REC_CHARSET``, never an Arabic dict.
     """
     probs = softmax(logits.astype(np.float64), axis=2)
     idx = probs.argmax(axis=2)            # (B, T)
@@ -74,8 +47,5 @@ def ctc_greedy_decode(
         chars = [charset[i - 1] for i in ids[keep]]
         confs = ps[keep]
         score = float(confs.mean()) if confs.size else 0.0
-        text = "".join(chars)
-        if reverse:
-            text = pred_reverse(text)
-        out.append((text, score))
+        out.append(("".join(chars), score))
     return out

@@ -7,8 +7,6 @@ reference's reflection-driven op factory ``create_operators``
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
 from ragflow_ocr_spark.kernels.imgeom import resize_bilinear
@@ -22,12 +20,12 @@ _STD = np.array([0.229, 0.224, 0.225], dtype=np.float32)
 
 
 def resize_for_det(
-    img: np.ndarray, limit_side_len: int = 960, limit_type: str = "max"
+    img: np.ndarray, limit_side_len: int = 960
 ) -> tuple[np.ndarray, tuple[int, int, float, float]]:
-    """DetResizeForTest resize_type=0 (``/root/reference/ocr/operators.py:208-255``):
+    """DetResizeForTest resize_type=0 limiting the longer side, the one
+    mode the reference's OCR wires (``ocr/operators.py:208-255``):
 
-    - 'max': if max(h, w) > limit, scale down so max side == limit;
-      'min': if min(h, w) < limit, scale up (unused by default config);
+    - if max(h, w) > limit, scale down so max side == limit;
     - then round each side to the nearest multiple of 32, min 32;
     - tiny-image guard: if h+w < 64, pad to ≥32×32 first
       (``operators.py:177-178,190-194``).
@@ -43,12 +41,7 @@ def resize_for_det(
         img = pad
     h, w = img.shape[:2]
 
-    if limit_type == "max":
-        ratio = float(limit_side_len) / max(h, w) if max(h, w) > limit_side_len else 1.0
-    elif limit_type == "min":
-        ratio = float(limit_side_len) / min(h, w) if min(h, w) < limit_side_len else 1.0
-    else:
-        raise ValueError(f"unsupported limit_type {limit_type}")
+    ratio = float(limit_side_len) / max(h, w) if max(h, w) > limit_side_len else 1.0
 
     resize_h = int(h * ratio)
     resize_w = int(w * ratio)
@@ -60,49 +53,6 @@ def resize_for_det(
     ratio_h = resize_h / float(h)
     ratio_w = resize_w / float(w)
     return out.astype(np.float32), (src_h, src_w, ratio_h, ratio_w)
-
-
-def resize_for_det_type1(
-    img: np.ndarray, image_shape: tuple[int, int], keep_ratio: bool = False
-) -> tuple[np.ndarray, tuple[int, int, float, float]]:
-    """DetResizeForTest resize_type=1 (``/root/reference/ocr/operators.py:196-206``):
-    fixed (h, w) target — used when the det ONNX graph has a static
-    input (``ocr/ocr.py:279-287``). keep_ratio: width follows the
-    aspect ratio, rounded up to a multiple of 32."""
-    src_h, src_w = img.shape[:2]
-    resize_h, resize_w = image_shape
-    if keep_ratio:
-        resize_w = src_w * resize_h / src_h
-        n = int(math.ceil(resize_w / 32))
-        resize_w = n * 32
-    out = resize_bilinear(img, int(resize_h), int(resize_w))
-    return out.astype(np.float32), (
-        src_h,
-        src_w,
-        resize_h / float(src_h),
-        resize_w / float(src_w),
-    )
-
-
-def resize_for_det_type2(
-    img: np.ndarray, resize_long: int = 960
-) -> tuple[np.ndarray, tuple[int, int, float, float]]:
-    """DetResizeForTest resize_type=2 (``/root/reference/ocr/operators.py:257-278``):
-    scale so the LONG side equals resize_long, then round both sides UP
-    to a multiple of 128. Unused by the default config — implemented
-    for API parity."""
-    src_h, src_w = img.shape[:2]
-    ratio = float(resize_long) / (src_h if src_h > src_w else src_w)
-    resize_h = int(round(src_h * ratio / 128) * 128) or 128
-    resize_w = int(round(src_w * ratio / 128) * 128) or 128
-    # reference rounds with ceil-to-128 via int(np.round(x/128)*128)
-    out = resize_bilinear(img, resize_h, resize_w)
-    return out.astype(np.float32), (
-        src_h,
-        src_w,
-        resize_h / float(src_h),
-        resize_w / float(src_w),
-    )
 
 
 def normalize_image(img: np.ndarray) -> np.ndarray:

@@ -43,37 +43,12 @@ Scope (documented substitution, like the PNG codec):
 
 from __future__ import annotations
 
-import functools
 import struct
 import zlib
 
 import numpy as np
 
-
-def _codec_errors(fn):
-    """Decoder boundary guard: truncated/malformed input hits
-    struct.unpack / indexing before a length check can — normalize to
-    the contractual ValueError (the Spark stage maps ValueError to a
-    per-row error status; anything else would fail the task). Found by
-    the codec fuzzers in tests/test_properties.py."""
-
-    @functools.wraps(fn)
-    def inner(data: bytes) -> np.ndarray:
-        try:
-            return fn(data)
-        except (
-            struct.error,
-            IndexError,
-            KeyError,
-            ZeroDivisionError,
-            OverflowError,
-        ) as e:
-            # KeyError: scan/frame referencing an undefined DQT/DHT table
-            # or component id; ZeroDivisionError: zero sampling factor;
-            # OverflowError: crafted coefficients exceeding int32
-            raise ValueError(f"malformed input: {e!r}") from e
-
-    return inner
+from ragflow_ocr_spark.kernels.pngcodec import codec_errors
 
 
 # untrusted-payload ceiling: a ~200-byte JPEG can declare 32768x32768
@@ -188,7 +163,7 @@ def _bmp_palette_map(data: bytes, hdr_size: int, bpp: int, idx: np.ndarray) -> n
     return np.ascontiguousarray(rgb)
 
 
-@_codec_errors
+@codec_errors
 def decode_bmp(data: bytes) -> np.ndarray:
     """BMP bytes → HxW (if palette is grayscale) or HxWx3 uint8 RGB.
 
@@ -455,7 +430,7 @@ def encode_tiff(
     return TIFF_MAGIC_LE + struct.pack("<I", ifd_off) + ifd + extra + data
 
 
-@_codec_errors
+@codec_errors
 def decode_tiff(data: bytes) -> np.ndarray:
     """Uncompressed TIFF → HxW or HxWx3 uint8."""
     if data[:4] == TIFF_MAGIC_LE:
@@ -673,7 +648,7 @@ def encode_gif(img: np.ndarray, interlace: bool = False) -> bytes:
     return bytes(out)
 
 
-@_codec_errors
+@codec_errors
 def decode_gif(data: bytes) -> np.ndarray:
     """GIF87a/89a first frame → HxW (grayscale palette) or HxWx3 uint8.
     Handles global/local color tables, interlacing, and extension
@@ -769,7 +744,7 @@ def encode_gif_animation(frames: list[np.ndarray], delay_cs: int = 10) -> bytes:
     return bytes(out)
 
 
-@_codec_errors
+@codec_errors
 def decode_gif_frames(data: bytes) -> list[np.ndarray]:
     """All frames of a GIF87a/89a animation, composited onto the
     logical screen (left/top sub-rects drawn in place, GCE transparent
@@ -1357,7 +1332,7 @@ def _progressive_scan(br, scan_comps, scan, huff_dc, huff_ac,
                 unit += 1
 
 
-@_codec_errors
+@codec_errors
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Baseline (SOF0) or progressive (SOF2) JPEG → HxW (grayscale) or
     HxWx3 uint8 RGB."""

@@ -481,11 +481,10 @@ def unclip_poly(poly: np.ndarray, ratio: float) -> np.ndarray:
     try:
         T = np.linalg.solve(a, b).tolist()
     except np.linalg.LinAlgError:
-        # collinear consecutive edges (parallel offset lines, e.g. at a
-        # DP anchor vertex): solve vertex by vertex, and offset such a
-        # vertex along its own edge's line rather than leaving it
-        # un-offset — the original point would dent the expanded
-        # polygon inward
+        # collinear consecutive edges (parallel offset lines): solve
+        # vertex by vertex, and offset such a vertex along its own
+        # edge's line rather than leaving it un-offset — the original
+        # point would dent the expanded polygon inward
         T = []
         for i in range(n_pts):
             try:
@@ -504,153 +503,6 @@ def unclip_quad(quad: np.ndarray, ratio: float) -> np.ndarray:
     """Quad specialization of :func:`unclip_poly` (identical math for
     N=4; kept as the quad path's named entry point)."""
     return unclip_poly(quad, ratio)
-
-
-# ----------------------------------------------- polygon (poly-mode) ops
-# clockwise neighbor order in image coords (y down): E,SE,S,SW,W,NW,N,NE
-_MOORE = [(1, 0), (1, 1), (0, 1), (-1, 1), (-1, 0), (-1, -1), (0, -1), (1, -1)]
-
-
-def region_boundaries(
-    mask: np.ndarray,
-    max_regions: int = 1000,
-    regions: list[np.ndarray] | None = None,
-) -> list[np.ndarray]:
-    """Outer boundary polyline per 8-connected region, document order,
-    capped at ``max_regions`` — the findContours(RETR_LIST,
-    CHAIN_APPROX_SIMPLE) analogue for the poly path
-    (``/root/reference/ocr/postprocess.py:81-82``). Moore-neighbor
-    tracing, clockwise, from each region's topmost-then-leftmost pixel;
-    termination by repeated (pixel, entry-direction) state. Returns
-    (N,2) int64 arrays of (x, y) boundary pixels.
-
-    Pass ``regions`` (the output of ``connected_components`` on the
-    same mask) to skip the internal labeling pass — output index i is
-    then the boundary of ``regions[i]`` by construction."""
-    h, w = mask.shape
-    if regions is None:
-        regions = connected_components(mask, max_regions=max_regions)
-    starts: list[tuple[int, int]] = []
-    for pts in regions:
-        # connected_components emits run endpoints in scan order; the
-        # first point is the region's topmost-leftmost pixel
-        starts.append((int(pts[0, 0]), int(pts[0, 1])))
-
-    out: list[np.ndarray] = []
-    for sx, sy in starts:
-        boundary = [(sx, sy)]
-        cur = (sx, sy)
-        back = 4  # came from the west: scan found this pixel left-to-right
-        state0 = (cur, back)
-        visited_states = {state0}
-        while True:
-            nxt = None
-            for k in range(1, 9):
-                nd = (back + k) % 8
-                nx, ny = cur[0] + _MOORE[nd][0], cur[1] + _MOORE[nd][1]
-                if 0 <= nx < w and 0 <= ny < h and mask[ny, nx]:
-                    nxt = (nx, ny)
-                    back = (nd + 4) % 8
-                    break
-            if nxt is None:  # isolated pixel
-                break
-            state = (nxt, back)
-            if state in visited_states:
-                break
-            visited_states.add(state)
-            cur = nxt
-            boundary.append(cur)
-        out.append(np.array(boundary, dtype=np.int64))
-    return out
-
-
-def poly_perimeter(poly: np.ndarray, closed: bool = True) -> float:
-    """Closed arc length (``cv2.arcLength`` analogue)."""
-    p = poly.astype(np.float64)
-    d = np.diff(p, axis=0)
-    total = float(np.hypot(d[:, 0], d[:, 1]).sum())
-    if closed and len(p) > 1:
-        total += float(np.hypot(*(p[0] - p[-1])))
-    return total
-
-
-def _dp_open(pts: np.ndarray, eps: float) -> np.ndarray:
-    """Douglas-Peucker on an open chain, endpoints always kept.
-    Iterative (explicit range stack): recursion depth is O(n) on
-    adversarial chains (spiral/staircase region boundaries) and would
-    raise RecursionError past ~1000 points."""
-    n_pts = len(pts)
-    if n_pts <= 2:
-        return pts
-    keep = np.zeros(n_pts, dtype=bool)
-    keep[0] = keep[-1] = True
-    stack = [(0, n_pts - 1)]
-    while stack:
-        i, j = stack.pop()
-        if j - i < 2:
-            continue
-        a, b = pts[i], pts[j]
-        seg = pts[i + 1 : j]
-        ab = b - a
-        norm = np.hypot(ab[0], ab[1])
-        if norm == 0:
-            d = np.hypot(seg[:, 0] - a[0], seg[:, 1] - a[1])
-        else:
-            d = np.abs(ab[0] * (seg[:, 1] - a[1]) - ab[1] * (seg[:, 0] - a[0])) / norm
-        k = int(d.argmax()) + i + 1
-        if d[k - i - 1] > eps:
-            keep[k] = True
-            stack.append((i, k))
-            stack.append((k, j))
-    return pts[keep]
-
-
-def approx_poly_dp(poly: np.ndarray, eps: float) -> np.ndarray:
-    """Closed-curve polygon approximation (``cv2.approxPolyDP``
-    analogue, ``/root/reference/ocr/postprocess.py:85-86``): anchor at
-    vertex 0 and the vertex farthest from it, Douglas-Peucker each
-    half, rejoin. Deterministic; not bit-identical to cv2's internal
-    split choice — goldens are pinned to this substitute."""
-    p = poly.astype(np.float64)
-    if len(p) < 3:
-        return p
-    d0 = np.hypot(p[:, 0] - p[0, 0], p[:, 1] - p[0, 1])
-    k = int(d0.argmax())
-    if k == 0:
-        return p[:1]
-    first = _dp_open(p[: k + 1], eps)
-    second = _dp_open(np.concatenate([p[k:], p[:1]]), eps)
-    return np.concatenate([first[:-1], second[:-1]])
-
-
-def poly_mask_mean(prob: np.ndarray, poly: np.ndarray) -> float:
-    """Mean of prob inside an arbitrary simple polygon, evaluated over
-    its clipped bbox — ``box_score_fast`` generalized beyond quads for
-    the poly path (``/root/reference/ocr/postprocess.py:101``).
-    Crossing-number (even-odd) rasterization."""
-    h, w = prob.shape
-    xmin = int(np.clip(np.floor(poly[:, 0].min()), 0, w - 1))
-    xmax = int(np.clip(np.ceil(poly[:, 0].max()), 0, w - 1))
-    ymin = int(np.clip(np.floor(poly[:, 1].min()), 0, h - 1))
-    ymax = int(np.clip(np.ceil(poly[:, 1].max()), 0, h - 1))
-    hh, ww = ymax - ymin + 1, xmax - xmin + 1
-    xs, ys = np.meshgrid(
-        np.arange(xmin, xmin + ww, dtype=np.float64),
-        np.arange(ymin, ymin + hh, dtype=np.float64),
-    )
-    inside = np.zeros((hh, ww), dtype=bool)
-    q = poly.astype(np.float64)
-    n_pts = len(q)
-    for i in range(n_pts):
-        p1, p2 = q[i], q[(i + 1) % n_pts]
-        if p1[1] == p2[1]:
-            continue
-        cond = (p1[1] > ys) != (p2[1] > ys)
-        xi = (p2[0] - p1[0]) * (ys - p1[1]) / (p2[1] - p1[1]) + p1[0]
-        inside ^= cond & (xs < xi)
-    if not inside.any():
-        return 0.0
-    return float(prob[ymin : ymax + 1, xmin : xmax + 1][inside].mean())
 
 
 # --------------------------------------------------------- clip / order

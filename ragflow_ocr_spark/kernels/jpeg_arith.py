@@ -24,8 +24,8 @@ then X/M magnitude areas from bin 20); AC uses 256 bins per table
 conditioning bound, M areas 14 past the X position). Conditioning
 bounds (DC L/U, AC Kx) come from the DAC marker; defaults 0/1/5.
 
-Error contract: ValueError on malformed input (via imgcodecs'
-_codec_errors wrapper at the decode_jpeg boundary).
+Error contract: ValueError on malformed input (via the
+``pngcodec.codec_errors`` wrapper at the decode_jpeg boundary).
 
 Reference behavior: /root/reference/ocr/operators.py:41-46 accepts
 any payload cv2/libjpeg understands, which includes SOF9;

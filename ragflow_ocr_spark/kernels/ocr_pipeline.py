@@ -41,7 +41,7 @@ from ragflow_ocr_spark.kernels.db_postprocess import (
     filter_tag_det_res,
 )
 from ragflow_ocr_spark.kernels.det_preprocess import det_preprocess
-from ragflow_ocr_spark.kernels.imgeom import min_area_rect, resize_bilinear
+from ragflow_ocr_spark.kernels.imgeom import resize_bilinear
 from ragflow_ocr_spark.kernels.infer import get_det_net, get_rec_net, run_with_retry
 from ragflow_ocr_spark.kernels.reading_order import sorted_boxes
 from ragflow_ocr_spark.kernels.stubnet import REC_CHARSET
@@ -59,22 +59,11 @@ class OcrResult:
 def detect(img: np.ndarray, cfg: OCRConfig) -> np.ndarray:
     """Gray or RGB uint8 → reading-ordered quads (N,4,2) in source
     coords. Kernel equivalent of ``OCR.detect``
-    (``/root/reference/ocr/ocr.py:490-509``).
-
-    ``det_box_type='poly'`` routes through the poly postprocess and
-    reduces each polygon to its min-area rect for the downstream quad
-    contract (the reference's crop path is quad-only too — its poly
-    mode would crash in ``get_rotate_crop_image``; reducing instead of
-    crashing is our documented deviation). Invalid values raise."""
+    (``ocr/ocr.py:490-509``)."""
     src_h, src_w = img.shape[:2]
     nchw, _ = det_preprocess(img, cfg.det_limit_side_len)
     prob = run_with_retry(get_det_net(cfg.det_model), nchw)[0, 0]
     boxes, _scores = db_postprocess(prob, src_h, src_w, cfg)
-    if cfg.det_box_type == "poly":
-        quads = [min_area_rect(p)[0] for p in boxes]
-        boxes = (
-            np.stack(quads) if quads else np.zeros((0, 4, 2), dtype=np.float64)
-        )
     boxes = filter_tag_det_res(boxes, src_h, src_w)
     if boxes.shape[0] == 0:
         return boxes

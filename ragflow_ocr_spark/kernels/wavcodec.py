@@ -9,25 +9,15 @@ ValueError on malformed input, never any other exception.
 
 from __future__ import annotations
 
-import functools
 import struct
 
 import numpy as np
 
+from ragflow_ocr_spark.kernels.pngcodec import codec_errors
+
 WAV_MAGIC = b"RIFF"
 # untrusted-payload ceiling (~128 MB of samples ≈ 70 min mono @16 kHz)
 MAX_DECODE_SAMPLES = 1 << 26
-
-
-def _codec_errors(fn):
-    @functools.wraps(fn)
-    def inner(data: bytes):
-        try:
-            return fn(data)
-        except (struct.error, IndexError, KeyError, OverflowError) as e:
-            raise ValueError(f"malformed input: {e!r}") from e
-
-    return inner
 
 
 def encode_wav(pcm: np.ndarray, sample_rate: int = 16000) -> bytes:
@@ -39,7 +29,7 @@ def encode_wav(pcm: np.ndarray, sample_rate: int = 16000) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
-@_codec_errors
+@codec_errors
 def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     """WAV bytes → (int16 samples shaped (n,) mono or (n, ch), rate).
 

@@ -20,10 +20,11 @@ libwebp's vp8l_dec.c. All bit packing is LSB-first.
 
 from __future__ import annotations
 
-import functools
 import struct
 
 import numpy as np
+
+from ragflow_ocr_spark.kernels.pngcodec import codec_errors
 
 MAX_DECODE_PIXELS = 1 << 26  # same untrusted-payload ceiling as the others
 # VP8L-specific ceiling, still tighter than the global one: the entropy
@@ -37,29 +38,6 @@ MAX_DECODE_PIXELS = 1 << 26  # same untrusted-payload ceiling as the others
 # windows), so the ceiling is compute-, not memory-, bound.
 VP8L_MAX_PIXELS = 1 << 24
 
-
-def _codec_errors(fn):
-    """Same decoder boundary guard as kernels/imgcodecs: crafted input
-    can surface struct/index/key errors from the tokenizer paths —
-    normalize to the contractual ValueError (per-row error upstream,
-    never a task failure). NotImplementedError (remaining unbundled-
-    codec seams) passes through for callers that distinguish it."""
-
-    @functools.wraps(fn)
-    def inner(data: bytes) -> np.ndarray:
-        try:
-            return fn(data)
-        except (
-            struct.error,
-            IndexError,
-            KeyError,
-            ZeroDivisionError,
-            OverflowError,
-            RecursionError,
-        ) as e:
-            raise ValueError(f"malformed WebP: {e!r}") from e
-
-    return inner
 
 # code-length-code symbol order (spec section 6.2.2)
 _CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
@@ -644,7 +622,7 @@ def _read_subimage(br: _Bits, w: int, h: int) -> np.ndarray:
     return _decode_pixels(br, w, h, False)
 
 
-@_codec_errors
+@codec_errors
 def decode_vp8l(data: bytes) -> np.ndarray:
     """Raw VP8L payload (inside the RIFF chunk) → HxW gray / HxWx3 RGB
     (alpha dropped, cv2.IMREAD_COLOR-style)."""
@@ -852,7 +830,7 @@ def _riff_chunks(data: bytes, pos: int, end: int):
         pos += 8 + size + (size & 1)
 
 
-@_codec_errors
+@codec_errors
 def decode_webp(data: bytes) -> np.ndarray:
     """RIFF/WEBP container → image. VP8L (lossless) and VP8 (lossy,
     intra-frame) both decode for real (kernels/vp8.py); an ANIMATED
@@ -875,7 +853,7 @@ def decode_webp(data: bytes) -> np.ndarray:
 _VP8X_ANIM_FLAG = 0x02
 
 
-@_codec_errors
+@codec_errors
 def decode_webp_frames(data: bytes) -> list[np.ndarray]:
     """Animated RIFF/WEBP (VP8X + ANIM + ANMF chunks) → list of fully
     COMPOSITED canvas frames, HxW gray / HxWx3 RGB per the module's

@@ -11,6 +11,7 @@ from ragflow_ocr_spark.config import OCRConfig
 from ragflow_ocr_spark.kernels import font5x7, pngcodec
 from ragflow_ocr_spark.kernels.crop import get_rotate_crop_image, rotation_probe
 from ragflow_ocr_spark.kernels.ctc import ctc_greedy_decode
+from ragflow_ocr_spark.kernels.db_postprocess import db_postprocess
 from ragflow_ocr_spark.kernels.det_preprocess import resize_for_det
 from ragflow_ocr_spark.kernels.ocr_pipeline import extract_payload, ocr_image
 from ragflow_ocr_spark.kernels.reading_order import sorted_boxes
@@ -208,6 +209,27 @@ def test_resize_for_det_tiny_image_padded():
     img = np.zeros((10, 20), dtype=np.uint8)
     out, _ = resize_for_det(img, 960)
     assert min(out.shape[:2]) >= 32
+
+
+# ------------------------------------------------------- DB postprocess
+def test_db_postprocess_thresholds_and_rescale():
+    # 3×3 blob: its unclipped min-rect side is below min_size + 2
+    prob = np.zeros((32, 32))
+    prob[4:7, 4:7] = 0.9
+    boxes, scores = db_postprocess(prob, 32, 32)
+    assert boxes.shape == (0, 4, 2) and scores == []
+    # 30×30 blob above det_db_thresh (0.3) but below det_db_box_thresh
+    prob = np.zeros((64, 64))
+    prob[10:40, 10:40] = 0.35
+    boxes, scores = db_postprocess(prob, 64, 64)
+    assert boxes.shape == (0, 4, 2) and scores == []
+    # full-map blob, 10× upscale: the unclipped box is rescaled to
+    # source pixels and clipped to [0, dest], hi is dest, not dest − 1
+    # (postprocess.py:154-158)
+    boxes, scores = db_postprocess(np.full((32, 32), 0.95), 320, 320)
+    assert boxes.shape == (1, 4, 2)
+    assert scores == [pytest.approx(0.95)]
+    assert boxes.max() == 320 and boxes.min() == 0
 
 
 # ----------------------------------------------------------- end-to-end

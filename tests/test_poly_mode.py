@@ -1,76 +1,13 @@
-"""Poly-mode DB postprocess (E14) and Arabic segment reverse (E19) —
-the two operators SURVEY.md §2 marked optional-for-later; these pin
-their semantics against constructive geometry / the reference's
-documented behavior (`postprocess.py:69-114`, `:292-306`)."""
+"""N-gon unclip (``imgeom.unclip_poly``), the miter-join substitute for
+the reference's pyclipper offset (``postprocess.py:163-169``) that the
+quad path's ``unclip_quad`` runs on. The reference's poly-box mode and
+Arabic segment reverse are not mirrored: its OCR never selects them."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
-from ragflow_ocr_spark.kernels.ctc import pred_reverse
-from ragflow_ocr_spark.kernels.db_postprocess import (
-    boxes_from_prob_map,
-    polygons_from_prob_map,
-)
-from ragflow_ocr_spark.kernels.imgeom import (
-    approx_poly_dp,
-    poly_mask_mean,
-    poly_perimeter,
-    quad_mask_mean,
-    region_boundaries,
-    unclip_poly,
-    unclip_quad,
-)
-
-
-# ----------------------------------------------------------- geometry
-def test_region_boundary_of_rectangle():
-    mask = np.zeros((20, 30), dtype=bool)
-    mask[5:15, 8:24] = True
-    (b,) = region_boundaries(mask)
-    # boundary stays on border pixels of the rect
-    assert b[:, 0].min() == 8 and b[:, 0].max() == 23
-    assert b[:, 1].min() == 5 and b[:, 1].max() == 14
-    # starts at topmost-leftmost pixel
-    assert tuple(b[0]) == (8, 5)
-    # closed tour length ≈ perimeter of a 16×10 pixel rect
-    assert abs(poly_perimeter(b) - (2 * (15 + 9))) < 3
-
-
-def test_region_boundaries_document_order_and_cap():
-    mask = np.zeros((10, 10), dtype=bool)
-    mask[1:3, 1:3] = True
-    mask[6:9, 5:9] = True
-    bs = region_boundaries(mask)
-    assert len(bs) == 2
-    assert bs[0][:, 1].max() < bs[1][:, 1].min()  # top region first
-    assert len(region_boundaries(mask, max_regions=1)) == 1
-
-
-def test_approx_poly_dp_recovers_rectangle_corners():
-    # dense rectangle outline → 4 corners after DP
-    xs = np.arange(0, 21)
-    top = np.stack([xs, np.zeros_like(xs)], axis=1)
-    right = np.stack([np.full(11, 20), np.arange(0, 11)], axis=1)
-    bot = np.stack([xs[::-1], np.full_like(xs, 10)], axis=1)
-    left = np.stack([np.zeros(11), np.arange(10, -1, -1)], axis=1)
-    poly = np.concatenate([top, right[1:], bot[1:], left[1:-1]]).astype(float)
-    approx = approx_poly_dp(poly, eps=1.0)
-    assert approx.shape[0] == 4
-    assert {tuple(p) for p in approx} == {(0, 0), (20, 0), (20, 10), (0, 10)}
-
-
-def test_poly_mask_mean_matches_quad_mask_mean_on_quads():
-    # constant map: both fill rules must report the constant exactly
-    prob = np.full((40, 60), 0.7)
-    quad = np.array([[10, 8], [45, 8], [45, 30], [10, 30]], dtype=np.float64)
-    assert poly_mask_mean(prob, quad) == pytest.approx(0.7)
-    assert quad_mask_mean(prob, quad) == pytest.approx(0.7)
-    # random map: the two rasterizations differ only on boundary pixels
-    rng = np.random.default_rng(7)
-    prob = rng.random((40, 60))
-    assert abs(poly_mask_mean(prob, quad) - quad_mask_mean(prob, quad)) < 0.02
+from ragflow_ocr_spark.kernels.imgeom import unclip_poly, unclip_quad
 
 
 def test_unclip_poly_on_quad_equals_unclip_quad():
@@ -86,168 +23,3 @@ def test_unclip_poly_hexagon_grows_outward():
     r0 = np.hypot(*(hexa - c).T)
     r1 = np.hypot(*(grown - c).T)
     assert (r1 > r0).all()
-
-
-# ------------------------------------------------------- poly postprocess
-def _l_shape_prob(h: int = 64, w: int = 96) -> np.ndarray:
-    prob = np.zeros((h, w))
-    prob[10:50, 10:30] = 0.9   # vertical bar
-    prob[38:50, 10:80] = 0.9   # horizontal bar → L shape
-    return prob
-
-
-def test_polygons_capture_concavity_where_quads_cannot():
-    prob = _l_shape_prob()
-    polys, scores = polygons_from_prob_map(prob, 64, 96)
-    assert len(polys) == 1
-    assert scores[0] >= 0.5
-    # the L needs ≥ 6 vertices; a quad min-rect can't represent it
-    assert polys[0].shape[0] >= 6
-    quads, _ = boxes_from_prob_map(prob, 64, 96)
-    assert quads.shape[1:] == (4, 2)
-
-
-def test_polygons_respect_thresholds_and_scale():
-    prob = np.zeros((32, 32))
-    prob[4:7, 4:7] = 0.9  # tiny blob: unclipped min-rect side < min_size+2
-    polys, _ = polygons_from_prob_map(prob, 32, 32)
-    assert polys == []
-    # low-score blob dropped by box_thresh
-    prob2 = np.zeros((64, 64))
-    prob2[10:40, 10:40] = 0.35
-    polys2, _ = polygons_from_prob_map(prob2, 64, 64)
-    assert polys2 == []
-
-
-def test_polygons_rescale_to_source_and_clip_to_dest():
-    prob = np.zeros((32, 32))
-    prob[2:30, 2:30] = 0.95
-    polys, _ = polygons_from_prob_map(prob, 320, 320)  # 10× upscale
-    assert len(polys) == 1
-    box = polys[0]
-    # clip hi is dest, not dest-1 (quirk preserved from the quad path)
-    assert box[:, 0].max() <= 320 and box[:, 1].max() <= 320
-    assert box[:, 0].min() >= 0 and box[:, 1].min() >= 0
-    assert box[:, 0].max() > 250  # actually rescaled, not net coords
-
-
-def test_db_postprocess_box_type_dispatch():
-    from ragflow_ocr_spark.config import OCRConfig
-    from ragflow_ocr_spark.kernels.db_postprocess import db_postprocess
-
-    prob = _l_shape_prob()
-    quads, _ = db_postprocess(prob, 64, 96, OCRConfig(det_box_type="quad"))
-    assert quads.shape[1:] == (4, 2)
-    polys, _ = db_postprocess(prob, 64, 96, OCRConfig(det_box_type="poly"))
-    assert polys[0].shape[0] >= 6
-    with pytest.raises(ValueError):
-        db_postprocess(prob, 64, 96, OCRConfig(det_box_type="oval"))
-
-
-def test_score_mode_slow_scores_contour_not_minrect():
-    """On an L-shaped region the min-rect quad covers a low-probability
-    rectangle corner (score diluted); the slow mode scores only inside
-    the contour, so it reports the blob's true probability."""
-    from ragflow_ocr_spark.config import OCRConfig
-
-    prob = _l_shape_prob()
-    _, fast_scores = boxes_from_prob_map(
-        prob, 64, 96, OCRConfig(det_score_mode="fast", det_db_box_thresh=0.1)
-    )
-    _, slow_scores = boxes_from_prob_map(
-        prob, 64, 96, OCRConfig(det_score_mode="slow", det_db_box_thresh=0.1)
-    )
-    assert len(fast_scores) == len(slow_scores) == 1
-    assert slow_scores[0] > fast_scores[0]
-    assert slow_scores[0] == pytest.approx(0.9, abs=0.02)
-
-
-def test_score_mode_equal_on_solid_rectangle():
-    prob = np.zeros((40, 60))
-    prob[10:30, 10:50] = 0.8
-    from ragflow_ocr_spark.config import OCRConfig
-
-    _, fast = boxes_from_prob_map(prob, 40, 60, OCRConfig(det_score_mode="fast"))
-    _, slow = boxes_from_prob_map(prob, 40, 60, OCRConfig(det_score_mode="slow"))
-    assert len(fast) == len(slow) == 1
-    assert abs(fast[0] - slow[0]) < 0.05
-
-
-def test_detect_honors_box_type_config():
-    """det_box_type must reach the pipeline: poly mode routes through
-    the poly postprocess (min-rect-reduced for the quad crop
-    contract), and an invalid value raises instead of silently
-    producing quads."""
-    from ragflow_ocr_spark.config import OCRConfig
-    from ragflow_ocr_spark.kernels import font5x7
-    from ragflow_ocr_spark.kernels.ocr_pipeline import detect, ocr_image
-
-    img, drawn = font5x7.render_page(["BOX TYPE WIRE CHECK"], 480, 96, 2)
-    quads = detect(img, OCRConfig(det_box_type="quad"))
-    polys = detect(img, OCRConfig(det_box_type="poly"))
-    assert quads.shape[0] > 0 and polys.shape[1:] == (4, 2)
-    with pytest.raises(ValueError):
-        detect(img, OCRConfig(det_box_type="oval"))
-    # poly mode survives the full pipeline (crop contract holds)
-    r = ocr_image(img, OCRConfig(det_box_type="poly"))
-    assert r.status == "ok" and r.text == "\n".join(drawn)
-
-
-def test_dp_open_survives_deep_chains():
-    """Iterative Douglas-Peucker: a 20k-point staircase would blow the
-    recursion limit in the recursive formulation."""
-    n = 20000
-    stair = np.zeros((n, 2))
-    stair[:, 0] = np.arange(n) // 2
-    stair[:, 1] = (np.arange(n) + 1) // 2
-    # eps below the stair-corner deviation (≈0.707): every split
-    # recurses to depth O(n) — the case that blew the recursive
-    # version's stack. Completing (keeping every point) is the pass.
-    out = approx_poly_dp(stair, eps=0.3)
-    assert len(out) == n
-    # above the corner deviation the whole chain collapses to anchors
-    assert len(approx_poly_dp(stair, eps=0.8)) <= 4
-
-
-def test_polygons_deterministic():
-    prob = _l_shape_prob()
-    a, sa = polygons_from_prob_map(prob, 64, 96)
-    b, sb = polygons_from_prob_map(prob, 64, 96)
-    np.testing.assert_array_equal(a[0], b[0])
-    assert sa == sb
-
-
-# ---------------------------------------------------------- pred_reverse
-@pytest.mark.parametrize(
-    "inp,expected",
-    [
-        # pure LTR run: single segment, reversal is identity
-        ("abc 12.5%", "abc 12.5%"),
-        # RTL chars are singleton segments; LTR runs stay intact
-        ("abcسلdef", "defلسabc"),
-        # leading/trailing RTL
-        ("سabc", "abcس"),
-        ("abcس", "سabc"),
-        ("", ""),
-        # every char its own segment → full reversal
-        ("سلم", "ملس"),
-    ],
-)
-def test_pred_reverse(inp, expected):
-    assert pred_reverse(inp) == expected
-
-
-def test_ctc_decode_reverse_flag():
-    from ragflow_ocr_spark.kernels.ctc import ctc_greedy_decode
-
-    charset = ["a", "س", "b"]
-    # timesteps: a, س, b → "aسb"; reversed segments: b س a
-    logits = np.full((1, 3, 4), -10.0)
-    logits[0, 0, 1] = 10.0
-    logits[0, 1, 2] = 10.0
-    logits[0, 2, 3] = 10.0
-    (plain,) = ctc_greedy_decode(logits, charset)
-    (rev,) = ctc_greedy_decode(logits, charset, reverse=True)
-    assert plain[0] == "aسb"
-    assert rev[0] == "bسa"
-    assert plain[1] == rev[1]

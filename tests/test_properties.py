@@ -99,18 +99,23 @@ def test_extract_payload_fuzzed_codec_routes_never_raise(magic, tail):
 @given(st.binary(max_size=512))
 @settings(max_examples=100, deadline=None)
 def test_codec_decoders_raise_value_error_only(tail):
-    from ragflow_ocr_spark.kernels import imgcodecs
+    from ragflow_ocr_spark.kernels import imgcodecs, wavcodec, webp
 
     for magic, dec in [
         (b"BM\x00\x00\x00\x00\x00\x00\x00\x00", imgcodecs.decode_bmp),
         (b"II*\x00", imgcodecs.decode_tiff),
         (b"\xff\xd8\xff\xe0", imgcodecs.decode_jpeg),
+        (b"RIFF\x10\x00\x00\x00WAVEfmt ", wavcodec.decode_wav),
+        (b"RIFF\x10\x00\x00\x00WEBPVP8L", webp.decode_webp),
     ]:
         try:
             out = dec(magic + tail)
-            assert out.dtype == np.uint8
         except ValueError:
-            pass  # the only contractually-allowed exception type
+            continue  # the only contractually-allowed exception type
+        if dec is wavcodec.decode_wav:
+            assert out[0].dtype == np.int16
+        else:
+            assert out.dtype == np.uint8
 
 
 @given(

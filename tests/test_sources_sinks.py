@@ -9,10 +9,6 @@ import numpy as np
 import pytest
 
 from ragflow_ocr_spark.kernels import font5x7, pngcodec
-from ragflow_ocr_spark.kernels.det_preprocess import (
-    resize_for_det_type1,
-    resize_for_det_type2,
-)
 from ragflow_ocr_spark.spark.pipeline import extract
 from ragflow_ocr_spark.spark.sinks import draw_boxes, write_json, write_text
 from ragflow_ocr_spark.spark.sources import read_image_dir
@@ -71,26 +67,3 @@ def test_draw_boxes_overlay():
     out = draw_boxes(img, [[[10, 10], [60, 10], [60, 30], [10, 30]]], val=0)
     assert out[10, 10] == 0 and out[10, 35] == 0 and out[20, 10] == 0
     assert img[10, 10] == 255  # original untouched
-
-
-def test_det_resize_type1_fixed_shape():
-    img = np.zeros((100, 200), dtype=np.uint8)
-    out, (sh, sw, rh, rw) = resize_for_det_type1(img, (64, 96))
-    assert out.shape == (64, 96)
-    assert (sh, sw) == (100, 200)
-
-
-def test_det_resize_type1_keep_ratio():
-    img = np.zeros((100, 200), dtype=np.uint8)
-    out, _ = resize_for_det_type1(img, (64, 0), keep_ratio=True)
-    assert out.shape[0] == 64
-    assert out.shape[1] % 32 == 0
-
-
-def test_det_resize_type2_long_side_mult128():
-    img = np.zeros((300, 600), dtype=np.uint8)
-    out, _ = resize_for_det_type2(img, 960)
-    # reference rounds each side to the nearest ×128 after the
-    # long-side scale — the long side lands NEAR resize_long, not on it
-    assert out.shape[0] % 128 == 0 and out.shape[1] % 128 == 0
-    assert abs(max(out.shape) - 960) <= 64
