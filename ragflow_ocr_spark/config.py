@@ -64,11 +64,13 @@ class HtmlConfig:
 class PipelineConfig:
     ocr: OCRConfig = field(default_factory=OCRConfig)
     html: HtmlConfig = field(default_factory=HtmlConfig)
-    # scale plumbing (SURVEY.md §4): payloads above this are
+    # scale plumbing (SURVEY.md §4): when an input has too few
+    # partitions to fill the cores, payloads above this are
     # range-spread one-per-partition and scheduled first
-    # (spread_for_extract). 16 KB ≈ 4× the corpus median page: catches
-    # the ~100× skew rows while leaving ordinary pages on the cheap
-    # hash path. Tune per corpus at deploy time.
+    # (spread_for_extract; a wider scan is extracted where it is
+    # read). 16 KB ≈ 4× the corpus median page: catches the ~100× skew
+    # rows while leaving ordinary pages on the cheap hash path. Tune
+    # per corpus at deploy time.
     salt_heavy_bytes: int = 1 << 14
 
 

@@ -126,6 +126,38 @@ def _unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
     return out
 
 
+def codec_errors(fn):
+    """Decoder boundary guard for the ValueError contract of
+    :func:`decode_image`: crafted or truncated input can hit
+    ``struct.unpack``, indexing or a table lookup before a length check
+    does, so those exceptions become ValueError (a per-row error
+    status upstream; anything else would fail the Spark task). Found by
+    the codec fuzzers in tests/test_properties.py. NotImplementedError
+    (an unbundled codec seam) passes through for callers that tell it
+    apart."""
+
+    @functools.wraps(fn)
+    def inner(data: bytes):
+        try:
+            return fn(data)
+        except (
+            struct.error,
+            IndexError,
+            KeyError,
+            ZeroDivisionError,
+            OverflowError,
+            RecursionError,
+        ) as e:
+            # KeyError: an undefined table or component id;
+            # ZeroDivisionError: a zero sampling factor; OverflowError:
+            # coefficients past int32; RecursionError: deep tokenizer
+            # nesting (WebP)
+            raise ValueError(f"malformed input: {e!r}") from e
+
+    return inner
+
+
+@codec_errors
 def decode_png(data: bytes) -> np.ndarray:
     """PNG bytes → uint8 ndarray, HW for gray or HWC for RGB.
 
@@ -327,37 +359,6 @@ def sniff_payload(data: bytes | None) -> str:
     if data.startswith(b"ID3"):
         return "mp3"
     return "html"
-
-
-def codec_errors(fn):
-    """Decoder boundary guard for the ValueError contract of
-    :func:`decode_image`: crafted or truncated input can hit
-    ``struct.unpack``, indexing or a table lookup before a length check
-    does, so those exceptions become ValueError (a per-row error
-    status upstream; anything else would fail the Spark task). Found by
-    the codec fuzzers in tests/test_properties.py. NotImplementedError
-    (an unbundled codec seam) passes through for callers that tell it
-    apart."""
-
-    @functools.wraps(fn)
-    def inner(data: bytes):
-        try:
-            return fn(data)
-        except (
-            struct.error,
-            IndexError,
-            KeyError,
-            ZeroDivisionError,
-            OverflowError,
-            RecursionError,
-        ) as e:
-            # KeyError: an undefined table or component id;
-            # ZeroDivisionError: a zero sampling factor; OverflowError:
-            # coefficients past int32; RecursionError: deep tokenizer
-            # nesting (WebP)
-            raise ValueError(f"malformed input: {e!r}") from e
-
-    return inner
 
 
 RASTER_KINDS = ("png", "jpeg", "gif", "bmp", "tiff", "webp", "jp2", "heic", "avif")

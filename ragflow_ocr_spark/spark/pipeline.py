@@ -1,18 +1,23 @@
 """End-to-end extraction pipeline (the flagship job — P1 in SURVEY.md
 §2.9, Spark lifecycle in §3.1).
 
-    pages ──(bucket IN pending group)──> size-aware spread ──>
-    mapInPandas(extract) ──> observed per-bucket status counts ──>
-    extracted/bucket=<b> ──> checkpoint rows (driver, pyarrow)
+    pages ──> size-aware spread (only if the scan cannot fill the
+    cores) ──(bucket IN pending group)──> mapInPandas(extract) ──>
+    observed per-bucket status counts ──> extracted/bucket=<b> ──>
+    checkpoint rows (driver, pyarrow)
 
 Scale design (SURVEY.md §4):
 - **Size-aware skew spread**: per-document cost is unknown pre-detect
-  but correlates with payload bytes. Heavy rows
-  (``length(html) > salt_heavy_bytes``) are range-spread to ~one per
-  partition and their partitions scheduled FIRST, while light rows use
-  plain hash(url) — AQE cannot rebalance inside a mapInPandas stage,
-  so this is manual (a 100× skew row otherwise pins one executor at
-  the end of the stage).
+  but correlates with payload bytes. A scan with at least as many
+  partitions as cores is extracted where it is read: Spark already
+  sizes its file splits by bytes (``maxPartitionBytes``), and an
+  exchange would move every payload byte to balance a handful of
+  rows. An input too narrow to fill the cores (one file, a coalesced
+  frame) is spread: heavy rows (``length(html) > salt_heavy_bytes``)
+  are range-spread to ~one per partition and their partitions
+  scheduled FIRST, while light rows use plain hash(url) — AQE cannot
+  rebalance inside a mapInPandas stage, so this is manual (a 100×
+  skew row otherwise pins one executor at the end of the stage).
 - **Projection discipline**: the extract output never carries `html`,
   so every downstream projection prunes payload bytes at the stage
   boundary.
@@ -37,26 +42,36 @@ from ragflow_ocr_spark.spark.stages import EXTRACT_SCHEMA, extract_stage
 def spread_for_extract(
     df: DataFrame, n_partitions: int, cfg: PipelineConfig = DEFAULT
 ) -> DataFrame:
-    """Distribute rows so heavy payloads can't gang up on one task.
+    """Distribute rows so heavy payloads can't gang up on one task —
+    only when ``df`` has fewer than ``n_partitions`` partitions.
 
-    A heavy page is ONE row — it cannot be split, so "skew handling"
-    here means the heavy subset must land ~evenly across partitions by
-    COUNT. Hash repartitioning doesn't guarantee that: when the number
-    of heavy rows is comparable to the number of partitions (the
-    painful regime — each one is ~100× a median row), balls-in-bins
-    puts 2-3 in one partition and zero in others. ``repartitionByRange``
-    over ``xxhash64(url)`` samples the key distribution and emits
-    near-equal-count ranges → at most ~1 heavy row per partition at
-    the tail, at any scale. Light rows: plain hash(url) repartition.
-    Placement never affects output bytes — rows are independent
+    An input that already has ``n_partitions`` or more comes back
+    unchanged: each of its partitions is one extract task, and a file
+    scan's partitions are already cut by bytes (``maxPartitionBytes``),
+    the same proxy the heavy rule uses. An exchange there would move
+    every payload byte of the input to balance a handful of rows.
+
+    The partition count is read from ``df.rdd``, which starts no Spark
+    job on a file scan, a cached frame or a filter over either. On an
+    input whose plan already shuffles it runs that shuffle's map stage;
+    such an input is already distributed, so callers pass
+    ``spread=False`` to :func:`run_extract_job` instead.
+
+    A narrower input is spread. A heavy page is ONE row — it cannot be
+    split, so "skew handling" here means the heavy subset must land
+    ~evenly across partitions by COUNT. Hash repartitioning doesn't
+    guarantee that: when the number of heavy rows is comparable to the
+    number of partitions (the painful regime — each one is ~100× a
+    median row), balls-in-bins puts 2-3 in one partition and zero in
+    others. ``repartitionByRange`` over ``xxhash64(url)`` samples the
+    key distribution and emits near-equal-count ranges → at most ~1
+    heavy row per partition at the tail, at any scale. Light rows:
+    plain hash(url) repartition. The where-split evaluates the source
+    twice. Placement never affects output bytes — rows are independent
     (verified by the repartition-invariance test).
-
-    Cost note: the where-split evaluates the source twice. That is
-    deliberate — see run_extract_job's docstring for why the heavy
-    scan is metadata-cheap on a real crawl table (content_length
-    row-group pruning); caching payload bytes to avoid it would cost
-    far more at 100 TB.
     """
+    if df.rdd.getNumPartitions() >= n_partitions:
+        return df
     cost = F.coalesce(F.length(F.col("html")), F.lit(0))
     heavy = df.where(cost > cfg.salt_heavy_bytes)
     light = df.where(cost <= cfg.salt_heavy_bytes)
@@ -68,14 +83,10 @@ def spread_for_extract(
     return heavy.unionByName(light)
 
 
-def extract(
-    df: DataFrame,
-    cfg: PipelineConfig = DEFAULT,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """pages DataFrame → extracted DataFrame (EXTRACT_SCHEMA)."""
-    if n_partitions:
-        df = spread_for_extract(df, n_partitions, cfg)
+def extract(df: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
+    """pages DataFrame → extracted DataFrame (EXTRACT_SCHEMA), one
+    extract task per input partition. Spread a narrow input first with
+    :func:`spread_for_extract`."""
     return df.select("url", "warc_ts", "lang", "html").mapInPandas(
         extract_stage(cfg), schema=EXTRACT_SCHEMA
     )
@@ -115,14 +126,14 @@ def run_extract_job(
     (at 100 TB the input is an Iceberg table partitioned by
     ``bucket(url, n_buckets)``, so each scan additionally prunes to
     the group's files — see spark/checkpoint.py). With ``spread=True``
-    each group is scanned twice (spread_for_extract's where-split);
-    at Iceberg scale the heavy predicate runs against a stored
-    ``content_length`` column whose row-group stats prune the heavy
-    scan to the handful of files containing heavy rows, so the second
-    scan is metadata-cheap — worth it to keep 100× rows off the stage
-    tail. The group size is
-    the classic durability/throughput knob: lost work on failure ≤ one
-    group, scan overhead ∝ 1/group_size. Within a group, output lands
+    :func:`spread_for_extract` is applied once, to ``pages``, before
+    the groups: a scan that fills ``defaultParallelism`` cores is
+    extracted in the partitions it is read from, and a narrower one is
+    spread (each group's filter is pushed below that spread, so each
+    group then scans its input twice). Pass ``spread=False`` for an
+    input whose plan already shuffles. The group size is the classic
+    durability/throughput knob: lost work on failure ≤ one group, scan
+    overhead ∝ 1/group_size. Within a group, output lands
     via dynamic partition overwrite under ``extracted/bucket=<b>`` —
     rewriting a group is idempotent (MERGE-on-key semantics).
 
@@ -142,7 +153,8 @@ def run_extract_job(
     pending = sorted(set(range(n_buckets)) - done)
     gs = max(1, bucket_group_size)
     groups = [pending[i : i + gs] for i in range(0, len(pending), gs)]
-    n_partitions = spark.sparkContext.defaultParallelism if spread else None
+    if spread:
+        pages = spread_for_extract(pages, spark.sparkContext.defaultParallelism, cfg)
     extracted = f"{out_root}/extracted"
     status = F.col("status")
     counters = {
@@ -166,7 +178,7 @@ def run_extract_job(
             for name, cond in counters.items()
         ]
         (
-            extract(gdf, cfg, n_partitions=n_partitions)
+            extract(gdf, cfg)
             .withColumn("bucket", bucket_of_url)
             .observe(obs, *aggs)
             # only the touched bucket= partitions are replaced on

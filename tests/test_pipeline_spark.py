@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ragflow_ocr_spark.spark import synth
-from ragflow_ocr_spark.spark.pipeline import extract
+from ragflow_ocr_spark.spark.pipeline import extract, spread_for_extract
 
 N_ROWS = 150
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "goldens", "extract_150.json.gz")
@@ -28,7 +28,7 @@ def truth(spark):
 @pytest.fixture(scope="module")
 def extracted(spark, truth):
     pages = truth.select("url", "warc_ts", "html", "text", "lang")
-    df = extract(pages, n_partitions=4).cache()
+    df = extract(spread_for_extract(pages, 4)).cache()
     df.count()
     yield df
     df.unpersist()
@@ -73,7 +73,7 @@ def test_repartition_invariance(spark, truth, extracted):
     """Same bytes at 2 and 16 partitions (north rule: placement never
     affects output)."""
     pages = truth.select("url", "warc_ts", "html", "text", "lang")
-    alt = extract(pages.repartition(16), n_partitions=16)
+    alt = extract(spread_for_extract(pages.repartition(16), 16))
     a = {r["url"]: (r["extracted_text"], r["n_blocks"], r["status"])
          for r in extracted.collect()}
     b = {r["url"]: (r["extracted_text"], r["n_blocks"], r["status"])

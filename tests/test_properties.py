@@ -107,6 +107,7 @@ def test_codec_decoders_raise_value_error_only(tail):
         (b"\xff\xd8\xff\xe0", imgcodecs.decode_jpeg),
         (b"RIFF\x10\x00\x00\x00WAVEfmt ", wavcodec.decode_wav),
         (b"RIFF\x10\x00\x00\x00WEBPVP8L", webp.decode_webp),
+        (pngcodec.PNG_MAGIC + b"\x00\x00\x00\x0cIHDR", pngcodec.decode_png),
     ]:
         try:
             out = dec(magic + tail)
@@ -116,6 +117,19 @@ def test_codec_decoders_raise_value_error_only(tail):
             assert out[0].dtype == np.int16
         else:
             assert out.dtype == np.uint8
+
+
+def test_png_short_ihdr_is_a_decode_error_not_a_task_failure():
+    """An IHDR chunk declaring 12 bytes instead of 13 once escaped
+    decode_png as struct.error and failed the Spark task; it is a
+    per-row decode error."""
+    from ragflow_ocr_spark.config import DEFAULT
+    from ragflow_ocr_spark.spark.stages import _extract_one
+
+    png = bytearray(pngcodec.encode_png(np.zeros((8, 8), np.uint8)))
+    png[11] = 12  # IHDR length field's low byte
+    text, n_blocks, status, engine = _extract_one(bytes(png), DEFAULT)
+    assert (text, n_blocks, status, engine) == (None, 0, "error:decode", "ocr")
 
 
 @given(

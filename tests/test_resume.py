@@ -11,7 +11,12 @@ from pyspark.sql import functions as F
 
 from ragflow_ocr_spark.spark import synth
 from ragflow_ocr_spark.spark.checkpoint import CheckpointStore
-from ragflow_ocr_spark.spark.pipeline import extract, read_extracted, run_extract_job
+from ragflow_ocr_spark.spark.pipeline import (
+    extract,
+    read_extracted,
+    run_extract_job,
+    spread_for_extract,
+)
 
 N_ROWS = 80
 N_BUCKETS = 6
@@ -162,7 +167,7 @@ def test_bucket_group_is_one_write_action(spark, pages, tmp_path):
     write = _jobs_in_group(
         spark,
         "resume-bare-write",
-        lambda: extract(gdf, n_partitions=n_partitions)
+        lambda: extract(spread_for_extract(gdf, n_partitions))
         .withColumn("bucket", bucket)
         .write.mode("overwrite")
         .partitionBy("bucket")
@@ -170,6 +175,51 @@ def test_bucket_group_is_one_write_action(spark, pages, tmp_path):
     )
     assert write > 0
     assert job == write
+
+
+def test_spread_keeps_an_input_that_fills_the_cores(spark, pages):
+    """An input with at least as many partitions as the target is
+    extracted where it is read: no exchange, and reading its partition
+    count starts no Spark job."""
+    kept = []
+    jobs = _jobs_in_group(
+        spark, "spread-wide", lambda: kept.append(spread_for_extract(pages, 4))
+    )
+    assert kept[0] is pages
+    assert jobs == 0
+
+
+def test_wide_input_runs_one_job_per_bucket_group(spark, pages, tmp_path):
+    """No spread over a wide input: each group runs its write alone."""
+    n_groups = -(-N_BUCKETS // 2)
+    jobs = _jobs_in_group(
+        spark,
+        "resume-wide",
+        lambda: run_extract_job(
+            spark, pages, str(tmp_path / "job"), n_buckets=N_BUCKETS,
+            bucket_group_size=2,
+        ),
+    )
+    assert jobs == n_groups
+
+
+def test_narrow_input_is_still_spread(spark, pages, tmp_path):
+    """One input partition cannot fill the cores: the heavy-first range
+    spread still runs (its sampling job adds to the group's write), and
+    every url lands once."""
+    narrow = pages.coalesce(1)
+    root = str(tmp_path / "job")
+    n_groups = -(-N_BUCKETS // 2)
+    jobs = _jobs_in_group(
+        spark,
+        "resume-narrow",
+        lambda: run_extract_job(
+            spark, narrow, root, n_buckets=N_BUCKETS, bucket_group_size=2
+        ),
+    )
+    assert jobs > n_groups
+    urls = [r["url"] for r in read_extracted(spark, root).select("url").collect()]
+    assert len(urls) == N_ROWS and len(set(urls)) == N_ROWS
 
 
 def test_hidden_partial_checkpoint_file_is_ignored(spark, pages, tmp_path):
