@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ragflow_ocr_spark.ops import all_queries
 from ragflow_ocr_spark.spark.pipeline import extract
+from ragflow_ocr_spark.spark.stages import PAGES_SCHEMA
 
 _SF0001 = "/root/testdata/sf0.001"
 
@@ -130,10 +131,7 @@ def q_ocr_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    pages = d.mapInPandas(
-        render,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
+    pages = d.mapInPandas(render, schema=PAGES_SCHEMA)
     out = extract(pages)
     return out.select(
         F.col("url").cast("bigint").alias("doc_id"),
@@ -198,10 +196,7 @@ def q_pdf_extract_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    pages = d.mapInPandas(
-        render,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
+    pages = d.mapInPandas(render, schema=PAGES_SCHEMA)
     out = extract(pages)
     return out.select(
         F.col("url").cast("bigint").alias("doc_id"),

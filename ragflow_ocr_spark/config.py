@@ -5,7 +5,10 @@ Mirrors the semantics of the reference's flat config dict
 ``eval``-able scale string of the reference's NormalizeImage
 (``/root/reference/ocr/operators.py:118``) is deliberately replaced by a
 plain float. Values are set in code; the reference's ``OCR_*`` env
-overrides (``config.py:22``) are not mirrored.
+overrides (``config.py:22``) are not mirrored. Knobs no caller sets are
+module constants next to the code that reads them: the HTML block
+scoring thresholds in ``kernels/html_extract.py`` and the heavy-row
+size of the skew spread, ``SALT_HEAVY_BYTES`` in ``spark/pipeline.py``.
 """
 
 from __future__ import annotations
@@ -44,34 +47,15 @@ class OCRConfig:
     # model routing (ocr/ocr.py:69-145 load_model): serialized model
     # payload per stage — raw bytes or a pyspark Broadcast of bytes
     # (resolved worker-side; see kernels/infer.py). None → default
-    # in-process stub nets. Formats: ONNX protobuf (real ort session),
-    # NPZLOGITS1 (recorded-logits replay), STUBNET1 (stub params).
+    # in-process stub nets. Formats: ONNX protobuf (real ort session)
+    # and NPZLOGITS1 (recorded-logits replay).
     det_model: Any = None
     rec_model: Any = None
 
 
 @dataclass(frozen=True)
-class HtmlConfig:
-    """Readability-style block scoring knobs (ours — SURVEY.md §2.11)."""
-
-    min_block_score: float = 10.0     # density threshold τ
-    min_text_len: int = 10            # blocks shorter than this never win alone
-    link_density_max: float = 0.5     # blocks above this are boilerplate
-    neighbor_bonus: float = 0.3       # smoothing weight from adjacent blocks
-
-
-@dataclass(frozen=True)
 class PipelineConfig:
     ocr: OCRConfig = field(default_factory=OCRConfig)
-    html: HtmlConfig = field(default_factory=HtmlConfig)
-    # scale plumbing (SURVEY.md §4): when an input has too few
-    # partitions to fill the cores, payloads above this are
-    # range-spread one-per-partition and scheduled first
-    # (spread_for_extract; a wider scan is extracted where it is
-    # read). 16 KB ≈ 4× the corpus median page: catches the ~100× skew
-    # rows while leaving ordinary pages on the cheap hash path. Tune
-    # per corpus at deploy time.
-    salt_heavy_bytes: int = 1 << 14
 
 
 DEFAULT = PipelineConfig()

@@ -36,7 +36,7 @@ from ragflow_ocr_spark.kernels.imgeom import (
     min_area_rect,
     order_points_clockwise,
     quad_mask_mean,
-    unclip_quad,
+    unclip_poly,
 )
 
 
@@ -62,7 +62,7 @@ def db_postprocess(
         score = quad_mask_mean(prob, quad)
         if score < cfg.det_db_box_thresh:
             continue
-        expanded = unclip_quad(quad, cfg.det_db_unclip_ratio)
+        expanded = unclip_poly(quad, cfg.det_db_unclip_ratio)
         quad2, sside2 = min_area_rect(expanded)
         if sside2 < cfg.min_size + 2:
             continue

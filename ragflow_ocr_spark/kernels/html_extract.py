@@ -56,7 +56,11 @@ from html.parser import piclose as _PI_CLOSE
 from html.parser import starttagopen as _STARTTAG_OPEN
 from html.parser import tagfind_tolerant as _TAG_FIND
 
-from ragflow_ocr_spark.config import HtmlConfig
+# Readability-style block scoring knobs (ours — SURVEY.md §2.11).
+MIN_BLOCK_SCORE = 10.0  # density threshold τ
+MIN_TEXT_LEN = 10  # blocks shorter than this never win alone
+LINK_DENSITY_MAX = 0.5  # blocks above this are boilerplate
+NEIGHBOR_BONUS = 0.3  # smoothing weight from adjacent blocks
 
 # Tags whose entire subtree is never content.
 _SKIP_SUBTREE = frozenset(
@@ -336,7 +340,7 @@ def _score(block: _Block, txt: str) -> float:
     return n * (1.0 - link_density) ** 2 * w
 
 
-def extract_html(data: bytes | None, cfg: HtmlConfig | None = None) -> tuple[str | None, int, str]:
+def extract_html(data: bytes | None) -> tuple[str | None, int, str]:
     """bytes → (extracted_text | None, n_blocks, status).
 
     status ∈ {"ok", "empty", "error:null", "error:parse"}. Never raises
@@ -344,7 +348,6 @@ def extract_html(data: bytes | None, cfg: HtmlConfig | None = None) -> tuple[str
     ``(None, None, time_dict)`` on a bad image
     (``/root/reference/ocr/ocr.py:540-541``).
     """
-    cfg = cfg or HtmlConfig()
     if data is None or len(data) == 0:
         return None, 0, "error:null"
     try:
@@ -367,15 +370,15 @@ def extract_html(data: bytes | None, cfg: HtmlConfig | None = None) -> tuple[str
         s = scores[i]
         prev_s = scores[i - 1] if i > 0 else 0.0
         next_s = scores[i + 1] if i + 1 < len(scores) else 0.0
-        eff = s + cfg.neighbor_bonus * (prev_s + next_s) / 2.0
-        if eff < cfg.min_block_score:
+        eff = s + NEIGHBOR_BONUS * (prev_s + next_s) / 2.0
+        if eff < MIN_BLOCK_SCORE:
             continue
-        if len(txt) < cfg.min_text_len and s < cfg.min_block_score:
+        if len(txt) < MIN_TEXT_LEN and s < MIN_BLOCK_SCORE:
             continue
         nonspace = len(txt) - txt.count(" ")
         if nonspace:
             ld = b.link_chars / nonspace
-            if ld > cfg.link_density_max:
+            if ld > LINK_DENSITY_MAX:
                 continue
         kept.append(txt)
 

@@ -499,12 +499,6 @@ def unclip_poly(poly: np.ndarray, ratio: float) -> np.ndarray:
     return np.array(out, dtype=np.float64)
 
 
-def unclip_quad(quad: np.ndarray, ratio: float) -> np.ndarray:
-    """Quad specialization of :func:`unclip_poly` (identical math for
-    N=4; kept as the quad path's named entry point)."""
-    return unclip_poly(quad, ratio)
-
-
 # --------------------------------------------------------- clip / order
 def order_points_clockwise(pts: np.ndarray) -> np.ndarray:
     """TL,TR,BR,BL via sum/diff heuristic — exact semantics of the

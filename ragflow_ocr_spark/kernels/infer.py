@@ -19,11 +19,14 @@ batches/tasks. On a cluster the model *bytes* arrive via
   real-model outputs (det prob maps, rec logits) drive
   DBPostProcess/CTC byte-exactly without the runtime. Fixtures are
   recorded with ``RecordingNet`` (see ``tools/gen_replay_fixture.py``).
-- ``STUBNET1`` + JSON  → deterministic stub networks (``stubnet.py``).
+
+No model bytes (``model=None``) → the deterministic in-process stub
+networks (``stubnet.py``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
 import time
 from typing import Protocol
@@ -37,11 +40,6 @@ class Net(Protocol):
 
 _CACHE: dict[str, Net] = {}
 
-# Serialized stub-model format: b"STUBNET1" + JSON params. This makes
-# the broadcast model-bytes path REAL end-to-end (driver broadcasts
-# bytes → worker builds + caches a session keyed by content) while
-# onnxruntime is absent.
-STUB_MAGIC = b"STUBNET1"
 # Recorded-logits replay format: b"NPZLOGITS1" + np.savez archive of
 # {"o_<input-digest>": output_array}.
 REPLAY_MAGIC = b"NPZLOGITS1"
@@ -96,8 +94,6 @@ def _input_digest(x: np.ndarray) -> str:
     """Content digest of one net input: shape + contiguous f32 bytes.
     Deterministic across processes (preprocessing is integer/float32
     arithmetic with a fixed operation order)."""
-    import hashlib
-
     c = np.ascontiguousarray(x, dtype=np.float32)
     h = hashlib.sha1(repr(c.shape).encode())
     h.update(c.tobytes())
@@ -152,16 +148,7 @@ def record_replay_bytes(pairs: list[tuple[np.ndarray, np.ndarray]]) -> bytes:
     return REPLAY_MAGIC + buf.getvalue()
 
 
-def _session_from_bytes(kind: str, model_bytes: bytes) -> Net:
-    if model_bytes.startswith(STUB_MAGIC):
-        import json
-
-        params = json.loads(model_bytes[len(STUB_MAGIC) :].decode("utf-8"))
-        from ragflow_ocr_spark.kernels.stubnet import DetStubNet, RecStubNet
-
-        if kind == "det":
-            return DetStubNet(kx=params.get("kx", 41))
-        return RecStubNet()
+def _session_from_bytes(model_bytes: bytes) -> Net:
     if model_bytes.startswith(REPLAY_MAGIC):
         return ReplayNet(model_bytes[len(REPLAY_MAGIC) :])
     # anything else is treated as ONNX protobuf — the reference's only
@@ -189,41 +176,33 @@ def _resolve_bytes(model) -> bytes | None:
     raise TypeError(f"model must be bytes or a Broadcast of bytes, got {type(model)!r}")
 
 
-def _cache_key(kind: str, model_bytes: bytes | None) -> str:
+def _get_net(kind: str, model) -> Net:
+    """Lazy per-worker session (cache key mirrors the reference's
+    (model_path, device_id) key, ``ocr/ocr.py:70-77`` — here the kind,
+    plus the content hash of the broadcast bytes when there are any)."""
+    model_bytes = _resolve_bytes(model)
     if model_bytes is None:
-        return kind
-    import hashlib
+        key = kind
+    else:
+        key = f"{kind}:{hashlib.md5(model_bytes).hexdigest()}"
+    if key not in _CACHE:
+        if model_bytes is None:
+            from ragflow_ocr_spark.kernels.stubnet import DetStubNet, RecStubNet
 
-    return f"{kind}:{hashlib.md5(model_bytes).hexdigest()}"
+            _CACHE[key] = DetStubNet() if kind == "det" else RecStubNet()
+        else:
+            _CACHE[key] = _session_from_bytes(model_bytes)
+    return _CACHE[key]
 
 
 def get_det_net(model=None) -> Net:
-    """Lazy per-worker detection session (cache key mirrors the
-    reference's (model_path, device_id) key, ``ocr/ocr.py:70-77`` —
-    here (kind, content-hash of the broadcast bytes))."""
-    model_bytes = _resolve_bytes(model)
-    key = _cache_key("det", model_bytes)
-    if key not in _CACHE:
-        if model_bytes is not None:
-            _CACHE[key] = _session_from_bytes("det", model_bytes)
-        else:
-            from ragflow_ocr_spark.kernels.stubnet import DetStubNet
-
-            _CACHE[key] = DetStubNet()
-    return _CACHE[key]
+    """Lazy per-worker detection session (see :func:`_get_net`)."""
+    return _get_net("det", model)
 
 
 def get_rec_net(model=None) -> Net:
-    model_bytes = _resolve_bytes(model)
-    key = _cache_key("rec", model_bytes)
-    if key not in _CACHE:
-        if model_bytes is not None:
-            _CACHE[key] = _session_from_bytes("rec", model_bytes)
-        else:
-            from ragflow_ocr_spark.kernels.stubnet import RecStubNet
-
-            _CACHE[key] = RecStubNet()
-    return _CACHE[key]
+    """Lazy per-worker recognition session (see :func:`_get_net`)."""
+    return _get_net("rec", model)
 
 
 def run_with_retry(net: Net, x: np.ndarray, attempts: int = 4) -> np.ndarray:

@@ -37,7 +37,6 @@ import zlib
 import numpy as np
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 
 def _skip_ws(data: bytes, i: int) -> int:
@@ -419,7 +418,6 @@ def _xobject_image(objs, d: dict, raw: bytes) -> np.ndarray:
 
 
 _SHOW_OPS = {b"Tj", b"'", b'"'}
-_TOKEN_RE = re.compile(rb"\(|\[|<<|/|[+-]?(?:\d+\.\d*|\.\d+|\d+)|[A-Za-z'\"*]+|.")
 
 
 def _content_tokens(content: bytes):

@@ -73,20 +73,13 @@ class DetStubNet:
     region per text line.
     """
 
-    def __init__(self, kx: int = 41):
-        # window constant is a "weight" of this model — deliverable via
-        # the STUBNET1 serialized format (see infer.py) so the broadcast
-        # model-bytes path is exercised for real
-        self.kx = int(kx)
-
     def run(self, nchw: np.ndarray) -> np.ndarray:
         gray = denormalize_to_gray(nchw)  # HW in [0,1], paper≈1 ink≈0
         ink = gray < 0.5
         # fixed window bridging word gaps (≤ ~11 advance units ≤ 40 px
         # at glyph scale ≤3) so one region == one text line; a
         # width-relative window under-merges narrow pages
-        kx = self.kx
-        dil = _max_filter_1d(ink, kx, axis=1)
+        dil = _max_filter_1d(ink, 41, axis=1)
         dil = _max_filter_1d(dil, 3, axis=0)
         prob = np.where(dil, np.float32(0.95), np.float32(0.0))
         return prob[None, None, :, :]

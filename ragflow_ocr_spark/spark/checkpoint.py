@@ -14,8 +14,9 @@ same idempotent semantics are implemented over parquet):
   with pyarrow, so neither side starts a Spark job.
 
 The exact production DDL / MERGE INTO / resume SQL this stands in for
-is emitted by ``spark/iceberg_sql.py`` (golden-pinned in
-``tests/test_iceberg_sql.py`` so the two can't drift).
+is emitted by ``spark/iceberg_sql.py``, which derives the table's
+columns and the MERGE's update list from ``CHECKPOINT_SCHEMA`` below,
+so the two cannot drift.
 """
 
 from __future__ import annotations
@@ -26,13 +27,15 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from ragflow_ocr_spark.spark.stages import schema_columns
+
 CHECKPOINT_SCHEMA = (
     "run_id string, bucket int, n_buckets int, status string, n_docs long, "
     "n_ok long, n_empty long, n_error long, wall_ms long"
 )
 _ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
 _ARROW_SCHEMA = pa.schema(
-    [(name, _ARROW_TYPES[t]) for name, t in (c.split() for c in CHECKPOINT_SCHEMA.split(", "))]
+    [(name, _ARROW_TYPES[t]) for name, t in schema_columns(CHECKPOINT_SCHEMA)]
 )
 
 
@@ -76,26 +79,15 @@ class CheckpointStore:
 
     def mark_done(self, rows: list[dict], n_buckets: int) -> None:
         """Append completion rows (one per bucket) as one parquet file ⇔
-        the MERGE INTO of the production path. Written under a hidden
-        name and renamed into place, so a crash mid-write leaves nothing
-        a reader sees."""
+        the MERGE INTO of the production path. The store fills
+        ``status`` and ``n_buckets``; each row supplies every other
+        checkpoint column. Written under a hidden name and renamed into
+        place, so a crash mid-write leaves nothing a reader sees."""
         if not rows:
             return
+        rows = [r | {"status": "done", "n_buckets": n_buckets} for r in rows]
         table = pa.Table.from_pylist(
-            [
-                {
-                    "run_id": r["run_id"],
-                    "bucket": int(r["bucket"]),
-                    "n_buckets": int(n_buckets),
-                    "status": "done",
-                    "n_docs": int(r.get("n_docs", 0)),
-                    "n_ok": int(r.get("n_ok", 0)),
-                    "n_empty": int(r.get("n_empty", 0)),
-                    "n_error": int(r.get("n_error", 0)),
-                    "wall_ms": int(r.get("wall_ms", 0)),
-                }
-                for r in rows
-            ],
+            [{name: r[name] for name in _ARROW_SCHEMA.names} for r in rows],
             schema=_ARROW_SCHEMA,
         )
         os.makedirs(self.table_dir, exist_ok=True)

@@ -4,9 +4,12 @@ BASELINE.json and SURVEY §1.2 name Iceberg as the production source +
 checkpoint store; this sandbox can't ship the Iceberg runtime jar, so
 ``spark/checkpoint.py`` implements the same idempotent semantics over
 parquet dynamic-partition overwrite. This module keeps the 100 TB path
-concrete: it emits the exact SQL the production deployment runs, and
-the golden test (tests/test_iceberg_sql.py) pins it so the mapping
-can't drift from the parquet stand-in.
+concrete: it emits the exact SQL the production deployment runs. Every
+column list is derived from the schemas the parquet path runs on
+(``PAGES_SCHEMA`` and ``EXTRACT_SCHEMA`` in spark/stages.py,
+``CHECKPOINT_SCHEMA`` in spark/checkpoint.py), so the two cannot drift;
+tests/test_iceberg_sql.py pins the bucket transform, the MERGE keys
+and the anti-join shape.
 
 Mapping (checkpoint.py:1-14 ⇔ here):
 - ``bucket = pmod(xxhash64(url), N)``        ⇔ Iceberg partition
@@ -25,9 +28,23 @@ statements for a given catalog/namespace.
 
 from __future__ import annotations
 
-PAGES_COLUMNS = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+from ragflow_ocr_spark.spark.checkpoint import CHECKPOINT_SCHEMA
+from ragflow_ocr_spark.spark.stages import EXTRACT_SCHEMA, PAGES_SCHEMA, schema_columns
+
+# The extracted table carries the partition column next to the stage's
+# output columns.
+_OUTPUT_SCHEMA = EXTRACT_SCHEMA + ", bucket int"
+# Spark DDL type → Iceberg SQL type, where the two differ.
+_ICEBERG_TYPES = {"long": "bigint"}
+# The checkpoint's MERGE key: one row per bucket per numbering.
+_MERGE_KEYS = ("bucket", "n_buckets")
+
+
+def _create_table(table: str, schema: str) -> str:
+    cols = ",\n  ".join(
+        f"{name} {_ICEBERG_TYPES.get(t, t)}" for name, t in schema_columns(schema)
+    )
+    return f"CREATE TABLE IF NOT EXISTS {table} (\n  {cols}\n) USING iceberg"
 
 
 def pages_table_ddl(
@@ -35,11 +52,8 @@ def pages_table_ddl(
 ) -> str:
     """Source table: Common-Crawl-style pages, bucketed by url so each
     resume bucket maps to a bounded partition set."""
-    cols = ",\n  ".join(c.strip() for c in PAGES_COLUMNS.split(","))
     return (
-        f"CREATE TABLE IF NOT EXISTS {table} (\n"
-        f"  {cols}\n"
-        f") USING iceberg\n"
+        f"{_create_table(table, PAGES_SCHEMA)}\n"
         f"PARTITIONED BY (bucket({n_buckets}, url))\n"
         f"TBLPROPERTIES (\n"
         f"  'write.target-file-size-bytes' = '536870912',\n"
@@ -49,21 +63,8 @@ def pages_table_ddl(
 
 
 def checkpoint_table_ddl(table: str = "crawl.extract_checkpoint") -> str:
-    """Checkpoint table — one row per completed bucket per numbering
-    (mirrors CHECKPOINT_SCHEMA in spark/checkpoint.py)."""
-    return (
-        f"CREATE TABLE IF NOT EXISTS {table} (\n"
-        f"  run_id string,\n"
-        f"  bucket int,\n"
-        f"  n_buckets int,\n"
-        f"  status string,\n"
-        f"  n_docs bigint,\n"
-        f"  n_ok bigint,\n"
-        f"  n_empty bigint,\n"
-        f"  n_error bigint,\n"
-        f"  wall_ms bigint\n"
-        f") USING iceberg"
-    )
+    """Checkpoint table — one row per completed bucket per numbering."""
+    return _create_table(table, CHECKPOINT_SCHEMA)
 
 
 def checkpoint_merge_sql(
@@ -73,36 +74,28 @@ def checkpoint_merge_sql(
     """Idempotent completion upsert: re-running a bucket (task retry,
     job restart) updates its row instead of appending a duplicate —
     the MERGE the parquet append stands in for."""
+    on = " AND ".join(f"t.{k} = s.{k}" for k in _MERGE_KEYS)
+    sets = [
+        f"t.{name} = s.{name}"
+        for name, _ in schema_columns(CHECKPOINT_SCHEMA)
+        if name not in _MERGE_KEYS
+    ]
+    # three assignments per line
+    updates = ",\n  ".join(", ".join(sets[i : i + 3]) for i in range(0, len(sets), 3))
     return (
         f"MERGE INTO {table} t\n"
         f"USING {updates_view} s\n"
-        f"ON t.bucket = s.bucket AND t.n_buckets = s.n_buckets\n"
+        f"ON {on}\n"
         f"WHEN MATCHED THEN UPDATE SET\n"
-        f"  t.run_id = s.run_id, t.status = s.status, t.n_docs = s.n_docs,\n"
-        f"  t.n_ok = s.n_ok, t.n_empty = s.n_empty, t.n_error = s.n_error,\n"
-        f"  t.wall_ms = s.wall_ms\n"
+        f"  {updates}\n"
         f"WHEN NOT MATCHED THEN INSERT *"
     )
 
 
-def output_table_ddl(
-    table: str = "crawl.extracted", n_buckets: int = 4096
-) -> str:
+def output_table_ddl(table: str = "crawl.extracted") -> str:
     """Extraction output, partitioned by the SAME bucket expression so
     per-bucket overwrite is a partition-level operation."""
-    return (
-        f"CREATE TABLE IF NOT EXISTS {table} (\n"
-        f"  url string,\n"
-        f"  warc_ts timestamp,\n"
-        f"  lang string,\n"
-        f"  extracted_text string,\n"
-        f"  n_blocks int,\n"
-        f"  status string,\n"
-        f"  engine string,\n"
-        f"  bucket int\n"
-        f") USING iceberg\n"
-        f"PARTITIONED BY (bucket)"
-    )
+    return f"{_create_table(table, _OUTPUT_SCHEMA)}\nPARTITIONED BY (bucket)"
 
 
 def output_overwrite_sql(
@@ -110,12 +103,8 @@ def output_overwrite_sql(
 ) -> str:
     """Per-bucket idempotent rewrite (Iceberg dynamic overwrite — only
     the partitions present in the source are replaced)."""
-    return (
-        f"INSERT OVERWRITE {table}\n"
-        f"SELECT url, warc_ts, lang, extracted_text, n_blocks, status, "
-        f"engine, bucket\n"
-        f"FROM {results_view}"
-    )
+    cols = ", ".join(name for name, _ in schema_columns(_OUTPUT_SCHEMA))
+    return f"INSERT OVERWRITE {table}\nSELECT {cols}\nFROM {results_view}"
 
 
 def resume_pending_sql(
@@ -141,7 +130,7 @@ def all_statements(n_buckets: int = 4096) -> dict[str, str]:
     return {
         "pages_ddl": pages_table_ddl(n_buckets=n_buckets),
         "checkpoint_ddl": checkpoint_table_ddl(),
-        "output_ddl": output_table_ddl(n_buckets=n_buckets),
+        "output_ddl": output_table_ddl(),
         "checkpoint_merge": checkpoint_merge_sql(),
         "output_overwrite": output_overwrite_sql(),
         "resume_pending": resume_pending_sql(n_buckets=n_buckets),

@@ -13,7 +13,7 @@ Scale design (SURVEY.md §4):
   sizes its file splits by bytes (``maxPartitionBytes``), and an
   exchange would move every payload byte to balance a handful of
   rows. An input too narrow to fill the cores (one file, a coalesced
-  frame) is spread: heavy rows (``length(html) > salt_heavy_bytes``)
+  frame) is spread: heavy rows (``length(html) > SALT_HEAVY_BYTES``)
   are range-spread to ~one per partition and their partitions
   scheduled FIRST, while light rows use plain hash(url) — AQE cannot
   rebalance inside a mapInPandas stage, so this is manual (a 100×
@@ -38,10 +38,15 @@ from ragflow_ocr_spark.config import DEFAULT, PipelineConfig
 from ragflow_ocr_spark.spark.checkpoint import CheckpointStore
 from ragflow_ocr_spark.spark.stages import EXTRACT_SCHEMA, extract_stage
 
+# When an input has too few partitions to fill the cores, payloads
+# above this are range-spread one-per-partition and scheduled first
+# (spread_for_extract). 16 KB ≈ 4× the corpus median page: catches
+# the ~100× skew rows while leaving ordinary pages on the cheap hash
+# path.
+SALT_HEAVY_BYTES = 1 << 14
 
-def spread_for_extract(
-    df: DataFrame, n_partitions: int, cfg: PipelineConfig = DEFAULT
-) -> DataFrame:
+
+def spread_for_extract(df: DataFrame, n_partitions: int) -> DataFrame:
     """Distribute rows so heavy payloads can't gang up on one task —
     only when ``df`` has fewer than ``n_partitions`` partitions.
 
@@ -73,8 +78,8 @@ def spread_for_extract(
     if df.rdd.getNumPartitions() >= n_partitions:
         return df
     cost = F.coalesce(F.length(F.col("html")), F.lit(0))
-    heavy = df.where(cost > cfg.salt_heavy_bytes)
-    light = df.where(cost <= cfg.salt_heavy_bytes)
+    heavy = df.where(cost > SALT_HEAVY_BYTES)
+    light = df.where(cost <= SALT_HEAVY_BYTES)
     heavy = heavy.repartitionByRange(n_partitions, F.xxhash64(F.col("url")))
     light = light.repartition(n_partitions, F.col("url"))
     # heavy FIRST: union concatenates partition lists in order and the
@@ -154,7 +159,7 @@ def run_extract_job(
     gs = max(1, bucket_group_size)
     groups = [pending[i : i + gs] for i in range(0, len(pending), gs)]
     if spread:
-        pages = spread_for_extract(pages, spark.sparkContext.defaultParallelism, cfg)
+        pages = spread_for_extract(pages, spark.sparkContext.defaultParallelism)
     extracted = f"{out_root}/extracted"
     status = F.col("status")
     counters = {

@@ -28,13 +28,24 @@ from ragflow_ocr_spark.kernels.ocr_pipeline import extract_payload
 from ragflow_ocr_spark.kernels.pngcodec import sniff_payload
 from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
 
-# Output schema of the extraction stage. `html` is intentionally NOT
-# carried through — post-extract projections must not deserialize
-# payload bytes (SURVEY.md §4: keep `html` out so pruning works).
+# The two tables of the job, declared once: the Iceberg DDL
+# (spark/iceberg_sql.py), the streaming reader, synth and the driver
+# contract all derive their column lists from these strings.
+# Input: the Common-Crawl-style pages table (BASELINE.json input_hint).
+PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+# Output of the extraction stage. `html` is intentionally NOT carried
+# through — post-extract projections must not deserialize payload
+# bytes (SURVEY.md §4: keep `html` out so pruning works).
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, lang string, extracted_text string, "
     "n_blocks int, status string, engine string"
 )
+
+
+def schema_columns(schema: str) -> list[tuple[str, str]]:
+    """(name, type) pairs of a flat DDL schema string such as
+    ``PAGES_SCHEMA``."""
+    return [tuple(c.split(" ")) for c in schema.split(", ")]
 
 
 def _extract_one(
@@ -43,7 +54,7 @@ def _extract_one(
     """payload → (text, n_blocks, status, engine). Routes F10."""
     kind = sniff_payload(data)
     if kind == "html":
-        text, n, status = extract_html(data, cfg.html)
+        text, n, status = extract_html(data)
         return text, n, status, "html"
     if kind == "null":
         return None, 0, "error:null", "none"

@@ -1,7 +1,7 @@
 """Deterministic synthetic Common-Crawl-style `pages` table.
 
-Schema per BASELINE.json ``input_hint``:
-    url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING
+Schema per BASELINE.json ``input_hint``: ``stages.PAGES_SCHEMA``
+(url, warc_ts, html, text, lang).
 
 Row classes and weights follow FIXTURES.md §1. Every row is a pure
 function of its integer id (numpy ``SeedSequence(GLOBAL_SEED, row_id)``)
@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 
 from ragflow_ocr_spark.kernels import font5x7, pngcodec
+from ragflow_ocr_spark.spark.stages import PAGES_SCHEMA, schema_columns
 from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
 
 GLOBAL_SEED = 42
@@ -235,24 +236,19 @@ def make_row(row_id: int) -> dict:
     }
 
 
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 TRUTH_SCHEMA = PAGES_SCHEMA + ", row_class string, expected_text string"
 
 
 def truth_batch(ids: list[int]) -> pd.DataFrame:
-    rows = [make_row(i) for i in ids]
     return pd.DataFrame(
-        rows,
-        columns=[
-            "url", "warc_ts", "html", "text", "lang", "row_class", "expected_text",
-        ],
+        [make_row(i) for i in ids], columns=[name for name, _ in schema_columns(TRUTH_SCHEMA)]
     )
 
 
 def pages_df(spark, n_rows: int, with_truth: bool = False, partitions: int | None = None):
     """Distributed deterministic generation: spark.range → mapInPandas."""
     schema = TRUTH_SCHEMA if with_truth else PAGES_SCHEMA
-    cols = None if with_truth else ["url", "warc_ts", "html", "text", "lang"]
+    cols = None if with_truth else [name for name, _ in schema_columns(PAGES_SCHEMA)]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         keep_runtime_zip_caches()

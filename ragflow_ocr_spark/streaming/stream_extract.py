@@ -17,41 +17,19 @@ Scale notes (1000-executor continuous ingest):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ragflow_ocr_spark.config import DEFAULT, PipelineConfig
 from ragflow_ocr_spark.spark import pipeline
-
-PAGES_STRUCT = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ]
-)
+from ragflow_ocr_spark.spark.stages import PAGES_SCHEMA
 
 
 def read_pages_stream(
     spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_STRUCT)
+    reader = spark.readStream.schema(PAGES_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_dir)
-
-
-def extract_stream(pages: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """The batch pipeline's extract plan, unspread: stateless, so it is
-    legal in a streaming plan."""
-    return pipeline.extract(pages, cfg)
 
 
 def stream_extract_availablenow(
@@ -71,7 +49,9 @@ def stream_extract_availablenow(
     batch job's bucket checkpoint resume.
     """
     pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
-    out = extract_stream(pages, cfg)
+    # the batch pipeline's extract plan, unspread: stateless, so it is
+    # legal in a streaming plan
+    out = pipeline.extract(pages, cfg)
     q = (
         out.writeStream.format("parquet")
         .option("path", output_dir)

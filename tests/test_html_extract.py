@@ -10,7 +10,7 @@ import time
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
-from ragflow_ocr_spark.config import HtmlConfig
+from ragflow_ocr_spark.kernels import html_extract as hx
 from ragflow_ocr_spark.kernels.html_extract import (
     _BLOCK_TAGS,
     _BOILERPLATE_SUBTREE,
@@ -19,6 +19,30 @@ from ragflow_ocr_spark.kernels.html_extract import (
     _VOID,
     extract_html,
 )
+
+
+@dataclass(frozen=True)
+class Knobs:
+    """The kernel's four block-scoring constants: handed to the oracle,
+    and patched into the kernel module by ``extract_with``."""
+
+    min_block_score: float = hx.MIN_BLOCK_SCORE
+    min_text_len: int = hx.MIN_TEXT_LEN
+    link_density_max: float = hx.LINK_DENSITY_MAX
+    neighbor_bonus: float = hx.NEIGHBOR_BONUS
+
+
+def extract_with(data: bytes | None, knobs: Knobs) -> tuple[str | None, int, str]:
+    """``extract_html`` run with the module constants set to ``knobs``."""
+    saved = {name: getattr(hx, name.upper()) for name in vars(knobs)}
+    try:
+        for name, value in vars(knobs).items():
+            setattr(hx, name.upper(), value)
+        return extract_html(data)
+    finally:
+        for name, value in saved.items():
+            setattr(hx, name.upper(), value)
+
 
 ARTICLE = (
     b"<html><head><title>T</title><style>.x{}</style></head><body>"
@@ -214,7 +238,7 @@ class _OracleBlockParser(HTMLParser):
                 blk.link_chars += len("".join(data.split()))
 
 
-def _score(block: _Block, cfg: HtmlConfig) -> float:
+def _score(block: _Block, cfg: Knobs) -> float:
     txt = block.text()
     n = len(txt)
     if n == 0:
@@ -225,8 +249,8 @@ def _score(block: _Block, cfg: HtmlConfig) -> float:
     return n * (1.0 - link_density) ** 2 * w
 
 
-def _oracle_extract_html(data: bytes | None, cfg: HtmlConfig | None = None) -> tuple[str | None, int, str]:
-    cfg = cfg or HtmlConfig()
+def _oracle_extract_html(data: bytes | None, cfg: Knobs | None = None) -> tuple[str | None, int, str]:
+    cfg = cfg or Knobs()
     if data is None or len(data) == 0:
         return None, 0, "error:null"
     try:
@@ -264,8 +288,8 @@ def _oracle_extract_html(data: bytes | None, cfg: HtmlConfig | None = None) -> t
 
 
 # exposes every block, so a block-level difference cannot hide below a threshold
-LOOSE = HtmlConfig(min_block_score=0, min_text_len=0, link_density_max=1.0)
-CONFIGS = (HtmlConfig(), LOOSE)
+LOOSE = Knobs(min_block_score=0, min_text_len=0, link_density_max=1.0)
+CONFIGS = (Knobs(), LOOSE)
 
 # markup fragments the mutants splice in: every exact-path construct,
 # the fast path's boundary shapes, and the characters "\s" matches but
@@ -312,7 +336,7 @@ def _html_rows(row_ids) -> list[dict]:
 def _assert_same(docs) -> None:
     for data in docs:
         for cfg in CONFIGS:
-            got, want = extract_html(data, cfg), _oracle_extract_html(data, cfg)
+            got, want = extract_with(data, cfg), _oracle_extract_html(data, cfg)
             assert got == want, (data[:200], cfg)
 
 
@@ -334,7 +358,7 @@ def test_tokenizer_matches_htmlparser_oracle():
     bases = golden_docs + [ARTICLE]
     mutants = [_mutant(rng, rng.choice(bases)) for _ in range(20_000)]
     _assert_same(mutants)
-    statuses = {extract_html(m, LOOSE)[2] for m in mutants}
+    statuses = {extract_with(m, LOOSE)[2] for m in mutants}
     assert {"ok", "empty", "error:parse"} <= statuses
 
 
@@ -351,7 +375,7 @@ def test_unclosed_tags_with_stray_end_tags_stay_linear():
 
     small = page(2_000)
     for cfg in CONFIGS:
-        assert extract_html(small, cfg) == _oracle_extract_html(small, cfg)
+        assert extract_with(small, cfg) == _oracle_extract_html(small, cfg)
     t0 = time.perf_counter()
     text, n, status = extract_html(page(100_000))
     assert time.perf_counter() - t0 < 5.0

@@ -7,6 +7,14 @@ from __future__ import annotations
 
 from ragflow_ocr_spark.spark import iceberg_sql as isql
 from ragflow_ocr_spark.spark.checkpoint import CHECKPOINT_SCHEMA
+from ragflow_ocr_spark.spark.stages import EXTRACT_SCHEMA, PAGES_SCHEMA
+
+
+def _assert_ddl_mirrors(ddl: str, schema: str) -> None:
+    for field in schema.split(", "):
+        name, typ = field.split(" ")
+        typ = {"long": "bigint"}.get(typ, typ)
+        assert f"{name} {typ}" in ddl, field
 
 
 def test_pages_ddl_buckets_by_url():
@@ -18,12 +26,18 @@ def test_pages_ddl_buckets_by_url():
         assert col in ddl
 
 
+def test_pages_ddl_mirrors_pages_schema():
+    _assert_ddl_mirrors(isql.pages_table_ddl(), PAGES_SCHEMA)
+
+
 def test_checkpoint_ddl_mirrors_parquet_schema():
-    ddl = isql.checkpoint_table_ddl()
-    for field in CHECKPOINT_SCHEMA.split(", "):
-        name, typ = field.split(" ")
-        typ = {"long": "bigint"}.get(typ, typ)
-        assert f"{name} {typ}" in ddl, field
+    _assert_ddl_mirrors(isql.checkpoint_table_ddl(), CHECKPOINT_SCHEMA)
+
+
+def test_output_ddl_mirrors_extract_schema_plus_bucket():
+    ddl = isql.output_table_ddl()
+    _assert_ddl_mirrors(ddl, EXTRACT_SCHEMA + ", bucket int")
+    assert "PARTITIONED BY (bucket)" in ddl
 
 
 def test_merge_keys_are_bucket_and_numbering():

@@ -15,7 +15,7 @@ from ragflow_ocr_spark.kernels.imgeom import (
     quad_mask,
     quad_mask_mean,
     resize_bilinear,
-    unclip_quad,
+    unclip_poly,
     warp_perspective,
 )
 
@@ -283,7 +283,7 @@ def test_quad_mask_mean_rectangle_equals_half_plane_path(seed):
 
 def test_unclip_grows_rectangle():
     quad = np.array([[0, 0], [20, 0], [20, 4], [0, 4]], dtype=np.float64)
-    out = unclip_quad(quad, 1.5)
+    out = unclip_poly(quad, 1.5)
     # delta = area*ratio/perimeter = 80*1.5/48 = 2.5 per side
     w = out[:, 0].max() - out[:, 0].min()
     h = out[:, 1].max() - out[:, 1].min()

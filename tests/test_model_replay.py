@@ -2,7 +2,7 @@
 an onnxruntime session with the reference's exact options
 (``/root/reference/ocr/ocr.py:115-141``), and recorded-logits replay
 fixtures drive the full postprocess chain through
-``_session_from_bytes`` with non-STUBNET bytes."""
+``_session_from_bytes``."""
 
 from __future__ import annotations
 
@@ -33,7 +33,7 @@ def test_replay_fixture_end_to_end_golden():
 
     det_b = _fixture_bytes("replay_det.npzb")
     rec_b = _fixture_bytes("replay_rec.npzb")
-    assert not det_b.startswith(infer.STUB_MAGIC)  # non-STUBNET bytes
+    assert det_b.startswith(infer.REPLAY_MAGIC)  # routed as recorded logits
     img, _ = render_fixture_page()
     cfg = OCRConfig(det_model=det_b, rec_model=rec_b)
     r = ocr_image(img, cfg)
@@ -63,7 +63,7 @@ def test_recording_net_produces_replayable_bytes():
     tap.run(x)
     blob = tap.replay_bytes()
     assert blob.startswith(infer.REPLAY_MAGIC)
-    replay = infer._session_from_bytes("det", blob)
+    replay = infer._session_from_bytes(blob)
     assert isinstance(replay, infer.ReplayNet)
     assert np.array_equal(replay.run(x), x * 2)
 
@@ -134,7 +134,7 @@ def test_ortnet_builds_session_with_reference_options(fake_ort):
 
 
 def test_onnx_bytes_route_to_ortnet_via_session_factory(fake_ort):
-    net = infer._session_from_bytes("det", b"\x08\x07fake-onnx-protobuf")
+    net = infer._session_from_bytes(b"\x08\x07fake-onnx-protobuf")
     assert isinstance(net, infer.OrtNet)
 
 
@@ -142,20 +142,20 @@ def test_onnx_bytes_without_runtime_fall_back_to_numpy_executor(monkeypatch):
     monkeypatch.setitem(sys.modules, "onnxruntime", None)  # force ImportError
     # garbage protobuf: numpy-executor fallback surfaces a parse error
     with pytest.raises(ValueError):
-        infer._session_from_bytes("det", b"\x08\x07fake-onnx-protobuf")
+        infer._session_from_bytes(b"\x08\x07fake-onnx-protobuf")
     # a VALID model within the executor's op subset builds and runs
     from ragflow_ocr_spark.kernels import onnx_np as ox
 
     model = ox.build_model(
         [ox.node_bytes("Relu", ["x"], ["y"])], [], "x", "y"
     )
-    net = infer._session_from_bytes("det", model)
+    net = infer._session_from_bytes(model)
     x = np.array([[-1.0, 2.0]], dtype=np.float32)
     assert np.array_equal(net.run(x), np.array([[0.0, 2.0]], dtype=np.float32))
     # a valid model OUTSIDE the subset is the op-granular seam
     bad = ox.build_model([ox.node_bytes("GRU", ["x"], ["y"])], [], "x", "y")
     with pytest.raises(NotImplementedError, match="GRU"):
-        infer._session_from_bytes("det", bad)
+        infer._session_from_bytes(bad)
 
 
 def test_run_with_retry_sleeps_between_attempts(monkeypatch):

@@ -111,15 +111,14 @@ def test_spread_heavy_rows(spark, truth):
     indivisible row), heavy partitions issued before light ones."""
     from pyspark.sql import functions as F
 
-    from ragflow_ocr_spark.config import DEFAULT
-    from ragflow_ocr_spark.spark.pipeline import spread_for_extract
+    from ragflow_ocr_spark.spark.pipeline import SALT_HEAVY_BYTES, spread_for_extract
 
     pages = truth.select("url", "warc_ts", "html", "text", "lang")
     spread = spread_for_extract(pages, 8)
     assert spread.count() == N_ROWS  # no row lost or duplicated
 
     cost = F.coalesce(F.length(F.col("html")), F.lit(0))
-    tagged = spread.withColumn("heavy", cost > DEFAULT.salt_heavy_bytes).withColumn(
+    tagged = spread.withColumn("heavy", cost > SALT_HEAVY_BYTES).withColumn(
         "pid", F.spark_partition_id()
     )
     per_part = {

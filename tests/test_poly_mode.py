@@ -1,18 +1,13 @@
 """N-gon unclip (``imgeom.unclip_poly``), the miter-join substitute for
 the reference's pyclipper offset (``postprocess.py:163-169``) that the
-quad path's ``unclip_quad`` runs on. The reference's poly-box mode and
+quad path runs on. The reference's poly-box mode and
 Arabic segment reverse are not mirrored: its OCR never selects them."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from ragflow_ocr_spark.kernels.imgeom import unclip_poly, unclip_quad
-
-
-def test_unclip_poly_on_quad_equals_unclip_quad():
-    quad = np.array([[5, 5], [25, 5], [25, 15], [5, 15]], dtype=np.float64)
-    np.testing.assert_allclose(unclip_poly(quad, 1.5), unclip_quad(quad, 1.5))
+from ragflow_ocr_spark.kernels.imgeom import unclip_poly
 
 
 def test_unclip_poly_hexagon_grows_outward():

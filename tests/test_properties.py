@@ -38,11 +38,11 @@ _HTMLISH = st.one_of(
 @given(st.lists(_HTMLISH, max_size=120).map("".join))
 @settings(max_examples=400, deadline=None)
 def test_extract_html_matches_htmlparser_oracle(text):
-    from test_html_extract import CONFIGS, _oracle_extract_html
+    from test_html_extract import CONFIGS, _oracle_extract_html, extract_with
 
     data = text.encode("utf-8")
     for cfg in CONFIGS:
-        assert extract_html(data, cfg) == _oracle_extract_html(data, cfg)
+        assert extract_with(data, cfg) == _oracle_extract_html(data, cfg)
 
 
 @given(st.binary(max_size=2048))

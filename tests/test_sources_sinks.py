@@ -10,7 +10,12 @@ import pytest
 
 from ragflow_ocr_spark.kernels import font5x7, pngcodec
 from ragflow_ocr_spark.spark.pipeline import extract
-from ragflow_ocr_spark.spark.sinks import draw_boxes, write_json, write_text
+from ragflow_ocr_spark.spark.sinks import (
+    draw_boxes,
+    save_visualization,
+    write_json,
+    write_text,
+)
 from ragflow_ocr_spark.spark.sources import read_image_dir
 
 
@@ -62,8 +67,14 @@ def test_text_sink(spark, tmp_path, image_dir):
     assert all("\t" in line for line in lines)
 
 
-def test_draw_boxes_overlay():
+def test_draw_boxes_overlay(tmp_path):
     img = np.full((50, 80), 255, dtype=np.uint8)
-    out = draw_boxes(img, [[[10, 10], [60, 10], [60, 30], [10, 30]]], val=0)
+    boxes = [[[10, 10], [60, 10], [60, 30], [10, 30]]]
+    out = draw_boxes(img, boxes, val=0)
     assert out[10, 10] == 0 and out[10, 35] == 0 and out[20, 10] == 0
     assert img[10, 10] == 255  # original untouched
+    # the visualization sink writes the same overlay as a PNG
+    path = str(tmp_path / "vis.png")
+    save_visualization(img, boxes, path)
+    with open(path, "rb") as f:
+        np.testing.assert_array_equal(pngcodec.decode_png(f.read()), out)

@@ -10,7 +10,6 @@ from ragflow_ocr_spark.spark import synth
 from ragflow_ocr_spark.spark.pipeline import extract
 from ragflow_ocr_spark.streaming import stream_extract_availablenow
 from ragflow_ocr_spark.streaming.stream_extract import (
-    extract_stream,
     read_pages_stream,
     stream_metrics_query,
 )
@@ -75,7 +74,7 @@ def test_stream_metrics_windowed_watermark(spark, stream_dirs, tmp_path):
     streaming-legal) and its counts match the batch equivalent."""
     inp, _, _ = stream_dirs
     pages = read_pages_stream(spark, inp)
-    metrics = stream_metrics_query(extract_stream(pages), window="6 hours")
+    metrics = stream_metrics_query(extract(pages), window="6 hours")
     q = (
         metrics.writeStream.format("memory")
         .queryName("m_stream")
@@ -171,11 +170,7 @@ def test_streaming_url_dedup_within_watermark(spark, tmp_path):
     each url extracts exactly once."""
     import pandas as pd
 
-    from ragflow_ocr_spark.streaming.stream_extract import (
-        dedup_pages_stream,
-        extract_stream,
-        read_pages_stream,
-    )
+    from ragflow_ocr_spark.streaming.stream_extract import dedup_pages_stream
 
     inp = str(tmp_path / "in")
     outp = str(tmp_path / "out")
@@ -187,7 +182,7 @@ def test_streaming_url_dedup_within_watermark(spark, tmp_path):
     base.write.mode("append").parquet(inp)
 
     pages = dedup_pages_stream(read_pages_stream(spark, inp), watermark="24 hours")
-    out = extract_stream(pages)
+    out = extract(pages)
     q = (
         out.writeStream.format("parquet")
         .option("path", outp)

@@ -8,8 +8,8 @@ and ``replay_rec.npzb`` (REPLAY_MAGIC + npz).
 This is the offline analogue of dumping real DBNet/CRNN outputs from a
 production onnxruntime session: the committed fixtures drive the whole
 postprocess chain (DBPostProcess → crop → CTC decode) through
-``kernels/infer.ReplayNet`` — i.e. through ``_session_from_bytes`` with
-non-STUBNET bytes — with no model runtime installed. With onnxruntime
+``kernels/infer.ReplayNet`` — i.e. through ``_session_from_bytes`` —
+with no model runtime installed. With onnxruntime
 available, point RecordingNet at an OrtNet instead and the same test
 pins real-model behavior.
 
