@@ -10,14 +10,14 @@ association (hvcC, ispe) and extent gathering — and hands the coded
 item to the libde265-cross-validated HEVC keyframe layer
 (kernels/hevc.py).
 
-Decode coverage is exactly the HEVC module's: PCM coding units decode
-byte-exactly (our fixture encoder emits them) AND entropy-coded hvc1
-items — i.e. every real camera/x265 HEIC, 8-bit and Main10 — decode
-through the full intra decoder (kernels/hevc_intra, libde265-
-validated). AVIF (av01 items in the same container) raises a named
-seam that carries the REAL coded facts from the AV1 OBU sequence-
-header parse below (geometry/bit depth without decode); the Spark
-stages map the error to a per-row status.
+Decode coverage is exactly the HEVC module's: its one decoder, the
+intra decoder in kernels/hevc_intra (libde265-validated), takes the
+PCM coding units our fixture encoder emits AND entropy-coded hvc1
+items — i.e. every real camera/x265 HEIC, 8-bit and Main10. AVIF (av01
+items in the same container) raises a named seam that carries the
+REAL coded facts from the AV1 OBU sequence-header parse below
+(geometry/bit depth without decode); the Spark stages map the error to
+a per-row status.
 
 Error contract: ValueError on malformed boxes, NotImplementedError on
 the named codec seams — never a silent wrong image.
@@ -373,10 +373,11 @@ def _decode_grid(info: dict) -> np.ndarray:
 
 
 def decode_heif(data: bytes) -> np.ndarray:
-    """HEIC -> uint8 image via the HEVC keyframe layer. PCM items
-    decode byte-exactly (single hvc1 items AND raster grids of hvc1
-    tiles); entropy-coded items (every camera HEIC) and AVIF raise
-    the named seams (per-row error upstream)."""
+    """HEIC -> uint8 image via the HEVC keyframe layer, whose one
+    decoder (kernels/hevc_intra.py) takes PCM and entropy-coded items
+    alike: single hvc1 items AND raster grids of hvc1 tiles. AVIF and
+    the HEVC named seams raise NotImplementedError (per-row error
+    upstream)."""
     info = parse_heif(data)
     if info["item_type"] == b"av01":
         try:

@@ -17,10 +17,10 @@ scratch:
   even on the PCM path — split_cu_flag is a context-coded bin and
   pcm_flag / end_of_slice_segment_flag are terminate bins, so the
   9-bit range coder of spec clause 9.3 is required in full;
-- pcm_flag=1 coding units (raw uncompressed CTBs): byte-exact YUV
-  round trips — any conformant decoder reconstructs our streams
-  exactly, and the system libde265 on this host verifies exactly
-  that (tests/test_hevc_libde265_crossval.py).
+- a pcm_flag=1 encoder (raw uncompressed CTBs) for the media
+  fixtures: byte-exact YUV round trips — any conformant decoder
+  reconstructs these streams exactly, and the system libde265
+  verifies exactly that (tests/test_hevc_libde265_crossval.py).
 
 PROVENANCE of the three normative constant tables (the VP8-tables
 lesson: never ship memory-reconstructed entropy tables without an
@@ -38,15 +38,14 @@ independent check):
   verbatim in libde265's context-init data (u32 table at 0x590c0:
   139,141,157 / 107,139,126 / 107,139,126), matching spec Table 9-19.
 
-ENTROPY-CODED CONTENT now decodes for real: streams beyond the pure-
-PCM shape (i.e. every x265/camera still) route to the full Main-
-profile INTRA decoder in kernels/hevc_intra.py — CABAC coding
-quadtree, all 35 intra modes, residual coding, DST/DCT inverse
-transforms, deblocking, SAO, WPP substreams — validated sample-exact
-against the system libde265 on real x265 encodes
-(tests/test_hevc_intra.py), for 8-bit AND Main10 streams. Only IDR
-pictures decode: every access unit is a keyframe. Remaining named
-seams: non-IRAP (P/B) and CRA/BLA pictures, dependent slice
+One decoder reconstructs every picture, PCM or entropy-coded: the
+Main-profile INTRA decoder in kernels/hevc_intra.py — CABAC coding
+quadtree, PCM coding units, all 35 intra modes, residual coding,
+DST/DCT inverse transforms, deblocking, SAO, WPP substreams —
+validated sample-exact against the system libde265 on real x265
+encodes (tests/test_hevc_intra.py), for 8-bit AND Main10 streams.
+Only IDR pictures decode: every access unit is a keyframe. Remaining
+named seams: non-IRAP (P/B) and CRA/BLA pictures, dependent slice
 segments, tiles, scaling lists, >10-bit / non-4:2:0.
 
 This module also holds the bit-level helpers the HEVC, HEVC-intra
@@ -932,10 +931,13 @@ def _parse_slice_header(r: _BitReader, nal_type: int, sps: dict,
 
 
 def decode_hevc_keyframe_yuv(data: bytes):
-    """Annex-B access unit (VPS/SPS/PPS + IDR slices) -> (y, u, v)
-    uint8 planes at the cropped frame size. pcm_flag=1 coding units
-    decode; everything entropy-coded beyond them raises the named
-    seam (see module doc)."""
+    """Annex-B access unit (VPS/SPS/PPS + IRAP slices) -> (y, u, v)
+    uint8 planes at the cropped frame size, decoded by the Main-intra
+    decoder in kernels/hevc_intra.py (PCM coding units included).
+    Samples above 8 bits keep their high byte. Named seams raise
+    NotImplementedError (see module doc)."""
+    from ragflow_ocr_spark.kernels import hevc_intra  # it imports this module
+
     sps = pps = None
     slices = []
     for nal_type, rbsp, epb_pos in _iter_nals_annexb_epb(bytes(data)):
@@ -957,92 +959,14 @@ def decode_hevc_keyframe_yuv(data: bytes):
             or sps["bit_depth_c"] != sps["bit_depth"]:
         raise NotImplementedError(
             "HEVC non-4:2:0 or >10-bit streams not bundled")
-    ctb_log2 = sps["ctb_log2"]
-    ctb = 1 << ctb_log2
-    # pure-PCM fast path only for our own encoder's stream shape
-    # (CTB-sized PCM CUs, CTB-aligned geometry); everything else —
-    # i.e. every real-world entropy-coded stream — goes through the
-    # full Main-intra decoder in kernels/hevc_intra.py
-    pcm_fast = (
-        sps["pcm"]
-        and sps["bit_depth"] == 8
-        and sps["pcm"]["bit_depth"] == 8
-        and sps["pcm"]["bit_depth_c"] == 8
-        and sps["pcm"]["log2_min"] == ctb_log2
-        and sps["pcm"]["log2_max"] == ctb_log2
-        and sps["min_cb_log2"] < ctb_log2
-        and not pps["transquant_bypass"]
-        and not pps["cu_qp_delta"]
-        and not pps["entropy_sync"]
-        and not sps["sao"]
-        and sps["pic_w"] % ctb == 0
-        and sps["pic_h"] % ctb == 0
-    )
-    if not pcm_fast:
-        from ragflow_ocr_spark.kernels import hevc_intra
-
-        yp, up, vp = hevc_intra.decode_intra_au(
-            sps, pps, slices, _parse_slice_header)
-        if sps["bit_depth"] > 8:
-            # keep the high byte, the repo's 16-bit-PNG convention
-            sh = sps["bit_depth"] - 8
-            yp = (yp >> sh).astype(np.uint8)
-            up = (up >> sh).astype(np.uint8)
-            vp = (vp >> sh).astype(np.uint8)
-        w, h = sps["width"], sps["height"]
-        return (yp[:h, :w], up[:(h + 1) // 2, :(w + 1) // 2],
-                vp[:(h + 1) // 2, :(w + 1) // 2])
-    w_ctbs = (sps["pic_w"] + ctb - 1) // ctb
-    h_ctbs = (sps["pic_h"] + ctb - 1) // ctb
-    n_ctbs = w_ctbs * h_ctbs
-    yp = np.zeros((h_ctbs * ctb, w_ctbs * ctb), np.uint8)
-    up = np.zeros((h_ctbs * ctb // 2, w_ctbs * ctb // 2), np.uint8)
-    vp = np.zeros_like(up)
-    seen = np.zeros(n_ctbs, bool)
-    half = ctb // 2
-    for nal_type, rbsp, _epb in slices:
-        r = _BitReader(rbsp)
-        hdr = _parse_slice_header(r, nal_type, sps, pps)
-        dec = _CabacDecoder(r)
-        split_ctx = _ctx_init(_SPLIT_CU_INIT_I, hdr["qp"])
-        addr = hdr["addr"]
-        while True:
-            if addr >= n_ctbs:
-                raise ValueError("HEVC CTB address out of range")
-            if seen[addr]:
-                raise ValueError("HEVC slices overlap")
-            if dec.decode_decision(split_ctx) \
-                    or not dec.decode_terminate():  # split / !pcm_flag
-                # not the pure-PCM shape after all: a foreign stream
-                # with PCM-capable SPS but entropy-coded content —
-                # restart through the full Main-intra decoder
-                from ragflow_ocr_spark.kernels import hevc_intra
-
-                yp2, up2, vp2 = hevc_intra.decode_intra_au(
-                    sps, pps, slices, _parse_slice_header)
-                w, h = sps["width"], sps["height"]
-                return (yp2[:h, :w], up2[:(h + 1) // 2, :(w + 1) // 2],
-                        vp2[:(h + 1) // 2, :(w + 1) // 2])
-            r.byte_align()
-            cy, cx = divmod(addr, w_ctbs)
-            luma = np.frombuffer(
-                r.bytes_raw(ctb * ctb), np.uint8).reshape(ctb, ctb)
-            cb = np.frombuffer(
-                r.bytes_raw(half * half), np.uint8).reshape(half, half)
-            cr = np.frombuffer(
-                r.bytes_raw(half * half), np.uint8).reshape(half, half)
-            yp[cy * ctb:(cy + 1) * ctb, cx * ctb:(cx + 1) * ctb] = luma
-            up[cy * half:(cy + 1) * half, cx * half:(cx + 1) * half] = cb
-            vp[cy * half:(cy + 1) * half, cx * half:(cx + 1) * half] = cr
-            seen[addr] = True
-            addr += 1
-            dec.init_engine()  # spec 9.3.1: re-init after pcm_sample
-            if dec.decode_terminate():  # end_of_slice_segment_flag
-                break
-            if addr >= n_ctbs:
-                raise ValueError("HEVC slice ran past the last CTB")
-    if not seen.all():
-        raise ValueError("HEVC slices do not cover the frame")
+    yp, up, vp = hevc_intra.decode_intra_au(
+        sps, pps, slices, _parse_slice_header)
+    if sps["bit_depth"] > 8:
+        # keep the high byte, the repo's 16-bit-PNG convention
+        sh = sps["bit_depth"] - 8
+        yp = (yp >> sh).astype(np.uint8)
+        up = (up >> sh).astype(np.uint8)
+        vp = (vp >> sh).astype(np.uint8)
     w, h = sps["width"], sps["height"]
     return (yp[:h, :w], up[:(h + 1) // 2, :(w + 1) // 2],
             vp[:(h + 1) // 2, :(w + 1) // 2])

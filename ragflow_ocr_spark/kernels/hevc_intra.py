@@ -1,6 +1,6 @@
 """HEVC Main-profile INTRA slice decoder (ITU-T H.265 clauses 7.3.8,
-8.4, 8.6, 8.7, 9.3) — the entropy-coded path the PCM keyframe layer
-(kernels/hevc.py) names as its seam.
+8.4, 8.6, 8.7, 9.3) — the one picture decoder of the keyframe layer
+(kernels/hevc.py), for PCM and entropy-coded coding units alike.
 
 Scope: I slices, 4:2:0, 8-bit, no tiles, no scaling lists — the shape
 every x265/libheif still image (HEIC) and hvc1 mp4 keyframe uses.

@@ -5,9 +5,10 @@ This is the kernel-level equivalent of ``OCR.__call__``
 extracted lines out. It is pure Python/numpy; the Spark layer feeds it
 Arrow batches.
 
-``decode_payload_pages`` maps a payload to its page images (raster
-kinds through ``pngcodec.decode_image``, PDFs through one
-``pdf.pdf_to_images`` parse). Each page then runs the phase functions
+``decode_payload_pages`` maps a payload to its page images through one
+decoder per kind: raster kinds through ``pngcodec.decode_image``, PDFs
+through one ``pdf.pdf_to_images`` parse; what that decoder rejects is a
+decode failure. Each page then runs the phase functions
 ``detect`` → ``crop_boxes`` → ``recognize_crops`` → ``assemble``;
 ``ocr_image`` chains them, and the staged detect/recognize API
 (spark/stages.py) calls the same phases.
@@ -191,11 +192,9 @@ def decode_payload_pages(
 ) -> tuple[str, list[np.ndarray] | None]:
     """(kind, page images or None): the one payload → pages route of
     both OCR surfaces. A raster kind decodes to one page through
-    ``pngcodec.decode_image``. A PDF is parsed once by
-    ``pdf.pdf_to_images`` (up to ``max_pages``); if that parse fails,
-    the first bare PNG embedded in the bytes is the page (early fixture
-    PDFs stored one in a stream object). None = decode failure or a
-    non-image kind; never raises (per-row error contract)."""
+    ``pngcodec.decode_image``; a PDF is parsed once by
+    ``pdf.pdf_to_images`` (up to ``max_pages``). None = decode failure
+    or a non-image kind; never raises (per-row error contract)."""
     kind = pngcodec.sniff_payload(data)
     if kind == "pdf":
         from ragflow_ocr_spark.kernels import pdf
@@ -205,13 +204,6 @@ def decode_payload_pages(
         except Exception:
             # a malformed PDF is a per-row error, never a task failure:
             # the parser can surface Index/Key/ValueError on crafted input
-            pass
-        i = data.find(pngcodec.PNG_MAGIC)
-        if i < 0:
-            return kind, None
-        try:
-            return kind, [pngcodec.decode_png(data[i:])]
-        except ValueError:
             return kind, None
     try:
         return kind, [pngcodec.decode_image(data)[1]]

@@ -523,50 +523,9 @@ def pdf_to_images(data: bytes, max_pages: int = 16) -> list[np.ndarray]:
     ]
     if not pages:
         raise ValueError("PDF has no /Type /Page object")
-    imgs = [_page_image(objs, page) for _num, page in pages[:max_pages]]
-    # Salvage route for content-less documents: some writers (broken
-    # generators, and this repo's own early fixtures) emit page objects
-    # with NO /Contents key while the page scan sits in an orphan image
-    # stream nothing references. The gate is the structural shape —
-    # every page object lacks /Contents — NOT "all pages rendered
-    # blank": a legitimately blank PDF whose pages do declare /Contents
-    # keeps its blank pages ('empty') even if an unreferenced
-    # thumbnail/logo stream happens to be decodable elsewhere in the
-    # file. A contentless file with no image streams also stays blank.
-    if all("Contents" not in page for _num, page in pages):
-        salvaged: list[np.ndarray] = []
-        for _num, (d, raw) in sorted(objs.items()):
-            if raw is None or not isinstance(d, dict):
-                continue
-            if len(salvaged) >= max_pages:
-                break
-            if d.get("Subtype") == ("name", "Image"):
-                try:
-                    salvaged.append(_xobject_image(objs, d, raw))
-                    continue
-                except (ValueError, NotImplementedError):
-                    pass
-            try:
-                body = _decode_stream(objs, d, raw)
-            except ValueError:
-                continue
-            img = _decode_bare_image(body)
-            if img is not None:
-                salvaged.append(img)
-        if salvaged:
-            return salvaged[:max_pages]
-    return imgs
-
-
-def _decode_bare_image(body: bytes) -> np.ndarray | None:
-    """Stream bytes that ARE a standalone image file → decoded image
-    (or None), through the raster router ``pngcodec.decode_image``."""
-    from ragflow_ocr_spark.kernels import pngcodec
-
-    try:
-        return pngcodec.decode_image(body)[1]
-    except (ValueError, NotImplementedError):
-        return None
+    # a page without /Contents renders blank (ISO 32000-1 §7.7.3.3); an
+    # image stream no page references is not a page
+    return [_page_image(objs, page) for _num, page in pages[:max_pages]]
 
 
 def _page_image(objs, page: dict) -> np.ndarray:

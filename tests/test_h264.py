@@ -6,7 +6,7 @@ seam of the demuxers (NotImplementedError, a per-row error in the
 frame stage). The Exp-Golomb coder, emulation prevention and the
 BT.601 YUV<->RGB maps are the same in both standards; they live in
 kernels/hevc.py and are pinned here against hand values and byte-exact
-YUV round trips through the HEVC PCM layer.
+YUV round trips through HEVC PCM streams.
 """
 
 from __future__ import annotations

@@ -119,9 +119,9 @@ def test_ctx_init_matches_spec_derivation():
 
 def test_entropy_coded_stub_raises_loudly():
     """A split_cu_flag=1 stream whose payload ends right after the
-    split bit routes to the full intra decoder (kernels/hevc_intra)
-    and must fail LOUDLY on the truncated syntax, not return
-    garbage. (Well-formed entropy-coded streams decode for real —
+    split bit goes, like every stream, through the intra decoder
+    (kernels/hevc_intra) and must fail LOUDLY on the truncated
+    syntax, not return garbage. (Well-formed entropy-coded streams decode for real —
     tests/test_hevc_intra.py.)"""
     from ragflow_ocr_spark.kernels.hevc import _BitWriter
 
@@ -139,7 +139,7 @@ def test_entropy_coded_stub_raises_loudly():
     bw.byte_align_zero()
     enc = hevc._CabacEncoder(bw)
     ctx = hevc._ctx_init(139, 26)
-    enc.encode_decision(ctx, 1)  # split -> beyond the PCM layer
+    enc.encode_decision(ctx, 1)  # split=1, then the slice ends
     enc.encode_terminate(1)
     enc.flush()
     bw.byte_align_zero()

@@ -478,10 +478,9 @@ def test_decode_pixel_ceiling():
 def test_staged_detect_agrees_with_extract_on_codecs():
     """detect_stage and the unified extract stage must support the
     same formats — a JPEG/BMP/TIFF page gets blocks, not skip — and
-    every image path (the raster router, the OCR payload route and an
-    image stream inside a PDF) decodes every raster kind to the same
-    array."""
-    from ragflow_ocr_spark.kernels import heif, pdf, vp8, webp
+    both image paths (the raster router and the OCR payload route)
+    decode every raster kind to the same array."""
+    from ragflow_ocr_spark.kernels import heif, vp8, webp
     from ragflow_ocr_spark.kernels.ocr_pipeline import decode_payload_pages
 
     img, _ = font5x7.render_page(["AGREEMENT ROW"], 480, 96, 2)
@@ -507,9 +506,6 @@ def test_staged_detect_agrees_with_extract_on_codecs():
         route_kind, pages = decode_payload_pages(data)
         assert route_kind == kind and pages is not None and len(pages) == 1, name
         assert np.array_equal(pages[0], routed), name
-        embedded = pdf._decode_bare_image(data)
-        assert embedded is not None, name
-        assert np.array_equal(embedded, routed), name
 
 
 def test_animated_gif_frames_roundtrip_and_compositing():

@@ -273,10 +273,10 @@ def test_ocr_null_guard():
 
 
 def test_pdf_route():
+    from ragflow_ocr_spark.kernels.pdf import build_image_pdf
+
     img, drawn = font5x7.render_page(["PDF PAGE ONE"], 960, 96, 2)
-    png = pngcodec.encode_png(img)
-    pdf = b"%PDF-1.4\nstream\n" + png + b"\nendstream\n%%EOF"
-    r = extract_payload(pdf)
+    r = extract_payload(build_image_pdf(img))
     assert r.status == "ok"
     assert r.text == "\n".join(drawn)
 

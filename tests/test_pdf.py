@@ -42,24 +42,22 @@ def test_pdf_route_through_payload_router():
     assert (r.status, r.text) == ("ok", "ROUTED VIA SNIFF 7")
 
 
-def test_legacy_embedded_png_fixture_still_decodes():
-    """Early fixture PDFs embedded a bare PNG stream with no page
-    tree; the fallback path must keep them working."""
+def test_pdf_holding_a_bare_png_is_a_decode_error():
+    """A %PDF file with no page tree, only a stream holding a bare PNG
+    file (no PDF filter produces one), fails the structured parse and
+    is error:decode: the PNG is not scanned for and decoded."""
     from ragflow_ocr_spark.kernels import pngcodec
 
-    img, drawn = font5x7.render_page(["LEGACY PDF PAGE"], 480, 96, 2)
+    img, _ = font5x7.render_page(["BARE PNG STREAM"], 480, 96, 2)
     png = pngcodec.encode_png(img)
-    legacy = b"%PDF-1.4\nstream\n" + png + b"\nendstream\n%%EOF"
-    r = extract_payload(legacy)
-    assert (r.status, r.text) == ("ok", "\n".join(drawn))
+    bare = b"%PDF-1.4\nstream\n" + png + b"\nendstream\n%%EOF"
+    r = extract_payload(bare)
+    assert (r.status, r.text) == ("error:decode", None)
 
 
 def test_failed_pdf_parse_is_not_repeated(monkeypatch):
-    """A PDF whose structured parse fails is parsed once: the route
-    goes straight to the embedded-PNG scan, and without a PNG the row
-    stays error:decode."""
-    from ragflow_ocr_spark.kernels import pngcodec
-
+    """A PDF whose structured parse fails is parsed once and the row
+    is error:decode."""
     calls = []
     parse = pdf.pdf_to_images
 
@@ -68,12 +66,6 @@ def test_failed_pdf_parse_is_not_repeated(monkeypatch):
         return parse(*a, **kw)
 
     monkeypatch.setattr(pdf, "pdf_to_images", counting)
-    img, drawn = font5x7.render_page(["PARSED ONCE"], 480, 96, 2)
-    legacy = b"%PDF-1.4\nstream\n" + pngcodec.encode_png(img) + b"\nendstream\n%%EOF"
-    r = extract_payload(legacy)
-    assert (r.status, r.text) == ("ok", "\n".join(drawn))
-    assert len(calls) == 1
-    calls.clear()
     r = extract_payload(b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog >>\nendobj\n%%EOF")
     assert r.status == "error:decode"
     assert len(calls) == 1
@@ -254,15 +246,13 @@ def test_multipage_all_dropped_propagates_empty_dropped():
     assert r.text == ""
 
 
-def test_contentless_pdf_salvages_orphan_image_stream():
-    """A page object with no /Contents plus an orphan image stream
-    (broken generators; this repo's own early fixtures) must recover
-    the scan instead of returning a blank page — and a genuinely
-    blank PDF must NOT invent content."""
+def test_contentless_pdf_page_is_blank_despite_orphan_image():
+    """A page object with no /Contents is an empty page (ISO 32000-1
+    §7.7.3.3), even when an image stream that no page references sits
+    in the file: the row is empty, with or without that stream."""
     from ragflow_ocr_spark.kernels import pngcodec
-    from ragflow_ocr_spark.kernels.ocr_pipeline import extract_payload
 
-    img, drawn = font5x7.render_page(["ORPHAN SCAN 11"], 448, 96, 2)
+    img, _ = font5x7.render_page(["ORPHAN SCAN 11"], 448, 96, 2)
     png = pngcodec.encode_png(img)
     orphan = (
         b"%PDF-1.4\n"
@@ -273,7 +263,7 @@ def test_contentless_pdf_salvages_orphan_image_stream():
         b"trailer\n<< >>\n%%EOF"
     )
     r = extract_payload(orphan)
-    assert (r.status, r.text) == ("ok", "\n".join(drawn))
+    assert (r.status, r.text) == ("empty", "")
     blank = (
         b"%PDF-1.4\n1 0 obj\n<< /Type /Page >>\nendobj\ntrailer\n<< >>\n%%EOF"
     )

@@ -224,3 +224,75 @@ def test_png_subbyte_fuzz_value_error_only(tail, depth):
         assert out.dtype == np.uint8
     except ValueError:
         pass
+
+
+# ---------------------------------------------------- seeded mutants
+# The sniff window: mutants keep these leading bytes, so each one stays
+# on the decode route of the kind it was made from.
+_SNIFF_BYTES = 16
+_MUTANT_STATUSES = {"ok", "empty", "empty:dropped", "error:decode"}
+
+
+def _route_seeds() -> dict[str, bytes]:
+    """One small payload per kind whose decode route is a PDF parse or
+    the HEVC intra decoder, plus a JP2 (the other coded raster route)."""
+    from pathlib import Path
+
+    from ragflow_ocr_spark.kernels import heif, jpeg2000, pdf
+
+    page, _ = font5x7.render_page(["MUTANT SEED 11"], 256, 64, 2)
+    return {
+        "image_pdf": pdf.build_image_pdf(page),
+        "text_pdf": pdf.build_text_pdf(["MUTANT SEED 11"], media=(240, 80), margin=8),
+        "pcm_heic": heif.encode_heic(page),
+        "grid_heic": heif.encode_heic_grid(page, 2, 2),
+        "cabac_heic": (Path(__file__).parent / "fixtures" / "heic_cabac_c.heic").read_bytes(),
+        # the text line alone: JP2 decode time grows with the pixels
+        # and would otherwise take half of this test's time
+        "jp2": jpeg2000.encode_jp2(page[12:50, 12:200]),
+    }
+
+
+def _mutants(seed: bytes, rng: np.random.Generator, n: int) -> list[bytes]:
+    """n mutants of ``seed``: even draws flip 1-4 bytes, odd draws
+    truncate; the sniff window is left alone."""
+    out = []
+    for k in range(n):
+        if k % 2:
+            out.append(seed[: int(rng.integers(_SNIFF_BYTES, len(seed)))])
+            continue
+        m = bytearray(seed)
+        for pos in rng.integers(_SNIFF_BYTES, len(m), size=int(rng.integers(1, 5))):
+            m[pos] ^= int(rng.integers(1, 256))
+        out.append(bytes(m))
+    return out
+
+
+def test_seeded_mutants_of_pdf_and_hevc_routes_are_row_statuses(spark):
+    """Byte-flip and truncation mutants (rng seed 11, 100 per kind) of
+    image and text PDFs, PCM, grid and CABAC HEICs and a JP2: through
+    ``stages._extract_one`` none raises and each is a row status of its
+    own route; through ``extract()`` on Spark every url comes back once
+    with a status. Arithmetic-coded JPEG is left out: some of its
+    mutants decode for seconds each (ROADMAP item 2)."""
+    import pandas as pd
+
+    from ragflow_ocr_spark.config import DEFAULT
+    from ragflow_ocr_spark.spark.pipeline import extract
+    from ragflow_ocr_spark.spark.stages import PAGES_SCHEMA, _extract_one, schema_columns
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for kind, seed in _route_seeds().items():
+        assert _extract_one(seed, DEFAULT)[2] == "ok", kind
+        for k, data in enumerate(_mutants(seed, rng, 100)):
+            text, n_blocks, status, engine = _extract_one(data, DEFAULT)
+            assert engine == "ocr" and status in _MUTANT_STATUSES, (kind, k, engine, status)
+            assert (text is None) == status.startswith("error"), (kind, k, status)
+            rows.append((f"{kind}/{k}", None, data, None, "en"))
+
+    columns = [name for name, _ in schema_columns(PAGES_SCHEMA)]
+    pages = spark.createDataFrame(pd.DataFrame(rows, columns=columns), PAGES_SCHEMA)
+    got = extract(pages).select("url", "status").collect()
+    assert sorted(r.url for r in got) == sorted(r[0] for r in rows)
+    assert all(r.status for r in got)
