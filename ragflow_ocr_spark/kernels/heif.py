@@ -30,26 +30,10 @@ import struct
 import numpy as np
 
 from ragflow_ocr_spark.kernels import hevc
+from ragflow_ocr_spark.kernels.pngcodec import iso_boxes, sniff_payload
 
 MAX_HEIF_BYTES = 64 << 20  # per-row payload bound
 MAX_HEIF_PIXELS = hevc.MAX_HEVC_PIXELS  # grid output budget
-
-
-def _boxes(data: bytes, lo: int, hi: int):
-    p = lo
-    while p + 8 <= hi:
-        (size,) = struct.unpack_from(">I", data, p)
-        tag = data[p + 4:p + 8]
-        body = p + 8
-        if size == 1:
-            if p + 16 > hi:
-                raise ValueError("truncated heif largesize box")
-            (size,) = struct.unpack_from(">Q", data, p + 8)
-            body = p + 16
-        if size < 8 or p + size > hi:
-            raise ValueError("bad heif box size")
-        yield tag, body, p + size
-        p += size
 
 
 def _fullbox(data: bytes, body: int) -> tuple[int, int, int]:
@@ -59,17 +43,6 @@ def _fullbox(data: bytes, body: int) -> tuple[int, int, int]:
     v = data[body]
     flags = int.from_bytes(data[body + 1:body + 4], "big")
     return v, flags, body + 4
-
-
-def sniff_heif_brand(data: bytes) -> str | None:
-    """'heic' / 'avif' / None from the ftyp major brand."""
-    if len(data) >= 12 and data[4:8] == b"ftyp":
-        brand = data[8:12]
-        if brand in (b"heic", b"heix", b"mif1", b"msf1", b"hevc"):
-            return "heic"
-        if brand in (b"avif", b"avis"):
-            return "avif"
-    return None
 
 
 def _need(p: int, n: int, end: int, what: str) -> None:
@@ -137,7 +110,7 @@ def _parse_iinf(data: bytes, body: int, end: int) -> dict[int, bytes]:
         p += 4
     types: dict[int, bytes] = {}
     seen = 0
-    for tag, b, e in _boxes(data, p, end):
+    for tag, b, e in iso_boxes(data, p, end):
         if tag != b"infe":
             continue
         iv, _f, q = _fullbox(data, b)
@@ -187,7 +160,7 @@ def _parse_iref(data: bytes, body: int, end: int) -> dict[tuple[bytes, int], lis
     wid = 2 if v == 0 else 4
     fmt = ">H" if v == 0 else ">I"
     refs: dict[tuple[bytes, int], list[int]] = {}
-    for tag, b, e in _boxes(data, p, end):
+    for tag, b, e in iso_boxes(data, p, end):
         q = b
         _need(q, wid + 2, e, "iref")
         (from_id,) = struct.unpack_from(fmt, data, q)
@@ -213,10 +186,10 @@ def parse_heif(data: bytes) -> dict:
     data = bytes(data)
     if len(data) > MAX_HEIF_BYTES:
         raise ValueError("heif payload exceeds the per-row budget")
-    if sniff_heif_brand(data) is None:
+    if sniff_payload(data) not in ("heic", "avif"):
         raise ValueError("not a HEIF/AVIF file (ftyp brand)")
     meta = None
-    for tag, body, end in _boxes(data, 0, len(data)):
+    for tag, body, end in iso_boxes(data, 0, len(data)):
         if tag == b"meta":
             meta = (body, end)
             break
@@ -230,7 +203,7 @@ def parse_heif(data: bytes) -> dict:
     ipma: dict[int, list[int]] = {}
     refs: dict[tuple[bytes, int], list[int]] = {}
     idat = b""
-    for tag, body, end in _boxes(data, p, meta[1]):
+    for tag, body, end in iso_boxes(data, p, meta[1]):
         if tag == b"idat":
             idat = data[body:end]
         elif tag == b"hdlr":
@@ -249,9 +222,9 @@ def parse_heif(data: bytes) -> dict:
         elif tag == b"iref":
             refs = _parse_iref(data, body, end)
         elif tag == b"iprp":
-            for t2, b2, e2 in _boxes(data, body, end):
+            for t2, b2, e2 in iso_boxes(data, body, end):
                 if t2 == b"ipco":
-                    for t3, b3, e3 in _boxes(data, b2, e2):
+                    for t3, b3, e3 in iso_boxes(data, b2, e2):
                         props.append((t3, data[b3:e3]))
                 elif t2 == b"ipma":
                     ipma = _parse_ipma(data, b2, e2)

@@ -50,7 +50,9 @@ segments, tiles, scaling lists, >10-bit / non-4:2:0.
 
 This module also holds the bit-level helpers the HEVC, HEVC-intra
 and HEIF layers share: the RBSP bit reader/writer with Exp-Golomb
-codes, emulation-prevention escaping, and the BT.601 YUV<->RGB maps.
+codes, the one Annex-B splitter (``split_annexb``) and
+emulation-prevention stripper (``_strip_epb_pos``), and the BT.601
+YUV<->RGB maps (the VP8 route uses ``_yuv_to_rgb`` too).
 
 Error contract: ValueError on malformed input, NotImplementedError on
 the named seam — the Spark media stages map both to per-row error
@@ -160,23 +162,6 @@ class _BitWriter:
 
 
 # ----------------------------------------------------------------- NAL
-def _strip_epb(data: bytes) -> bytes:
-    """EBSP -> RBSP: drop emulation_prevention_three_byte."""
-    if b"\x00\x00\x03" not in data:
-        return data
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        if i + 2 < n and data[i] == 0 and data[i + 1] == 0 \
-                and data[i + 2] == 3:
-            out += b"\x00\x00"
-            i += 3
-        else:
-            out.append(data[i])
-            i += 1
-    return bytes(out)
-
-
 def _add_epb(rbsp: bytes) -> bytes:
     """RBSP -> EBSP: insert 0x03 after any 00 00 before 00/01/02/03."""
     out = bytearray()
@@ -191,8 +176,8 @@ def _add_epb(rbsp: bytes) -> bytes:
 
 
 def _yuv_to_rgb(y: np.ndarray, u: np.ndarray, v: np.ndarray):
-    """BT.601 studio-swing integer conversion (same constants as the
-    VP8 route, kernels/vp8.py::_yuv_to_rgb) with nearest upsample."""
+    """BT.601 studio-swing integer conversion with nearest chroma
+    upsample: the one YUV->RGB map, which the VP8 route calls too."""
     h, w = y.shape
     yy = y.astype(np.int32)
     uu = np.repeat(np.repeat(u.astype(np.int32), 2, 0), 2, 1)[:h, :w]
@@ -473,29 +458,6 @@ def _nal(nal_type: int, rbsp: bytes) -> bytes:
     return _nal_hdr(nal_type) + _add_epb(rbsp)
 
 
-def iter_nals_annexb(data: bytes):
-    """Yield (nal_type, rbsp) from an HEVC Annex-B stream."""
-    n = len(data)
-    i = data.find(b"\x00\x00\x01")
-    if i < 0:
-        raise ValueError("no Annex-B start code")
-    while i >= 0:
-        start = i + 3
-        j = data.find(b"\x00\x00\x01", start)
-        end = n if j < 0 else j
-        while end > start and data[end - 1] == 0:
-            end -= 1
-        if end > start + 1:
-            h0, h1 = data[start], data[start + 1]
-            if h0 & 0x80:
-                raise ValueError("forbidden_zero_bit set in NAL header")
-            if (h0 & 1) or (h1 >> 3):
-                raise NotImplementedError(
-                    "HEVC layered (nuh_layer_id>0) streams not bundled")
-            yield (h0 >> 1) & 0x3F, _strip_epb(data[start + 2:end])
-        i = j
-
-
 def _strip_epb_pos(data: bytes):
     """EBSP -> (RBSP, drop positions). Each drop position q means the
     raw stream carried an emulation_prevention_three_byte after RBSP
@@ -517,30 +479,6 @@ def _strip_epb_pos(data: bytes):
             out.append(data[i])
             i += 1
     return bytes(out), tuple(pos)
-
-
-def _iter_nals_annexb_epb(data: bytes):
-    """Like iter_nals_annexb but yields (nal_type, rbsp, epb_pos)."""
-    n = len(data)
-    i = data.find(b"\x00\x00\x01")
-    if i < 0:
-        raise ValueError("no Annex-B start code")
-    while i >= 0:
-        start = i + 3
-        j = data.find(b"\x00\x00\x01", start)
-        end = n if j < 0 else j
-        while end > start and data[end - 1] == 0:
-            end -= 1
-        if end > start + 1:
-            h0, h1 = data[start], data[start + 1]
-            if h0 & 0x80:
-                raise ValueError("forbidden_zero_bit set in NAL header")
-            if (h0 & 1) or (h1 >> 3):
-                raise NotImplementedError(
-                    "HEVC layered (nuh_layer_id>0) streams not bundled")
-            rbsp, pos = _strip_epb_pos(data[start + 2:end])
-            yield (h0 >> 1) & 0x3F, rbsp, pos
-        i = j
 
 
 def sniff_annexb_hevc(data: bytes) -> bool:
@@ -940,7 +878,16 @@ def decode_hevc_keyframe_yuv(data: bytes):
 
     sps = pps = None
     slices = []
-    for nal_type, rbsp, epb_pos in _iter_nals_annexb_epb(bytes(data)):
+    for nal in split_annexb(bytes(data)):
+        if len(nal) < 2:
+            continue
+        if nal[0] & 0x80:
+            raise ValueError("forbidden_zero_bit set in NAL header")
+        if (nal[0] & 1) or (nal[1] >> 3):
+            raise NotImplementedError(
+                "HEVC layered (nuh_layer_id>0) streams not bundled")
+        nal_type = (nal[0] >> 1) & 0x3F
+        rbsp, epb_pos = _strip_epb_pos(nal[2:])
         if nal_type == NAL_SPS:
             sps = parse_sps(rbsp)
         elif nal_type == NAL_PPS:

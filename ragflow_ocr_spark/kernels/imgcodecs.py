@@ -648,34 +648,50 @@ def encode_gif(img: np.ndarray, interlace: bool = False) -> bytes:
     return bytes(out)
 
 
-@codec_errors
-def decode_gif(data: bytes) -> np.ndarray:
-    """GIF87a/89a first frame → HxW (grayscale palette) or HxWx3 uint8.
-    Handles global/local color tables, interlacing, and extension
-    blocks; animation frames beyond the first are ignored."""
+def _gif_screen(data: bytes):
+    """Logical screen descriptor → (width, height, background index,
+    global color table or None, offset of the first block)."""
     if data[:6] not in GIF_MAGICS:
         raise ValueError("not a GIF")
-    sw, sh, flags, _bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
+    sw, sh, flags, bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
     pos = 13
     global_pal = None
     if flags & 0x80:
         n = 2 << (flags & 7)
         global_pal = np.frombuffer(data, np.uint8, n * 3, pos).reshape(n, 3)
         pos += n * 3
+    return sw, sh, bg, global_pal, pos
+
+
+def _gif_images(data: bytes, pos: int, global_pal):
+    """The one GIF block reader: yield (left, top, idx, pal,
+    transparent, disposal) for each image from ``pos`` on, where
+    ``idx`` is the image's deinterlaced (h, w) index plane, ``pal`` the
+    color table it indexes, and the last two come from the Graphic
+    Control Extension before the image (-1 and 0 without one). An
+    image over the pixel budget raises before its LZW data is
+    decoded."""
+    transparent = -1
+    disposal = 0
     while pos < len(data):
         block = data[pos]
         pos += 1
         if block == 0x3B:  # trailer
-            break
+            return
         if block == 0x21:  # extension: label + sub-blocks
+            label = data[pos]
             pos += 1
+            if label == 0xF9 and pos < len(data) and data[pos] == 4:
+                gce_flags = data[pos + 1]
+                disposal = (gce_flags >> 2) & 7
+                transparent = data[pos + 4] if gce_flags & 1 else -1
             while pos < len(data) and data[pos] != 0:
                 pos += 1 + data[pos]
             pos += 1
             continue
         if block != 0x2C:
             raise ValueError(f"bad GIF block 0x{block:02x}")
-        _left, _top, w, h, iflags = struct.unpack_from("<HHHHB", data, pos)
+        left, top, w, h, iflags = struct.unpack_from("<HHHHB", data, pos)
         pos += 9
         if not (0 < w and 0 < h and w * h <= MAX_DECODE_PIXELS):
             raise ValueError("bad GIF dimensions")
@@ -697,6 +713,7 @@ def decode_gif(data: bytes) -> np.ndarray:
             ln = data[pos]
             chunks.append(data[pos + 1 : pos + 1 + ln])
             pos += 1 + ln
+        pos += 1  # sub-block terminator
         idx_bytes = _lzw_decode(min_code, b"".join(chunks), w * h)
         if len(idx_bytes) < w * h:
             raise ValueError("short GIF pixel data")
@@ -710,6 +727,19 @@ def decode_gif(data: bytes) -> np.ndarray:
             un = np.empty_like(idx)
             un[rows] = idx
             idx = un
+        yield left, top, idx, pal, transparent, disposal
+        # GIF89a: a GCE governs only the single image that follows it
+        transparent = -1
+        disposal = 0
+
+
+@codec_errors
+def decode_gif(data: bytes) -> np.ndarray:
+    """GIF87a/89a first image → HxW (grayscale palette) or HxWx3 uint8,
+    at its own size and uncomposited; the blocks after it are not
+    read (decode_gif_frames composites every image)."""
+    _sw, _sh, _bg, global_pal, pos = _gif_screen(data)
+    for _left, _top, idx, pal, _t, _d in _gif_images(data, pos, global_pal):
         rgb = pal[idx]
         if (rgb[..., 0] == rgb[..., 1]).all() and (rgb[..., 1] == rgb[..., 2]).all():
             return np.ascontiguousarray(rgb[..., 0])
@@ -751,76 +781,18 @@ def decode_gif_frames(data: bytes) -> list[np.ndarray]:
     index skipped, disposal 'restore to background' honored; 'restore
     previous' treated as leave — rare in crawl GIFs). Frames come back
     gray when globally grayscale, else RGB."""
-    if data[:6] not in GIF_MAGICS:
-        raise ValueError("not a GIF")
-    sw, sh, flags, bg, _aspect = struct.unpack_from("<HHBBB", data, 6)
+    sw, sh, bg, global_pal, pos = _gif_screen(data)
     if not (0 < sw and 0 < sh and sw * sh <= MAX_DECODE_PIXELS):
         raise ValueError("bad GIF screen size")
-    pos = 13
-    global_pal = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        global_pal = np.frombuffer(data, np.uint8, n * 3, pos).reshape(n, 3)
-        pos += n * 3
     canvas = np.zeros((sh, sw, 3), np.uint8)
     if global_pal is not None and bg < len(global_pal):
         canvas[:] = global_pal[bg]
     frames: list[np.ndarray] = []
-    transparent = -1
-    disposal = 0
-    while pos < len(data):
-        block = data[pos]
-        pos += 1
-        if block == 0x3B:
-            break
-        if block == 0x21:  # extension
-            label = data[pos]
-            pos += 1
-            if label == 0xF9 and pos < len(data) and data[pos] == 4:
-                gce_flags = data[pos + 1]
-                disposal = (gce_flags >> 2) & 7
-                transparent = data[pos + 4] if gce_flags & 1 else -1
-            while pos < len(data) and data[pos] != 0:
-                pos += 1 + data[pos]
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"bad GIF block 0x{block:02x}")
-        left, top, w, h, iflags = struct.unpack_from("<HHHHB", data, pos)
-        pos += 9
-        if left + w > sw or top + h > sh or w == 0 or h == 0:
+    for left, top, idx, pal, transparent, disposal in _gif_images(
+            data, pos, global_pal):
+        h, w = idx.shape
+        if left + w > sw or top + h > sh:
             raise ValueError("GIF frame outside logical screen")
-        pal = global_pal
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            pal = np.frombuffer(data, np.uint8, n * 3, pos).reshape(n, 3)
-            pos += n * 3
-        if pal is None:
-            raise ValueError("GIF image without a color table")
-        min_code = data[pos]
-        pos += 1
-        if not (2 <= min_code <= 8):
-            raise ValueError("bad GIF LZW code size")
-        chunks = []
-        while pos < len(data) and data[pos] != 0:
-            ln = data[pos]
-            chunks.append(data[pos + 1 : pos + 1 + ln])
-            pos += 1 + ln
-        pos += 1  # sub-block terminator
-        idx_bytes = _lzw_decode(min_code, b"".join(chunks), w * h)
-        if len(idx_bytes) < w * h:
-            raise ValueError("short GIF pixel data")
-        idx = np.frombuffer(bytes(idx_bytes[: w * h]), np.uint8).reshape(h, w)
-        if idx.max() >= len(pal):
-            raise ValueError("GIF index out of palette range")
-        if iflags & 0x40:
-            rows = np.concatenate(
-                [np.arange(0, h, 8), np.arange(4, h, 8),
-                 np.arange(2, h, 4), np.arange(1, h, 2)]
-            )
-            un = np.empty_like(idx)
-            un[rows] = idx
-            idx = un
         region = canvas[top : top + h, left : left + w]
         if transparent >= 0:
             opaque = idx != transparent
@@ -831,9 +803,6 @@ def decode_gif_frames(data: bytes) -> list[np.ndarray]:
         if disposal == 2:  # restore to background
             bg_rgb = pal[bg] if bg < len(pal) else 0
             canvas[top : top + h, left : left + w] = bg_rgb
-        # GIF89a: a GCE governs only the single image that follows it
-        transparent = -1
-        disposal = 0
         if len(frames) * sw * sh > MAX_DECODE_PIXELS:
             raise ValueError("GIF animation exceeds pixel budget")
     if not frames:

@@ -43,6 +43,8 @@ import struct
 
 import numpy as np
 
+from ragflow_ocr_spark.kernels.pngcodec import iso_boxes
+
 MAX_J2K_PIXELS = 1 << 23
 
 # ---------------------------------------------------------------- MQ coder
@@ -1467,23 +1469,9 @@ def _unwrap_jp2(data: bytes) -> bytes:
         return data
     if data[:12] != _JP2_SIG:
         raise ValueError("not a JPEG 2000 payload")
-    pos = 12
-    while pos + 8 <= len(data):
-        lbox = struct.unpack(">I", data[pos:pos + 4])[0]
-        btype = data[pos + 4:pos + 8]
-        hdr = 8
-        if lbox == 1:
-            if pos + 16 > len(data):
-                raise ValueError("truncated JP2 XLBox")
-            lbox = struct.unpack(">Q", data[pos + 8:pos + 16])[0]
-            hdr = 16
-        elif lbox == 0:
-            lbox = len(data) - pos
-        if lbox < hdr or pos + lbox > len(data):
-            raise ValueError("bad JP2 box length")
+    for btype, body, end in iso_boxes(data, 12, len(data)):
         if btype == b"jp2c":
-            return data[pos + hdr:pos + lbox]
-        pos += lbox
+            return data[body:end]
     raise ValueError("JP2 container has no codestream box")
 
 

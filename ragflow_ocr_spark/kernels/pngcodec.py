@@ -361,6 +361,44 @@ def sniff_payload(data: bytes | None) -> str:
     return "html"
 
 
+def riff_chunks(data: bytes, lo: int, hi: int):
+    """Yield (tag, body_start, body_end) for each chunk of the RIFF
+    chunk run in ``data[lo:hi]`` (WebP, WAV, AVI). Bodies are padded
+    to an even length; a chunk whose body runs past ``hi`` raises
+    ValueError."""
+    p = lo
+    while p + 8 <= hi:
+        (size,) = struct.unpack_from("<I", data, p + 4)
+        end = p + 8 + size
+        if end > hi:
+            raise ValueError("truncated RIFF chunk")
+        yield data[p:p + 4], p + 8, end
+        p = end + (size & 1)
+
+
+def iso_boxes(data: bytes, lo: int, hi: int):
+    """Yield (type, body_start, body_end) for each box of the ISO base
+    media box run in ``data[lo:hi]`` (HEIF, mp4, JP2). A size field of
+    1 is followed by a 64-bit size, and a size field of 0 runs the box
+    to ``hi`` (ISO/IEC 14496-12 §4.2, ISO/IEC 15444-1 §I.4). A box
+    shorter than its header or ending past ``hi`` raises ValueError."""
+    p = lo
+    while p + 8 <= hi:
+        (size,) = struct.unpack_from(">I", data, p)
+        body = p + 8
+        if size == 1:
+            if p + 16 > hi:
+                raise ValueError("truncated ISO largesize box")
+            (size,) = struct.unpack_from(">Q", data, p + 8)
+            body = p + 16
+        elif size == 0:
+            size = hi - p
+        if size < body - p or p + size > hi:
+            raise ValueError("bad ISO box size")
+        yield data[p + 4:p + 8], body, p + size
+        p += size
+
+
 RASTER_KINDS = ("png", "jpeg", "gif", "bmp", "tiff", "webp", "jp2", "heic", "avif")
 
 

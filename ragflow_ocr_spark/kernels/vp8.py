@@ -22,8 +22,9 @@ needs:
   above-right-from-above-MB-row quirk for right-edge subblocks (§12),
 - the normal + simple in-loop deblocking filters (§15), and
 - YUV420 → RGB (BT.601 studio swing, nearest-neighbor chroma
-  upsampling; documented divergence from libwebp's fancy upsampler —
-  irrelevant for flat/blocky fixtures, sub-LSB-visible elsewhere).
+  upsampling, through kernels/hevc.py's map; documented divergence
+  from libwebp's fancy upsampler — irrelevant for flat/blocky
+  fixtures, sub-LSB-visible elsewhere).
 
 TABLE PROVENANCE: every constant below — trees, coefficient bands,
 zigzag, quantizer lookups, extra-bit (cat) probabilities, keyframe
@@ -60,6 +61,8 @@ task; larger payloads become per-row errors, never task failures.
 from __future__ import annotations
 
 import numpy as np
+
+from ragflow_ocr_spark.kernels import hevc
 
 # A 4 Mpix ceiling (tighter than VP8L_MAX_PIXELS, whose entropy loop
 # got the round-3 windowed-peek rewrite): covers typical web images,
@@ -1443,23 +1446,12 @@ def _loop_filter(hdr, Y, U, V, mb_rows, mb_cols, segments, ymodes,
 # ---------------------------------------------------------------------------
 
 
-def _yuv_to_rgb(Y, U, V, w, h):
-    """BT.601 studio-swing integer conversion, nearest chroma upsample."""
-    y = Y[1:h + 1, 1:w + 1].astype(np.int32)
-    cw, ch = (w + 1) // 2, (h + 1) // 2
-    u = U[1:ch + 1, 1:cw + 1].astype(np.int32)
-    v = V[1:ch + 1, 1:cw + 1].astype(np.int32)
-    u = np.repeat(np.repeat(u, 2, axis=0), 2, axis=1)[:h, :w]
-    v = np.repeat(np.repeat(v, 2, axis=0), 2, axis=1)[:h, :w]
-    c = 298 * (y - 16)
-    d = u - 128
-    e = v - 128
-    r = np.clip((c + 409 * e + 128) >> 8, 0, 255).astype(np.uint8)
-    g = np.clip((c - 100 * d - 208 * e + 128) >> 8, 0, 255).astype(np.uint8)
-    b = np.clip((c + 516 * d + 128) >> 8, 0, 255).astype(np.uint8)
-    if (r == g).all() and (g == b).all():
-        return np.ascontiguousarray(r)
-    return np.ascontiguousarray(np.stack([r, g, b], axis=-1))
+def _frame_rgb(Y, U, V, w, h):
+    """Crop the bordered planes to the frame, then the BT.601 map the
+    HEVC route uses (kernels/hevc.py::_yuv_to_rgb)."""
+    ch, cw = (h + 1) // 2, (w + 1) // 2
+    return hevc._yuv_to_rgb(Y[1:h + 1, 1:w + 1], U[1:ch + 1, 1:cw + 1],
+                            V[1:ch + 1, 1:cw + 1])
 
 
 def _decode_residuals(parts, hdr, mb_rows, mb_cols, ymodes, skips,
@@ -1544,7 +1536,7 @@ def decode_vp8(data: bytes) -> np.ndarray:
     reference state that this keyframe decoder does not keep: they
     raise ValueError."""
     _hdr, Y, U, V, w, h, _r, _c2 = _decode_keyframe(data)
-    return _yuv_to_rgb(Y, U, V, w, h)
+    return _frame_rgb(Y, U, V, w, h)
 
 
 def _decode_keyframe(data: bytes):
@@ -1629,7 +1621,7 @@ def _decode_keyframe(data: bytes):
 # Fixture encoder — keyframe, no segmentation, single token partition,
 # no probability updates. Mirrors the decoder's context bookkeeping
 # exactly and returns both the bitstream and the expected reconstruction
-# (computed via the same _reconstruct/_loop_filter/_yuv_to_rgb path).
+# (computed via the same _reconstruct/_loop_filter/_frame_rgb path).
 # ---------------------------------------------------------------------------
 
 
@@ -1898,7 +1890,7 @@ def encode_vp8_frame(w: int, h: int, mbs, q_index: int = 0,
                            ycoef, y2coef, ucoef, vcoef, has_y2)
     _loop_filter(hdr, Y, U, V, mb_rows, mb_cols,
                  np.zeros((mb_rows, mb_cols), np.uint8), ymodes, mb_has)
-    return out, _yuv_to_rgb(Y, U, V, w, h)
+    return out, _frame_rgb(Y, U, V, w, h)
 
 
 def wrap_webp(vp8_payload: bytes) -> bytes:

@@ -13,7 +13,7 @@ import struct
 
 import numpy as np
 
-from ragflow_ocr_spark.kernels.pngcodec import codec_errors
+from ragflow_ocr_spark.kernels.pngcodec import codec_errors, riff_chunks
 
 WAV_MAGIC = b"RIFF"
 # untrusted-payload ceiling (~128 MB of samples ≈ 70 min mono @16 kHz)
@@ -37,29 +37,22 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     chunks (LIST/fact/...)."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a WAV")
-    pos = 12
     sample_rate = None
     n_channels = None
     body = None
-    while pos + 8 <= len(data):
-        tag = data[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", data, pos + 4)
-        payload = data[pos + 8 : pos + 8 + length]
-        if len(payload) < length:
-            raise ValueError("truncated WAV chunk")
-        pos += 8 + length + (length & 1)  # chunks are word-aligned
+    for tag, b, e in riff_chunks(data, 12, len(data)):
         if tag == b"fmt ":
-            if length < 16:
+            if e - b < 16:
                 raise ValueError("short fmt chunk")
             audio_fmt, n_channels, sample_rate, _, _, bits = struct.unpack_from(
-                "<HHIIHH", payload
+                "<HHIIHH", data, b
             )
             if audio_fmt != 1 or bits != 16:
                 raise ValueError(
                     f"unsupported WAV (format={audio_fmt}, bits={bits})"
                 )
         elif tag == b"data":
-            body = payload
+            body = data[b:e]
     if sample_rate is None or body is None or not n_channels:
         raise ValueError("WAV missing fmt/data")
     n = len(body) // 2

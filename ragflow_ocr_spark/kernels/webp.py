@@ -24,7 +24,7 @@ import struct
 
 import numpy as np
 
-from ragflow_ocr_spark.kernels.pngcodec import codec_errors
+from ragflow_ocr_spark.kernels.pngcodec import codec_errors, riff_chunks
 
 MAX_DECODE_PIXELS = 1 << 26  # same untrusted-payload ceiling as the others
 # VP8L-specific ceiling, still tighter than the global one: the entropy
@@ -817,19 +817,6 @@ def encode_alph(plane: np.ndarray, filtering: int = 0) -> bytes:
     return bytes([(filtering & 3) << 2]) + body
 
 
-def _riff_chunks(data: bytes, pos: int, end: int):
-    """(tag, payload) iterator over a RIFF chunk run; truncated chunks
-    raise (malformed container, per-row error upstream)."""
-    while pos + 8 <= end:
-        tag = data[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", data, pos + 4)
-        payload = data[pos + 8 : pos + 8 + size]
-        if len(payload) < size:
-            raise ValueError("truncated WebP chunk")
-        yield tag, payload
-        pos += 8 + size + (size & 1)
-
-
 @codec_errors
 def decode_webp(data: bytes) -> np.ndarray:
     """RIFF/WEBP container → image. VP8L (lossless) and VP8 (lossy,
@@ -838,15 +825,15 @@ def decode_webp(data: bytes) -> np.ndarray:
     still-image convention — full frame access is decode_webp_frames)."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP")
-    for tag, payload in _riff_chunks(data, 12, len(data)):
+    for tag, b, e in riff_chunks(data, 12, len(data)):
         if tag == b"ANMF":
             return decode_webp_frames(data)[0]
         if tag == b"VP8L":
-            return decode_vp8l(payload)
+            return decode_vp8l(data[b:e])
         if tag == b"VP8 ":
             from ragflow_ocr_spark.kernels import vp8 as vp8mod
 
-            return vp8mod.decode_vp8(payload)
+            return vp8mod.decode_vp8(data[b:e])
     raise ValueError("WebP container has no VP8L/VP8/ANMF chunk")
 
 
@@ -879,14 +866,14 @@ def decode_webp_frames(data: bytes) -> list[np.ndarray]:
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP")
     vp8x = anim = None
-    anmfs: list[bytes] = []
-    for tag, payload in _riff_chunks(data, 12, len(data)):
+    anmfs: list[tuple[int, int]] = []
+    for tag, b, e in riff_chunks(data, 12, len(data)):
         if tag == b"VP8X":
-            vp8x = payload
+            vp8x = data[b:e]
         elif tag == b"ANIM":
-            anim = payload
+            anim = data[b:e]
         elif tag == b"ANMF":
-            anmfs.append(payload)
+            anmfs.append((b, e))
     if not anmfs:
         return [decode_webp(data)]
     if vp8x is None or len(vp8x) < 10 or not vp8x[0] & _VP8X_ANIM_FLAG:
@@ -911,9 +898,10 @@ def decode_webp_frames(data: bytes) -> list[np.ndarray]:
     if len(anmfs) * cw * ch > MAX_DECODE_PIXELS:
         raise ValueError("animated WebP exceeds the composited-pixel budget")
     frames: list[np.ndarray] = []
-    for anmf in anmfs:
-        if len(anmf) < 16:
+    for lo, hi in anmfs:
+        if hi - lo < 16:
             raise ValueError("truncated ANMF header")
+        anmf = data[lo:lo + 16]
         fx = 2 * int.from_bytes(anmf[0:3], "little")
         fy = 2 * int.from_bytes(anmf[3:6], "little")
         fw = 1 + int.from_bytes(anmf[6:9], "little")
@@ -922,17 +910,17 @@ def decode_webp_frames(data: bytes) -> list[np.ndarray]:
         img = None
         alpha = None
         alph_payload = None
-        for tag, payload in _riff_chunks(anmf, 16, len(anmf)):
+        for tag, b, e in riff_chunks(data, lo + 16, hi):
             if tag == b"ALPH":
                 # spec: ALPH precedes the VP8 chunk it augments
-                alph_payload = payload
+                alph_payload = data[b:e]
             elif tag == b"VP8 ":
-                img = vp8mod.decode_vp8(payload)
+                img = vp8mod.decode_vp8(data[b:e])
                 break
             elif tag == b"VP8L":
                 # a VP8L frame carries alpha in its own A channel;
                 # an ALPH chunk alongside it is ignored per spec
-                px = _decode_vp8l_rgba(payload)
+                px = _decode_vp8l_rgba(data[b:e])
                 img = np.ascontiguousarray(px[..., 1:4])
                 alpha = np.ascontiguousarray(px[..., 0])
                 alph_payload = None

@@ -143,22 +143,14 @@ def encode_avi_mjpeg(frames_jpeg: list[bytes]) -> bytes:
 def _iter_avi_frames(payload: bytes) -> Iterator[bytes]:
     """Yield video-stream ('NNdc'/'NNdb') chunk payloads from a RIFF
     AVI, skipping hdrl/idx1/junk; recurses into LIST chunks."""
-    pos = 12  # past RIFF....AVI_
-
     def walk(lo: int, hi: int) -> Iterator[bytes]:
-        p = lo
-        while p + 8 <= hi:
-            tag = payload[p : p + 4]
-            (ln,) = struct.unpack_from("<I", payload, p + 4)
-            if p + 8 + ln > hi:
-                raise ValueError("truncated AVI chunk")
+        for tag, body, end in pngcodec.riff_chunks(payload, lo, hi):
             if tag == b"LIST":
-                yield from walk(p + 12, p + 8 + ln)
+                yield from walk(body + 4, end)  # past the list type
             elif tag[2:4] in (b"dc", b"db") and tag[:2].isdigit():
-                yield payload[p + 8 : p + 8 + ln]
-            p += 8 + ln + (ln & 1)
+                yield payload[body:end]
 
-    yield from walk(pos, len(payload))
+    yield from walk(12, len(payload))  # past RIFF....AVI_
 
 
 def _box(tag: bytes, payload: bytes) -> bytes:
@@ -279,21 +271,6 @@ def encode_mp4_hvc1(aus_annexb: list[bytes], w: int, h: int) -> bytes:
     return ftyp + mdat + moov
 
 
-def _mp4_boxes(data: bytes, lo: int, hi: int):
-    p = lo
-    while p + 8 <= hi:
-        (size,) = struct.unpack_from(">I", data, p)
-        tag = data[p + 4 : p + 8]
-        body = p + 8
-        if size == 1:  # 64-bit largesize
-            (size,) = struct.unpack_from(">Q", data, p + 8)
-            body = p + 16
-        if size < 8 or p + size > hi:
-            raise ValueError("bad mp4 box size")
-        yield tag, body, p + size
-        p += size
-
-
 def _iter_mp4_frames(payload: bytes) -> Iterator[bytes]:
     """Walk moov→trak→mdia→minf→stbl sample tables and yield each
     sample's bytes (stsc chunk runs + stco offsets + stsz sizes — the
@@ -305,7 +282,7 @@ def _iter_mp4_frames(payload: bytes) -> Iterator[bytes]:
     tables: list[dict] = []
 
     def walk(lo: int, hi: int, ctx: dict | None):
-        for tag, body, end in _mp4_boxes(payload, lo, hi):
+        for tag, body, end in pngcodec.iso_boxes(payload, lo, hi):
             if tag in CONTAINERS:
                 sub = {"codec": None} if tag == b"stbl" else ctx
                 walk(body, end, sub)
@@ -319,16 +296,20 @@ def _iter_mp4_frames(payload: bytes) -> Iterator[bytes]:
                         # hvcC lives in the boxes after the 78-byte
                         # VisualSampleEntry fields of the first entry
                         esz = struct.unpack_from(">I", payload, body + 8)[0]
-                        for t2, b2, _e2 in _mp4_boxes(
+                        for t2, b2, e2 in pngcodec.iso_boxes(
                             payload, body + 8 + 86,
                             min(body + 8 + esz, end),
                         ):
                             if t2 == b"hvcC":
-                                ctx["hvcC"] = payload[b2:_e2]
+                                ctx["hvcC"] = payload[b2:e2]
                                 break
             elif ctx is not None and tag == b"stsz":
                 fixed, n = struct.unpack_from(">II", payload, body + 4)
                 if fixed:
+                    # every sample lies in the file: a count past that
+                    # would only build a huge list of one size
+                    if fixed * n > len(payload):
+                        raise ValueError("mp4 stsz samples exceed the file")
                     ctx["sizes"] = [fixed] * n
                 else:
                     ctx["sizes"] = list(

@@ -4,9 +4,11 @@ helpers H.264 and HEVC share.
 No H.264 decoder is bundled: an H.264 track is the unbundled-codec
 seam of the demuxers (NotImplementedError, a per-row error in the
 frame stage). The Exp-Golomb coder, emulation prevention and the
-BT.601 YUV<->RGB maps are the same in both standards; they live in
-kernels/hevc.py and are pinned here against hand values and byte-exact
-YUV round trips through HEVC PCM streams.
+BT.601 YUV<->RGB map are the same in both standards; they live in
+kernels/hevc.py (``_add_epb`` and the one stripper ``_strip_epb_pos``;
+``_yuv_to_rgb``, which the VP8 route calls too) and are pinned here
+against hand values and byte-exact YUV round trips through HEVC PCM
+streams.
 """
 
 from __future__ import annotations
@@ -58,7 +60,7 @@ def test_emulation_prevention_round_trip():
         ebsp = hevc._add_epb(raw)
         assert b"\x00\x00\x00" not in ebsp
         assert b"\x00\x00\x01" not in ebsp
-        assert hevc._strip_epb(ebsp) == raw
+        assert hevc._strip_epb_pos(ebsp)[0] == raw
 
 
 @pytest.mark.parametrize("shape", [(16, 16), (32, 48), (2, 2), (34, 50),

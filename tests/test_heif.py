@@ -34,6 +34,18 @@ def test_heic_yuv_round_trip_is_byte_exact_in_yuv(h, w):
     assert (y2 == y).all() and (u2 == u).all() and (v2 == v).all()
 
 
+def test_last_box_of_size_zero_runs_to_end_of_file():
+    """A box whose size field is 0 extends to the end of the file
+    (ISO/IEC 14496-12 §4.2): a HEIC whose last top-level box (mdat) is
+    rewritten that way decodes to the same image."""
+    img = _rng(4).integers(0, 256, (32, 48), dtype=np.uint8)
+    data = heif.encode_heic(img)
+    mdat = data.rfind(b"mdat") - 4
+    zeroed = bytearray(data)
+    struct.pack_into(">I", zeroed, mdat, 0)
+    assert np.array_equal(heif.decode_heif(bytes(zeroed)), heif.decode_heif(data))
+
+
 def test_decode_heif_rgb_entry_point():
     # 2x2-blockwise color image: chroma is constant inside every
     # subsampling block, so RGB->YUV420->RGB error is rounding-only

@@ -48,9 +48,9 @@ def test_sps_reports_true_cropped_dimensions():
     y, u, v = _planes(rng, 30, 50)
     au = hevc.encode_hevc_ipcm_yuv(y, u, v)
     sps = next(
-        hevc.parse_sps(rbsp)
-        for t, rbsp in hevc.iter_nals_annexb(au)
-        if t == hevc.NAL_SPS
+        hevc.parse_sps(hevc._strip_epb_pos(nal[2:])[0])
+        for nal in hevc.split_annexb(au)
+        if (nal[0] >> 1) & 0x3F == hevc.NAL_SPS
     )
     assert (sps["width"], sps["height"]) == (50, 30)
     assert (sps["pic_w"], sps["pic_h"]) == (64, 32)

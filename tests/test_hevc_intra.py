@@ -29,6 +29,15 @@ from ragflow_ocr_spark.kernels import heif, hevc
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 
 
+def _nals(au: bytes):
+    """(nal_type, rbsp, epb_pos) per NAL unit, read the way
+    decode_hevc_keyframe_yuv reads them: split_annexb, then the one
+    emulation-prevention stripper."""
+    for nal in hevc.split_annexb(au):
+        rbsp, epb_pos = hevc._strip_epb_pos(nal[2:])
+        yield (nal[0] >> 1) & 0x3F, rbsp, epb_pos
+
+
 def _tile_au(heic: bytes) -> bytes:
     info = heif.parse_heif(heic)
     tid = info["primary"]
@@ -172,7 +181,7 @@ def test_live_wpp_epb_substreams():
         if info["item_bytes"](tid).count(b"\x00\x00\x03") == 0:
             continue
         au = _tile_au(heic)
-        for nt, rb in hevc.iter_nals_annexb(au):
+        for nt, rb, _ep in _nals(au):
             if nt == 34 and not hevc.parse_pps(rb)["entropy_sync"]:
                 pytest.skip("encoder disabled WPP on this host")
         ly, lcb, lcr = _de265_decode_planes(au)
@@ -324,7 +333,7 @@ def test_main10_fixture_sample_exact():
     from ragflow_ocr_spark.kernels import hevc_intra
     sps = pps = None
     slices = []
-    for nt, rb, ep in hevc._iter_nals_annexb_epb(au):
+    for nt, rb, ep in _nals(au):
         if nt == 33:
             sps = hevc.parse_sps(rb)
         elif nt == 34:
@@ -355,7 +364,7 @@ def test_lossless_encoder_main10_roundtrip():
                                                    bit_depth=10)
     sps = pps = None
     slices = []
-    for nt, rb, ep in hevc._iter_nals_annexb_epb(au):
+    for nt, rb, ep in _nals(au):
         if nt == 33:
             sps = hevc.parse_sps(rb)
         elif nt == 34:

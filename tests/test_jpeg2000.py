@@ -227,6 +227,15 @@ def test_jp2_gray_container_round_trip():
     assert (out == img).all()
 
 
+def test_jp2_codestream_box_of_length_zero_runs_to_end_of_file():
+    """LBox 0 (ISO/IEC 15444-1 §I.4): the last box, here jp2c, extends
+    to the end of the file."""
+    img = _rng(11).integers(0, 256, size=(20, 24), dtype=np.uint8)
+    data = bytearray(j2k.encode_jp2(img))
+    struct.pack_into(">I", data, data.rfind(b"jp2c") - 4, 0)
+    assert (j2k.decode_jpeg2000(bytes(data)) == img).all()
+
+
 def test_two_layer_file_differs_but_decodes_identically():
     img = _rng(12).integers(0, 256, size=(80, 80), dtype=np.uint8)
     one = j2k.encode_jpeg2000(img, reversible=True, layers=1)

@@ -366,6 +366,61 @@ def test_mp4_multi_chunk_sample_table():
     assert list(mm.iter_video_frames(payload)) == frames
 
 
+def test_mp4_last_box_of_size_zero_runs_to_end_of_file():
+    """A box whose size field is 0 extends to the end of the file
+    (ISO/IEC 14496-12 §4.2): with the last top-level box (moov)
+    rewritten that way the same frames come back."""
+    import struct
+
+    from ragflow_ocr_spark.kernels import imgcodecs as ic
+
+    frames = [ic.encode_jpeg(np.full((16, 16), 60 * k + 20, np.uint8)) for k in range(2)]
+    payload = mm.encode_mp4_mjpeg(frames, 16, 16)
+    moov = payload.rfind(b"moov") - 4
+    zeroed = bytearray(payload)
+    struct.pack_into(">I", zeroed, moov, 0)
+    assert list(mm.iter_video_frames(bytes(zeroed))) == frames == list(
+        mm.iter_video_frames(payload))
+
+
+def test_mp4_fixed_sample_size_count_past_the_file_is_value_error():
+    """An stsz with a fixed sample size and a count of 0xFFFFFFFF once
+    asked for a 4.29-billion-entry list (~34 GB); it is a ValueError
+    before anything is allocated, and an error row in the frame stage.
+    Checked in a child process under a 2 GB address-space limit, so a
+    regression fails with MemoryError instead of exhausting the host."""
+    import struct
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = """
+import resource, struct, sys
+resource.setrlimit(resource.RLIMIT_AS, (2 << 30, 2 << 30))
+import numpy as np, pandas as pd
+from ragflow_ocr_spark.kernels import imgcodecs as ic
+from ragflow_ocr_spark.ops import multimodal as mm
+frames = [ic.encode_jpeg(np.full((16, 16), 60 * k + 20, np.uint8)) for k in range(2)]
+data = bytearray(mm.encode_mp4_mjpeg(frames, 16, 16))
+body = data.find(b"stsz") + 4
+struct.pack_into(">II", data, body + 4, 7, 0xFFFFFFFF)
+try:
+    list(mm.iter_video_frames(bytes(data)))
+except ValueError as e:
+    print("ValueError", e)
+batch = pd.DataFrame({"media_id": [1], "payload": [bytes(data)]})
+out = next(mm.frame_sample_stage(every_k=1)(iter([batch])))
+print(list(out["status"]))
+"""
+    root = str(Path(__file__).resolve().parents[1])
+    res = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                         cwd=root, env={"PYTHONPATH": root, "PATH": "/usr/bin:/bin"},
+                         timeout=120)
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert res.stdout.splitlines() == [
+        "ValueError mp4 stsz samples exceed the file", "['error']"]
+
+
 def test_webm_mjpeg_mux_demux_roundtrip():
     """EBML/Matroska demux is real: V_MJPEG SimpleBlocks round trip
     exactly; VP9-coded tracks are the unbundled-codec seam; malformed

@@ -268,13 +268,11 @@ def _mutants(seed: bytes, rng: np.random.Generator, n: int) -> list[bytes]:
     return out
 
 
-def test_seeded_mutants_of_pdf_and_hevc_routes_are_row_statuses(spark):
-    """Byte-flip and truncation mutants (rng seed 11, 100 per kind) of
-    image and text PDFs, PCM, grid and CABAC HEICs and a JP2: through
+def _check_seeded_mutants(spark, seeds: dict[str, bytes], seed_statuses: dict[str, str]):
+    """100 mutants of each seed (rng seed 11): through
     ``stages._extract_one`` none raises and each is a row status of its
     own route; through ``extract()`` on Spark every url comes back once
-    with a status. Arithmetic-coded JPEG is left out: some of its
-    mutants decode for seconds each (ROADMAP item 2)."""
+    with a status."""
     import pandas as pd
 
     from ragflow_ocr_spark.config import DEFAULT
@@ -283,8 +281,8 @@ def test_seeded_mutants_of_pdf_and_hevc_routes_are_row_statuses(spark):
 
     rng = np.random.default_rng(11)
     rows = []
-    for kind, seed in _route_seeds().items():
-        assert _extract_one(seed, DEFAULT)[2] == "ok", kind
+    for kind, seed in seeds.items():
+        assert _extract_one(seed, DEFAULT)[2] == seed_statuses.get(kind, "ok"), kind
         for k, data in enumerate(_mutants(seed, rng, 100)):
             text, n_blocks, status, engine = _extract_one(data, DEFAULT)
             assert engine == "ocr" and status in _MUTANT_STATUSES, (kind, k, engine, status)
@@ -296,3 +294,37 @@ def test_seeded_mutants_of_pdf_and_hevc_routes_are_row_statuses(spark):
     got = extract(pages).select("url", "status").collect()
     assert sorted(r.url for r in got) == sorted(r[0] for r in rows)
     assert all(r.status for r in got)
+
+
+def test_seeded_mutants_of_pdf_and_hevc_routes_are_row_statuses(spark):
+    """Byte-flip and truncation mutants (rng seed 11, 100 per kind) of
+    image and text PDFs, PCM, grid and CABAC HEICs and a JP2 are row
+    statuses, in-process and on Spark. Arithmetic-coded JPEG is left
+    out: some of its mutants decode for seconds each (ROADMAP item 2)."""
+    _check_seeded_mutants(spark, _route_seeds(), {})
+
+
+def test_seeded_mutants_of_gif_and_webp_containers_are_row_statuses(spark):
+    """The same mutants (rng seed 11, 100 per kind) of the GIF block
+    reader's and the RIFF chunk walker's image kinds: a still, an
+    interlaced and an animated GIF, and a VP8L, a VP8 and an animated
+    WebP. The VP8 seed is a flat light frame (its encoder writes no
+    text), so it reads ``empty``."""
+    from ragflow_ocr_spark.kernels import imgcodecs, vp8, webp
+
+    page, _ = font5x7.render_page(["MUTANT SEED 11"], 256, 64, 2)
+    line = page[12:50, 12:200]
+    flat = vp8.encode_vp8_flat_payload(96, 32, (200, 110, 140))
+    vp8l = webp.encode_webp(line)
+    seeds = {
+        "gif": imgcodecs.encode_gif(line),
+        "gif_interlaced": imgcodecs.encode_gif(line, interlace=True),
+        "gif_animated": imgcodecs.encode_gif_animation([line, 255 - line]),
+        "webp_vp8l": vp8l,
+        "webp_vp8": vp8.wrap_webp(flat),
+        "webp_animated": webp.encode_webp_animated(
+            [{"tag": b"VP8L", "data": vp8l[20:], "w": line.shape[1], "h": line.shape[0]},
+             {"tag": b"VP8 ", "data": flat, "w": 96, "h": 32, "x": 4, "y": 2}],
+            line.shape[1], line.shape[0]),
+    }
+    _check_seeded_mutants(spark, seeds, {"webp_vp8": "empty"})
