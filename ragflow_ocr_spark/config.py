@@ -7,8 +7,10 @@ Mirrors the semantics of the reference's flat config dict
 plain float. Values are set in code; the reference's ``OCR_*`` env
 overrides (``config.py:22``) are not mirrored. Knobs no caller sets are
 module constants next to the code that reads them: the HTML block
-scoring thresholds in ``kernels/html_extract.py`` and the heavy-row
-size of the skew spread, ``SALT_HEAVY_BYTES`` in ``spark/pipeline.py``.
+scoring thresholds in ``kernels/html_extract.py``, the heavy-row size
+of the skew spread, ``SALT_HEAVY_BYTES`` in ``spark/pipeline.py``, and
+the detection thresholds in ``kernels/ocr_pipeline.py`` and
+``kernels/db_postprocess.py``.
 """
 
 from __future__ import annotations
@@ -21,21 +23,17 @@ from typing import Any
 class OCRConfig:
     """Thresholds/shapes of the detect→recognize path.
 
-    Field-by-field parity with reference ``DEFAULT_CONFIG``
-    (``ocr/config.py:20-41``), less its mode switches: detection runs
-    the one mode per step the reference's OCR wires (``ocr/ocr.py:268-273``).
-    It limits the longer side, and its boxes are quads scored by the
-    fast box score.
+    The recognition, filter and model fields of the reference's
+    ``DEFAULT_CONFIG`` (``ocr/config.py:20-41``). Its detection
+    thresholds, which no caller sets, are module constants next to the
+    code that reads them: the side limit in ``kernels/ocr_pipeline.py``
+    and the DB postprocess thresholds in ``kernels/db_postprocess.py``.
+    Its mode switches are not mirrored: detection runs the one mode per
+    step the reference's OCR wires (``ocr/ocr.py:268-273``). It limits
+    the longer side, and its boxes are quads scored by the fast box
+    score.
     """
 
-    # detection preprocess (ocr/config.py:32-33, operators.py:208-255)
-    det_limit_side_len: int = 960
-    # DB postprocess (ocr/config.py:34-36, postprocess.py:55-67)
-    det_db_thresh: float = 0.3
-    det_db_box_thresh: float = 0.5
-    det_db_unclip_ratio: float = 1.5
-    max_candidates: int = 1000
-    min_size: int = 3
     # recognition (ocr/config.py:39-40, ocr/ocr.py:150-151) —
     # rec_image_shape is [3, 48, 320]; the width seeds each
     # micro-batch's max_wh_ratio at 320/48 (ocr/ocr.py:211)

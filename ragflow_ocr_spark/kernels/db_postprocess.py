@@ -5,15 +5,15 @@ Semantics of the reference's ``DBPostProcess`` quad path
 (``/root/reference/ocr/postprocess.py:55-259``), with cv2/pyclipper
 replaced by the numpy primitives in ``imgeom``:
 
-1. binarize:   seg = prob > thresh (0.3)            (postprocess.py:237)
+1. binarize:   seg = prob > ``DET_DB_THRESH``=0.3   (postprocess.py:237)
 2. regions:    connected components ⇔ findContours  (postprocess.py:125-130)
-3. per region (first ``max_candidates``=1000, postprocess.py:132):
-   a. min-area rect; drop if min side < ``min_size``=3
+3. per region (first ``MAX_CANDIDATES``=1000, postprocess.py:132):
+   a. min-area rect; drop if min side < ``MIN_SIZE``=3
                                                     (postprocess.py:134-139)
    b. score = mean prob inside quad (box_score_fast, postprocess.py:142-147);
-      drop if < ``box_thresh``=0.5
-   c. unclip by ``unclip_ratio``=1.5                (postprocess.py:148-149)
-   d. min-area rect again; drop if min side < ``min_size``+2
+      drop if < ``DET_DB_BOX_THRESH``=0.5
+   c. unclip by ``DET_DB_UNCLIP_RATIO``=1.5         (postprocess.py:148-149)
+   d. min-area rect again; drop if min side < ``MIN_SIZE``+2
                                                     (postprocess.py:150-152)
    e. rescale to source pixels: round(x / net_w · src_w) clipped to
       [0, src_w] — clip hi is dest_width, NOT dest_width−1 (quirk
@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from ragflow_ocr_spark.config import OCRConfig
 from ragflow_ocr_spark.kernels.imgeom import (
     clip_quad,
     connected_components,
@@ -39,32 +38,37 @@ from ragflow_ocr_spark.kernels.imgeom import (
     unclip_poly,
 )
 
+# the reference's DB thresholds (ocr/config.py:34-36, postprocess.py:55-67)
+DET_DB_THRESH = 0.3
+DET_DB_BOX_THRESH = 0.5
+DET_DB_UNCLIP_RATIO = 1.5
+MAX_CANDIDATES = 1000
+MIN_SIZE = 3
+
 
 def db_postprocess(
     prob: np.ndarray,
     src_h: int,
     src_w: int,
-    cfg: OCRConfig | None = None,
 ) -> tuple[np.ndarray, list[float]]:
     """prob (H, W) float in [0,1] → (boxes (N,4,2) float64 in source
     coords, scores). Box corner order: TL,TR,BR,BL."""
-    cfg = cfg or OCRConfig()
     net_h, net_w = prob.shape
-    seg = prob > cfg.det_db_thresh
-    regions = connected_components(seg, max_regions=cfg.max_candidates)
+    seg = prob > DET_DB_THRESH
+    regions = connected_components(seg, max_regions=MAX_CANDIDATES)
 
     boxes: list[np.ndarray] = []
     scores: list[float] = []
     for pts in regions:
         quad, sside = min_area_rect(pts.astype(np.float64))
-        if sside < cfg.min_size:
+        if sside < MIN_SIZE:
             continue
         score = quad_mask_mean(prob, quad)
-        if score < cfg.det_db_box_thresh:
+        if score < DET_DB_BOX_THRESH:
             continue
-        expanded = unclip_poly(quad, cfg.det_db_unclip_ratio)
+        expanded = unclip_poly(quad, DET_DB_UNCLIP_RATIO)
         quad2, sside2 = min_area_rect(expanded)
-        if sside2 < cfg.min_size + 2:
+        if sside2 < MIN_SIZE + 2:
             continue
         boxes.append(quad2)
         scores.append(score)

@@ -39,12 +39,23 @@ Scope (documented substitution, like the PNG codec):
   1-7, point transform, 2..16-bit precision, restarts) decodes and
   encodes via kernels/jpeg_lossless.py; the differential/hierarchical
   SOFs and arithmetic-lossless (SOF11) stay named rejections.
+
+Every JPEG scan of the three modules, Huffman, progressive, arithmetic
+or lossless, decoded or encoded, visits its units in the order
+``scan_units`` yields (T.81 A.2: the MCU grid when interleaved, the
+component's own grid when not) and restarts where it says. The
+encoders write their marker segments through one writer each:
+``_jpeg_headers`` (SOI, APP14, DQT, SOF, DAC, DRI, DHT), ``_sos_segment``
+and ``_rst_marker``; ``_quantize`` is the batched DCT and quantizer of
+the progressive and arithmetic encoders, and ``_ycc_to_rgb`` /
+``_rgb_to_ycc`` the one JFIF colour map each way.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+from itertools import product, repeat
 
 import numpy as np
 
@@ -1079,64 +1090,77 @@ def _bits(buf: bytes, p: int, n: int) -> tuple[int, int]:
     return (w >> (32 - (p & 7) - n)) & ((1 << n) - 1), p + n
 
 
-def _baseline_scan(br: "_BitReader", scan_comps: list[dict],
-                   restart_interval: int, mcus_x: int, mcus_y: int) -> None:
-    """Single interleaved baseline scan: every MCU, every block."""
+def scan_units(
+    comps: list[tuple[int, int, int, int]],
+    mcus_x: int,
+    mcus_y: int,
+    restart_interval: int = 0,
+):
+    """The data units of one scan in T.81 order (A.2), with its restart
+    points; every JPEG scan here, decoded or encoded, walks this.
+
+    ``comps`` holds each scan component as ``(h, v, rows, cols)``: its
+    sampling factors and its own unit grid (8x8 blocks for DCT, samples
+    for lossless). A scan of several components is interleaved: it
+    walks the ``mcus_y`` x ``mcus_x`` MCU grid, and each MCU holds v
+    rows of h units of each component in turn. A one-component scan
+    walks that component's own ``rows`` x ``cols`` grid, one unit per
+    MCU. Yields ``(rst, units)`` per MCU: ``units`` lists its
+    ``(component_index, row, col)``, and ``rst`` is the number (0-7)
+    of the RSTn marker that precedes it (every ``restart_interval``
+    MCUs, B.2.4.4), or -1."""
+    if len(comps) > 1:
+        offsets = [
+            (ci, v, h, dy, dx)
+            for ci, (h, v, _rows, _cols) in enumerate(comps)
+            for dy in range(v)
+            for dx in range(h)
+        ]
+        mcus = (
+            [(ci, my * v + dy, mx * h + dx) for ci, v, h, dy, dx in offsets]
+            for my, mx in product(range(mcus_y), range(mcus_x))
+        )
+    else:
+        _h, _v, rows, cols = comps[0]
+        mcus = ([(0, r, c)] for r, c in product(range(rows), range(cols)))
+    if not restart_interval:
+        yield from zip(repeat(-1), mcus)
+        return
+    for i, units in enumerate(mcus):
+        if i and i % restart_interval == 0:
+            yield (i // restart_interval - 1) % 8, units
+        else:
+            yield -1, units
+
+
+def _sequential_scan(br: "_BitReader", scan_comps: list[dict],
+                     restart_interval: int, mcus_x: int, mcus_y: int) -> None:
+    """One sequential Huffman scan (T.81 F.2.2), interleaved or one
+    component: every unit is one block, decoded with its component's
+    ``dc_tbl`` and ``ac_tbl``; restarts zero the DC predictors."""
+    plan = [(c, c["coefs"], *c["dc_tbl"], *c["ac_tbl"]) for c in scan_comps]
     buf = br.buf
-    bit_pos = 0
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                br.align_to_marker()
-                buf = br.buf
-                bit_pos = 0
-                for c in scan_comps:
-                    c["pred"] = 0
+    p = 0
+    for rst, units in scan_units(
+        [c["grid"] for c in scan_comps], mcus_x, mcus_y, restart_interval
+    ):
+        if rst >= 0:
+            br.align_to_marker()
+            buf = br.buf
+            p = 0
             for c in scan_comps:
-                dcv, dcl = c["dc_tbl"]
-                acv, acl = c["ac_tbl"]
-                coefs = c["coefs"]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        bit_pos, c["pred"] = _decode_block(
-                            buf, bit_pos,
-                            coefs[my * c["v"] + by, mx * c["h"] + bx],
-                            dcv, dcl, acv, acl, c["pred"],
-                        )
-            if bit_pos > br.nbits_total:
-                # ran into the 1-padding: the stream is shorter than the
-                # declared MCU count — truncated file. Without this
-                # check the padding decodes to near-zero blocks and a
-                # mostly-gray image would return status 'ok'.
-                raise ValueError("truncated JPEG entropy stream")
-            mcu_count += 1
-
-
-def _baseline_noninterleaved_scan(br: "_BitReader", c: dict,
-                                  restart_interval: int) -> None:
-    """Single-component sequential scan (Ns=1, T.81 A.2.2): the MCU is
-    one block and the grid is the component's own ceil block counts —
-    the multi-scan sequential layout some encoders emit per component."""
-    buf = br.buf
-    bit_pos = 0
-    dcv, dcl = c["dc_tbl"]
-    acv, acl = c["ac_tbl"]
-    coefs = c["coefs"]
-    blk = 0
-    for by in range(c["by"]):
-        for bx in range(c["bx"]):
-            if restart_interval and blk and blk % restart_interval == 0:
-                br.align_to_marker()
-                buf = br.buf
-                bit_pos = 0
                 c["pred"] = 0
-            bit_pos, c["pred"] = _decode_block(
-                buf, bit_pos, coefs[by, bx], dcv, dcl, acv, acl, c["pred"]
+        for ci, r, col in units:
+            c, coefs, dcv, dcl, acv, acl = plan[ci]
+            p, c["pred"] = _decode_block(
+                buf, p, coefs[r, col], dcv, dcl, acv, acl, c["pred"]
             )
-            if bit_pos > br.nbits_total:
-                raise ValueError("truncated JPEG entropy stream")
-            blk += 1
+        if p > br.nbits_total:
+            # ran into the 1-padding: the stream is shorter than the
+            # declared MCU count — truncated file. Without this check
+            # the padding decodes to near-zero blocks and a mostly-gray
+            # image would return status 'ok'.
+            raise ValueError("truncated JPEG entropy stream")
 
 
 def _ac_first_block(buf, p, coef, ss, se, al, acv, acl, eobrun):
@@ -1217,67 +1241,41 @@ def _ac_refine_block(buf, p, coef, ss, se, al, acv, acl, eobrun):
 
 def _progressive_scan(br, scan_comps, scan, huff_dc, huff_ac,
                       ss, se, ah, al, restart_interval, mcus_x, mcus_y):
-    """One progressive scan (DC or single-component AC band)."""
-    if ss == 0:
-        if se != 0:
-            raise ValueError("bad progressive spectral selection")
-    else:
-        if len(scan_comps) != 1 or ss > se or se > 63:
-            raise ValueError("bad progressive AC scan parameters")
+    """One progressive scan (T.81 G.1.2): DC first or refinement over
+    one or more components, or one component's AC band. A DC first
+    scan's predictors carry over from the component's previous DC
+    scan; restarts zero them and the EOB run."""
+    if ss:
+        acv, acl = huff_ac[scan[0]["ac"]]
+        block_fn = _ac_first_block if ah == 0 else _ac_refine_block
+    elif ah == 0:
+        for s in scan:
+            s["_comp"]["dc_tbl"] = huff_dc[s["dc"]]
     buf = br.buf
     p = 0
     eobrun = 0
-    unit = 0  # restart counting: MCUs (interleaved) or blocks
-    interleaved = ss == 0 and len(scan_comps) > 1
-
-    def _restart():
-        nonlocal buf, p, eobrun
-        br.align_to_marker()
-        buf = br.buf
-        p = 0
-        eobrun = 0
-        for c in scan_comps:
-            c["pred"] = 0
-
-    if ss == 0:  # DC scan
-        for s in scan:
-            c = s["_comp"]
-            if ah == 0:
-                c["dc_tbl"] = huff_dc[s["dc"]]
-        if interleaved:
-            grid = [
-                (c, my * c["v"] + by, mx * c["h"] + bx)
-                for my in range(mcus_y)
-                for mx in range(mcus_x)
-                for c in scan_comps
-                for by in range(c["v"])
-                for bx in range(c["h"])
-            ]
-            per_unit = sum(c["v"] * c["h"] for c in scan_comps)
-        else:
-            c = scan_comps[0]
-            grid = [
-                (c, by, bx) for by in range(c["by"]) for bx in range(c["bx"])
-            ]
-            per_unit = 1
-        for i, (c, byy, bxx) in enumerate(grid):
-            if (
-                restart_interval
-                and i
-                and i % (restart_interval * per_unit) == 0
-            ):
-                _restart()
-            coef = c["coefs"][byy, bxx]
-            if ah == 0:
-                dcv, dcl = c["dc_tbl"]
-                t, p = _huff(buf, p, dcv, dcl)
+    for rst, units in scan_units(
+        [c["grid"] for c in scan_comps], mcus_x, mcus_y, restart_interval
+    ):
+        if rst >= 0:
+            br.align_to_marker()
+            buf = br.buf
+            p = 0
+            eobrun = 0
+            for c in scan_comps:
+                c["pred"] = 0
+        for ci, r, col in units:
+            c = scan_comps[ci]
+            coef = c["coefs"][r, col]
+            if ss:
+                p, eobrun = block_fn(buf, p, coef, ss, se, al, acv, acl, eobrun)
+            elif ah == 0:
+                t, p = _huff(buf, p, *c["dc_tbl"])
                 if t > 11:
                     raise ValueError("bad JPEG DC category")
-                diff = 0
                 if t:
                     v, p = _bits(buf, p, t)
-                    diff = v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-                c["pred"] += diff
+                    c["pred"] += v if v >= (1 << (t - 1)) else v - (1 << t) + 1
                 coef[0] = c["pred"] << al
             else:
                 bit, p = _bits(buf, p, 1)
@@ -1285,20 +1283,6 @@ def _progressive_scan(br, scan_comps, scan, huff_dc, huff_ac,
                     coef[0] |= 1 << al
             if p > br.nbits_total:
                 raise ValueError("truncated JPEG entropy stream")
-    else:  # AC scan, one component
-        c = scan_comps[0]
-        acv, acl = huff_ac[scan[0]["ac"]]
-        block_fn = _ac_first_block if ah == 0 else _ac_refine_block
-        for byy in range(c["by"]):
-            for bxx in range(c["bx"]):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    _restart()
-                p, eobrun = block_fn(
-                    buf, p, c["coefs"][byy, bxx], ss, se, al, acv, acl, eobrun
-                )
-                if p > br.nbits_total:
-                    raise ValueError("truncated JPEG entropy stream")
-                unit += 1
 
 
 @codec_errors
@@ -1401,6 +1385,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             frame = (h, w, nc)
             hmax = max(c["h"] for c in comps)
             vmax = max(c["v"] for c in comps)
+            for c in comps:
+                # the component's own sample grid (A.1.1)
+                c["sy"] = -(-(h * c["v"]) // vmax)
+                c["sx"] = -(-(w * c["h"]) // hmax)
             if lossless:
                 # lossless MCUs are h×v SAMPLE groups, not 8x8 blocks
                 # (T.81 H.2): per-component sample grids, padded to the
@@ -1408,8 +1396,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 mcus_x = -(-w // hmax)
                 mcus_y = -(-h // vmax)
                 for c in comps:
-                    c["sy"] = -(-(h * c["v"]) // vmax)
-                    c["sx"] = -(-(w * c["h"]) // hmax)
+                    c["grid"] = (c["h"], c["v"], c["sy"], c["sx"])
                     c["samples"] = np.zeros(
                         (mcus_y * c["v"], mcus_x * c["h"]), dtype=np.int32
                     )
@@ -1423,8 +1410,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 # stored natural-raster (by, bx, zigzag-64) so the
                 # dequant + IDCT runs as ONE batched einsum per
                 # component instead of 2 small matmuls per 8x8 block
-                c["bx"] = (-(-(w * c["h"]) // hmax) + 7) // 8
-                c["by"] = (-(-(h * c["v"]) // vmax) + 7) // 8
+                c["grid"] = (c["h"], c["v"], (c["sy"] + 7) // 8, (c["sx"] + 7) // 8)
                 c["coefs"] = np.zeros(
                     (mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int32
                 )
@@ -1526,23 +1512,14 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                     ss, se, ah, al,
                     restart_interval, mcus_x, mcus_y,
                 )
-                n_scans += 1
-                pos += br.consumed
-                continue
-            # sequential Huffman: interleaved (all components) or a
-            # single-component non-interleaved scan (multi-scan files)
-            for s in scan:
-                c = s["_comp"]
-                c["dc_tbl"] = huff_dc[s["dc"]]
-                c["ac_tbl"] = huff_ac[s["ac"]]
-                c["pred"] = 0
-                qt[c["tq"]]  # raise now (as ValueError) if missing
-            if len(scan_comps) == 1 and len(comps) > 1:
-                _baseline_noninterleaved_scan(
-                    br, scan_comps[0], restart_interval
-                )
             else:
-                _baseline_scan(
+                for s in scan:
+                    c = s["_comp"]
+                    c["dc_tbl"] = huff_dc[s["dc"]]
+                    c["ac_tbl"] = huff_ac[s["ac"]]
+                    c["pred"] = 0
+                    qt[c["tq"]]  # raise now (as ValueError) if missing
+                _sequential_scan(
                     br, scan_comps, restart_interval, mcus_x, mcus_y
                 )
             n_scans += 1
@@ -1554,55 +1531,41 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     h, w, nc = frame
 
     if lossless:
-        # no DCT/dequant: samples ARE the image (in the >>Pt domain).
-        # Output contract is uint8 like every codec here: P == 8 is
-        # exact; other precisions narrow by round(v*255/(2^P-1))
-        # (monotone, endpoint-exact — same substitution class as the
-        # 16-bit-PNG narrowing). Lossless JPEG defines no colour
-        # space: 3-component frames are RGB unless APP14 tags YCbCr.
-        planes = []
-        for c in comps:
+        # lossless JPEG defines no colour space: 3-component frames are
+        # RGB unless APP14 tags YCbCr
+        if not (nc == 1 or (nc == 3 and adobe_transform in (None, 0, 1))):
+            raise ValueError("unsupported lossless JPEG component layout")
+        if adobe_transform is None:
+            adobe_transform = 0
+    planes = []
+    for c in comps:
+        if lossless:
+            # no DCT/dequant: samples ARE the image (in the >>Pt
+            # domain). Output contract is uint8 like every codec here:
+            # P == 8 is exact; other precisions narrow by
+            # round(v*255/(2^P-1)) (monotone, endpoint-exact — same
+            # substitution class as the 16-bit-PNG narrowing).
             s = c["samples"][: c["sy"], : c["sx"]].astype(np.int64)
             s <<= lossless_pt
             mv = (1 << precision) - 1
             if precision == 8:
-                pl = np.clip(s, 0, 255).astype(np.float64)
+                plane = np.clip(s, 0, 255).astype(np.float64)
             else:
-                pl = np.round(np.clip(s, 0, mv) * (255.0 / mv))
-            pl = np.repeat(
-                np.repeat(pl, vmax // c["v"], axis=0), hmax // c["h"], axis=1
+                plane = np.round(np.clip(s, 0, mv) * (255.0 / mv))
+        else:
+            q = qt[c["tq"]]
+            coefs = c["coefs"].reshape(-1, 64)
+            deq = coefs.astype(np.float64) * q[None, :]
+            blocks = np.zeros((len(deq), 64), dtype=np.float64)
+            blocks[:, _ZIGZAG] = deq
+            blocks = blocks.reshape(-1, 8, 8)
+            px = np.einsum("ij,bjk,kl->bil", _C.T, blocks, _C, optimize=True) + 128.0
+            by_pad, bx_pad = c["coefs"].shape[:2]
+            plane = (
+                px.reshape(by_pad, bx_pad, 8, 8)
+                .transpose(0, 2, 1, 3)
+                .reshape(by_pad * 8, bx_pad * 8)
             )
-            planes.append(pl[:h, :w])
-        if nc == 1:
-            return planes[0].astype(np.uint8)
-        if nc == 3 and adobe_transform in (None, 0):
-            return np.stack(planes, axis=2).astype(np.uint8)
-        if nc == 3 and adobe_transform == 1:
-            y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-            rgb = np.stack(
-                [y + 1.402 * cr,
-                 y - 0.344136 * cb - 0.714136 * cr,
-                 y + 1.772 * cb],
-                axis=2,
-            )
-            return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-        raise ValueError("unsupported lossless JPEG component layout")
-
-    planes = []
-    for c in comps:
-        q = qt[c["tq"]]
-        coefs = c["coefs"].reshape(-1, 64)
-        deq = coefs.astype(np.float64) * q[None, :]
-        blocks = np.zeros((len(deq), 64), dtype=np.float64)
-        blocks[:, _ZIGZAG] = deq
-        blocks = blocks.reshape(-1, 8, 8)
-        px = np.einsum("ij,bjk,kl->bil", _C.T, blocks, _C, optimize=True) + 128.0
-        by_pad, bx_pad = c["coefs"].shape[:2]
-        plane = (
-            px.reshape(by_pad, bx_pad, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(by_pad * 8, bx_pad * 8)
-        )
         # upsample to full MCU grid resolution, then crop to (h, w)
         plane = np.repeat(
             np.repeat(plane, vmax // c["v"], axis=0), hmax // c["h"], axis=1
@@ -1626,12 +1589,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         # screen approximation (no ICC profiles offline).
         t = adobe_transform if adobe_transform is not None else 0
         if t == 2:  # YCCK → inverted-CMY via the YCC inverse, then ·K
-            y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-            cmy = [
-                y + 1.402 * cr,
-                y - 0.344136 * cb - 0.714136 * cr,
-                y + 1.772 * cb,
-            ]
+            cmy = _ycc_to_rgb(planes[0], planes[1] - 128.0, planes[2] - 128.0)
         elif t == 0:
             cmy = planes[:3]
         else:
@@ -1641,12 +1599,25 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             [np.clip(p, 0.0, 255.0) * k / 255.0 for p in cmy], axis=2
         )
         return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    rgb = np.stack([r, g, b], axis=2)
+    rgb = np.stack(_ycc_to_rgb(planes[0], planes[1] - 128.0, planes[2] - 128.0), axis=2)
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
+
+
+def _ycc_to_rgb(y, cb, cr) -> list:
+    """JFIF YCbCr → R, G, B planes (T.871 §7) on centred chroma (Cb
+    and Cr without their +128 offset); unclipped float."""
+    return [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb]
+
+
+def _rgb_to_ycc(f: np.ndarray) -> list:
+    """JFIF RGB (float HxWx3) → Y, Cb, Cr planes (T.871 §7), chroma
+    offset by +128; unrounded."""
+    r, g, b = f[..., 0], f[..., 1], f[..., 2]
+    return [
+        0.299 * r + 0.587 * g + 0.114 * b,
+        -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
+        0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
+    ]
 
 
 def _quality_scale(q_base: np.ndarray, quality: int) -> np.ndarray:
@@ -1694,38 +1665,32 @@ def _encode_block(bw: _BitWriter, block, qtab8, dc_code, ac_code, pred: int) -> 
 
 
 def _prep_encode(img: np.ndarray, quality: int, subsample: bool):
-    """Shared encoder front half (baseline + progressive): color
-    convert, pick sampling, downsample chroma, pad every plane to its
-    MCU grid by edge replication."""
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    if gray:
-        planes = [img.astype(np.float64)]
-    else:
-        f = img.astype(np.float64)
-        r, g, b = f[..., 0], f[..., 1], f[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        planes = [y, cb, cr]
-    qts = [_quality_scale(_STD_LUMA_Q, quality)]
-    if not gray:
-        qts.append(_quality_scale(_STD_CHROMA_Q, quality))
-    if gray:
-        samp = [(1, 1)]
-    elif subsample:
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        samp = [(1, 1), (1, 1), (1, 1)]
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
+    """Front half of the gray/RGB encoders: colour convert and pick
+    each component's sampling and table. Returns the frame, (h, v,
+    table) per component, the quantization tables and the planes."""
+    f = img.astype(np.float64)
+    luma = _quality_scale(_STD_LUMA_Q, quality)
+    if img.ndim == 2:
+        return [(1, 1, 0)], [luma], [f]
+    s = 2 if subsample else 1
+    frame = [(s, s, 0), (1, 1, 1), (1, 1, 1)]
+    return frame, [luma, _quality_scale(_STD_CHROMA_Q, quality)], _rgb_to_ycc(f)
+
+
+def _pad_planes(planes: list, frame: list):
+    """Downsample each plane to its component's sampling (the mean of
+    each cell, edges replicated) and pad it to its MCU grid by edge
+    replication. Returns each component's ``scan_units`` grid (h, v,
+    ceil block rows, ceil block cols), the MCU counts and the padded
+    planes."""
+    h, w = planes[0].shape
+    hmax = max(hs for hs, _vs, _t in frame)
+    vmax = max(vs for _hs, vs, _t in frame)
     mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    # per-component working planes: chroma downsampled when 4:2:0,
-    # each padded to its own MCU-grid size by edge replication
+    grids = []
     padded = []
-    for ci, p in enumerate(planes):
-        hs, vs = samp[ci]
+    for p, (hs, vs, _t) in zip(planes, frame):
         if (hs, vs) != (hmax, vmax):
             fy, fx = vmax // vs, hmax // hs
             ph = (p.shape[0] + fy - 1) // fy
@@ -1742,34 +1707,197 @@ def _prep_encode(img: np.ndarray, quality: int, subsample: bool):
         pp[ch:, :cw] = pp[ch - 1 : ch, :cw]
         pp[:, cw:] = pp[:, cw - 1 : cw]
         padded.append(pp)
-    return gray, h, w, samp, qts, hmax, vmax, mcus_x, mcus_y, padded
+        grids.append((hs, vs, (-(-(h * vs) // vmax) + 7) // 8,
+                      (-(-(w * hs) // hmax) + 7) // 8))
+    return grids, mcus_x, mcus_y, padded
 
 
-def _header_segments(
-    h: int, w: int, gray: bool, samp, qts, sof_marker: bytes,
+def _quantize(padded: list, frame: list, qts: list) -> list:
+    """Every 8x8 block of each padded plane → its quantized
+    coefficients in zigzag order, (rows, cols, 64) int64 per component
+    (the decode-side coefs layout), as one batched DCT per plane."""
+    zz = []
+    for p, (_hs, _vs, t) in zip(padded, frame):
+        by, bx = p.shape[0] // 8, p.shape[1] // 8
+        blocks = (p - 128.0).reshape(by, 8, bx, 8).transpose(0, 2, 1, 3)
+        coef = np.einsum("ij,abjk,kl->abil", _C, blocks, _C.T, optimize=True)
+        qc = np.round(coef / qts[t].reshape(8, 8).astype(np.float64)).astype(np.int64)
+        zz.append(qc.reshape(by, bx, 64)[..., _ZIGZAG])
+    return zz
+
+
+# the Annex-K Huffman tables the encoders emit as (class, id, spec):
+# the luma pair, then the chroma pair for frames with two tables
+_HUFF_SPECS = [(0, 0, _DC_LUMA), (1, 0, _AC_LUMA), (0, 1, _DC_CHROMA), (1, 1, _AC_CHROMA)]
+
+
+def _segment(marker: int, payload: bytes) -> bytes:
+    return bytes((0xFF, marker)) + struct.pack(">H", 2 + len(payload)) + payload
+
+
+def _jpeg_headers(
+    sof: int, h: int, w: int, frame: list, qts=(), huff=(),
+    precision: int = 8, adobe: int | None = None, dac: bool = False,
     restart_interval: int = 0,
 ) -> bytearray:
-    """SOI + DQT + SOF + (DRI) + DHT common header stream."""
-    nc = 1 if gray else 3
-    out = bytearray(b"\xff\xd8")  # SOI
+    """The encoders' header writer: SOI, APP14 (the Adobe colour
+    ``adobe`` transform), DQT (one segment per table of ``qts``), the
+    ``sof`` frame header (``frame``: (h, v, table) per component),
+    DAC, DRI and DHT (``huff``: (class, id, (BITS, HUFFVAL)) per
+    table), in that order and each only when asked for. The DAC
+    segment spells out T.81's default conditioning (DC L=0 U=1, AC
+    Kx=5; what ``jpeg_arith.encode_scan`` codes with) for each table,
+    which exercises the decoder's parse."""
+    out = bytearray(b"\xff\xd8")
+    if adobe is not None:
+        out += _segment(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, adobe))
     for tq, qtab in enumerate(qts):
         # DQT payload is in zigzag scan order: seg[k] = Q_nat[ZIGZAG[k]]
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes(
-            int(qtab[z]) for z in _ZIGZAG
-        )
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for c in range(nc):
-        sof += bytes([c + 1, samp[c][0] << 4 | samp[c][1], 0 if c == 0 else 1])
-    out += sof_marker + struct.pack(">H", 2 + len(sof)) + sof
+        out += _segment(0xDB, bytes([tq]) + bytes(int(qtab[z]) for z in _ZIGZAG))
+    sof_payload = struct.pack(">BHHB", precision, h, w, len(frame))
+    for ci, (hs, vs, t) in enumerate(frame):
+        sof_payload += bytes([ci + 1, hs << 4 | vs, t])
+    out += _segment(sof, sof_payload)
+    if dac:
+        out += _segment(0xCC, b"".join(bytes([t, 0x10, 0x10 | t, 5]) for t in range(len(qts))))
     if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    specs = [(0, 0, _DC_LUMA), (1, 0, _AC_LUMA)]
-    if not gray:
-        specs += [(0, 1, _DC_CHROMA), (1, 1, _AC_CHROMA)]
-    for tc, th, (bits, vals) in specs:
-        payload = bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
+        out += _segment(0xDD, struct.pack(">H", restart_interval))
+    for tc, th, (bits, vals) in huff:
+        out += _segment(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(vals))
     return out
+
+
+def _sos_segment(frame: list, cis, ss: int = 0, se: int = 63, ah: int = 0,
+                 al: int = 0) -> bytes:
+    """SOS of a scan over components ``cis``: each codes with the DC
+    and AC tables of its frame table index."""
+    payload = bytes([len(cis)])
+    for ci in cis:
+        payload += bytes([ci + 1, frame[ci][2] * 0x11])
+    return _segment(0xDA, payload + bytes([ss, se, ah << 4 | al]))
+
+
+def _rst_marker(rst: int) -> bytes:
+    """The RSTn marker ``scan_units`` numbers ``rst`` (0-7)."""
+    return bytes((0xFF, 0xD0 + rst))
+
+
+def _huffman_codes(qts: list) -> list:
+    """(DC, AC) code maps per table: luma, then chroma."""
+    pairs = [(_DC_LUMA, _AC_LUMA), (_DC_CHROMA, _AC_CHROMA)][: len(qts)]
+    return [(_build_huff_codes(*dc), _build_huff_codes(*ac)) for dc, ac in pairs]
+
+
+def _sequential_huffman_scan(padded, frame, qts, grids, cis, mcus_x, mcus_y,
+                             restart_interval) -> bytearray:
+    """Huffman-code one sequential scan over components ``cis``;
+    restarts zero the DC predictors."""
+    codes = _huffman_codes(qts)
+    qt8 = [q.reshape(8, 8) for q in qts]
+    bw = _BitWriter()
+    preds = [0] * len(cis)
+    for rst, units in scan_units(
+        [grids[ci] for ci in cis], mcus_x, mcus_y, restart_interval
+    ):
+        if rst >= 0:
+            bw.flush()
+            bw.buf += _rst_marker(rst)
+            preds = [0] * len(cis)
+        for i, r, c in units:
+            ci = cis[i]
+            t = frame[ci][2]
+            block = padded[ci][r * 8 : r * 8 + 8, c * 8 : c * 8 + 8] - 128.0
+            preds[i] = _encode_block(bw, block, qt8[t], *codes[t], preds[i])
+    bw.flush()
+    return bw.buf
+
+
+def _progressive_huffman_scan(zz, frame, qts, grids, cis, ss, se, ah, al,
+                              mcus_x, mcus_y) -> bytearray:
+    """Huffman-code one progressive scan (T.81 G.1.2): DC first (the
+    differences of the point-transformed values, an arithmetic shift
+    of the signed value, G.1.2.1) or DC refinement bits over ``cis``,
+    or one component's AC band."""
+    codes = _huffman_codes(qts)
+    enc_ac = _enc_ac_first_block if ah == 0 else _enc_ac_refine_block
+    bw = _BitWriter()
+    preds = [0] * len(cis)
+    for _rst, units in scan_units([grids[ci] for ci in cis], mcus_x, mcus_y):
+        for i, r, c in units:
+            ci = cis[i]
+            dc_code, ac_code = codes[frame[ci][2]]
+            block = zz[ci][r, c]
+            if ss:
+                enc_ac(bw, block[ss : se + 1], ac_code, al)
+            elif ah == 0:
+                v0 = int(block[0]) >> al
+                diff = v0 - preds[i]
+                preds[i] = v0
+                t = abs(diff).bit_length()
+                bw.write(*dc_code[t])
+                if t:
+                    bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+            else:
+                bw.write((int(block[0]) >> al) & 1, 1)
+    bw.flush()
+    return bw.buf
+
+
+def _encode(frame, qts, planes, sof: int, script, restart_interval: int = 0,
+            adobe: int | None = None) -> bytes:
+    """The encoders' back half: pad the planes, write the headers for
+    frame type ``sof``, then one SOS and entropy-coded segment per scan
+    of ``script``, each (components, Ss, Se, Ah, Al)."""
+    h, w = planes[0].shape
+    grids, mcus_x, mcus_y, padded = _pad_planes(planes, frame)
+    arithmetic = sof in (0xC9, 0xCA)
+    out = _jpeg_headers(
+        sof, h, w, frame, qts, () if arithmetic else _HUFF_SPECS[: 2 * len(qts)],
+        adobe=adobe, dac=arithmetic, restart_interval=restart_interval,
+    )
+    if sof != 0xC0:
+        zz = _quantize(padded, frame, qts)
+    if arithmetic:
+        from ragflow_ocr_spark.kernels import jpeg_arith as _ja
+    for cis, ss, se, ah, al in script:
+        out += _sos_segment(frame, cis, ss, se, ah, al)
+        if arithmetic:
+            out += _ja.encode_scan(
+                [(zz[ci], grids[ci], frame[ci][2]) for ci in cis],
+                ss, se, ah, al, mcus_x, mcus_y, restart_interval,
+                sequential=sof == 0xC9,
+            )
+        elif sof == 0xC2:
+            out += _progressive_huffman_scan(
+                zz, frame, qts, grids, cis, ss, se, ah, al, mcus_x, mcus_y
+            )
+        else:
+            out += _sequential_huffman_scan(
+                padded, frame, qts, grids, cis, mcus_x, mcus_y, restart_interval
+            )
+    out += b"\xff\xd9"  # EOI
+    return bytes(out)
+
+
+def _sequential_script(img: np.ndarray, interleave: bool) -> list:
+    """One interleaved scan of every component, or one scan each."""
+    nc = 1 if img.ndim == 2 else 3
+    if interleave:
+        return [(range(nc), 0, 63, 0, 0)]
+    return [([ci], 0, 63, 0, 0) for ci in range(nc)]
+
+
+def _progressive_script(img: np.ndarray, bands) -> list:
+    """Interleaved DC first at Al=1 → each component's AC ``bands``
+    first at Al=1 → each component's AC refinement to Al=0 →
+    interleaved DC refinement."""
+    every = range(1 if img.ndim == 2 else 3)
+    return (
+        [(every, 0, 0, 0, 1)]
+        + [([ci], ss, se, 0, 1) for ci in every for ss, se in bands]
+        + [([ci], 1, 63, 1, 0) for ci in every]
+        + [(every, 0, 0, 1, 0)]
+    )
 
 
 def encode_jpeg(
@@ -1784,110 +1912,8 @@ def encode_jpeg(
     segment and RSTn markers every N MCUs — both exist chiefly to
     exercise the decoder's sampling/restart paths, which real-world
     JPEGs use."""
-    gray, h, w, samp, qts, hmax, vmax, mcus_x, mcus_y, padded = _prep_encode(
-        img, quality, subsample
-    )
-    nc = 1 if gray else 3
-    out = _header_segments(h, w, gray, samp, qts, b"\xff\xc0", restart_interval)
-    # SOS
-    sos = bytes([nc])
-    for c in range(nc):
-        sos += bytes([c + 1, 0x00 if c == 0 else 0x11])
-    sos += bytes([0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    dc_codes = [_build_huff_codes(*_DC_LUMA)]
-    ac_codes = [_build_huff_codes(*_AC_LUMA)]
-    if not gray:
-        dc_codes.append(_build_huff_codes(*_DC_CHROMA))
-        ac_codes.append(_build_huff_codes(*_AC_CHROMA))
-
-    bw = _BitWriter()
-    preds = [0] * nc
-    qt8 = [q.reshape(8, 8) for q in qts]
-    mcu_count = 0
-    rst = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                bw.flush()
-                bw.buf += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                preds = [0] * nc
-            for ci in range(nc):
-                ti = 0 if ci == 0 else 1
-                hs, vs = samp[ci]
-                for by in range(vs):
-                    for bx in range(hs):
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        block = padded[ci][y0 : y0 + 8, x0 : x0 + 8] - 128.0
-                        preds[ci] = _encode_block(
-                            bw, block, qt8[ti], dc_codes[ti], ac_codes[ti], preds[ci]
-                        )
-            mcu_count += 1
-    bw.flush()
-    out += bw.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-def _arith_headers(h, w, nc, samp, qts, sof_marker: int,
-                   restart_interval: int = 0) -> bytearray:
-    """SOI + DQT + SOF9/SOF10 + DAC (+ DRI) header stream. The DAC
-    segment spells out the default conditioning (DC L=0/U=1, AC Kx=5)
-    to exercise the decoder's parse."""
-    out = bytearray(b"\xff\xd8")
-    for tq, qtab in enumerate(qts):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes(
-            int(qtab[z]) for z in _ZIGZAG
-        )
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for c in range(nc):
-        sof += bytes([c + 1, samp[c][0] << 4 | samp[c][1], 0 if c == 0 else 1])
-    out += bytes([0xFF, sof_marker]) + struct.pack(">H", 2 + len(sof)) + sof
-    dac = b""
-    for t in range(1 if nc == 1 else 2):
-        dac += bytes([0x00 | t, (1 << 4) | 0])  # DC: U=1, L=0
-        dac += bytes([0x10 | t, 5])             # AC: Kx=5
-    out += b"\xff\xcc" + struct.pack(">H", 2 + len(dac)) + dac
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    return out
-
-
-def _arith_blocks(nc, samp, qts, mcus_x, mcus_y, padded, h, w, hmax, vmax):
-    """Quantized zigzag blocks + scan metas shared by the arithmetic
-    encoders. Metas carry the ceil block grid for non-interleaved
-    scans."""
-    qt8 = [q.reshape(8, 8) for q in qts]
-    blocks_per_comp = []
-    metas = []
-    for ci in range(nc):
-        ti = 0 if ci == 0 else 1
-        hs, vs = samp[ci]
-        by_n, bx_n = mcus_y * vs, mcus_x * hs
-        p = padded[ci]
-        blocks8 = (p - 128.0).reshape(by_n, 8, bx_n, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("ij,abjk,kl->abil", _C, blocks8, _C.T, optimize=True)
-        qc = np.round(coef / qt8[ti].astype(np.float64)).astype(np.int64)
-        blocks_per_comp.append(qc.reshape(by_n, bx_n, 64)[..., _ZIGZAG])
-        metas.append({
-            "h": hs, "v": vs, "dc_tbl_a": ti, "ac_tbl_a": ti,
-            "bx": (-(-(w * hs) // hmax) + 7) // 8,
-            "by": (-(-(h * vs) // vmax) + 7) // 8,
-        })
-    return blocks_per_comp, metas
-
-
-def _arith_sos(scan_cis: list[int], ss: int, se: int, ah: int,
-               al: int) -> bytes:
-    payload = bytes([len(scan_cis)])
-    for ci in scan_cis:
-        ti = 0 if ci == 0 else 1
-        payload += bytes([ci + 1, (ti << 4) | ti])
-    payload += bytes([ss, se, (ah << 4) | al])
-    return b"\xff\xda" + struct.pack(">H", 2 + len(payload)) + payload
+    return _encode(*_prep_encode(img, quality, subsample), 0xC0,
+                   _sequential_script(img, True), restart_interval)
 
 
 def encode_jpeg_arith(
@@ -1904,33 +1930,8 @@ def encode_jpeg_arith(
     quality. ``restart_interval`` emits DRI + RSTn segments (each an
     independently terminated QM stream); ``interleave=False`` emits
     one sequential scan per component (the multi-scan layout)."""
-    gray, h, w, samp, qts, hmax, vmax, mcus_x, mcus_y, padded = _prep_encode(
-        img, quality, subsample
-    )
-    nc = 1 if gray else 3
-    out = _arith_headers(h, w, nc, samp, qts, 0xC9, restart_interval)
-    blocks_per_comp, metas = _arith_blocks(
-        nc, samp, qts, mcus_x, mcus_y, padded, h, w, hmax, vmax
-    )
-    from ragflow_ocr_spark.kernels import jpeg_arith as _ja
-
-    dc_cond = {t: (0, 1) for t in range(2)}
-    ac_cond = {t: 5 for t in range(2)}
-    if interleave or nc == 1:
-        out += _arith_sos(list(range(nc)), 0, 63, 0, 0)
-        out += _ja.encode_scan(
-            blocks_per_comp, metas, 0, 63, 0, 0, mcus_x, mcus_y,
-            dc_cond, ac_cond, restart_interval,
-        )
-    else:
-        for ci in range(nc):
-            out += _arith_sos([ci], 0, 63, 0, 0)
-            out += _ja.encode_scan(
-                [blocks_per_comp[ci]], [metas[ci]], 0, 63, 0, 0,
-                mcus_x, mcus_y, dc_cond, ac_cond, restart_interval,
-            )
-    out += b"\xff\xd9"
-    return bytes(out)
+    return _encode(*_prep_encode(img, quality, subsample), 0xC9,
+                   _sequential_script(img, interleave), restart_interval)
 
 
 def encode_jpeg_arith_progressive(
@@ -1946,38 +1947,8 @@ def encode_jpeg_arith_progressive(
     → per-component AC refinement to Al=0 → DC refinement. The
     progressive reconstruction is exact, so decoded pixels equal the
     sequential encodes at the same quality."""
-    gray, h, w, samp, qts, hmax, vmax, mcus_x, mcus_y, padded = _prep_encode(
-        img, quality, subsample
-    )
-    nc = 1 if gray else 3
-    out = _arith_headers(h, w, nc, samp, qts, 0xCA, restart_interval)
-    blocks_per_comp, metas = _arith_blocks(
-        nc, samp, qts, mcus_x, mcus_y, padded, h, w, hmax, vmax
-    )
-    from ragflow_ocr_spark.kernels import jpeg_arith as _ja
-
-    dc_cond = {t: (0, 1) for t in range(2)}
-    ac_cond = {t: 5 for t in range(2)}
-
-    def scan(cis, ss, se, ah, al):
-        nonlocal out
-        out += _arith_sos(cis, ss, se, ah, al)
-        out += _ja.encode_scan(
-            [blocks_per_comp[ci] for ci in cis],
-            [metas[ci] for ci in cis],
-            ss, se, ah, al, mcus_x, mcus_y, dc_cond, ac_cond,
-            restart_interval, sequential=False,
-        )
-
-    scan(list(range(nc)), 0, 0, 0, 1)          # DC first, Al=1
-    for ci in range(nc):
-        scan([ci], 1, 5, 0, 1)                 # AC band 1 first
-        scan([ci], 6, 63, 0, 1)                # AC band 2 first
-    for ci in range(nc):
-        scan([ci], 1, 63, 1, 0)                # AC refinement → Al=0
-    scan(list(range(nc)), 0, 0, 1, 0)          # DC refinement → Al=0
-    out += b"\xff\xd9"
-    return bytes(out)
+    return _encode(*_prep_encode(img, quality, subsample), 0xCA,
+                   _progressive_script(img, ((1, 5), (6, 63))), restart_interval)
 
 
 def encode_jpeg_multiscan(
@@ -1990,46 +1961,8 @@ def encode_jpeg_multiscan(
     (SOF0 with one non-interleaved scan per component, T.81 A.2.2) —
     the layout custom scan scripts emit. Pixel-identical to the
     single-scan baseline encode at the same quality."""
-    gray, h, w, samp, qts, hmax, vmax, mcus_x, mcus_y, padded = _prep_encode(
-        img, quality, subsample
-    )
-    nc = 1 if gray else 3
-    out = _header_segments(h, w, gray, samp, qts, b"\xff\xc0",
-                           restart_interval)
-    dc_codes = [_build_huff_codes(*_DC_LUMA)]
-    ac_codes = [_build_huff_codes(*_AC_LUMA)]
-    if not gray:
-        dc_codes.append(_build_huff_codes(*_DC_CHROMA))
-        ac_codes.append(_build_huff_codes(*_AC_CHROMA))
-    qt8 = [q.reshape(8, 8) for q in qts]
-    for ci in range(nc):
-        ti = 0 if ci == 0 else 1
-        hs, vs = samp[ci]
-        gbx = (-(-(w * hs) // hmax) + 7) // 8
-        gby = (-(-(h * vs) // vmax) + 7) // 8
-        sos = bytes([1, ci + 1, (ti << 4) | ti, 0, 63, 0])
-        out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-        bw = _BitWriter()
-        pred = 0
-        rst = 0
-        blk = 0
-        for by in range(gby):
-            for bx in range(gbx):
-                if restart_interval and blk and blk % restart_interval == 0:
-                    bw.flush()
-                    bw.buf += bytes([0xFF, 0xD0 + rst])
-                    rst = (rst + 1) % 8
-                    pred = 0
-                block = padded[ci][by * 8: by * 8 + 8, bx * 8: bx * 8 + 8]
-                pred = _encode_block(
-                    bw, block - 128.0, qt8[ti], dc_codes[ti], ac_codes[ti],
-                    pred,
-                )
-                blk += 1
-        bw.flush()
-        out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)
+    return _encode(*_prep_encode(img, quality, subsample), 0xC0,
+                   _sequential_script(img, False), restart_interval)
 
 
 def encode_jpeg_cmyk(
@@ -2046,76 +1979,16 @@ def encode_jpeg_cmyk(
     oracle construction."""
     if img.ndim == 2:
         img = np.stack([img] * 3, axis=-1)
-    h, w = img.shape[:2]
     f = img.astype(np.float64)
-    if ycck:
-        r, g, b = f[..., 0], f[..., 1], f[..., 2]
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
-            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
-        ]
-    else:
-        planes = [f[..., 0], f[..., 1], f[..., 2]]
-    planes.append(np.full((h, w), 255.0))
+    planes = _rgb_to_ycc(f) if ycck else [f[..., 0], f[..., 1], f[..., 2]]
+    planes.append(np.full(img.shape[:2], 255.0))
+    frame = [(1, 1, t) for t in ((0, 1, 1, 0) if ycck else (0, 0, 0, 0))]
     qts = [
         _quality_scale(_STD_LUMA_Q, quality),
         _quality_scale(_STD_CHROMA_Q, quality),
     ]
-    mcus_x = (w + 7) // 8
-    mcus_y = (h + 7) // 8
-    padded = []
-    for p in planes:
-        pp = np.empty((mcus_y * 8, mcus_x * 8))
-        pp[:h, :w] = p
-        pp[h:, :w] = pp[h - 1 : h, :w]
-        pp[:, w:] = pp[:, w - 1 : w]
-        padded.append(pp)
-
-    out = bytearray(b"\xff\xd8")
-    adobe = b"Adobe" + struct.pack(">HHHB", 100, 0, 0, 2 if ycck else 0)
-    out += b"\xff\xee" + struct.pack(">H", 2 + len(adobe)) + adobe
-    for tq, qtab in enumerate(qts):
-        out += b"\xff\xdb" + struct.pack(">H", 67) + bytes([tq]) + bytes(
-            int(qtab[z]) for z in _ZIGZAG
-        )
-    tq_of = [0, 1, 1, 0] if ycck else [0, 0, 0, 0]
-    sof = struct.pack(">BHHB", 8, h, w, 4)
-    for ci in range(4):
-        sof += bytes([ci + 1, 0x11, tq_of[ci]])
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    for tc, th, (bits, vals) in [
-        (0, 0, _DC_LUMA),
-        (1, 0, _AC_LUMA),
-        (0, 1, _DC_CHROMA),
-        (1, 1, _AC_CHROMA),
-    ]:
-        payload = bytes([tc << 4 | th]) + bytes(bits) + bytes(vals)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
-    sos = bytes([4])
-    for ci in range(4):
-        t = tq_of[ci]
-        sos += bytes([ci + 1, t << 4 | t])
-    sos += bytes([0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    dc_codes = [_build_huff_codes(*_DC_LUMA), _build_huff_codes(*_DC_CHROMA)]
-    ac_codes = [_build_huff_codes(*_AC_LUMA), _build_huff_codes(*_AC_CHROMA)]
-    qt8 = [q.reshape(8, 8) for q in qts]
-    bw = _BitWriter()
-    preds = [0] * 4
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for ci in range(4):
-                t = tq_of[ci]
-                block = padded[ci][my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] - 128.0
-                preds[ci] = _encode_block(
-                    bw, block, qt8[t], dc_codes[t], ac_codes[t], preds[ci]
-                )
-    bw.flush()
-    out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)
+    return _encode(frame, qts, planes, 0xC0, [(range(4), 0, 63, 0, 0)],
+                   adobe=2 if ycck else 0)
 
 
 # ------------------------------------------------------ progressive JPEG
@@ -2197,94 +2070,8 @@ def encode_jpeg_progressive(
     per-component AC refinement to Al=0 → interleaved DC refinement.
     Standard Annex-K tables throughout.
     """
-    gray, h, w, samp, qts, hmax, vmax, mcus_x, mcus_y, padded = _prep_encode(
-        img, quality, subsample
-    )
-    nc = 1 if gray else 3
-    out = _header_segments(h, w, gray, samp, qts, b"\xff\xc2")
-    dc_codes = [_build_huff_codes(*_DC_LUMA)]
-    ac_codes = [_build_huff_codes(*_AC_LUMA)]
-    if not gray:
-        dc_codes.append(_build_huff_codes(*_DC_CHROMA))
-        ac_codes.append(_build_huff_codes(*_AC_CHROMA))
-
-    # quantize every block up front: (by_pad, bx_pad, 64) zigzag coefs
-    zz = []
-    for ci, p in enumerate(padded):
-        ti = 0 if ci == 0 else min(1, len(qts) - 1)
-        q8 = qts[ti].reshape(8, 8).astype(np.float64)
-        by, bx = p.shape[0] // 8, p.shape[1] // 8
-        blocks = (p - 128.0).reshape(by, 8, bx, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("ij,abjk,kl->abil", _C, blocks, _C.T, optimize=True)
-        qc = np.round(coef / q8).astype(np.int64)
-        zz.append(qc.reshape(by, bx, 64)[..., _ZIGZAG])
-
-    def sos(scan_comps: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        payload = bytes([len(scan_comps)])
-        for ci in scan_comps:
-            ti = 0 if ci == 0 else 1
-            payload += bytes([ci + 1, (ti << 4) | ti])
-        payload += bytes([ss, se, (ah << 4) | al])
-        return b"\xff\xda" + struct.pack(">H", 2 + len(payload)) + payload
-
-    def dc_block_iter():
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                for ci in range(nc):
-                    hs, vs = samp[ci]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            yield ci, zz[ci][my * vs + by, mx * hs + bx]
-
-    # scan 1: DC first, interleaved, Al=1 (DC point transform is an
-    # arithmetic shift of the signed value — T.81 G.1.2.1)
-    out += sos(list(range(nc)), 0, 0, 0, 1)
-    bw = _BitWriter()
-    preds = [0] * nc
-    for ci, block in dc_block_iter():
-        v0 = int(block[0]) >> 1
-        diff = v0 - preds[ci]
-        preds[ci] = v0
-        t = abs(diff).bit_length()
-        c, ln = dc_codes[0 if ci == 0 else 1][t]
-        bw.write(c, ln)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    bw.flush()
-    out += bw.buf
-
-    # per-component actual (non-padded) block grids — AC scans are
-    # non-interleaved and cover ceil-dims only
-    grids = []
-    for ci in range(nc):
-        hs, vs = samp[ci]
-        gbx = (-(-(w * hs) // hmax) + 7) // 8
-        gby = (-(-(h * vs) // vmax) + 7) // 8
-        grids.append((gby, gbx))
-
-    for phase in ("first", "refine"):
-        for ci in range(nc):
-            gby, gbx = grids[ci]
-            ac_code = ac_codes[0 if ci == 0 else 1]
-            out += sos([ci], 1, 63, 0 if phase == "first" else 1,
-                       1 if phase == "first" else 0)
-            bw = _BitWriter()
-            enc = _enc_ac_first_block if phase == "first" else _enc_ac_refine_block
-            for by in range(gby):
-                for bx in range(gbx):
-                    enc(bw, zz[ci][by, bx, 1:], ac_code, 1 if phase == "first" else 0)
-            bw.flush()
-            out += bw.buf
-
-    # final scan: DC refinement to Al=0 — one raw bit per block
-    out += sos(list(range(nc)), 0, 0, 1, 0)
-    bw = _BitWriter()
-    for _ci, block in dc_block_iter():
-        bw.write(int(block[0]) & 1, 1)
-    bw.flush()
-    out += bw.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    return _encode(*_prep_encode(img, quality, subsample), 0xC2,
+                   _progressive_script(img, ((1, 63),)))
 
 
 def encode_jpeg_lossless(

@@ -43,6 +43,7 @@ import struct
 
 import numpy as np
 
+from ragflow_ocr_spark.kernels.imgcodecs import _ycc_to_rgb
 from ragflow_ocr_spark.kernels.pngcodec import iso_boxes
 
 MAX_J2K_PIXELS = 1 << 23
@@ -1447,9 +1448,7 @@ def _decode_tile(hdr: _Header, body: bytes, tx0, ty0, tx1, ty1):
             g = y - (cb + cr) // 4
             planes_out = [cr + g, g, cb + g]
         else:
-            planes_out = [y + 1.402 * cr,
-                          y - 0.344136 * cb - 0.714136 * cr,
-                          y + 1.772 * cb]
+            planes_out = _ycc_to_rgb(y, cb, cr)
     out = []
     for p in planes_out:
         if hdr.reversible:

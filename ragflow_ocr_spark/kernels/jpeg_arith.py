@@ -6,8 +6,10 @@ binary QM arithmetic coder with an adaptive 113-state probability
 estimation machine codes a tree of binary decisions per coefficient
 (zero/nonzero, sign, log2 magnitude category, magnitude bits), with
 conditioning contexts selected by the previous DC difference (DC) and
-the coefficient index (AC). kernels/imgcodecs.py dispatches SOF9
-scans here and supplies the shared DCT/quantization machinery.
+the coefficient index (AC). kernels/imgcodecs.py dispatches SOF9 and
+SOF10 scans here and supplies the rest: the unit order and restart
+points of each scan (``imgcodecs.scan_units``), the RSTn writer, the
+marker segments and the DCT/quantization.
 
 The state-transition table QM_TABLE is public spec data (T.81 Table
 D.3: Qe value, next-index-after-LPS/MPS, MPS-switch flag per state);
@@ -35,6 +37,8 @@ SURVEY.md §2.3 S3 / PARITY.md S3 exotica seam.
 from __future__ import annotations
 
 import numpy as np
+
+from ragflow_ocr_spark.kernels.imgcodecs import _rst_marker, scan_units
 
 # T.81 Table D.3: (Qe, next-state after LPS, next-state after MPS,
 # switch-MPS flag). State 113 is the non-adapting "fixed 0.5" bin
@@ -83,6 +87,11 @@ QM_TABLE = (
 FIXED_BIN = 113  # non-adapting equiprobable state
 
 _MAX_DECISIONS_PER_BLOCK = 4096  # decision-count backstop per 8x8 block
+
+# T.81's default conditioning (F.1.4.4.1.4, F.1.4.4.2.1), used when no
+# DAC segment sets a table's: DC bounds (L, U) and the AC bound Kx
+_DC_COND = (0, 1)
+_AC_KX = 5
 
 
 class QMDecoder:
@@ -379,30 +388,18 @@ def decode_scan(
 
     _reset()
     dec = QMDecoder(data, pos)
-    # unit list: an MCU (interleaved) or a single block (Ns = 1)
-    if len(scan_comps) > 1:
-        units_n = mcus_x * mcus_y
-        def unit_blocks(ui):
-            my, mx = divmod(ui, mcus_x)
-            for c in scan_comps:
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        yield c, my * c["v"] + by, mx * c["h"] + bx
-    else:
-        c0 = scan_comps[0]
-        gbx = c0["bx"]
-        units_n = c0["by"] * gbx
-        def unit_blocks(ui):
-            yield c0, ui // gbx, ui % gbx
-    for ui in range(units_n):
-        if restart_interval and ui and ui % restart_interval == 0:
+    for rst, units in scan_units(
+        [c["grid"] for c in scan_comps], mcus_x, mcus_y, restart_interval
+    ):
+        if rst >= 0:
             p = _find_marker(data, dec.consumed())
             if not 0xD0 <= data[p + 1] <= 0xD7:
                 raise ValueError("JPEG restart marker expected")
             dec = QMDecoder(data, p + 2)
             _reset()
-        for c, byy, bxx in unit_blocks(ui):
-            blk = c["coefs"][byy, bxx]
+        for ci, r, col in units:
+            c = scan_comps[ci]
+            blk = c["coefs"][r, col]
             if sequential:
                 _decode_dc(dec, c, blk, dc_stats, dc_cond, 0)
                 _decode_ac_first(dec, c, blk, ac_stats, fixed, ac_cond,
@@ -426,7 +423,7 @@ def _decode_dc(dec, c, blk, dc_stats, dc_cond, al):
     budget = _MAX_DECISIONS_PER_BLOCK
     tbl = c["dc_tbl_a"]
     st = dc_stats[tbl]
-    L, U = dc_cond.get(tbl, (0, 1))
+    L, U = dc_cond.get(tbl, _DC_COND)
     s0 = c["_dc_context"]
     if dec.decode(st, s0) == 0:
         c["_dc_context"] = 0
@@ -467,7 +464,7 @@ def _decode_ac_first(dec, c, blk, ac_stats, fixed, ac_cond, ss, se, al):
     budget = _MAX_DECISIONS_PER_BLOCK
     tbl = c["ac_tbl_a"]
     st = ac_stats[tbl]
-    kx = ac_cond.get(tbl, 5)
+    kx = ac_cond.get(tbl, _AC_KX)
     k = ss
     while k <= se:
         s0 = 3 * (k - 1)
@@ -535,16 +532,13 @@ def _decode_ac_refine(dec, c, blk, ac_stats, fixed, ss, se, al):
 
 
 def encode_scan(
-    blocks_per_comp: list[np.ndarray],
-    comps_meta: list[dict],
+    comps: list[tuple[np.ndarray, tuple[int, int, int, int], int]],
     ss: int,
     se: int,
     ah: int,
     al: int,
     mcus_x: int,
     mcus_y: int,
-    dc_cond: dict[int, tuple[int, int]],
-    ac_cond: dict[int, int],
     restart_interval: int = 0,
     sequential: bool = True,
 ) -> bytes:
@@ -553,82 +547,64 @@ def encode_scan(
     segment is an independently terminated QM stream with re-zeroed
     statistics, mirroring decode_scan).
 
-    blocks_per_comp[ci] has shape (rows, cols, 64) in zigzag order
-    (the decode-side coefs layout); comps_meta[ci] = {"h","v",
-    "dc_tbl_a","ac_tbl_a"} plus "by"/"bx" (ceil block grid) for
-    non-interleaved scans. Handles the same scan shapes decode_scan
-    does: sequential, DC first/refine, AC first/refine bands."""
+    ``comps`` holds each scan component as ``(blocks, grid, table)``:
+    its (rows, cols, 64) zigzag blocks (the decode-side coefs layout),
+    its ``imgcodecs.scan_units`` grid and its DC/AC table index, coded
+    with T.81's default conditioning (DC L=0 U=1, AC Kx=5). Handles the
+    same scan shapes decode_scan does: sequential, DC first/refine, AC
+    first/refine bands."""
     fixed = bytearray([FIXED_BIN])
     dc_stats: dict[int, bytearray] = {}
     ac_stats: dict[int, bytearray] = {}
-    state = [{"ctx": 0, "last": 0} for _ in comps_meta]
+    state = [{"ctx": 0, "last": 0} for _ in comps]
 
     def _reset():
         dc_stats.clear()
         ac_stats.clear()
-        for ci, meta in enumerate(comps_meta):
+        for ci, (_blocks, _grid, t) in enumerate(comps):
             if sequential or ss == 0:
-                dc_stats.setdefault(meta["dc_tbl_a"], bytearray(64))
+                dc_stats.setdefault(t, bytearray(64))
                 state[ci]["ctx"] = 0
                 state[ci]["last"] = 0
             if sequential or ss > 0:
-                ac_stats.setdefault(meta["ac_tbl_a"], bytearray(256))
+                ac_stats.setdefault(t, bytearray(256))
 
     _reset()
     enc = QMEncoder()
     out = bytearray()
-    if len(comps_meta) > 1:
-        units_n = mcus_x * mcus_y
-        def unit_blocks(ui):
-            my, mx = divmod(ui, mcus_x)
-            for ci, meta in enumerate(comps_meta):
-                for by in range(meta["v"]):
-                    for bx in range(meta["h"]):
-                        yield ci, meta, my * meta["v"] + by, mx * meta["h"] + bx
-    else:
-        meta0 = comps_meta[0]
-        gby = meta0.get("by", blocks_per_comp[0].shape[0])
-        gbx = meta0.get("bx", blocks_per_comp[0].shape[1])
-        units_n = gby * gbx
-        def unit_blocks(ui):
-            yield 0, meta0, ui // gbx, ui % gbx
-    rst = 0
-    for ui in range(units_n):
-        if restart_interval and ui and ui % restart_interval == 0:
+    for rst, units in scan_units(
+        [grid for _blocks, grid, _t in comps], mcus_x, mcus_y, restart_interval
+    ):
+        if rst >= 0:
             out += enc.flush()
-            out += bytes([0xFF, 0xD0 + rst])
-            rst = (rst + 1) % 8
+            out += _rst_marker(rst)
             enc = QMEncoder()
             _reset()
-        for ci, meta, byy, bxx in unit_blocks(ui):
-            zz = blocks_per_comp[ci][byy, bxx]
+        for ci, r, col in units:
+            blocks, _grid, t = comps[ci]
+            zz = blocks[r, col]
             if sequential:
-                _encode_dc(enc, meta, state[ci], zz, dc_stats, dc_cond, 0)
-                _encode_ac_first(enc, meta, zz, ac_stats, fixed, ac_cond,
-                                 1, 63, 0)
+                _encode_dc(enc, t, state[ci], zz, dc_stats, 0)
+                _encode_ac_first(enc, t, zz, ac_stats, fixed, 1, 63, 0)
             elif ss == 0:
                 if ah == 0:
-                    _encode_dc(enc, meta, state[ci], zz, dc_stats,
-                               dc_cond, al)
+                    _encode_dc(enc, t, state[ci], zz, dc_stats, al)
                 else:  # DC refinement: one raw-ish bit per block
                     enc.encode(fixed, 0, (int(zz[0]) >> al) & 1)
             elif ah == 0:
-                _encode_ac_first(enc, meta, zz, ac_stats, fixed, ac_cond,
-                                 ss, se, al)
+                _encode_ac_first(enc, t, zz, ac_stats, fixed, ss, se, al)
             else:
-                _encode_ac_refine(enc, meta, zz, ac_stats, fixed,
-                                  ss, se, ah, al)
+                _encode_ac_refine(enc, t, zz, ac_stats, fixed, ss, se, ah, al)
     out += enc.flush()
     return bytes(out)
 
 
-def _encode_dc(enc, meta, stt, zz, dc_stats, dc_cond, al):
+def _encode_dc(enc, tbl, stt, zz, dc_stats, al):
     """DC difference (T.81 F.1.4.1) over point-transformed values
     (arithmetic shift >> al, G.1.2.1 — floor semantics like libjpeg's
     IRIGHT_SHIFT)."""
-    tbl = meta["dc_tbl_a"]
     st = dc_stats[tbl]
-    L, U = dc_cond.get(tbl, (0, 1))
+    L, U = _DC_COND
     s0 = stt["ctx"]
     cur = int(zz[0]) >> al
     diff = cur - stt["last"]
@@ -670,12 +646,11 @@ def _encode_dc(enc, meta, stt, zz, dc_stats, dc_cond, al):
             enc.encode(st, mpos, 1 if (m & v) else 0)
 
 
-def _encode_ac_first(enc, meta, zz, ac_stats, fixed, ac_cond, ss, se, al):
+def _encode_ac_first(enc, tbl, zz, ac_stats, fixed, ss, se, al):
     """AC coefficients, first pass (T.81 F.1.4.2 / G.1.2.2):
     magnitudes are point-transformed |v| >> al, sign kept."""
-    tbl = meta["ac_tbl_a"]
     st = ac_stats[tbl]
-    kx = ac_cond.get(tbl, 5)
+    kx = _AC_KX
     ke = se
     while ke >= ss and (abs(int(zz[ke])) >> al) == 0:
         ke -= 1
@@ -720,13 +695,13 @@ def _encode_ac_first(enc, meta, zz, ac_stats, fixed, ac_cond, ss, se, al):
         enc.encode(st, 3 * (k - 1), 1)  # EOB
 
 
-def _encode_ac_refine(enc, meta, zz, ac_stats, fixed, ss, se, ah, al):
+def _encode_ac_refine(enc, tbl, zz, ac_stats, fixed, ss, se, ah, al):
     """AC successive-approximation refinement (T.81 G.1.2.3 arithmetic
     form, mirroring _decode_ac_refine): correction bit |v|>>al & 1 for
     coefficients already nonzero at the previous stage (|v|>>ah != 0),
     newly-nonzero arrivals coded via the 3(k-1)+1 bin + fixed-bin
     sign, EOB decision once past both stages' end-of-block indices."""
-    st_all = ac_stats[meta["ac_tbl_a"]]
+    st_all = ac_stats[tbl]
     ke = se
     while ke >= ss and (abs(int(zz[ke])) >> al) == 0:
         ke -= 1

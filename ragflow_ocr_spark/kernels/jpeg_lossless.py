@@ -25,10 +25,13 @@ Semantics implemented (T.81 H.1-H.2):
   at the exact sample where the reset lands (deterministic, and the
   in-repo encoder mirrors it bit-for-bit);
 - sample precision P = 2..16 (the frame, not the entropy coder,
-  carries P); interleaved MCUs are one h×v sample group per
-  component, non-interleaved scans raster one component;
-- restart markers every Ri MCUs (an MCU is ONE sample per component
-  here, not an 8x8 block).
+  carries P);
+- both directions walk ``imgcodecs.scan_units`` over sample grids:
+  interleaved MCUs are one h×v sample group per component,
+  non-interleaved scans raster one component, and a restart marker
+  comes every Ri MCUs (an MCU is ONE sample group here, not an 8x8
+  block). The encoder's marker segments come from the
+  ``imgcodecs`` writers.
 
 Decode output is uint8 like every other codec in the stack: P == 8
 passes through exactly; other precisions map by round(v*255/(2^P-1))
@@ -45,9 +48,18 @@ shared 64 MPix ceiling.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from ragflow_ocr_spark.kernels.imgcodecs import (
+    _BitWriter,
+    _bits,
+    _build_huff_codes,
+    _huff,
+    _jpeg_headers,
+    _rst_marker,
+    _sos_segment,
+    scan_units,
+)
 
 # sequential per-sample Python decode: ~8 s worst case at this cap
 MAX_LOSSLESS_PIXELS = 1 << 23
@@ -87,111 +99,63 @@ def decode_scan(
 ) -> None:
     """Entropy-decode one lossless scan into each component's
     ``samples`` array (allocated by the SOF3 branch of
-    ``imgcodecs.decode_jpeg``). ``br`` is an ``imgcodecs._BitReader``
-    positioned at the scan's entropy data; restart markers advance its
-    segment list exactly like the DCT scans."""
-    from ragflow_ocr_spark.kernels.imgcodecs import _bits, _huff
-
+    ``imgcodecs.decode_jpeg``), in ``imgcodecs.scan_units`` order.
+    ``br`` is an ``imgcodecs._BitReader`` positioned at the scan's
+    entropy data; restart markers advance its segment list exactly
+    like the DCT scans."""
     default = 1 << (precision - pt - 1)
     comps = [s["_comp"] for s in scan]
-    tables = []
-    for s in scan:
+    plan = []
+    for s, c in zip(scan, comps):
         tbl = huff_dc.get(s["dc"])
         if tbl is None:
             raise ValueError("lossless scan references undefined DC table")
-        tables.append(tbl)
-
-    interleaved = len(comps) > 1
+        plan.append((c["samples"], *tbl))
     # per-component walk state: fresh-reset flag and the row the
     # current restart interval started on (H.2.2 first-line rule)
     fresh = [True] * len(comps)
     fresh_row = [0] * len(comps)
-
-    if interleaved:
-        plan = [
-            (ci, c["v"], c["h"], c["samples"], tables[ci])
-            for ci, c in enumerate(comps)
-        ]
-    else:
-        c = comps[0]
-        sy, sx = c["sy"], c["sx"]
-
     buf, p = br.buf, br.pos
     nbits_total = br.nbits_total
-    mcu = 0
-    n_mcus = (mcus_x * mcus_y) if interleaved else (
-        comps[0]["sy"] * comps[0]["sx"]
-    )
-    while mcu < n_mcus:
-        if restart_interval and mcu and mcu % restart_interval == 0:
+    for rst, units in scan_units(
+        [c["grid"] for c in comps], mcus_x, mcus_y, restart_interval
+    ):
+        if rst >= 0:
             br.align_to_marker()
             buf, p = br.buf, br.pos
             nbits_total = br.nbits_total
             fresh = [True] * len(comps)
         if p >= nbits_total:
             raise ValueError("truncated lossless JPEG scan")
-        if interleaved:
-            my, mx = divmod(mcu, mcus_x)
-            for ci, v, hs, samples, (valt, lent) in plan:
-                for dy in range(v):
-                    for dx in range(hs):
-                        r = my * v + dy
-                        c_ = mx * hs + dx
-                        ssss, p = _huff(buf, p, valt, lent)
-                        if ssss > 16:
-                            raise ValueError("bad lossless diff category")
-                        if ssss == 16:
-                            diff = 32768
-                        elif ssss:
-                            bits, p = _bits(buf, p, ssss)
-                            diff = (
-                                bits
-                                if bits >= (1 << (ssss - 1))
-                                else bits - (1 << ssss) + 1
-                            )
-                        else:
-                            diff = 0
-                        if fresh[ci]:
-                            px = default
-                            fresh[ci] = False
-                            fresh_row[ci] = r
-                        elif r == fresh_row[ci]:
-                            px = int(samples[r, c_ - 1])
-                        elif c_ == 0:
-                            px = int(samples[r - 1, c_])
-                        else:
-                            px = _predict(samples, r, c_, predictor)
-                        samples[r, c_] = (px + diff) & 0xFFFF
-        else:
-            r, c_ = divmod(mcu, sx)
-            samples = c["samples"]
-            valt, lent = tables[0]
-            ssss, p = _huff(buf, p, valt, lent)
+        for ci, r, c_ in units:
+            samples, valt, lent = plan[ci]
+            # _huff inlined: this is the per-sample hot loop
+            b = p >> 3
+            peek = (int.from_bytes(buf[b : b + 4], "big") >> (16 - (p & 7))) & 0xFFFF
+            if lent[peek] == 0:
+                raise ValueError("bad JPEG huffman code")
+            ssss = valt[peek]
+            p += lent[peek]
             if ssss > 16:
                 raise ValueError("bad lossless diff category")
             if ssss == 16:
                 diff = 32768
             elif ssss:
                 bits, p = _bits(buf, p, ssss)
-                diff = (
-                    bits
-                    if bits >= (1 << (ssss - 1))
-                    else bits - (1 << ssss) + 1
-                )
+                diff = bits if bits >= (1 << (ssss - 1)) else bits - (1 << ssss) + 1
             else:
                 diff = 0
-            if fresh[0]:
+            if fresh[ci]:
                 px = default
-                fresh[0] = False
-                fresh_row[0] = r
-            elif r == fresh_row[0]:
+                fresh[ci] = False
+                fresh_row[ci] = r
+            elif r == fresh_row[ci]:
                 px = int(samples[r, c_ - 1])
             elif c_ == 0:
                 px = int(samples[r - 1, c_])
             else:
                 px = _predict(samples, r, c_, predictor)
             samples[r, c_] = (px + diff) & 0xFFFF
-        mcu += 1
     br.pos = p
 
 
@@ -235,11 +199,6 @@ def encode_jpeg_lossless(
         raise ValueError("precision must be 2..16")
     if not 0 <= point_transform < precision:
         raise ValueError("point transform must be < precision")
-    from ragflow_ocr_spark.kernels.imgcodecs import (
-        _BitWriter,
-        _build_huff_codes,
-    )
-
     gray = img.ndim == 2
     h, w = img.shape[:2]
     planes = (
@@ -251,55 +210,43 @@ def encode_jpeg_lossless(
     maxval = (1 << precision) - 1
     planes = [np.clip(p, 0, maxval) >> point_transform for p in planes]
 
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", precision, h, w, nc)
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])  # 1x1 sampling; Tq ignored
-    out += b"\xff\xc3" + struct.pack(">H", 2 + len(sof)) + sof
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    payload = bytes([0x00]) + bytes(_LL_BITS) + bytes(_LL_VALS)
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(payload)) + payload
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([predictor, 0, point_transform])
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
+    frame = [(1, 1, 0)] * nc  # 1x1 sampling; Tq ignored
+    out = _jpeg_headers(
+        0xC3, h, w, frame, huff=[(0, 0, (_LL_BITS, _LL_VALS))],
+        precision=precision, restart_interval=restart_interval,
+    )
+    out += _sos_segment(frame, range(nc), predictor, 0, 0, point_transform)
 
     codes = _build_huff_codes(_LL_BITS, _LL_VALS)
     bw = _BitWriter()
     default = 1 << (precision - point_transform - 1)
     fresh = [True] * nc
     fresh_row = [0] * nc
-    rst = 0
-    mcu = 0
-    for r in range(h):
-        for c_ in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bw.flush()
-                bw.buf += bytes([0xFF, 0xD0 + rst])
-                rst = (rst + 1) % 8
-                fresh = [True] * nc
-            for ci, samples in enumerate(planes):
-                if fresh[ci]:
-                    px = default
-                    fresh[ci] = False
-                    fresh_row[ci] = r
-                elif r == fresh_row[ci]:
-                    px = int(samples[r, c_ - 1])
-                elif c_ == 0:
-                    px = int(samples[r - 1, c_])
-                else:
-                    px = _predict(samples, r, c_, predictor)
-                diff = (int(samples[r, c_]) - px) & 0xFFFF
-                if diff >= 32769:
-                    diff -= 65536  # representative in [-32767, 32768]
-                ssss, extra = _diff_category(diff)
-                code, ln = codes[ssss]
-                bw.write(code, ln)
-                if ssss and ssss != 16:
-                    bw.write(extra, ssss)
-            mcu += 1
+    for rst, units in scan_units([(1, 1, h, w)] * nc, w, h, restart_interval):
+        if rst >= 0:
+            bw.flush()
+            bw.buf += _rst_marker(rst)
+            fresh = [True] * nc
+        for ci, r, c_ in units:
+            samples = planes[ci]
+            if fresh[ci]:
+                px = default
+                fresh[ci] = False
+                fresh_row[ci] = r
+            elif r == fresh_row[ci]:
+                px = int(samples[r, c_ - 1])
+            elif c_ == 0:
+                px = int(samples[r - 1, c_])
+            else:
+                px = _predict(samples, r, c_, predictor)
+            diff = (int(samples[r, c_]) - px) & 0xFFFF
+            if diff >= 32769:
+                diff -= 65536  # representative in [-32767, 32768]
+            ssss, extra = _diff_category(diff)
+            code, ln = codes[ssss]
+            bw.write(code, ln)
+            if ssss and ssss != 16:
+                bw.write(extra, ssss)
     bw.flush()
     out += bw.buf
     out += b"\xff\xd9"

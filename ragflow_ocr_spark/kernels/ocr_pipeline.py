@@ -47,6 +47,10 @@ from ragflow_ocr_spark.kernels.infer import get_det_net, get_rec_net, run_with_r
 from ragflow_ocr_spark.kernels.reading_order import sorted_boxes
 from ragflow_ocr_spark.kernels.stubnet import REC_CHARSET
 
+# the reference's detection resize limit on the longer side
+# (ocr/config.py:32-33, operators.py:208-255)
+DET_LIMIT_SIDE_LEN = 960
+
 
 @dataclass
 class OcrResult:
@@ -62,9 +66,9 @@ def detect(img: np.ndarray, cfg: OCRConfig) -> np.ndarray:
     coords. Kernel equivalent of ``OCR.detect``
     (``ocr/ocr.py:490-509``)."""
     src_h, src_w = img.shape[:2]
-    nchw, _ = det_preprocess(img, cfg.det_limit_side_len)
+    nchw, _ = det_preprocess(img, DET_LIMIT_SIDE_LEN)
     prob = run_with_retry(get_det_net(cfg.det_model), nchw)[0, 0]
-    boxes, _scores = db_postprocess(prob, src_h, src_w, cfg)
+    boxes, _scores = db_postprocess(prob, src_h, src_w)
     boxes = filter_tag_det_res(boxes, src_h, src_w)
     if boxes.shape[0] == 0:
         return boxes

@@ -821,13 +821,14 @@ def encode_alph(plane: np.ndarray, filtering: int = 0) -> bytes:
 def decode_webp(data: bytes) -> np.ndarray:
     """RIFF/WEBP container → image. VP8L (lossless) and VP8 (lossy,
     intra-frame) both decode for real (kernels/vp8.py); an ANIMATED
-    container returns its FIRST composited frame (the cv2.imdecode
-    still-image convention — full frame access is decode_webp_frames)."""
+    container returns its FIRST composited frame and decodes no later
+    one (the cv2.imdecode still-image convention — full frame access is
+    decode_webp_frames)."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP")
     for tag, b, e in riff_chunks(data, 12, len(data)):
         if tag == b"ANMF":
-            return decode_webp_frames(data)[0]
+            return next(_webp_frames(data))
         if tag == b"VP8L":
             return decode_vp8l(data[b:e])
         if tag == b"VP8 ":
@@ -863,6 +864,12 @@ def decode_webp_frames(data: bytes) -> list[np.ndarray]:
     cv2.imdecode accepts animated WebP and surfaces the first frame
     (/root/reference/ocr/operators.py:41-46); the frame list feeds
     multimodal frame sampling."""
+    return list(_webp_frames(data))
+
+
+def _webp_frames(data: bytes):
+    """``decode_webp_frames``' frames, composited one at a time, so
+    ``decode_webp`` decodes only the first of an animation."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a WebP")
     vp8x = anim = None
@@ -875,7 +882,8 @@ def decode_webp_frames(data: bytes) -> list[np.ndarray]:
         elif tag == b"ANMF":
             anmfs.append((b, e))
     if not anmfs:
-        return [decode_webp(data)]
+        yield decode_webp(data)
+        return
     if vp8x is None or len(vp8x) < 10 or not vp8x[0] & _VP8X_ANIM_FLAG:
         raise ValueError("ANMF frames without a VP8X animation flag")
     if anim is None or len(anim) < 6:
@@ -897,7 +905,6 @@ def decode_webp_frames(data: bytes) -> list[np.ndarray]:
     # frames must become a per-row error, not a task straggler
     if len(anmfs) * cw * ch > MAX_DECODE_PIXELS:
         raise ValueError("animated WebP exceeds the composited-pixel budget")
-    frames: list[np.ndarray] = []
     for lo, hi in anmfs:
         if hi - lo < 16:
             raise ValueError("truncated ANMF header")
@@ -960,13 +967,10 @@ def decode_webp_frames(data: bytes) -> list[np.ndarray]:
         out = np.rint(canvas.astype(np.float64) * ca
                       + bg.astype(np.float64) * (1.0 - ca)).astype(np.uint8)
         r, g, b = out[..., 0], out[..., 1], out[..., 2]
-        frames.append(
-            np.ascontiguousarray(r) if (r == g).all() and (g == b).all() else out
-        )
+        yield np.ascontiguousarray(r) if (r == g).all() and (g == b).all() else out
         if flags & 0x01:  # dispose to background
             canvas[fy : fy + fh, fx : fx + fw] = bg
             canvas_a[fy : fy + fh, fx : fx + fw] = bg_a
-    return frames
 
 
 def _riff_chunk_bytes(tag: bytes, payload: bytes) -> bytes:

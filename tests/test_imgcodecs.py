@@ -134,6 +134,21 @@ def test_jpeg_420_restart_odd_dims():
     assert _psnr(dec, odd) > 30
 
 
+@pytest.mark.parametrize("hv", [0x21, 0x12, 0x22])
+def test_one_component_scan_walks_its_own_block_grid(hv):
+    """A scan of one component has one block per MCU whatever that
+    component's sampling factors (T.81 A.2.2), as in libjpeg: a gray
+    frame that declares 2x1, 1x2 or 2x2 sampling decodes to the same
+    pixels as the 1x1 frame it was made from."""
+    page, _ = font5x7.render_page(["ODD 83 WIDE"], 83, 45, 1, margin=4)
+    data = bytearray(ic.encode_jpeg(page))
+    sof = data.index(b"\xff\xc0")
+    assert data[sof + 11] == 0x11  # component 1's sampling factors
+    want = ic.decode_jpeg(bytes(data))
+    data[sof + 11] = hv
+    assert np.array_equal(ic.decode_jpeg(bytes(data)), want)
+
+
 # --------------------------------------------------------------- guards
 @pytest.mark.parametrize(
     "fn,bad",

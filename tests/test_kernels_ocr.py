@@ -213,12 +213,12 @@ def test_resize_for_det_tiny_image_padded():
 
 # ------------------------------------------------------- DB postprocess
 def test_db_postprocess_thresholds_and_rescale():
-    # 3×3 blob: its unclipped min-rect side is below min_size + 2
+    # 3×3 blob: its unclipped min-rect side is below MIN_SIZE + 2
     prob = np.zeros((32, 32))
     prob[4:7, 4:7] = 0.9
     boxes, scores = db_postprocess(prob, 32, 32)
     assert boxes.shape == (0, 4, 2) and scores == []
-    # 30×30 blob above det_db_thresh (0.3) but below det_db_box_thresh
+    # 30×30 blob above DET_DB_THRESH (0.3) but below DET_DB_BOX_THRESH
     prob = np.zeros((64, 64))
     prob[10:40, 10:40] = 0.35
     boxes, scores = db_postprocess(prob, 64, 64)

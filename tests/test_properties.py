@@ -328,3 +328,28 @@ def test_seeded_mutants_of_gif_and_webp_containers_are_row_statuses(spark):
             line.shape[1], line.shape[0]),
     }
     _check_seeded_mutants(spark, seeds, {"webp_vp8": "empty"})
+
+
+def test_seeded_mutants_of_jpeg_png_bmp_and_tiff_are_row_statuses(spark):
+    """The same mutants (rng seed 11, 100 per kind) of the other raster
+    kinds: baseline JPEG, 4:2:0 JPEG with restarts, multiscan,
+    progressive, CMYK (YCCK) and lossless JPEG, and PNG, BMP and an LZW
+    TIFF with the differencing predictor. Arithmetic-coded JPEG is left
+    out: some of its mutants decode for seconds each (ROADMAP item 2)."""
+    from ragflow_ocr_spark.kernels import imgcodecs
+
+    page, _ = font5x7.render_page(["MUTANT SEED 11"], 256, 64, 2)
+    line = page[12:50, 12:200]
+    rgb = np.stack([line, line, 255 - (255 - line) // 2], axis=2)
+    seeds = {
+        "jpeg": imgcodecs.encode_jpeg(line),
+        "jpeg_420_rst": imgcodecs.encode_jpeg(rgb, subsample=True, restart_interval=3),
+        "jpeg_multiscan": imgcodecs.encode_jpeg_multiscan(rgb),
+        "jpeg_progressive": imgcodecs.encode_jpeg_progressive(rgb, subsample=True),
+        "jpeg_cmyk": imgcodecs.encode_jpeg_cmyk(rgb, ycck=True),
+        "jpeg_lossless": imgcodecs.encode_jpeg_lossless(line, 4, restart_interval=50),
+        "png": pngcodec.encode_png(line),
+        "bmp": imgcodecs.encode_bmp(rgb),
+        "tiff": imgcodecs.encode_tiff(line, "lzw", predictor=True),
+    }
+    _check_seeded_mutants(spark, seeds, {})

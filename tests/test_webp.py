@@ -222,6 +222,27 @@ def test_animated_lossy_webp_round_trip():
     assert (webp.decode_webp(anim) == _bt601(80)).all()
 
 
+def test_decode_webp_decodes_only_the_first_animation_frame():
+    """decode_webp composites the first ANMF frame and stops there, as
+    decode_gif stops after its first image: a corrupt second frame
+    fails decode_webp_frames but not decode_webp."""
+    from ragflow_ocr_spark.kernels import vp8
+
+    good = vp8.encode_vp8_flat_payload(32, 24, (80, 128, 128))
+    corrupt = good[:8]  # cut inside the keyframe header
+    anim = webp.encode_webp_animated(
+        [
+            {"tag": b"VP8 ", "data": good, "w": 32, "h": 24},
+            {"tag": b"VP8 ", "data": corrupt, "w": 32, "h": 24},
+        ],
+        32,
+        24,
+    )
+    with pytest.raises(ValueError):
+        webp.decode_webp_frames(anim)
+    assert (webp.decode_webp(anim) == _bt601(80)).all()
+
+
 def test_animated_webp_subrect_dispose_and_vp8l_mix():
     """Sub-rect frames paste at (x, y); dispose-to-background restores
     the rect AFTER the frame is emitted; VP8L and VP8 frames mix."""
