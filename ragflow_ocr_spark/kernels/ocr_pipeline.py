@@ -198,7 +198,11 @@ def decode_payload_pages(
     both OCR surfaces. A raster kind decodes to one page through
     ``pngcodec.decode_image``; a PDF is parsed once by
     ``pdf.pdf_to_images`` (up to ``max_pages``). None = decode failure
-    or a non-image kind; never raises (per-row error contract)."""
+    or a non-image kind: a PDF its parser rejects with any exception, or
+    a raster whose decoder raises ValueError or NotImplementedError.
+    Anything else a raster decoder raises propagates; the per-row
+    boundary is the stage's row runner (``spark/worker.py::map_rows``),
+    where it reads ``error:internal:<ExceptionClass>``."""
     kind = pngcodec.sniff_payload(data)
     if kind == "pdf":
         from ragflow_ocr_spark.kernels import pdf

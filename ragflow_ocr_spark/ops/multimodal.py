@@ -43,10 +43,9 @@ import struct
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from ragflow_ocr_spark.kernels import pngcodec
-from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
+from ragflow_ocr_spark.spark.worker import map_rows
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -82,32 +81,22 @@ def make_video_payload(rng: np.random.Generator, n_frames: int = 8) -> bytes:
 def media_df(spark, n_rows: int = 60, partitions: int = 4):
     """Deterministic media table: round-robin image/audio/video."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                i = int(i)
-                rng = np.random.default_rng(np.random.SeedSequence([77, i]))
-                kind = ["image", "audio", "video"][i % 3]
-                if kind == "image":
-                    payload = make_image_payload(rng)
-                    meta = ("png", 64, 48, 0)
-                elif kind == "audio":
-                    payload = make_audio_payload(rng)
-                    meta = ("pcm_s16le", 0, 0, 16000)
-                else:
-                    payload = make_video_payload(rng)
-                    meta = ("mockv1", 32, 24, 0)
-                rows.append((i, kind, payload, *meta))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "kind", "payload",
-                    "meta_codec", "meta_w", "meta_h", "meta_sr",
-                ],
-            )
+    def row(i):
+        i = int(i)
+        rng = np.random.default_rng(np.random.SeedSequence([77, i]))
+        kind = ["image", "audio", "video"][i % 3]
+        if kind == "image":
+            payload = make_image_payload(rng)
+            meta = ("png", 64, 48, 0)
+        elif kind == "audio":
+            payload = make_audio_payload(rng)
+            meta = ("pcm_s16le", 0, 0, 16000)
+        else:
+            payload = make_video_payload(rng)
+            meta = ("mockv1", 32, 24, 0)
+        yield (i, kind, payload, *meta)
 
+    gen = map_rows(MEDIA_SCHEMA, ("id",), row)
     return spark.range(0, n_rows, 1, partitions).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
@@ -577,33 +566,16 @@ IMAGE_FEATURES_SCHEMA = (
 
 
 def image_features_stage():
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    _kind, img = pngcodec.decode_image(bytes(payload))
-                    rows.append(
-                        (
-                            int(mid),
-                            img.shape[1],
-                            img.shape[0],
-                            round(float(img.mean()), 6),
-                            round(float(img.std()), 6),
-                            "ok",
-                        )
-                    )
-                except NotImplementedError:
-                    rows.append((int(mid), 0, 0, 0.0, 0.0, "error:unsupported_codec"))
-                except Exception:
-                    rows.append((int(mid), 0, 0, 0.0, 0.0, "error:decode"))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "mean_luma", "std_luma", "status"],
-            )
+    def row(payload):
+        _kind, img = pngcodec.decode_image(bytes(payload))
+        h, w = img.shape[:2]
+        yield w, h, round(float(img.mean()), 6), round(float(img.std()), 6), "ok"
 
-    return fn
+    return map_rows(
+        IMAGE_FEATURES_SCHEMA, ("payload",), row, keep=("media_id",),
+        on_error=lambda status, _: (0, 0, 0.0, 0.0, status),
+        statuses={NotImplementedError: "error:unsupported_codec", Exception: "error:decode"},
+    )
 
 
 THUMB_SCHEMA = "media_id long, thumb binary, thumb_w int, thumb_h int, status string"
@@ -612,32 +584,22 @@ THUMB_SCHEMA = "media_id long, thumb binary, thumb_w int, thumb_h int, status st
 def thumbnail_stage(max_side: int = 16):
     from ragflow_ocr_spark.kernels.imgeom import resize_bilinear
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    _kind, img = pngcodec.decode_image(bytes(payload))
-                    h, w = img.shape[:2]
-                    r = max_side / max(h, w)
-                    th, tw = max(1, int(h * r)), max(1, int(w * r))
-                    # round-half-up like cv2, NOT truncate: fp noise
-                    # (2.9999997) and .5 interpolation midpoints would
-                    # otherwise all shift a full level down
-                    thumb = np.floor(
-                        resize_bilinear(img, th, tw) + 0.5
-                    ).astype(np.uint8)
-                    rows.append(
-                        (int(mid), pngcodec.encode_png(thumb), tw, th, "ok")
-                    )
-                except Exception:
-                    rows.append((int(mid), None, 0, 0, "error"))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "thumb", "thumb_w", "thumb_h", "status"]
-            )
+    def row(payload):
+        _kind, img = pngcodec.decode_image(bytes(payload))
+        h, w = img.shape[:2]
+        r = max_side / max(h, w)
+        th, tw = max(1, int(h * r)), max(1, int(w * r))
+        # round-half-up like cv2, NOT truncate: fp noise (2.9999997)
+        # and .5 interpolation midpoints would otherwise all shift a
+        # full level down
+        thumb = np.floor(resize_bilinear(img, th, tw) + 0.5).astype(np.uint8)
+        yield pngcodec.encode_png(thumb), tw, th, "ok"
 
-    return fn
+    return map_rows(
+        THUMB_SCHEMA, ("payload",), row, keep=("media_id",),
+        on_error=lambda status, _: (None, 0, 0, status),
+        statuses={Exception: "error"},
+    )
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -657,89 +619,35 @@ def _is_unsupported_audio(raw: bytes) -> bool:
 
 
 def audio_features_stage():
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        from ragflow_ocr_spark.kernels import wavcodec
+    from ragflow_ocr_spark.kernels import wavcodec
 
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    raw = bytes(payload)
-                    if raw.startswith(wavcodec.WAV_MAGIC):
-                        # real container route: RIFF/PCM16 (multi-channel
-                        # is mixed down to mono for the features)
-                        samples, _sr = wavcodec.decode_wav(raw)
-                        if samples.ndim == 2:
-                            samples = samples.mean(axis=1)
-                        pcm = samples.astype(np.float64) / 32768.0
-                    elif _is_unsupported_audio(raw):
-                        raise NotImplementedError("compressed audio")
-                    else:
-                        pcm = (np.frombuffer(raw, dtype="<i2")
-                               .astype(np.float64) / 32768.0)
-                    zc = int(np.count_nonzero(np.diff(np.signbit(pcm))))
-                    rows.append(
-                        (
-                            int(mid),
-                            len(pcm),
-                            round(float(np.sqrt((pcm**2).mean())), 6),
-                            round(float(np.abs(pcm).max()), 6),
-                            zc,
-                            "ok",
-                        )
-                    )
-                except NotImplementedError:
-                    rows.append((int(mid), 0, 0.0, 0.0, 0, "error:unsupported_codec"))
-                except Exception:
-                    rows.append((int(mid), 0, 0.0, 0.0, 0, "error"))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_samples", "rms", "peak", "zero_crossings", "status"],
-            )
+    def row(payload):
+        raw = bytes(payload)
+        if raw.startswith(wavcodec.WAV_MAGIC):
+            # real container route: RIFF/PCM16 (multi-channel is mixed
+            # down to mono for the features)
+            samples, _sr = wavcodec.decode_wav(raw)
+            if samples.ndim == 2:
+                samples = samples.mean(axis=1)
+            pcm = samples.astype(np.float64) / 32768.0
+        elif _is_unsupported_audio(raw):
+            raise NotImplementedError("compressed audio")
+        else:
+            pcm = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
+        zc = int(np.count_nonzero(np.diff(np.signbit(pcm))))
+        yield (
+            len(pcm),
+            round(float(np.sqrt((pcm**2).mean())), 6),
+            round(float(np.abs(pcm).max()), 6),
+            zc,
+            "ok",
+        )
 
-    return fn
-
-
-FRAME_SAMPLE_SCHEMA = (
-    "media_id long, frame_idx int, frame binary, mean_luma double, status string"
-)
-
-
-def thumbnail_luma_stage():
-    """thumbnail_stage composed with a second decode pass: thumb PNG →
-    mean luma. Demonstrates chaining two Python stages with only typed
-    columns crossing the seam."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for b in batches:
-            rows = []
-            for mid, thumb, tw, th, status in zip(
-                b["media_id"], b["thumb"], b["thumb_w"], b["thumb_h"], b["status"]
-            ):
-                if status != "ok" or thumb is None:
-                    rows.append((int(mid), 0, 0, 0.0, str(status)))
-                    continue
-                try:
-                    img = pngcodec.decode_png(bytes(thumb))
-                except ValueError:
-                    # bit-rot / producer bug in intermediate bytes →
-                    # per-row error, never a task failure (the contract
-                    # every other stage in this module honors)
-                    rows.append((int(mid), 0, 0, 0.0, "error:decode"))
-                    continue
-                # round(3): bilinear of a constant image is constant to
-                # ~1e-12 (per-pixel rounding), so 3 decimals are exact
-                rows.append(
-                    (int(mid), int(tw), int(th), round(float(img.mean()), 3), "ok")
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "thumb_w", "thumb_h", "mean_luma", "status"],
-            )
-
-    return fn
+    return map_rows(
+        AUDIO_FEATURES_SCHEMA, ("payload",), row, keep=("media_id",),
+        on_error=lambda status, _: (0, 0.0, 0.0, 0, status),
+        statuses={NotImplementedError: "error:unsupported_codec", Exception: "error"},
+    )
 
 
 THUMB_LUMA_SCHEMA = (
@@ -747,38 +655,59 @@ THUMB_LUMA_SCHEMA = (
 )
 
 
+def thumbnail_luma_stage():
+    """thumbnail_stage composed with a second decode pass: thumb PNG →
+    mean luma. Demonstrates chaining two Python stages with only typed
+    columns crossing the seam. Bit-rot or a producer bug in the
+    intermediate bytes (a ValueError from the PNG decoder) reads
+    ``error:decode``."""
+
+    def row(thumb, tw, th, status):
+        if status != "ok" or thumb is None:
+            yield 0, 0, 0.0, str(status)
+            return
+        img = pngcodec.decode_png(bytes(thumb))
+        # round(3): bilinear of a constant image is constant to ~1e-12
+        # (per-pixel rounding), so 3 decimals are exact
+        yield int(tw), int(th), round(float(img.mean()), 3), "ok"
+
+    return map_rows(
+        THUMB_LUMA_SCHEMA, ("thumb", "thumb_w", "thumb_h", "status"), row,
+        keep=("media_id",),
+        on_error=lambda status, *_: (0, 0, 0.0, status),
+        statuses={ValueError: "error:decode"},
+    )
+
+
+FRAME_SAMPLE_SCHEMA = (
+    "media_id long, frame_idx int, frame binary, mean_luma double, status string"
+)
+
+
 def frame_sample_stage(every_k: int = 2):
     """Video → every k-th frame, decoded, with per-frame features.
     Explodes rows (one per sampled frame) — the fan-out shape a real
-    frame pipeline has."""
+    frame pipeline has. A frame that fails to decode ends the row with
+    one error row after the frames sampled before it."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for b in batches:
-            rows = []
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                try:
-                    n_sampled = 0
-                    for idx, fr in enumerate(iter_video_frames(bytes(payload))):
-                        if idx % every_k:
-                            continue
-                        img = _decode_frame(fr)
-                        rows.append(
-                            (int(mid), idx, fr, round(float(img.mean()), 6), "ok")
-                        )
-                        n_sampled += 1
-                    if n_sampled == 0:
-                        # container parsed but held no video chunks
-                        # (e.g. header-only AVI): a row must still
-                        # witness the input
-                        rows.append((int(mid), -1, None, 0.0, "error"))
-                except Exception:
-                    rows.append((int(mid), -1, None, 0.0, "error"))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame", "mean_luma", "status"]
-            )
+    def row(mid, payload):
+        n_sampled = 0
+        for idx, fr in enumerate(iter_video_frames(bytes(payload))):
+            if idx % every_k:
+                continue
+            img = _decode_frame(fr)
+            yield int(mid), idx, fr, round(float(img.mean()), 6), "ok"
+            n_sampled += 1
+        if n_sampled == 0:
+            # container parsed but held no video chunks (e.g.
+            # header-only AVI): a row must still witness the input
+            raise ValueError("no video frames")
 
-    return fn
+    return map_rows(
+        FRAME_SAMPLE_SCHEMA, ("media_id", "payload"), row,
+        on_error=lambda status, mid, _: (int(mid), -1, None, 0.0, status),
+        statuses={Exception: "error"},
+    )
 
 
 # --------------------------------------------------- contract queries
@@ -835,127 +764,103 @@ def q_media_image_stats(spark, sf_dir: str):
       rounding error, so the decoded gray is the exact BT.601 map
       g = (298*(y-16)+128) >> 8 — closed form in SQL."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
+    def row(did):
         from ragflow_ocr_spark.kernels import imgcodecs
 
-        for b in batches:
-            rows = []
-            for did in b["doc_id"]:
-                did = int(did)
-                if did % 2 == 0:
-                    a = did % 256
-                    v = (did * 7 + 13) % 256
-                    img = np.empty((48, 64), dtype=np.uint8)
-                    img[:, :32] = a
-                    img[:, 32:] = v
-                    payload = pngcodec.encode_png(img, interlace=did % 4 == 0)
-                    rows.append((did, "image", payload, "png", 64, 48, 0))
-                elif did % 4 == 1:
-                    v = 128 + 3 * ((did * 5 + 7) % 42 - 21)
-                    img = np.full((48, 64), v, dtype=np.uint8)
-                    if did % 8 == 5:
-                        # Adobe CMYK (APP14 transform 0, 4 components,
-                        # q95): constant-value decode is exact — the
-                        # q00=2 luma DC step divides 8·(v−128) — so the
-                        # %4==1 oracle closed form covers this family
-                        # unchanged while the real 4-component path runs
-                        payload = imgcodecs.encode_jpeg_cmyk(img, quality=95)
-                    elif did % 16 == 9:
-                        # arithmetic sequential (SOF9, T.81 QM coder):
-                        # same DCT/quant path as baseline q90 whose
-                        # q00=3 divides 8·(v−128), so the %4==1 closed
-                        # form covers it unchanged while the real
-                        # QM-decoder path runs (kernels/jpeg_arith)
-                        payload = imgcodecs.encode_jpeg_arith(
-                            img, quality=90
-                        )
-                    elif did % 32 == 1:
-                        # progressive arithmetic (SOF10, T.81 Annex G)
-                        # with restart intervals: same exactness
-                        # argument as the SOF9 rows — progressive
-                        # reconstruction is exact and the DCT/quant
-                        # path is shared
-                        payload = imgcodecs.encode_jpeg_arith_progressive(
-                            img, quality=90, restart_interval=2
-                        )
-                    elif did % 64 == 17:
-                        # LOSSLESS (SOF3, T.81 Annex H predictive):
-                        # exact by definition, so the %4==1 constant-v
-                        # closed form covers it while the real
-                        # predictor/extend path runs
-                        # (kernels/jpeg_lossless)
-                        payload = imgcodecs.encode_jpeg_lossless(
-                            img, predictor=4, restart_interval=16
-                        )
-                    elif did % 64 == 49:
-                        # JPEG 2000 (T.800, reversible 5/3): bit-exact
-                        # lossless, so the %4==1 constant-v closed form
-                        # covers it while the real MQ/EBCOT tier-1 +
-                        # tag-tree tier-2 + DWT path runs
-                        # (kernels/jpeg2000); JP2 box container on the
-                        # second row to cover the unwrap route too
-                        from ragflow_ocr_spark.kernels import jpeg2000
+        did = int(did)
+        if did % 4 == 1:
+            v = 128 + 3 * ((did * 5 + 7) % 42 - 21)
+            img = np.full((48, 64), v, dtype=np.uint8)
+            codec = "jpeg"
+            if did % 8 == 5:
+                # Adobe CMYK (APP14 transform 0, 4 components, q95):
+                # constant-value decode is exact — the q00=2 luma DC
+                # step divides 8·(v−128) — so the %4==1 oracle closed
+                # form covers this family unchanged while the real
+                # 4-component path runs
+                payload = imgcodecs.encode_jpeg_cmyk(img, quality=95)
+            elif did % 16 == 9:
+                # arithmetic sequential (SOF9, T.81 QM coder): same
+                # DCT/quant path as baseline q90 whose q00=3 divides
+                # 8·(v−128), so the %4==1 closed form covers it
+                # unchanged while the real QM-decoder path runs
+                # (kernels/jpeg_arith)
+                payload = imgcodecs.encode_jpeg_arith(img, quality=90)
+            elif did % 32 == 1:
+                # progressive arithmetic (SOF10, T.81 Annex G) with
+                # restart intervals: same exactness argument as the
+                # SOF9 rows — progressive reconstruction is exact and
+                # the DCT/quant path is shared
+                payload = imgcodecs.encode_jpeg_arith_progressive(
+                    img, quality=90, restart_interval=2
+                )
+            elif did % 64 == 17:
+                # LOSSLESS (SOF3, T.81 Annex H predictive): exact by
+                # definition, so the %4==1 constant-v closed form
+                # covers it while the real predictor/extend path runs
+                # (kernels/jpeg_lossless)
+                payload = imgcodecs.encode_jpeg_lossless(
+                    img, predictor=4, restart_interval=16
+                )
+            elif did % 64 == 49:
+                # JPEG 2000 (T.800, reversible 5/3): bit-exact
+                # lossless, so the %4==1 constant-v closed form covers
+                # it while the real MQ/EBCOT tier-1 + tag-tree tier-2 +
+                # DWT path runs (kernels/jpeg2000); JP2 box container
+                # on the second row to cover the unwrap route too
+                from ragflow_ocr_spark.kernels import jpeg2000
 
-                        enc = (jpeg2000.encode_jp2 if did % 128 == 113
-                               else jpeg2000.encode_jpeg2000)
-                        payload = enc(img, reversible=True)
-                    else:
-                        payload = imgcodecs.encode_jpeg_progressive(
-                            img, quality=90
-                        )
-                    rows.append((did, "image", payload, "jpeg", 64, 48, 0))
-                elif did % 16 == 15:
-                    from ragflow_ocr_spark.kernels import vp8 as vp8mod
+                enc = (jpeg2000.encode_jp2 if did % 128 == 113
+                       else jpeg2000.encode_jpeg2000)
+                payload = enc(img, reversible=True)
+            else:
+                payload = imgcodecs.encode_jpeg_progressive(img, quality=90)
+        elif did % 16 == 15:
+            from ragflow_ocr_spark.kernels import vp8 as vp8mod
 
-                    y = 64 + did % 128
-                    payload = vp8mod.encode_webp_lossy_flat(64, 48, (y, 128, 128))
-                    rows.append((did, "image", payload, "webp", 64, 48, 0))
+            y = 64 + did % 128
+            payload = vp8mod.encode_webp_lossy_flat(64, 48, (y, 128, 128))
+            codec = "webp"
+        else:
+            img = np.empty((48, 64), dtype=np.uint8)
+            img[:, :32] = did % 256
+            img[:, 32:] = (did * 7 + 13) % 256
+            if did % 2 == 0:
+                payload = pngcodec.encode_png(img, interlace=did % 4 == 0)
+                codec = "png"
+            elif did % 16 == 11:
+                # HEIC: the same two-tone laid into the LUMA plane with
+                # neutral chroma — the coded layer is byte-exact
+                # (kernels/hevc + hevc_intra, libde265-cross-validated)
+                # so the decoded gray is the clipped BT.601 map of each
+                # tone: closed form in SQL while the real HEIF item
+                # layer parse runs. Alternating coders: PCM CTBs, CABAC
+                # transquant-bypass intra (the path every real
+                # camera/x265 HEIC takes) and Main10 CABAC (10-bit
+                # planes; the uint8 route keeps the high byte so the
+                # closed form holds)
+                from ragflow_ocr_spark.kernels import heif
+
+                if did % 64 == 59:
+                    payload = heif.encode_heic_yuv(
+                        img.astype(np.uint16) << 2,
+                        np.full((24, 32), 512, np.uint16),
+                        np.full((24, 32), 512, np.uint16),
+                        coder="cabac10")
                 else:
-                    a = did % 256
-                    v = (did * 7 + 13) % 256
-                    img = np.empty((48, 64), dtype=np.uint8)
-                    img[:, :32] = a
-                    img[:, 32:] = v
-                    if did % 16 == 11:
-                        # HEIC: the same two-tone laid into the LUMA
-                        # plane with neutral chroma — the coded layer
-                        # is byte-exact (kernels/hevc + hevc_intra,
-                        # libde265-cross-validated) so the decoded
-                        # gray is the clipped BT.601 map of each tone:
-                        # closed form in SQL while the real HEIF item
-                        # layer parse runs. Alternating coders: PCM
-                        # CTBs, CABAC transquant-bypass intra (the
-                        # path every real camera/x265 HEIC takes) and
-                        # Main10 CABAC (10-bit planes; the uint8 route
-                        # keeps the high byte so the closed form holds)
-                        from ragflow_ocr_spark.kernels import heif
+                    cp = np.full((24, 32), 128, np.uint8)
+                    coder = "cabac" if did % 32 == 27 else "pcm"
+                    payload = heif.encode_heic_yuv(img, cp, cp, coder=coder)
+                codec = "heic"
+            elif did % 8 == 3:
+                payload, codec = imgcodecs.encode_gif(img, interlace=True), "gif"
+            else:
+                from ragflow_ocr_spark.kernels import webp as webpmod
 
-                        if did % 64 == 59:
-                            payload = heif.encode_heic_yuv(
-                                img.astype(np.uint16) << 2,
-                                np.full((24, 32), 512, np.uint16),
-                                np.full((24, 32), 512, np.uint16),
-                                coder="cabac10")
-                        else:
-                            cp = np.full((24, 32), 128, np.uint8)
-                            coder = "cabac" if did % 32 == 27 \
-                                else "pcm"
-                            payload = heif.encode_heic_yuv(
-                                img, cp, cp, coder=coder)
-                        codec = "heic"
-                    elif did % 8 == 3:
-                        payload, codec = imgcodecs.encode_gif(img, interlace=True), "gif"
-                    else:
-                        from ragflow_ocr_spark.kernels import webp as webpmod
+                payload, codec = webpmod.encode_webp(img), "webp"
+        yield did, "image", payload, codec, 64, 48, 0
 
-                        payload, codec = webpmod.encode_webp(img), "webp"
-                    rows.append((did, "image", payload, codec, 64, 48, 0))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "meta_codec", "meta_w", "meta_h", "meta_sr"],
-            )
-
+    synth = map_rows(MEDIA_SCHEMA, ("doc_id",), row)
     media = _doc_ids(spark, sf_dir, _IMG_LIMIT).mapInPandas(synth, schema=MEDIA_SCHEMA)
     return media.mapInPandas(image_features_stage(), schema=IMAGE_FEATURES_SCHEMA)
 
@@ -999,38 +904,30 @@ def q_media_audio_features(spark, sf_dir: str):
     RMS/peak/zero-crossings, no rounding tie at 6 decimals), as raw
     PCM or, for id % 8 == 6, in a WAV container."""
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        from ragflow_ocr_spark.kernels import wavcodec
+    from ragflow_ocr_spark.kernels import wavcodec
 
-        for b in batches:
-            rows = []
-            for did in b["doc_id"]:
-                did = int(did)
-                if did % 2 == 1:
-                    if did % 8 == 3:
-                        n = 1152 * (2 + did % 3)
-                    elif did % 4 == 3:
-                        n = 576 * (2 + did % 3)
-                    else:
-                        n = 128 * (1 + did % 3)
-                    payload = wavcodec.encode_wav(np.zeros(n, np.int16))
-                    rows.append((did, "audio", payload, "wav", 0, 0, 16000))
-                    continue
-                amp = 2 * (did % 8191) + 1  # odd ⇒ no round-half tie
-                pcm = np.empty(8000, dtype="<i2")
-                pcm[0::2] = amp
-                pcm[1::2] = -amp
-                if did % 8 == 6:
-                    rows.append((did, "audio", wavcodec.encode_wav(pcm),
-                                 "wav", 0, 0, 16000))
-                    continue
-                rows.append((did, "audio", pcm.tobytes(), "pcm_s16le", 0, 0, 16000))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "meta_codec", "meta_w", "meta_h", "meta_sr"],
-            )
+    def row(did):
+        did = int(did)
+        if did % 2 == 1:
+            if did % 8 == 3:
+                n = 1152 * (2 + did % 3)
+            elif did % 4 == 3:
+                n = 576 * (2 + did % 3)
+            else:
+                n = 128 * (1 + did % 3)
+            payload, codec = wavcodec.encode_wav(np.zeros(n, np.int16)), "wav"
+        else:
+            amp = 2 * (did % 8191) + 1  # odd ⇒ no round-half tie
+            pcm = np.empty(8000, dtype="<i2")
+            pcm[0::2] = amp
+            pcm[1::2] = -amp
+            if did % 8 == 6:
+                payload, codec = wavcodec.encode_wav(pcm), "wav"
+            else:
+                payload, codec = pcm.tobytes(), "pcm_s16le"
+        yield did, "audio", payload, codec, 0, 0, 16000
 
+    synth = map_rows(MEDIA_SCHEMA, ("doc_id",), row)
     media = _doc_ids(spark, sf_dir, _AUD_LIMIT).mapInPandas(synth, schema=MEDIA_SCHEMA)
     return media.mapInPandas(audio_features_stage(), schema=AUDIO_FEATURES_SCHEMA)
 
@@ -1052,7 +949,7 @@ FROM documents WHERE doc_id < {_AUD_LIMIT}
 """
 
 
-def _synth_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _video_row(did):
     """Container mix with closed-form frame lumas: MOCKV1 (PNG frames)
     for even ids; for odd ids, MJPEG samples in an ISO-BMFF mp4
     (id % 4 == 1) or an MJPEG webm/Matroska (id % 16 == 3) — constant-value
@@ -1069,92 +966,78 @@ def _synth_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     keyframes through the real hvcC/HVCC demux + the
     libde265-cross-validated kernels/hevc CABAC/PCM decode, same
     BT.601 closed form."""
-    keep_runtime_zip_caches()
     from ragflow_ocr_spark.kernels import imgcodecs, vp8 as vp8mod, webp as webpmod
 
-    for b in batches:
-        rows = []
-        for did in b["doc_id"]:
-            did = int(did)
-            n_frames = 4 + did % 5
-            if did % 2 == 0:
-                out = bytearray(VIDEO_MAGIC)
-                out += struct.pack("<I", n_frames)
-                for idx in range(n_frames):
-                    img = np.full(
-                        (24, 32), (did * 31 + idx * 7) % 256, dtype=np.uint8
-                    )
-                    fr = pngcodec.encode_png(img)
-                    out += struct.pack("<I", len(fr))
-                    out += fr
-                rows.append((did, "video", bytes(out), "mockv1", 32, 24, 0))
-            elif did % 8 == 7:
-                # every frame carries an OPAQUE ALPH subchunk cycling
-                # through all four prediction filters: the composited
-                # output is bit-identical to the alpha-less form (the
-                # oracle's closed form is untouched) while the real
-                # ALPH decode + unfilter path runs inside this
-                # driver-oracle-checked query
-                frames = [
-                    {
-                        "tag": b"VP8 ",
-                        "data": vp8mod.encode_vp8_flat_payload(
-                            32, 24, (64 + (did * 31 + idx * 7) % 128, 128, 128)
-                        ),
-                        "w": 32,
-                        "h": 24,
-                        "alpha": np.full((24, 32), 255, np.uint8),
-                        "alpha_filter": idx % 4,
-                    }
-                    for idx in range(n_frames)
-                ]
-                payload = webpmod.encode_webp_animated(frames, 32, 24)
-                rows.append((did, "video", payload, "anim_webp", 32, 24, 0))
-            else:
-                frames = [
-                    imgcodecs.encode_jpeg(
-                        np.full((24, 32), (did * 31 + idx * 7) % 256, np.uint8),
-                        quality=95,
-                    )
-                    for idx in range(n_frames)
-                ]
-                if did % 16 in (9, 13):
-                    # HEVC hvc1 mp4: PCM flat-luma keyframes, byte-exact,
-                    # so the decoded gray is the BT.601 closed form
-                    from ragflow_ocr_spark.kernels import hevc as hevcmod
+    did = int(did)
+    n_frames = 4 + did % 5
+    if did % 2 == 0:
+        out = bytearray(VIDEO_MAGIC)
+        out += struct.pack("<I", n_frames)
+        for idx in range(n_frames):
+            img = np.full((24, 32), (did * 31 + idx * 7) % 256, dtype=np.uint8)
+            fr = pngcodec.encode_png(img)
+            out += struct.pack("<I", len(fr))
+            out += fr
+        payload, codec = bytes(out), "mockv1"
+    elif did % 8 == 7:
+        # every frame carries an OPAQUE ALPH subchunk cycling through
+        # all four prediction filters: the composited output is
+        # bit-identical to the alpha-less form (the oracle's closed
+        # form is untouched) while the real ALPH decode + unfilter path
+        # runs inside this driver-oracle-checked query
+        frames = [
+            {
+                "tag": b"VP8 ",
+                "data": vp8mod.encode_vp8_flat_payload(
+                    32, 24, (64 + (did * 31 + idx * 7) % 128, 128, 128)
+                ),
+                "w": 32,
+                "h": 24,
+                "alpha": np.full((24, 32), 255, np.uint8),
+                "alpha_filter": idx % 4,
+            }
+            for idx in range(n_frames)
+        ]
+        payload, codec = webpmod.encode_webp_animated(frames, 32, 24), "anim_webp"
+    elif did % 16 in (9, 13):
+        # HEVC hvc1 mp4: PCM flat-luma keyframes, byte-exact, so the
+        # decoded gray is the BT.601 closed form
+        from ragflow_ocr_spark.kernels import hevc as hevcmod
 
-                    cp = np.full((12, 16), 128, np.uint8)
-                    aus = [
-                        hevcmod.encode_hevc_ipcm_yuv(
-                            np.full((24, 32),
-                                    64 + (did * 31 + idx * 7) % 128,
-                                    np.uint8), cp, cp)
-                        for idx in range(n_frames)
-                    ]
-                    payload, codec = encode_mp4_hvc1(aus, 32, 24), "hvc1_mp4"
-                elif did % 4 == 1:
-                    payload, codec = encode_mp4_mjpeg(frames, 32, 24), "mjpeg_mp4"
-                elif did % 16 == 11:
-                    # V_VP8 webm: flat keyframes, BT.601 closed form
-                    vp8_frames = [
-                        vp8mod.encode_vp8_flat_payload(
-                            32, 24, (64 + (did * 31 + idx * 7) % 128, 128, 128))
-                        for idx in range(n_frames)
-                    ]
-                    payload, codec = encode_webm(vp8_frames, b"V_VP8"), "vp8_webm"
-                else:
-                    payload, codec = encode_webm_mjpeg(frames), "mjpeg_webm"
-                rows.append((did, "video", payload, codec, 32, 24, 0))
-        yield pd.DataFrame(
-            rows,
-            columns=["media_id", "kind", "payload", "meta_codec", "meta_w", "meta_h", "meta_sr"],
-        )
+        cp = np.full((12, 16), 128, np.uint8)
+        aus = [
+            hevcmod.encode_hevc_ipcm_yuv(
+                np.full((24, 32), 64 + (did * 31 + idx * 7) % 128, np.uint8), cp, cp)
+            for idx in range(n_frames)
+        ]
+        payload, codec = encode_mp4_hvc1(aus, 32, 24), "hvc1_mp4"
+    elif did % 16 == 11:
+        # V_VP8 webm: flat keyframes, BT.601 closed form
+        vp8_frames = [
+            vp8mod.encode_vp8_flat_payload(
+                32, 24, (64 + (did * 31 + idx * 7) % 128, 128, 128))
+            for idx in range(n_frames)
+        ]
+        payload, codec = encode_webm(vp8_frames, b"V_VP8"), "vp8_webm"
+    else:
+        frames = [
+            imgcodecs.encode_jpeg(
+                np.full((24, 32), (did * 31 + idx * 7) % 256, np.uint8), quality=95
+            )
+            for idx in range(n_frames)
+        ]
+        if did % 4 == 1:
+            payload, codec = encode_mp4_mjpeg(frames, 32, 24), "mjpeg_mp4"
+        else:
+            payload, codec = encode_webm_mjpeg(frames), "mjpeg_webm"
+    yield did, "video", payload, codec, 32, 24, 0
 
 
 def q_media_frame_sample(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
-    media = _doc_ids(spark, sf_dir, _VID_LIMIT).mapInPandas(_synth_video, schema=MEDIA_SCHEMA)
+    synth = map_rows(MEDIA_SCHEMA, ("doc_id",), _video_row)
+    media = _doc_ids(spark, sf_dir, _VID_LIMIT).mapInPandas(synth, schema=MEDIA_SCHEMA)
     frames = media.mapInPandas(frame_sample_stage(every_k=2), schema=FRAME_SAMPLE_SCHEMA)
     return frames.select(
         "media_id", F.col("frame_idx").cast("long").alias("frame_idx"),
@@ -1181,19 +1064,12 @@ FROM f
 
 
 def q_media_thumbnail(spark, sf_dir: str):
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for b in batches:
-            rows = []
-            for did in b["doc_id"]:
-                did = int(did)
-                img = np.full((48, 64), (did * 5 + 7) % 256, dtype=np.uint8)
-                rows.append((did, "image", pngcodec.encode_png(img), "png", 64, 48, 0))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "payload", "meta_codec", "meta_w", "meta_h", "meta_sr"],
-            )
+    def row(did):
+        did = int(did)
+        img = np.full((48, 64), (did * 5 + 7) % 256, dtype=np.uint8)
+        yield did, "image", pngcodec.encode_png(img), "png", 64, 48, 0
 
+    synth = map_rows(MEDIA_SCHEMA, ("doc_id",), row)
     media = _doc_ids(spark, sf_dir, _IMG_LIMIT).mapInPandas(synth, schema=MEDIA_SCHEMA)
     thumbs = media.mapInPandas(thumbnail_stage(max_side=16), schema=THUMB_SCHEMA)
     return thumbs.mapInPandas(thumbnail_luma_stage(), schema=THUMB_LUMA_SCHEMA)

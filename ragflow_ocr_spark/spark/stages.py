@@ -11,22 +11,22 @@ UDFs anywhere — per-document Python happens inside batch loops on the
 worker, which is the reference's own execution shape (row = document,
 ndarray inside; SURVEY.md §1.2).
 
-Each stage function first calls ``keep_runtime_zip_caches``
-(spark/worker.py), so a reused worker does not re-read Spark's own zip
-archives on every task.
+Each stage is a row function run by ``map_rows`` (spark/worker.py),
+the one batch loop and per-row error boundary: a row whose detect,
+crop or recognize raises reads ``error:internal:<ExceptionClass>``
+(no rows in ``recognize_stage``) instead of failing its task.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 
 from ragflow_ocr_spark.config import DEFAULT, PipelineConfig
+from ragflow_ocr_spark.kernels import ocr_pipeline
 from ragflow_ocr_spark.kernels.html_extract import extract_html
 from ragflow_ocr_spark.kernels.ocr_pipeline import extract_payload
 from ragflow_ocr_spark.kernels.pngcodec import sniff_payload
-from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
+from ragflow_ocr_spark.spark.worker import map_rows
 
 # The two tables of the job, declared once: the Iceberg DDL
 # (spark/iceberg_sql.py), the streaming reader, synth and the driver
@@ -43,9 +43,16 @@ EXTRACT_SCHEMA = (
 
 
 def schema_columns(schema: str) -> list[tuple[str, str]]:
-    """(name, type) pairs of a flat DDL schema string such as
-    ``PAGES_SCHEMA``."""
-    return [tuple(c.split(" ")) for c in schema.split(", ")]
+    """(name, type) pairs of a DDL schema string such as
+    ``PAGES_SCHEMA``. A nested type keeps its own commas
+    (``blocks array<struct<block_id:int, bbox:...>>``)."""
+    cols, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        depth += (ch == "<") - (ch == ">")
+        if ch == "," and depth == 0:
+            cols.append(tuple(schema[start:i].strip().split(" ", 1)))
+            start = i + 1
+    return cols
 
 
 def _extract_one(
@@ -66,33 +73,13 @@ def extract_stage(cfg: PipelineConfig | None = None):
     """Returns the mapInPandas function for the unified extract stage."""
     cfg = cfg or DEFAULT
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for pdf in batches:
-            texts: list[str | None] = []
-            blocks: list[int] = []
-            statuses: list[str] = []
-            engines: list[str] = []
-            for data in pdf["html"]:
-                payload = bytes(data) if data is not None else None
-                t, n, s, e = _extract_one(payload, cfg)
-                texts.append(t)
-                blocks.append(n)
-                statuses.append(s)
-                engines.append(e)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "extracted_text": texts,
-                    "n_blocks": blocks,
-                    "status": statuses,
-                    "engine": engines,
-                }
-            )
+    def row(data):
+        yield _extract_one(bytes(data) if data is not None else None, cfg)
 
-    return fn
+    return map_rows(
+        EXTRACT_SCHEMA, ("html",), row, keep=("url", "warc_ts", "lang"),
+        on_error=lambda status, _: (None, 0, status, "none"),
+    )
 
 
 # ---------------------------------------------------------------- staged API
@@ -119,41 +106,22 @@ def detect_stage(cfg: PipelineConfig | None = None):
     """pages → + blocks (reading-ordered quads per document)."""
     cfg = cfg or DEFAULT
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        from ragflow_ocr_spark.kernels import ocr_pipeline
+    def row(data):
+        # same route as the unified extract stage — the two public
+        # surfaces must agree on supported formats; a PDF contributes
+        # its first page
+        payload = bytes(data) if data is not None else None
+        kind, pages = ocr_pipeline.decode_payload_pages(payload, max_pages=1)
+        if pages is None:
+            yield [], "error:decode" if kind in ocr_pipeline.IMAGE_KINDS else f"skip:{kind}"
+            return
+        boxes = ocr_pipeline.detect(pages[0], cfg.ocr)
+        yield [{"block_id": i, "bbox": b.tolist()} for i, b in enumerate(boxes)], "ok"
 
-        for pdf in batches:
-            all_blocks = []
-            statuses = []
-            for data in pdf["html"]:
-                payload = bytes(data) if data is not None else None
-                # same route as the unified extract stage — the two
-                # public surfaces must agree on supported formats; a
-                # PDF contributes its first page
-                kind, pages = ocr_pipeline.decode_payload_pages(payload, max_pages=1)
-                if pages is None:
-                    all_blocks.append([])
-                    statuses.append(
-                        "error:decode"
-                        if kind in ocr_pipeline.IMAGE_KINDS
-                        else f"skip:{kind}"
-                    )
-                    continue
-                boxes = ocr_pipeline.detect(pages[0], cfg.ocr)
-                all_blocks.append(
-                    [
-                        {"block_id": i, "bbox": b.tolist()}
-                        for i, b in enumerate(boxes)
-                    ]
-                )
-                statuses.append("ok")
-            out = pdf[["url", "warc_ts", "lang", "html"]].copy()
-            out["blocks"] = all_blocks
-            out["det_status"] = statuses
-            yield out
-
-    return fn
+    return map_rows(
+        DETECT_SCHEMA, ("html",), row, keep=("url", "warc_ts", "lang", "html"),
+        on_error=lambda status, _: ([], status),
+    )
 
 
 def recognize_stage(cfg: PipelineConfig | None = None):
@@ -162,50 +130,31 @@ def recognize_stage(cfg: PipelineConfig | None = None):
     Batch-rec semantics (``OCR.recognize_batch``, ocr/ocr.py:523-533):
     a line below drop_score emits "" rather than being dropped — the
     reference's second F2 semantics, distinct from the full pipeline's
-    ``ocr_pipeline.assemble``.
+    ``ocr_pipeline.assemble``. A row that cannot be decoded, or whose
+    crop or recognize raises, emits no lines.
     """
     cfg = cfg or DEFAULT
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        import numpy as np
+    def row(url, warc_ts, lang, html, blocks):
+        # blocks is an ndarray via Arrow — no truthiness
+        if html is None or blocks is None or len(blocks) == 0:
+            return
+        _kind, pages = ocr_pipeline.decode_payload_pages(bytes(html), max_pages=1)
+        if pages is None:
+            return
+        # Arrow hands nested lists back as object arrays of per-point
+        # arrays — normalize before stacking
+        quads = [
+            np.array([np.asarray(p, dtype=np.float64) for p in b["bbox"]])
+            for b in blocks
+        ]
+        crops = ocr_pipeline.crop_boxes(pages[0], quads, cfg.ocr)
+        for b, (text, score) in zip(blocks, ocr_pipeline.recognize_crops(crops, cfg.ocr)):
+            # batch-rec drop semantics: emit "" below threshold
+            text = text if score >= cfg.ocr.drop_score else ""
+            yield url, warc_ts, lang, b["block_id"], b["bbox"], text, float(score)
 
-        from ragflow_ocr_spark.kernels import ocr_pipeline
-
-        for pdf in batches:
-            rows = {
-                "url": [], "warc_ts": [], "lang": [],
-                "block_id": [], "bbox": [], "text": [], "score": [],
-            }
-            # column zip, not iterrows: iterrows materializes a Series
-            # per row — an avoidable per-row constant at scale
-            for url, warc_ts, lang, html, blocks in zip(
-                pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["html"], pdf["blocks"]
-            ):
-                payload = bytes(html) if html is not None else None
-                # blocks is an ndarray via Arrow — no truthiness
-                if payload is None or blocks is None or len(blocks) == 0:
-                    continue
-                _kind, pages = ocr_pipeline.decode_payload_pages(payload, max_pages=1)
-                if pages is None:
-                    continue  # per-row error contract: skip, never raise
-                # Arrow hands nested lists back as object arrays of
-                # per-point arrays — normalize before stacking
-                quads = [
-                    np.array([np.asarray(p, dtype=np.float64) for p in b["bbox"]])
-                    for b in blocks
-                ]
-                crops = ocr_pipeline.crop_boxes(pages[0], quads, cfg.ocr)
-                rec = ocr_pipeline.recognize_crops(crops, cfg.ocr)
-                for b, (text, score) in zip(blocks, rec):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(warc_ts)
-                    rows["lang"].append(lang)
-                    rows["block_id"].append(b["block_id"])
-                    rows["bbox"].append(b["bbox"])
-                    # batch-rec drop semantics: emit "" below threshold
-                    rows["text"].append(text if score >= cfg.ocr.drop_score else "")
-                    rows["score"].append(float(score))
-            yield pd.DataFrame(rows)
-
-    return fn
+    return map_rows(
+        RECOGNIZE_SCHEMA, ("url", "warc_ts", "lang", "html", "blocks"), row,
+        on_error=lambda *_: None,
+    )

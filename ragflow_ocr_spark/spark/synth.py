@@ -19,7 +19,6 @@ expectation is regression-only (NULL here; goldens pinned by test).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from datetime import datetime, timedelta, timezone
 
 import numpy as np
@@ -27,7 +26,7 @@ import pandas as pd
 
 from ragflow_ocr_spark.kernels import font5x7, pngcodec
 from ragflow_ocr_spark.spark.stages import PAGES_SCHEMA, schema_columns
-from ragflow_ocr_spark.spark.worker import keep_runtime_zip_caches
+from ragflow_ocr_spark.spark.worker import map_rows
 
 GLOBAL_SEED = 42
 EPOCH = datetime(2025, 10, 17, tzinfo=timezone.utc)
@@ -248,16 +247,14 @@ def truth_batch(ids: list[int]) -> pd.DataFrame:
 def pages_df(spark, n_rows: int, with_truth: bool = False, partitions: int | None = None):
     """Distributed deterministic generation: spark.range → mapInPandas."""
     schema = TRUTH_SCHEMA if with_truth else PAGES_SCHEMA
-    cols = None if with_truth else [name for name, _ in schema_columns(PAGES_SCHEMA)]
+    names = [name for name, _ in schema_columns(schema)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keep_runtime_zip_caches()
-        for b in batches:
-            out = truth_batch(b["id"].tolist())
-            yield out if cols is None else out[cols]
+    def row(i):
+        page = make_row(int(i))
+        yield tuple(page[name] for name in names)
 
     rng_df = spark.range(0, n_rows, 1, partitions or max(2, n_rows // 2000))
-    return rng_df.mapInPandas(gen, schema=schema)
+    return rng_df.mapInPandas(map_rows(schema, ("id",), row), schema=schema)
 
 
 def write_pages(spark, n_rows: int, path: str, partitions: int | None = None) -> None:
